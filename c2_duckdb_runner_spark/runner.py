@@ -6,12 +6,13 @@ predicate, threads, query time, total rows, read ops, read bytes
 (``main.cc:327-335``), plus optional kernel disk-stat deltas
 (``main.cc:338-363``, ``iostats.h:44-77``).
 
-Spark-first mapping (SURVEY.md §3.1): the enumerate/fan-out/barrier steps
-collapse into one action on ``spark.read.parquet(dirs...)`` — Spark's
-scheduler *is* the thread pool (`pthread-helper.h` at cluster scale), one
-task per file split, and every action is its own barrier. What remains
-custom is exactly what SURVEY.md §4 predicted: metrics harvesting and the
-report, no plan-level code.
+Spark-first mapping (SURVEY.md §3.1): the fan-out collapses into as few
+Spark jobs as the files allow. The runner reads every file's Parquet footer
+on the driver, groups the files by schema and counts each group with one
+parallel scan — Spark's scheduler *is* the thread pool (`pthread-helper.h`
+at cluster scale), one task per file split, and every action is its own
+barrier. What remains custom is exactly what SURVEY.md §4 predicted:
+grouping, metrics harvesting and the report, no plan-level code.
 
 I/O accounting parity (§3.3): the reference counts bytes the engine
 *requests* from the filesystem via a wrapping FileSystem (``main.cc:107-113``)
@@ -21,6 +22,8 @@ before, delta after. Same semantics, no custom FS wrapper. Hadoop's local FS
 has no read-*op* counter, so on local disk the op count comes from the JVM's
 kernel read-syscall delta (``/proc/<pid>/io`` syscr — one increment per
 read(2)/pread(2), the same per-read semantics as the reference's wrapper).
+The footers the runner reads on the driver to group files (pyarrow, in the
+Python process) pass through neither counter.
 
 Env contract (same names as the reference, ``main.cc:369-404``):
 - ``Env_ke``        filter threshold, default 0.5
@@ -28,10 +31,9 @@ Env contract (same names as the reference, ``main.cc:369-404``):
 - ``Env_mon_disks`` csv of block devices for /sys/block/<d>/stat deltas
 
 Per-task error isolation (``main.cc:267-271``: a failing file logs and
-contributes zero): Spark's default is fail-the-job, so the runner scopes
-each file to its own job and try/excepts it — per-file isolation without
-flipping ``spark.sql.files.ignoreCorruptFiles`` globally (that conf remains
-the right knob for the homogeneous single-scan path).
+contributes zero): Spark's default is fail-the-job, so a schema group whose
+scan fails is rerun one file per job, each try/excepted — per-file
+isolation without flipping ``spark.sql.files.ignoreCorruptFiles`` globally.
 """
 
 from __future__ import annotations
@@ -39,8 +41,13 @@ from __future__ import annotations
 import os
 import sys
 import time
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark.rdd import _load_from_socket
+from pyspark.serializers import BatchedSerializer, CPickleSerializer
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
@@ -107,7 +114,9 @@ def _fs_bytes_ops(spark: SparkSession) -> tuple[int, int, int]:
     read-syscall count (local fs, see _jvm_read_syscalls). Every snapshot
     carries both units; the caller picks ONE source for the delta after the
     run, so a scheme that starts reporting mid-run can never mix a syscall
-    count on one end with a (much smaller) Hadoop op count on the other."""
+    count on one end with a (much smaller) Hadoop op count on the other.
+    Reads made outside the JVM — ``run_scan``'s driver-side footer reads
+    through pyarrow — are in neither counter."""
     jvm = spark.sparkContext._jvm
     total_bytes = hadoop_ops = 0
     for s in jvm.org.apache.hadoop.fs.FileSystem.getAllStatistics():
@@ -118,7 +127,14 @@ def _fs_bytes_ops(spark: SparkSession) -> tuple[int, int, int]:
 
 @dataclass
 class RunReport:
-    """The reference's stderr report block (main.cc:327-335, 350-361)."""
+    """The reference's stderr report block (main.cc:327-335, 350-361).
+
+    ``read_bytes``/``read_ops`` cover the Spark scans only: the footers
+    ``run_scan`` reads on the driver to group files by schema bypass
+    Hadoop's ``FileSystem.Statistics`` and the JVM's ``syscr``.
+    ``failed_files`` maps each file that was isolated (logged and counted
+    as 0 rows, ``main.cc:267-271``) to the first line of its error.
+    """
 
     predicate: str
     threads: int
@@ -129,6 +145,7 @@ class RunReport:
     n_files: int
     disk_deltas: dict[str, DiskStats] = field(default_factory=dict)
     ops_from_syscalls: bool = False
+    failed_files: dict[str, str] = field(default_factory=dict)
 
     def print(self, out=sys.stderr) -> None:
         print(f"predicate: {self.predicate}", file=out)
@@ -167,13 +184,23 @@ def _enumerate_files(datadirs: list[str]) -> list[str]:
     return paths
 
 
+def _footer_schema(path: str) -> bytes | None:
+    """The file's schema from its Parquet footer, read on the driver (no
+    Spark job), without metadata and serialized — a ``pa.Schema`` that
+    carries pandas metadata is unhashable. None if pyarrow cannot read it."""
+    try:
+        return pq.read_schema(path).remove_metadata().serialize().to_pybytes()
+    except (OSError, pa.ArrowException):
+        return None
+
+
 def run_scan(
     spark: SparkSession,
     datadirs: list[str],
     predicate: str | None = None,
     mon_disks: list[str] | None = None,
 ) -> RunReport:
-    """The reference's whole pipeline: per-file independent filtered scans.
+    """The reference's whole pipeline: a filtered count over every file.
 
     ``predicate`` is the arbitrary-SQL filter slot (``main.cc:164-169``,
     `filter_arbitrary_predicate` in §2) — any Catalyst boolean expression.
@@ -181,18 +208,19 @@ def run_scan(
     as ``value`` (FIXTURES.md).
 
     Parity decisions, each deliberate:
-    - **one query per file** (``main.cc:297-324``): files are independent
-      tables; a thread pool of ``Env_jobs`` submits concurrent Spark *jobs*,
-      and Spark's scheduler interleaves their tasks — the harness's
-      inter-query parallelism (``main.cc:177,376-385``) mapped onto the
-      engine that already owns the cores. For the homogeneous-schema case
-      (the VPIC campaign layout) a single ``spark.read.parquet(dir)`` scan
-      is the better plan at 100 TB — that path is `scan_dir_enumerate` /
-      `scan_filter_count` in the registry; this runner keeps per-file
-      semantics because error isolation and per-file accounting require it.
-    - **per-task error isolation** (``main.cc:267-271``): a file that fails
-      to parse or lacks the filter column logs to stderr and contributes 0
-      rows; the run continues.
+    - **one query per schema group** (``main.cc:297-324``): files are
+      independent tables, but files with the same footer schema are counted
+      by one ``spark.read.parquet(*files)`` scan, whose tasks Spark spreads
+      over the cores — the harness's inter-query parallelism
+      (``main.cc:177,376-385``) without a serial job per file. Groups run
+      side by side on a pool of ``Env_jobs`` threads. Grouping by the
+      footer schema is what keeps a file without the filter column an
+      error: a shared schema would read its column as NULLs.
+    - **per-task error isolation** (``main.cc:267-271``): a group whose
+      scan fails, and every file whose footer pyarrow cannot read, is
+      rerun one file per job; a file that fails to parse or lacks the
+      filter column logs to stderr, contributes 0 rows and is listed in
+      ``RunReport.failed_files``; the run continues.
     """
     threads = max(1, int(os.environ.get("Env_jobs", DEFAULT_JOBS)))
     mon_disks = mon_disks if mon_disks is not None else [
@@ -204,23 +232,47 @@ def run_scan(
     disk_before = {d: read_disk_stats(d) for d in mon_disks}
     paths = _enumerate_files(datadirs)
 
-    from concurrent.futures import ThreadPoolExecutor
-
-    def scan_one(path: str) -> int:
-        # SELECT count(*) FROM '<path>' WHERE <predicate>  (main.cc:164-169;
-        # the count happens engine-side as in main.cc:197, partials merged by
-        # Spark instead of the mutex at main.cc:273-281)
+    def count_group(files: list[str]) -> int | None:
+        # SELECT count(*) FROM <files> WHERE <predicate> (main.cc:164-169) as
+        # one scan; None sends the group's files to scan_one
         try:
-            return spark.read.parquet(path).filter(F.expr(predicate)).count()
+            df = spark.read.parquet(*files)
+            # Spark silently skips hidden (_ or .) file names, which the
+            # per-file path reports as errors
+            if len(df.inputFiles()) != len({os.path.abspath(f) for f in files}):
+                return None
+            return df.filter(F.expr(predicate)).count()
+        except Exception:
+            return None
+
+    def scan_one(path: str) -> tuple[int, str | None]:
+        # the count happens engine-side as in main.cc:197, partials merged by
+        # Spark instead of the mutex at main.cc:273-281
+        try:
+            return spark.read.parquet(path).filter(F.expr(predicate)).count(), None
         except Exception as exc:  # per-task isolation, main.cc:267-271
             msg = str(exc).split("\n", 1)[0]
             print(f"runner: error scanning {path}: {msg}", file=sys.stderr)
-            return 0
+            return 0, msg
 
     bytes0, hops0, syscr0 = _fs_bytes_ops(spark)
     t0 = time.monotonic()
+    total_rows = 0
     with ThreadPoolExecutor(max_workers=threads) as pool:
-        total_rows = sum(pool.map(scan_one, paths))  # Wait(): main.cc:245-250
+        groups: dict[bytes | None, list[str]] = {}
+        for path, schema in zip(paths, pool.map(_footer_schema, paths)):
+            groups.setdefault(schema, []).append(path)
+        retry = groups.pop(None, [])
+        for files, rows in zip(groups.values(), pool.map(count_group, groups.values())):
+            if rows is None:
+                retry += files
+            else:
+                total_rows += rows
+        failed_files = {}
+        for path, (rows, error) in zip(retry, pool.map(scan_one, retry)):
+            total_rows += rows  # Wait(): main.cc:245-250
+            if error is not None:
+                failed_files[path] = error
     seconds = time.monotonic() - t0
     bytes1, hops1, syscr1 = _fs_bytes_ops(spark)
     # pick the op-count source ONCE, after the run: Hadoop iff the scheme
@@ -245,6 +297,7 @@ def run_scan(
         n_files=len(paths),
         disk_deltas=deltas,
         ops_from_syscalls=ops_syscr,
+        failed_files=failed_files,
     )
 
 
@@ -253,18 +306,29 @@ def stream_rows(df, batch_hint: int = 2048):
 
     The reference drains a streaming result handle chunk-at-a-time without
     materializing the full result (``con.SendQuery`` + ``FetchRaw``). The
-    Spark twin is ``toLocalIterator``: partitions are produced on demand and
-    streamed to the driver one at a time; nothing beyond the in-flight
-    partition is ever resident. ``batch_hint`` only shapes the yielded row
-    batches (the reference's ~2048-row DataChunk granularity); transport
-    batching is per-partition either way.
+    Spark twin pulls the result's partitions in order, one window of
+    ``defaultParallelism`` partitions per job, so a window's partitions are
+    computed in parallel; at most one window is ever resident on the
+    driver. The job runs JVM-side (``PythonRDD.runJob`` on the frame's
+    pickled-row RDD, the transport ``toLocalIterator`` uses), so no Python
+    worker touches the rows. ``batch_hint`` only shapes the yielded row
+    batches (the reference's ~2048-row DataChunk granularity).
     """
+    sc = df.sparkSession.sparkContext
+    jrdd = df._jdf.javaToPython()
+    n = jrdd.partitions().size()
+    window = sc.defaultParallelism
+    serializer = BatchedSerializer(CPickleSerializer())
     batch: list = []
-    for row in df.toLocalIterator():
-        batch.append(row)
-        if len(batch) >= batch_hint:
-            yield batch
-            batch = []
+    for lo in range(0, n, window):
+        sock_info = sc._jvm.PythonRDD.runJob(
+            sc._jsc.sc(), jrdd, list(range(lo, min(lo + window, n)))
+        )
+        for row in _load_from_socket(sock_info, serializer):
+            batch.append(row)
+            if len(batch) >= batch_hint:
+                yield batch
+                batch = []
     if batch:
         yield batch
 

@@ -1,5 +1,6 @@
 """Runner/report parity tests — the reference's pipeline (main.cc:368-409):
-per-file scans, error isolation, and the five-field report."""
+schema-grouped scans, per-file error isolation, the five-field report, and
+the windowed result pull."""
 
 from __future__ import annotations
 
@@ -7,9 +8,13 @@ import os
 import shutil
 
 import duckdb
+import pyarrow.parquet as pq
 import pytest
 
+from pyspark.sql import functions as F
+
 from c2_duckdb_runner_spark.runner import run_scan, read_disk_stats
+from c2_duckdb_runner_spark.runner import stream_rows
 
 
 @pytest.fixture(scope="module")
@@ -174,3 +179,158 @@ def test_predicate_subquery_shape_pinned(spark, datadir, capsys):
     assert r.total_rows == 0
     assert r.n_files == 3
     assert "error scanning" in capsys.readouterr().err
+
+
+# ---------------------------------------------------------------------------
+# Grouped scans and windowed transfer: run_scan counts each footer-schema
+# group with one parallel scan, and stream_rows pulls one window of
+# defaultParallelism partitions per job. Job counts come from the status
+# tracker, read after the listener bus has drained.
+# ---------------------------------------------------------------------------
+
+
+def _new_jobs(spark, fn):
+    """Run ``fn`` and return its result with the ids of the jobs it ran."""
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    bus.waitUntilEmpty()
+    before = max(sc.statusTracker().getJobIdsForGroup(), default=-1)
+    out = fn()
+    bus.waitUntilEmpty()
+    return out, [j for j in sc.statusTracker().getJobIdsForGroup() if j > before]
+
+
+def _corrupt_column_pages(src: str, dst: str, column: str) -> None:
+    """Copy ``src`` with one column chunk's pages overwritten by junk; the
+    footer (and so the schema pyarrow reads) stays valid."""
+    raw = bytearray(open(src, "rb").read())
+    rg = pq.read_metadata(src).row_group(0)
+    chunk = next(rg.column(i) for i in range(rg.num_columns)
+                 if rg.column(i).path_in_schema == column)
+    start = chunk.dictionary_page_offset or chunk.data_page_offset
+    raw[start:start + chunk.total_compressed_size] = b"\xff" * chunk.total_compressed_size
+    with open(dst, "wb") as fh:
+        fh.write(raw)
+
+
+def test_run_scan_same_schema_files_share_one_scan(spark, datadir, sf_dir):
+    """Three same-schema files: schema inference plus one two-stage count,
+    not three jobs per file."""
+    report, jobs = _new_jobs(
+        spark, lambda: run_scan(spark, [datadir], predicate="value > 0.5"))
+    oracle = duckdb.sql(
+        f"SELECT count(*) FROM '{sf_dir}/events.parquet' WHERE value > 0.5"
+    ).fetchone()[0]
+    assert report.total_rows == 3 * oracle
+    assert report.failed_files == {}
+    assert 1 <= len(jobs) <= 3, jobs
+
+
+def test_run_scan_failed_files_reported(spark, datadir, tmp_path, capsys):
+    """A corrupt file and a file without the filter column are isolated:
+    each logs in the reference's format and lands in ``failed_files`` with
+    its first error line; the good file counts normally."""
+    d = tmp_path / "failing"
+    d.mkdir()
+    shutil.copy(f"{datadir}/step0.parquet", d / "good.parquet")
+    (d / "corrupt.parquet").write_bytes(b"not a parquet file")
+    pq.write_table(pq.read_table(f"{datadir}/step0.parquet",
+                                 columns=["event_id", "event_type"]),
+                   str(d / "slim.parquet"))
+    good = run_scan(spark, [datadir], predicate="value > 0.5")
+    r = run_scan(spark, [str(d)], predicate="value > 0.5")
+    assert r.total_rows == good.total_rows // 3
+    assert r.n_files == 3
+    assert sorted(r.failed_files) == [str(d / "corrupt.parquet"),
+                                      str(d / "slim.parquet")]
+    err = capsys.readouterr().err
+    for path, msg in r.failed_files.items():
+        assert msg and "\n" not in msg
+        assert f"runner: error scanning {path}: {msg}" in err
+
+
+def test_run_scan_corrupt_pages_isolated_within_group(spark, sf_dir, tmp_path,
+                                                      capsys):
+    """A file whose footer is valid but whose data pages are junk shares a
+    schema group with good files: the group's scan fails, the rerun
+    isolates that one file, and the others still match DuckDB."""
+    d = tmp_path / "pages"
+    d.mkdir()
+    for i in range(2):
+        shutil.copy(f"{sf_dir}/events.parquet", d / f"good{i}.parquet")
+    bad = d / "bad.parquet"
+    _corrupt_column_pages(f"{sf_dir}/events.parquet", str(bad), "value")
+    r = run_scan(spark, [str(d)], predicate="value > 0.5")
+    want = duckdb.sql(
+        f"SELECT count(*) FROM read_parquet(['{d}/good0.parquet', "
+        f"'{d}/good1.parquet']) WHERE value > 0.5"
+    ).fetchone()[0]
+    assert r.total_rows == want
+    assert list(r.failed_files) == [str(bad)]
+    err = capsys.readouterr().err
+    assert err.count("runner: error scanning") == 1 and str(bad) in err
+
+
+def test_run_scan_two_schema_groups(spark, sf_dir, tmp_path, capsys):
+    """Two valid schemas that both have the filter column run as two
+    groups (two grouped scans, no per-file rerun); the total matches
+    DuckDB over every file."""
+    d = tmp_path / "twoschemas"
+    d.mkdir()
+    for i in range(2):
+        shutil.copy(f"{sf_dir}/events.parquet", d / f"wide{i}.parquet")
+        pq.write_table(pq.read_table(f"{sf_dir}/events.parquet",
+                                     columns=["event_id", "value"]),
+                       str(d / f"narrow{i}.parquet"))
+    r, jobs = _new_jobs(
+        spark, lambda: run_scan(spark, [str(d)], predicate="value > 0.5"))
+    want = duckdb.sql(
+        f"SELECT count(*) FROM read_parquet('{d}/*.parquet', union_by_name=true)"
+        " WHERE value > 0.5"
+    ).fetchone()[0]
+    assert r.total_rows == want
+    assert r.n_files == 4 and r.failed_files == {}
+    assert "error scanning" not in capsys.readouterr().err
+    assert len(jobs) <= 6, jobs
+
+
+def test_stream_rows_one_job_per_window(spark):
+    """Many partitions drain exactly and in order, one job per window of
+    defaultParallelism partitions, so at most one window is resident."""
+    dp = spark.sparkContext.defaultParallelism
+    parts = 4 * dp
+    df = spark.range(0, 10_000, numPartitions=parts)
+    ids, jobs = _new_jobs(spark, lambda: [
+        row.id for batch in stream_rows(df, batch_hint=700)
+        for row in batch])
+    assert ids == list(range(10_000))
+    assert len(jobs) == -(-parts // dp)
+
+
+def test_stream_rows_keeps_sort_order(spark):
+    df = spark.range(0, 5_000, numPartitions=8).select(
+        ((F.col("id") * 7919) % 5_000).alias("k")).orderBy(F.col("k").desc())
+    keys = [row.k for batch in stream_rows(df) for row in batch]
+    assert keys == list(range(4_999, -1, -1))
+
+
+def test_stream_rows_empty_yields_no_batch(spark):
+    assert list(stream_rows(spark.range(0, 100).filter("id < 0"))) == []
+    assert list(stream_rows(spark.range(0))) == []
+
+
+def test_run_scan_hidden_file_reported_not_skipped(spark, datadir, tmp_path,
+                                                   capsys):
+    """Spark's file listing drops names starting with ``_`` or ``.``, even
+    when given explicitly. Such a file in a schema group must not vanish
+    from the count silently: it is isolated and reported like any file
+    Spark cannot scan, and the good file still counts."""
+    d = tmp_path / "hidden"
+    d.mkdir()
+    shutil.copy(f"{datadir}/step0.parquet", d / "good.parquet")
+    shutil.copy(f"{datadir}/step0.parquet", d / "_hidden.parquet")
+    good = run_scan(spark, [datadir], predicate="value > 0.5")
+    r = run_scan(spark, [str(d)], predicate="value > 0.5")
+    assert r.total_rows == good.total_rows // 3
+    assert list(r.failed_files) == [str(d / "_hidden.parquet")]
+    assert "_hidden.parquet" in capsys.readouterr().err
