@@ -26,6 +26,7 @@ path exists precisely because its band keys are near-uniform.
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -718,13 +719,12 @@ def _cos_dot_kernel():
     mismatch or a null element ⇒ NULL dot ⇒ the ≥ 0.4 filter drops the
     row in both engines. Defined lazily (a pandas_udf needs an active
     session to parse its return type at decoration time)."""
-    import pandas as pd
-    from pyspark.sql.functions import PandasUDFType
 
-    # no type hints: this module uses `from __future__ import annotations`,
-    # which stringifies them past pandas_udf's signature inference
-    @F.pandas_udf("double", PandasUDFType.SCALAR)
-    def dot_pd(va, vb):
+    # `from __future__ import annotations` makes these hints strings;
+    # pandas_udf resolves them against the module globals, hence the
+    # module-level `import pandas as pd`
+    @F.pandas_udf("double")
+    def dot_pd(va: pd.Series, vb: pd.Series) -> pd.Series:
         import numpy as np
 
         def slow(a, b):

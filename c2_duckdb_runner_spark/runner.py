@@ -11,8 +11,12 @@ Spark jobs as the files allow. The runner reads every file's Parquet footer
 on the driver, groups the files by schema and counts each group with one
 parallel scan — Spark's scheduler *is* the thread pool (`pthread-helper.h`
 at cluster scale), one task per file split, and every action is its own
-barrier. What remains custom is exactly what SURVEY.md §4 predicted:
-grouping, metrics harvesting and the report, no plan-level code.
+barrier. A group costs three Spark jobs the first time its files are seen
+(schema inference, then the two-stage count) and two after, as long as
+the files are unchanged: the scan goes through ``tables.read_parquet``,
+which keeps each file set's inferred schema. What remains custom is
+exactly what SURVEY.md §4 predicted: grouping, metrics harvesting and the
+report, no plan-level code.
 
 I/O accounting parity (§3.3): the reference counts bytes the engine
 *requests* from the filesystem via a wrapping FileSystem (``main.cc:107-113``)
@@ -50,6 +54,8 @@ from pyspark.rdd import _load_from_socket
 from pyspark.serializers import BatchedSerializer, CPickleSerializer
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
+
+from c2_duckdb_runner_spark.tables import read_parquet
 
 DEFAULT_KE = "0.5"
 DEFAULT_JOBS = 32
@@ -210,10 +216,12 @@ def run_scan(
     Parity decisions, each deliberate:
     - **one query per schema group** (``main.cc:297-324``): files are
       independent tables, but files with the same footer schema are counted
-      by one ``spark.read.parquet(*files)`` scan, whose tasks Spark spreads
+      by one ``read_parquet(spark, *files)`` scan, whose tasks Spark spreads
       over the cores — the harness's inter-query parallelism
       (``main.cc:177,376-385``) without a serial job per file. Groups run
-      side by side on a pool of ``Env_jobs`` threads. Grouping by the
+      side by side on a pool of ``Env_jobs`` threads. A group submits three
+      jobs on first touch (schema inference plus the two-stage count) and
+      two once its unchanged file set's schema is cached. Grouping by the
       footer schema is what keeps a file without the filter column an
       error: a shared schema would read its column as NULLs.
     - **per-task error isolation** (``main.cc:267-271``): a group whose
@@ -236,7 +244,7 @@ def run_scan(
         # SELECT count(*) FROM <files> WHERE <predicate> (main.cc:164-169) as
         # one scan; None sends the group's files to scan_one
         try:
-            df = spark.read.parquet(*files)
+            df = read_parquet(spark, *files)
             # Spark silently skips hidden (_ or .) file names, which the
             # per-file path reports as errors
             if len(df.inputFiles()) != len({os.path.abspath(f) for f in files}):
@@ -249,7 +257,7 @@ def run_scan(
         # the count happens engine-side as in main.cc:197, partials merged by
         # Spark instead of the mutex at main.cc:273-281
         try:
-            return spark.read.parquet(path).filter(F.expr(predicate)).count(), None
+            return read_parquet(spark, path).filter(F.expr(predicate)).count(), None
         except Exception as exc:  # per-task isolation, main.cc:267-271
             msg = str(exc).split("\n", 1)[0]
             print(f"runner: error scanning {path}: {msg}", file=sys.stderr)

@@ -303,7 +303,7 @@ def scan_file_metadata_cols(spark: SparkSession, sf_dir: str) -> DataFrame:
     multi-file scan. Grouping by _metadata.file_name is the lineage /
     debugging / selective-reprocessing primitive at lake scale. The
     fixture is one file per table, so the oracle states the name."""
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    d = load(spark, sf_dir, "documents")
     return (
         d.select(F.col("_metadata.file_name").alias("fname"), "n_chars")
         .groupBy("fname")

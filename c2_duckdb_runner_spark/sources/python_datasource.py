@@ -38,6 +38,7 @@ from pyspark.sql.datasource import (
 )
 
 from c2_duckdb_runner_spark.registry import register
+from c2_duckdb_runner_spark.tables import load
 
 
 class _RowGroupPartition(InputPartition):
@@ -277,7 +278,7 @@ def stream_python_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     _pickle_by_value()
     spark.dataSource.register(EventsReplayDataSource)
     path = f"{sf_dir}/events.parquet"
-    total = spark.read.parquet(path).count()
+    total = load(spark, sf_dir, "events").count()
     src = (
         spark.readStream.format("c2_replay")
         .option("path", path)

@@ -37,13 +37,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from c2_duckdb_runner_spark.registry import register
-from c2_duckdb_runner_spark.tables import load
+from c2_duckdb_runner_spark.tables import load, read_parquet
 
 _SINK_IDS = itertools.count()
 
 
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    static = spark.read.parquet(f"{sf_dir}/events.parquet")
+    static = read_parquet(spark, f"{sf_dir}/events.parquet")
     src = spark.readStream.schema(static.schema).parquet(f"{sf_dir}/events*.parquet")
     # Normalize ts at the SOURCE: F.window over TIMESTAMP_NTZ yields NTZ
     # w.start/w.end, so downstream unix_millis() would fail if we cast later.

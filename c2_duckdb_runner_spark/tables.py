@@ -2,14 +2,23 @@
 
 Mirrors the reference's data model — a directory of files, table names are
 path literals spliced into the query (``main.cc:164-169``). We read
-self-describing parquet (schema inferred from the footer, same as the
-reference's engine; ``main.cc:181-183`` declares no schema anywhere).
+self-describing parquet: the schema is Spark's own inference from the
+footer, as in the reference's engine (``main.cc:181-183`` declares no
+schema anywhere), but it is inferred once per file version, not on every
+load — ``read_parquet`` keeps it keyed by each file's path, size and
+mtime, so a later load of the same unchanged files submits no Spark job.
 """
 
 from __future__ import annotations
 
+import os
+import stat
+import threading
+from collections import OrderedDict
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES = [
     "region",
@@ -30,6 +39,81 @@ TABLES = [
 BROADCAST_DIMS = {"region", "nation"}
 
 
+# Distinct file sets whose inferred schema is kept; the least recently used
+# is dropped first.
+SCHEMA_CACHE_SIZE = 256
+
+# Session confs that change what Spark infers from the same footers.
+_INFERENCE_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.mergeSchema",
+)
+
+_schemas: OrderedDict[tuple, StructType] = OrderedDict()
+_schemas_lock = threading.Lock()
+
+
+def _schema_key(spark: SparkSession, paths: tuple[str, ...]) -> tuple | None:
+    """(path, size, mtime_ns) of every path plus the inference confs, or
+    None unless every path is a regular file."""
+    files = []
+    for p in paths:
+        try:
+            st = os.stat(p)
+        except OSError:
+            return None
+        if not stat.S_ISREG(st.st_mode):
+            return None
+        files.append((os.path.abspath(p), st.st_size, st.st_mtime_ns))
+    return tuple(files), tuple(spark.conf.get(k) for k in _INFERENCE_CONFS)
+
+
+def read_parquet(spark: SparkSession, *paths: str) -> DataFrame:
+    """``spark.read.parquet(*paths)`` that infers each file set's schema once.
+
+    The first read of a set of regular files runs Spark's own schema
+    inference (one footer job) and keeps the resulting ``StructType``;
+    every later read of the same files with unchanged size and mtime is
+    ``spark.read.schema(cached).parquet(*paths)``, which submits no job.
+    The schema is Spark's, not a pyarrow conversion (pyarrow maps
+    TIMESTAMP_NTZ columns to ``timestamp``), and it is reused only for the
+    exact file set it was inferred from, so the read is identical to a
+    fresh inference: a file without a column still fails on it rather than
+    reading NULLs, and a rewritten file is inferred again.
+
+    A directory (or glob, or URI) keeps plain ``spark.read.parquet``: its
+    partition discovery and hidden-file listing happen at read time, so a
+    key over the path alone could go stale. The package's write-then-read
+    round trips of freshly written output also stay on plain
+    ``spark.read.parquet``: each output is read once, so a cache would
+    gain nothing and could only go stale. They are the ``out_dir`` reads
+    in ``streaming/queries.py``, the partitioned layout in ``joins.py``,
+    the manifest versions in ``lakehouse_ext.py``, the range layout in
+    ``corpus_curation.py``, the sink in ``tier_a.py`` and the round trips
+    in ``sources/formats.py``.
+    """
+    key = _schema_key(spark, paths)
+    if key is None:
+        return spark.read.parquet(*paths)
+    with _schemas_lock:
+        schema = _schemas.get(key)
+        if schema is not None:
+            _schemas.move_to_end(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(*paths)
+    # Inference runs outside the lock: two threads missing on the same key
+    # both infer and store the same schema, which is harmless.
+    df = spark.read.parquet(*paths)
+    with _schemas_lock:
+        _schemas[key] = df.schema
+        while len(_schemas) > SCHEMA_CACHE_SIZE:
+            _schemas.popitem(last=False)
+    return df
+
+
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one fixture table (one parquet file per table, per TESTDATA.md).
 
@@ -45,7 +129,7 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     DuckDB 1.0 reads the same column as µs TIMESTAMP, so both engines see
     identical values either way.
     """
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = read_parquet(spark, f"{sf_dir}/{name}.parquet")
     if name == "events":
         ts_type = dict(df.dtypes).get("ts")
         if ts_type == "bigint":

@@ -3,7 +3,6 @@
 
 Usage:
     python tools/plan_dump.py --keys k1,k2 --suffix before [--tag r11]
-    python tools/plan_dump.py --headline --suffix before
 
 The judge cannot run Spark; these committed plan files are the evidence for
 every plan-shape claim in OPTIMIZATION_<tag>.md (Exchange counts, join
@@ -24,7 +23,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--keys", default="")
-    ap.add_argument("--headline", action="store_true")
     ap.add_argument("--suffix", required=True)
     ap.add_argument("--tag", default="r11")
     ap.add_argument("--sf-dir", default=os.environ.get(
@@ -35,11 +33,7 @@ def main() -> None:
     from c2_duckdb_runner_spark import session as session_mod
 
     qs = entrymod.queries()
-    if args.headline:
-        import bench
-        keys = [k for k in bench.HEADLINE if k in qs]
-    else:
-        keys = [k for k in args.keys.split(",") if k]
+    keys = [k for k in args.keys.split(",") if k]
     missing = [k for k in keys if k not in qs]
     if missing:
         print(f"unknown keys: {missing}", file=sys.stderr)
