@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from c2_duckdb_runner_spark.operators.graph import _OFFSET, _edges
 from c2_duckdb_runner_spark.registry import register
 from c2_duckdb_runner_spark.tables import load
 
@@ -174,7 +175,6 @@ def ab_cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
 # graph_label_propagation_sync
 # ---------------------------------------------------------------------------
 
-_OFFSET = 10_000_000
 _LPA_ROUNDS = 3
 
 _EDGES_SQL = f"""
@@ -239,34 +239,12 @@ def graph_label_propagation_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
     partially-folded row per node instead of pushing every (node, label)
     count through a row_number window's full shuffle + sort (the
     simsearch_kmeans_assign recipe). Same total tie-break, same rows."""
-    o = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    l = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    pairs = (
-        o.join(l, o.o_orderkey == l.l_orderkey)
-        # NULL endpoints are not graph nodes (r11 hostile pin)
-        .filter(
-            F.col("o_custkey").isNotNull() & F.col("l_suppkey").isNotNull()
-        )
-        .select("o_custkey", (F.lit(_OFFSET) + F.col("l_suppkey")).alias("supp"))
-        .distinct()
-        # r12: mirror from the materialized pair list — the union's two
-        # identical subtrees don't collapse under AQE (see graph._edges)
-        .localCheckpoint(eager=True)
-    )
     from c2_duckdb_runner_spark.session import scratch_persist
 
     # Persist hash-partitioned on dst: every round's message join keys on
     # dst = label-carrier id, so the cached layout is reused by all rounds
     # instead of re-exchanging |E| rows per round.
-    edges = scratch_persist(
-        pairs.select(
-            F.col("o_custkey").alias("src"), F.col("supp").alias("dst")
-        )
-        .union(
-            pairs.select(F.col("supp").alias("src"), F.col("o_custkey").alias("dst"))
-        )
-        .repartition(F.col("dst"))
-    )
+    edges = scratch_persist(_edges(spark, sf_dir).repartition(F.col("dst")))
     labels = edges.select(F.col("src").alias("id")).distinct().select(
         "id", F.col("id").alias("label")
     )

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from c2_duckdb_runner_spark.operators.graph import _edges
 from c2_duckdb_runner_spark.registry import register
 from c2_duckdb_runner_spark.session import scratch_persist, shuffle_width
 from c2_duckdb_runner_spark.tables import load
@@ -42,6 +43,7 @@ _WL_ORACLE = """
 WITH pairs AS (
   SELECT DISTINCT o.o_custkey AS c, 10000000 + l.l_suppkey AS s
   FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey
+  WHERE o_custkey IS NOT NULL AND l_suppkey IS NOT NULL
 ),
 edges AS (
   SELECT c AS src, s AS dst FROM pairs UNION ALL SELECT s, c FROM pairs
@@ -76,7 +78,7 @@ SELECT * FROM (
 def graph_wl_refinement(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two rounds of Weisfeiler-Lehman color refinement on the symmetrized
     customer–supplier graph (same edge relation as PageRank/BFS,
-    ``graph.py:41``): color₀ = degree, colorₖ = md5(own ∥ sorted multiset
+    ``graph._edges``): color₀ = degree, colorₖ = md5(own ∥ sorted multiset
     of neighbor colors), reporting the color-count trajectory
     (12 → 27 → 31 at sf0.001) that certifies refinement progress.
 
@@ -93,23 +95,8 @@ def graph_wl_refinement(spark: SparkSession, sf_dir: str) -> DataFrame:
     multiset is per-node bounded state (degree-sized array, sorted then
     folded into md5), never corpus state. Colors are md5-canonical so
     the trajectory is engine- and partitioning-independent."""
-    o = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    pairs = (
-        o.join(li, o.o_orderkey == li.l_orderkey)
-        .select("o_custkey", (F.lit(10000000) + F.col("l_suppkey")).alias("supp"))
-        .distinct()
-        # r12: mirror from the materialized pair list — the union's two
-        # identical subtrees don't collapse under AQE (see graph._edges)
-        .localCheckpoint(eager=True)
-    )
-    nparts = shuffle_width(spark)
     edges = scratch_persist(
-        pairs.select(F.col("o_custkey").alias("src"), F.col("supp").alias("dst"))
-        .union(
-            pairs.select(F.col("supp").alias("src"), F.col("o_custkey").alias("dst"))
-        )
-        .repartition(nparts, "dst")
+        _edges(spark, sf_dir).repartition(shuffle_width(spark), "dst")
     )
 
     def refine(colors: DataFrame) -> DataFrame:

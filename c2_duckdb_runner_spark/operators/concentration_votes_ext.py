@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from c2_duckdb_runner_spark.operators.graph import cust_supp_pairs
 from c2_duckdb_runner_spark.registry import register
 from c2_duckdb_runner_spark.session import scratch_persist
 from c2_duckdb_runner_spark.tables import load
@@ -276,18 +277,12 @@ def graph_modularity_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     joins (the labeled edge relation is persisted and feeds the intra
     count AND both degree sums — one pass over data-sized state);
     everything after runs on 25 community rows."""
-    o = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     cu = load(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     su = load(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    pairs = (
-        o.join(li, o.o_orderkey == li.l_orderkey)
-        .select("o_custkey", "l_suppkey")
-        .distinct()
-    )
+    pairs = cust_supp_pairs(spark, sf_dir).distinct()
     lab = scratch_persist(
-        pairs.join(cu, pairs.o_custkey == cu.c_custkey)
-        .join(su, pairs.l_suppkey == su.s_suppkey)
+        pairs.join(cu, pairs.c == cu.c_custkey)
+        .join(su, pairs.s == su.s_suppkey)
         .select(
             F.col("c_nationkey").cast("int").alias("cn"),
             F.col("s_nationkey").cast("int").alias("sn"),

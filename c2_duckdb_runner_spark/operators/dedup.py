@@ -710,15 +710,19 @@ def _cos_dot_kernel():
     measured: 1.40→1.28 s at sf0.1, 4.28→2.48 s at sf1 vs the
     interpreted aggregate(zip_with(...)) HOF fold).
 
-    Bit-identity contract: the kernel loops DIMENSIONS in strict
-    left-to-right order over float64 numpy columns — the identical IEEE
-    multiply/add sequence as the HOF fold and DuckDB's list_reduce twin
-    (verified equal result sets) — never numpy's pairwise sum().
-    Ragged/null rows (impossible on the real fixtures, cheap insurance)
-    take a per-row path replicating zip_with's null semantics: length
-    mismatch or a null element ⇒ NULL dot ⇒ the ≥ 0.4 filter drops the
-    row in both engines. Defined lazily (a pandas_udf needs an active
-    session to parse its return type at decoration time)."""
+    Bit-identity contract, for FINITE, NON-NULL, EQUAL-LENGTH vectors
+    only: the kernel loops DIMENSIONS in strict left-to-right order over
+    float64 numpy columns — the identical IEEE multiply/add sequence as
+    the HOF fold and DuckDB's list_reduce twin (verified equal result
+    sets) — never numpy's pairwise sum(). Outside that domain the kernel
+    is not DuckDB's twin: a NaN or ±inf element makes a NaN dot, which
+    comes back from the UDF as NULL, so the ≥ 0.4 filter drops the pair
+    where DuckDB keeps it (NaN sorts above 0.4 there). Arrow also hands
+    null elements over as NaN inside the float64 columns, so they take the
+    same fast path. Ragged rows fail the np.stack and take a per-row path
+    (length mismatch ⇒ NULL dot ⇒ dropped). The fixtures hold none of
+    these values. Defined lazily (a pandas_udf needs an active session to
+    parse its return type at decoration time)."""
 
     # `from __future__ import annotations` makes these hints strings;
     # pandas_udf resolves them against the module globals, hence the

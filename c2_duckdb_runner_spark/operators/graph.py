@@ -32,7 +32,8 @@ _ITERS = 3
 # NULL endpoints are not graph nodes (r11 hostile pin): a NULL custkey/
 # suppkey would ride Spark's null-grouping through aggregation steps but
 # drop out of the oracle's equality joins — excluded at the source, both
-# sides, for every consumer of this edge list.
+# sides, in cust_supp_pairs, for every graph operator. Oracles that build
+# their own pair list carry this same WHERE clause.
 _EDGES_SQL = f"""
   SELECT DISTINCT o_custkey AS src, {_OFFSET} + l_suppkey AS dst
   FROM orders JOIN lineitem ON o_orderkey = l_orderkey
@@ -44,32 +45,55 @@ _EDGES_SQL = f"""
 """
 
 
-def _edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+def cust_supp_pairs(
+    spark: SparkSession, sf_dir: str, orders: DataFrame | None = None
+) -> DataFrame:
+    """(c, s) = (o_custkey, raw l_suppkey) for every orders ⨝ lineitem row,
+    NULL endpoints dropped. The one definition of a customer–supplier
+    trade edge: every operator on that graph builds on it or on
+    ``_edges``.
+
+    Not deduplicated: callers that keep a standing ``repartition(n, "c")``
+    dedup inside it, where a ``distinct()`` here would add a shuffle.
+    ``orders`` is an optional pre-filtered orders frame (k-core's edge
+    sample); it defaults to the whole table."""
+    o = orders if orders is not None else load(spark, sf_dir, "orders")
+    o = o.select("o_orderkey", "o_custkey")
     l = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    # Dedup the (customer, supplier) pairs BEFORE symmetrizing: the forward
-    # and reverse key spaces are disjoint (supplier ids offset by 10M), so
-    # distinct-then-mirror equals mirror-then-distinct while shuffling |E|
-    # pairs instead of 2|E|.
-    # r12: the mirror references `pairs` twice, and the union's two
-    # identical join+distinct subtrees do NOT collapse under AQE (no
-    # exchange/stage reuse fired — the sf1 bench event log shows the
-    # orders⨝lineitem scan+join running once per side). Checkpoint the
-    # deduped pair list once and mirror the materialized RDD:
-    # graph_pagerank_iterations 3.75 → 2.80 s A/B at sf0.1.
-    pairs = (
+    return (
         o.join(l, o.o_orderkey == l.l_orderkey)
         .filter(
             F.col("o_custkey").isNotNull() & F.col("l_suppkey").isNotNull()
         )
-        .select(
-            "o_custkey", (F.lit(_OFFSET) + F.col("l_suppkey")).alias("supp")
-        )
+        .select(F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s"))
+    )
+
+
+def _edges(
+    spark: SparkSession, sf_dir: str, orders: DataFrame | None = None
+) -> DataFrame:
+    """The symmetrized edge list ``(src, dst)``: each distinct
+    ``cust_supp_pairs`` row in both directions, supplier ids offset by
+    ``_OFFSET``.
+
+    Dedup runs BEFORE mirroring: the forward and reverse key spaces are
+    disjoint, so distinct-then-mirror equals mirror-then-distinct while
+    shuffling |E| pairs instead of 2|E|. The deduped pair list is then
+    checkpointed, because the mirror references it twice and the union's
+    two identical join+distinct subtrees do NOT collapse under AQE (no
+    exchange/stage reuse fired — the sf1 bench event log showed the
+    orders⨝lineitem scan+join running once per side); mirroring the
+    materialized RDD took graph_pagerank_iterations 3.75 → 2.80 s (A/B at
+    sf0.1). The checkpoint is eager, so building this frame — even only to
+    explain a plan — already runs a Spark job."""
+    pairs = (
+        cust_supp_pairs(spark, sf_dir, orders)
+        .select("c", (F.lit(_OFFSET) + F.col("s")).alias("s"))
         .distinct()
         .localCheckpoint(eager=True)
     )
-    fwd = pairs.select(F.col("o_custkey").alias("src"), F.col("supp").alias("dst"))
-    rev = pairs.select(F.col("supp").alias("src"), F.col("o_custkey").alias("dst"))
+    fwd = pairs.select(F.col("c").alias("src"), F.col("s").alias("dst"))
+    rev = pairs.select(F.col("s").alias("src"), F.col("c").alias("dst"))
     return fwd.union(rev)
 
 
@@ -232,17 +256,10 @@ def graph_pagerank_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
     groupBy shuffle + two scalar reduces (dangling mass, max-delta — bytes
     to the driver, never rows); ranks localCheckpoint-ed so lineage stays
     flat across a data-dependent number of rounds."""
-    o = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    l = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     edges = scratch_persist(
-        o.join(l, o.o_orderkey == l.l_orderkey)
-        # NULL endpoints are not graph nodes (r11 hostile pin)
-        .filter(
-            F.col("o_custkey").isNotNull() & F.col("l_suppkey").isNotNull()
-        )
+        cust_supp_pairs(spark, sf_dir)
         .select(
-            F.col("o_custkey").alias("src"),
-            (F.lit(_OFFSET) + F.col("l_suppkey")).alias("dst"),
+            F.col("c").alias("src"), (F.lit(_OFFSET) + F.col("s")).alias("dst")
         )
         .distinct()
     )

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from c2_duckdb_runner_spark.operators.graph import _OFFSET, _edges
 from c2_duckdb_runner_spark.registry import register
 from c2_duckdb_runner_spark.session import scratch_persist
 from c2_duckdb_runner_spark.tables import load
@@ -36,7 +37,6 @@ from c2_duckdb_runner_spark.tables import load
 # graph_node2vec_biased_walk
 # ---------------------------------------------------------------------------
 
-_OFFSET = 10_000_000  # supplier-id offset; same convention as graph.py
 _N2V_SEEDS = 10
 _N2V_BIASED_STEPS = 3  # biased hops after the first uniform hop
 _W_RET, _W_COM, _W_FAR = 2, 6, 3  # ≙ 1/p : 1 : 1/q with p=3, q=2 (scaled ×6)
@@ -144,33 +144,11 @@ def graph_node2vec_biased_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter), not the whole edge list. Frontier stays one row per walker
     after every hop's range filter, so cost per hop is O(Σ outdeg(cur))
     — the same as any neighbor expansion — at any number of walkers."""
-    o = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    l = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    pairs = (
-        o.join(l, o.o_orderkey == l.l_orderkey)
-        # NULL endpoints are not graph nodes (r11 hostile pin)
-        .filter(
-            F.col("o_custkey").isNotNull() & F.col("l_suppkey").isNotNull()
-        )
-        .select("o_custkey", (F.lit(_OFFSET) + F.col("l_suppkey")).alias("supp"))
-        .distinct()
-        # r12: mirror from the materialized pair list — the union's two
-        # identical subtrees don't collapse under AQE (see graph._edges)
-        .localCheckpoint(eager=True)
-    )
     # Persist the edge relation ALREADY hash-partitioned on src: every hop
     # joins on cur = src and the adjacency-check joins on prev = psrc, so
     # caching the partitioned layout lets all 2x{_N2V_BIASED_STEPS}+1 joins
     # reuse it instead of re-exchanging |E| rows per hop.
-    edges = scratch_persist(
-        pairs.select(
-            F.col("o_custkey").alias("src"), F.col("supp").alias("dst")
-        )
-        .union(
-            pairs.select(F.col("supp").alias("src"), F.col("o_custkey").alias("dst"))
-        )
-        .repartition(F.col("src"))
-    )
+    edges = scratch_persist(_edges(spark, sf_dir).repartition(F.col("src")))
     # Per-node adjacency arrays: ONE groupBy over the persisted edges,
     # consumed by every hop's prev-adjacency membership test. The arrays
     # are degree-bounded per row (never corpus state), same argument as

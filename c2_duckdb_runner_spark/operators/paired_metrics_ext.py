@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from c2_duckdb_runner_spark.operators.graph import _OFFSET, cust_supp_pairs
 from c2_duckdb_runner_spark.registry import register
 from c2_duckdb_runner_spark.session import scratch_persist
 from c2_duckdb_runner_spark.tables import load
@@ -120,6 +121,7 @@ _RICHCLUB_ORACLE = """
 WITH pairs AS (
   SELECT DISTINCT o.o_custkey AS c, 10000000 + l.l_suppkey AS s
   FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey
+  WHERE o_custkey IS NOT NULL AND l_suppkey IS NOT NULL
 ),
 edges AS (SELECT c AS src, s AS dst FROM pairs UNION ALL SELECT s, c FROM pairs),
 deg AS (SELECT src AS v, CAST(COUNT(*) AS BIGINT) AS d FROM edges GROUP BY 1),
@@ -153,23 +155,20 @@ def graph_rich_club(spark: SparkSession, sf_dir: str) -> DataFrame:
     four thresholds evaluate as conditional sums in ONE pass over that
     annotated edge relation (stack-unpivoted to rows) — adding thresholds
     never adds passes."""
-    o = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    pairs = (
-        o.join(li, o.o_orderkey == li.l_orderkey)
-        .select("o_custkey", (F.lit(10000000) + F.col("l_suppkey")).alias("supp"))
+    pairs = scratch_persist(
+        cust_supp_pairs(spark, sf_dir)
+        .select("c", (F.lit(_OFFSET) + F.col("s")).alias("s"))
         .distinct()
     )
-    pairs = scratch_persist(pairs)
-    edges = pairs.select(F.col("o_custkey").alias("src"), F.col("supp").alias("dst")).union(
-        pairs.select(F.col("supp").alias("src"), F.col("o_custkey").alias("dst"))
+    edges = pairs.select(F.col("c").alias("src"), F.col("s").alias("dst")).union(
+        pairs.select(F.col("s").alias("src"), F.col("c").alias("dst"))
     )
     deg = scratch_persist(
         edges.groupBy(F.col("src").alias("v")).agg(F.count("*").alias("d"))
     )
-    ds = deg.select(F.col("v").alias("o_custkey"), F.col("d").alias("d_src"))
-    dd = deg.select(F.col("v").alias("supp"), F.col("d").alias("d_dst"))
-    ed = pairs.join(ds, "o_custkey").join(dd, "supp")
+    ds = deg.select(F.col("v").alias("c"), F.col("d").alias("d_src"))
+    dd = deg.select(F.col("v").alias("s"), F.col("d").alias("d_dst"))
+    ed = pairs.join(ds, "c").join(dd, "s")
     ks = [2, 4, 8, 16]
     m_aggs = [
         F.sum(

@@ -23,6 +23,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from c2_duckdb_runner_spark.operators.graph import cust_supp_pairs
 from c2_duckdb_runner_spark.registry import register
 from c2_duckdb_runner_spark.session import shuffle_width
 from c2_duckdb_runner_spark.tables import load
@@ -317,16 +318,7 @@ def graph_jaccard_neighbor_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
     1.0× and the trade buys bounded memory for ~0 extra bytes."""
     from pyspark.sql.window import Window
 
-    o = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    cs = (
-        o.join(li, o.o_orderkey == li.l_orderkey)
-        # NULL endpoints are not graph nodes (r11 hostile pin)
-        .filter(F.col("o_custkey").isNotNull()
-                & F.col("l_suppkey").isNotNull())
-        .select(F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s"))
-        .distinct()
-    )
+    cs = cust_supp_pairs(spark, sf_dir).distinct()
     # Degree fence as an unbounded-frame window count (one c-keyed shuffle,
     # no join, no second scan of the orders⨝lineitem build), then
     # localCheckpoint: three consumers (sdeg, both sides of the wedge

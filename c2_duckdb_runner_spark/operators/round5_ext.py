@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from c2_duckdb_runner_spark.operators.graph import cust_supp_pairs
 from c2_duckdb_runner_spark.registry import register
 from c2_duckdb_runner_spark.session import scratch_persist, shuffle_width
 from c2_duckdb_runner_spark.tables import load
@@ -588,15 +589,7 @@ def graph_hits_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     form re-shuffles nothing that grows). Normalizers are 1-row
     broadcast maxes. The oracle replays every round bit-for-bit as an
     unrolled CTE chain (graph.py's PageRank recipe)."""
-    o = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    edges = (
-        o.join(li, o.o_orderkey == li.l_orderkey)
-        # NULL endpoints are not graph nodes (r11 hostile pin)
-        .filter(F.col("o_custkey").isNotNull()
-                & F.col("l_suppkey").isNotNull())
-        .select(F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s"))
-    )
+    edges = cust_supp_pairs(spark, sf_dir)
     nparts = shuffle_width(spark)
     # One shuffle builds the deduped c-partitioned copy: HashPartitioning(c)
     # satisfies the dedup aggregate's ClusteredDistribution((c, s)) by the

@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from c2_duckdb_runner_spark.operators.graph import _EDGES_SQL
+from c2_duckdb_runner_spark.operators.graph import _EDGES_SQL, _OFFSET, cust_supp_pairs
 from c2_duckdb_runner_spark.registry import register
 from c2_duckdb_runner_spark.tables import load
 
@@ -166,22 +166,12 @@ def graph_avg_neighbor_degree(spark: SparkSession, sf_dir: str) -> DataFrame:
     assumptions: the same plan (and the same shuffle bytes per row)
     executes at any scale. Cites graph.py _EDGES_SQL / _OFFSET
     (``main.cc:181-182`` reach)."""
-    from c2_duckdb_runner_spark.operators.graph import _OFFSET
     from c2_duckdb_runner_spark.session import scratch_persist, shuffle_width
 
-    o = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     nparts = shuffle_width(spark)
     pairs = (
-        o.join(li, o.o_orderkey == li.l_orderkey)
-        # NULL endpoints are not graph nodes (r11 hostile pin)
-        .filter(
-            F.col("o_custkey").isNotNull() & F.col("l_suppkey").isNotNull()
-        )
-        .select(
-            F.col("o_custkey").alias("c"),
-            (F.lit(_OFFSET) + F.col("l_suppkey")).alias("s"),
-        )
+        cust_supp_pairs(spark, sf_dir)
+        .select("c", (F.lit(_OFFSET) + F.col("s")).alias("s"))
         .repartition(nparts, "c")
         .dropDuplicates()
     )

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from c2_duckdb_runner_spark.operators.graph import _OFFSET, cust_supp_pairs
 from c2_duckdb_runner_spark.registry import fdoc, register
 from c2_duckdb_runner_spark.session import scratch_persist
 from c2_duckdb_runner_spark.tables import load
@@ -472,22 +473,22 @@ def agg_key_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _THR_SEED_MOD = 200
 _THR_TOP = 20
-_THR_OFFSET = 10_000_000  # graph.py:29
 
 _THR_ORACLE = f"""
 WITH cs AS (
   SELECT DISTINCT o_custkey AS c, l_suppkey AS s
   FROM orders JOIN lineitem ON o_orderkey = l_orderkey
+  WHERE o_custkey IS NOT NULL AND l_suppkey IS NOT NULL
 ),
 seeds AS (SELECT c_custkey AS seed FROM customer
           WHERE c_custkey % {_THR_SEED_MOD} = 0),
 hop1 AS (  -- seed customer -> supplier nodes
-  SELECT seeds.seed, {_THR_OFFSET} + cs.s AS node
+  SELECT seeds.seed, {_OFFSET} + cs.s AS node
   FROM seeds JOIN cs ON cs.c = seeds.seed
 ),
 hop2 AS (  -- supplier -> customer nodes (excluding the seed itself)
   SELECT h.seed, b.c AS node
-  FROM hop1 h JOIN cs b ON {_THR_OFFSET} + b.s = h.node
+  FROM hop1 h JOIN cs b ON {_OFFSET} + b.s = h.node
   WHERE b.c <> h.seed
 ),
 reach AS (
@@ -516,24 +517,18 @@ ORDER BY n_reach DESC, seed ASC LIMIT {_THR_TOP}
     supplier's full customer list) is the quantity being measured —
     output-bounded work, the same justification as the wedge ops.""")
 def graph_two_hop_reach_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    cs = scratch_persist(
-        o.join(li, o.o_orderkey == li.l_orderkey)
-        .select(F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s"))
-        .distinct()
-    )
+    cs = scratch_persist(cust_supp_pairs(spark, sf_dir).distinct())
     seeds = (
         load(spark, sf_dir, "customer")
         .filter(F.col("c_custkey") % _THR_SEED_MOD == 0)
         .select(F.col("c_custkey").alias("seed"))
     )
     hop1 = seeds.join(cs, seeds.seed == cs.c).select(
-        "seed", (F.lit(_THR_OFFSET) + F.col("s")).alias("node")
+        "seed", (F.lit(_OFFSET) + F.col("s")).alias("node")
     )
     hop2 = (
         hop1.join(
-            cs.select((F.lit(_THR_OFFSET) + F.col("s")).alias("sn"), "c"),
+            cs.select((F.lit(_OFFSET) + F.col("s")).alias("sn"), "c"),
             F.col("node") == F.col("sn"),
         )
         .filter(F.col("c") != F.col("seed"))

@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from c2_duckdb_runner_spark.operators.graph import _edges
 from c2_duckdb_runner_spark.registry import register
 from c2_duckdb_runner_spark.session import scratch_persist, shuffle_width
 from c2_duckdb_runner_spark.tables import load, load_spread
@@ -52,21 +53,8 @@ _KEDGES_SQL = """
 
 
 def _kedges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = load(spark, sf_dir, "orders").filter(
-        F.col("o_orderkey") % 13 == 0
-    ).select("o_orderkey", "o_custkey")
-    l = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    pairs = (
-        o.join(l, o.o_orderkey == l.l_orderkey)
-        .select("o_custkey", (F.lit(10_000_000) + F.col("l_suppkey")).alias("supp"))
-        .distinct()
-        # r12: mirror from the materialized pair list — the union's two
-        # identical subtrees don't collapse under AQE (see graph._edges)
-        .localCheckpoint(eager=True)
-    )
-    fwd = pairs.select(F.col("o_custkey").alias("src"), F.col("supp").alias("dst"))
-    rev = pairs.select(F.col("supp").alias("src"), F.col("o_custkey").alias("dst"))
-    return fwd.union(rev)
+    orders = load(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 13 == 0)
+    return _edges(spark, sf_dir, orders)
 
 
 def _kcore_oracle() -> str:

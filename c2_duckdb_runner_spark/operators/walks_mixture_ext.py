@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from c2_duckdb_runner_spark.operators.graph import _OFFSET, _edges
 from c2_duckdb_runner_spark.registry import register
 from c2_duckdb_runner_spark.session import scratch_persist
 from c2_duckdb_runner_spark.tables import load
@@ -38,7 +39,6 @@ from c2_duckdb_runner_spark.tables import load
 # graph_random_walks_hash
 # ---------------------------------------------------------------------------
 
-_OFFSET = 10_000_000  # supplier-id offset; same convention as graph.py
 _WALK_SEEDS = 20  # customers 1..20 that trade
 _WALK_STEPS = 4
 
@@ -107,26 +107,8 @@ def graph_random_walks_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter, so a million concurrent walkers cost {_WALK_STEPS} linear
     joins total — the frontier never fans out beyond one row per walker.
 
-    Cites graph.py's edge convention (supplier ids offset by 10M)."""
-    o = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    l = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    pairs = (
-        o.join(l, o.o_orderkey == l.l_orderkey)
-        # NULL endpoints are not graph nodes (r11 hostile pin)
-        .filter(
-            F.col("o_custkey").isNotNull() & F.col("l_suppkey").isNotNull()
-        )
-        .select("o_custkey", (F.lit(_OFFSET) + F.col("l_suppkey")).alias("supp"))
-        .distinct()
-        # r12: mirror from the materialized pair list — the union's two
-        # identical subtrees don't collapse under AQE (see graph._edges)
-        .localCheckpoint(eager=True)
-    )
-    edges = pairs.select(
-        F.col("o_custkey").alias("src"), F.col("supp").alias("dst")
-    ).union(
-        pairs.select(F.col("supp").alias("src"), F.col("o_custkey").alias("dst"))
-    )
+    Edges come from graph._edges (supplier ids offset by 10M)."""
+    edges = _edges(spark, sf_dir)
     wsrc = Window.partitionBy("src")
     ranked = scratch_persist(
         edges.select(

@@ -12,7 +12,8 @@
    cell count, 1 once cells cover 2x the shuffle width, capped at 8.
 4. graph_kcore_peel's one-exchange round relies on the edge relation
    being closed under endpoint swap AS A MULTISET — pinned on the real
-   fixture builder.
+   fixture builder, and on the full graph._edges it shares its mirror
+   step with.
 """
 
 from __future__ import annotations
@@ -26,6 +27,7 @@ from c2_duckdb_runner_spark.operators.dedup import (
     _exploded_shingles,
     _with_shingles,
 )
+from c2_duckdb_runner_spark.operators.graph import _edges
 from c2_duckdb_runner_spark.operators.structure_ext import _kedges
 from c2_duckdb_runner_spark.plans import inspect as pi
 from c2_duckdb_runner_spark.session import shuffle_width
@@ -87,7 +89,8 @@ def test_cos_salt_width_rules(spark):
 
 
 def test_kcore_edges_closed_under_swap(spark, sf_dir):
-    e = _kedges(spark, sf_dir).collect()
-    fwd = Counter((r.src, r.dst) for r in e)
-    rev = Counter((r.dst, r.src) for r in e)
-    assert fwd == rev
+    for build in (_kedges, _edges):
+        e = build(spark, sf_dir).collect()
+        fwd = Counter((r.src, r.dst) for r in e)
+        rev = Counter((r.dst, r.src) for r in e)
+        assert fwd == rev, build.__name__

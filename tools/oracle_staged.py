@@ -12,9 +12,10 @@ executed as a SEQUENCE of bounded DuckDB queries with parquet
 intermediates on disk:
 
 - the shared edge build (``SELECT DISTINCT o_custkey, l_suppkey FROM
-  orders JOIN lineitem``) is materialized ONCE as ``cs.parquet`` and read
-  back by every stage, instead of being re-derived inside each round's
-  CTE closure;
+  orders JOIN lineitem``, NULL endpoints dropped as in
+  ``graph.cust_supp_pairs``) is materialized ONCE as ``cs.parquet`` and
+  read back by every stage, instead of being re-derived inside each
+  round's CTE closure;
 - each fixpoint round (BFS relax, PPR contribution+rank, HITS half-round)
   is ONE DuckDB query over {edges parquet, previous-round parquet} whose
   working set is a single hash join + hash aggregate — bounded by the
@@ -125,7 +126,8 @@ def _stage_cs(sf_dir: str, work: str) -> None:
             work,
             "cs",
             "SELECT DISTINCT o_custkey AS c, l_suppkey AS s "
-            "FROM orders JOIN lineitem ON o_orderkey = l_orderkey",
+            "FROM orders JOIN lineitem ON o_orderkey = l_orderkey "
+            "WHERE o_custkey IS NOT NULL AND l_suppkey IS NOT NULL",
         )
 
 
@@ -713,7 +715,8 @@ def staged_kcore(sf_dir: str, work: str):
         "kc_cs",
         "SELECT DISTINCT o_custkey AS c, l_suppkey AS s "
         "FROM orders JOIN lineitem ON o_orderkey = l_orderkey "
-        "WHERE o_orderkey % 13 = 0",
+        "WHERE o_orderkey % 13 = 0 "
+        "AND o_custkey IS NOT NULL AND l_suppkey IS NOT NULL",
     )
     _stage(
         sf_dir,
