@@ -1,7 +1,7 @@
 """Documented hostile-differential fences (r11).
 
 Each entry excludes ONE registry key from the hostile-fixture differential
-gate (tools/hostile_sweep.py) because its divergence class has NO faithful
+gate (tools/sweep.py --hostile) because its divergence class has NO faithful
 dual rendering on hostile data — the engines' semantics genuinely differ
 and neither side can express the other's. A fence is NOT a pass: the
 sweep artifact reports fenced keys separately, every class below is

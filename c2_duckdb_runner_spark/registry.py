@@ -19,7 +19,9 @@ Oracle-parity discipline (SURVEY.md §7 "what's hard" #1):
 
 from __future__ import annotations
 
+import importlib
 import os
+import threading
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
@@ -100,108 +102,130 @@ def register(key: str, oracle: str | None = None, tags: tuple[str, ...] = ()):
     return deco
 
 
+# Every module that registers queries, in registration order. Modules are
+# imported in this order, and _load_all_modules then sorts REGISTRY by
+# (position here, registration order within the module), so a module
+# imported early by a caller cannot move its keys forward. The first-50
+# prefix is the driver's sample (pinned in tests/test_properties.py):
+# append new modules at the end.
+_MODULES = (
+    "operators.tier_a",
+    "operators.filters",
+    "operators.joins",
+    "operators.aggregates",
+    "operators.windows",
+    "operators.sorts_limits",
+    "operators.setops",
+    "functions.scalar",
+    "functions.complex",
+    "functions.udfs",
+    "operators.dedup",
+    "operators.simsearch",
+    "operators.textanalysis",
+    "operators.multimodal",
+    "operators.scale_patterns",
+    "operators.analytics_ext",
+    "operators.composite",
+    "operators.composite_subqueries",
+    "operators.pipeline_patterns",
+    "operators.training_pipeline",
+    "operators.modern_sql",
+    "operators.corpus_curation",
+    "operators.cdc_timeseries",
+    "operators.graph",
+    "operators.similarity_layout",
+    "operators.product_analytics",
+    "operators.sql_surface_ext",
+    "operators.data_mixture",
+    "operators.sketches_timeseries",
+    "operators.pandas_api",
+    "sources.formats",
+    "sources.python_datasource",
+    "streaming.queries",
+    "operators.curation_ext",
+    "operators.retrieval_ext",
+    "operators.coreset_ext",
+    "operators.spatial_signal_ext",
+    "operators.incremental_ext",
+    "operators.keywords_ext",
+    "operators.sql_surface_ext2",
+    "operators.warehouse_ext",
+    "operators.stats_retrieval_ext",
+    "operators.temporal_ext",
+    "operators.pipeline_gate_ext",
+    "operators.signal_ext2",
+    "operators.entity_vq_ext",
+    "operators.lakehouse_ext",
+    "operators.allocation_ext",
+    "operators.behavior_ext",
+    "operators.matching_ext",
+    "operators.structure_ext",
+    "operators.pipeline_r4_ext",
+    "operators.paper_patterns_ext",
+    "operators.stats_tests_ext",
+    "operators.inference_ext",
+    "operators.attribution_retrieval_ext",
+    "operators.walks_mixture_ext",
+    "operators.decompose_eval_ext",
+    "operators.forecast_eval_ext",
+    "operators.chunking_health_ext",
+    "operators.mlsplit_spectral_ext",
+    "operators.randomness_decay_ext",
+    "operators.abtest_growth_ext",
+    "operators.blocking_eval_ext",
+    "operators.summary_power_ext",
+    "operators.skyline_linkage_ext",
+    "operators.waterfall_bitemporal_ext",
+    "operators.markov_attribution_ext",
+    "operators.wau_contamination_ext",
+    "operators.control_calibration_ext",
+    "operators.streaks_backlog_ext",
+    "operators.drift_eval_ext",
+    "operators.simjoin_symbolic_ext",
+    "operators.agreement_privacy_ext",
+    "operators.paired_metrics_ext",
+    "operators.allocation_fusion_ext",
+    "operators.concentration_votes_ext",
+    "operators.ranked_tests_ext",
+    "operators.sequential_robust_ext",
+    "operators.pretrain_objectives_ext",
+    "operators.rates_portmanteau_ext",
+    "operators.scale_rank_ext",
+    "operators.round5_ext",
+    "operators.round5b_ext",
+    "operators.round5c_ext",
+    "operators.round5d_ext",
+    "operators.round5e_ext",
+    "operators.round6_ext",
+    "operators.round6b_ext",
+    "operators.round6c_ext",
+    "operators.round6d_ext",
+    "operators.round7_ext",
+    "operators.round7b_ext",
+    "operators.round7c_ext",
+    "operators.round7d_ext",
+    "operators.round8_ext",
+    "operators.round8b_ext",
+    "operators.round8c_ext",
+)
+_loaded = False
+_load_lock = threading.RLock()
+
+
 def _load_all_modules() -> None:
-    """Import every module that registers queries (idempotent)."""
-    import c2_duckdb_runner_spark.operators.tier_a  # noqa: F401
-    import c2_duckdb_runner_spark.operators.filters  # noqa: F401
-    import c2_duckdb_runner_spark.operators.joins  # noqa: F401
-    import c2_duckdb_runner_spark.operators.aggregates  # noqa: F401
-    import c2_duckdb_runner_spark.operators.windows  # noqa: F401
-    import c2_duckdb_runner_spark.operators.sorts_limits  # noqa: F401
-    import c2_duckdb_runner_spark.operators.setops  # noqa: F401
-    import c2_duckdb_runner_spark.functions.scalar  # noqa: F401
-    import c2_duckdb_runner_spark.functions.complex  # noqa: F401
-    import c2_duckdb_runner_spark.functions.udfs  # noqa: F401
-    import c2_duckdb_runner_spark.operators.dedup  # noqa: F401
-    import c2_duckdb_runner_spark.operators.simsearch  # noqa: F401
-    import c2_duckdb_runner_spark.operators.textanalysis  # noqa: F401
-    import c2_duckdb_runner_spark.operators.multimodal  # noqa: F401
-    import c2_duckdb_runner_spark.operators.scale_patterns  # noqa: F401
-    import c2_duckdb_runner_spark.operators.analytics_ext  # noqa: F401
-    import c2_duckdb_runner_spark.operators.composite  # noqa: F401
-    import c2_duckdb_runner_spark.operators.composite_subqueries  # noqa: F401
-    import c2_duckdb_runner_spark.operators.pipeline_patterns  # noqa: F401
-    import c2_duckdb_runner_spark.operators.training_pipeline  # noqa: F401
-    import c2_duckdb_runner_spark.operators.modern_sql  # noqa: F401
-    import c2_duckdb_runner_spark.operators.corpus_curation  # noqa: F401
-    import c2_duckdb_runner_spark.operators.cdc_timeseries  # noqa: F401
-    import c2_duckdb_runner_spark.operators.graph  # noqa: F401
-    import c2_duckdb_runner_spark.operators.similarity_layout  # noqa: F401
-    import c2_duckdb_runner_spark.operators.product_analytics  # noqa: F401
-    import c2_duckdb_runner_spark.operators.sql_surface_ext  # noqa: F401
-    import c2_duckdb_runner_spark.operators.data_mixture  # noqa: F401
-    import c2_duckdb_runner_spark.operators.sketches_timeseries  # noqa: F401
-    import c2_duckdb_runner_spark.operators.pandas_api  # noqa: F401
-    import c2_duckdb_runner_spark.sources.formats  # noqa: F401
-    import c2_duckdb_runner_spark.sources.python_datasource  # noqa: F401
-    import c2_duckdb_runner_spark.streaming.queries  # noqa: F401
-    import c2_duckdb_runner_spark.operators.curation_ext  # noqa: F401
-    import c2_duckdb_runner_spark.operators.retrieval_ext  # noqa: F401
-    import c2_duckdb_runner_spark.operators.coreset_ext  # noqa: F401
-    import c2_duckdb_runner_spark.operators.spatial_signal_ext  # noqa: F401
-    import c2_duckdb_runner_spark.operators.incremental_ext  # noqa: F401
-    import c2_duckdb_runner_spark.operators.keywords_ext  # noqa: F401
-    import c2_duckdb_runner_spark.operators.sql_surface_ext2  # noqa: F401
-    import c2_duckdb_runner_spark.operators.warehouse_ext  # noqa: F401
-    import c2_duckdb_runner_spark.operators.stats_retrieval_ext  # noqa: F401
-    import c2_duckdb_runner_spark.operators.temporal_ext  # noqa: F401
-    import c2_duckdb_runner_spark.operators.pipeline_gate_ext  # noqa: F401
-    import c2_duckdb_runner_spark.operators.signal_ext2  # noqa: F401
-    import c2_duckdb_runner_spark.operators.entity_vq_ext  # noqa: F401
-    import c2_duckdb_runner_spark.operators.lakehouse_ext  # noqa: F401
-    import c2_duckdb_runner_spark.operators.allocation_ext  # noqa: F401
-    import c2_duckdb_runner_spark.operators.behavior_ext  # noqa: F401
-    # round-4 additions — imported LAST to keep the driver-sampled first-50
-    # registration prefix stable (pinned in tests/test_properties.py)
-    import c2_duckdb_runner_spark.operators.matching_ext  # noqa: F401
-    import c2_duckdb_runner_spark.operators.structure_ext  # noqa: F401
-    import c2_duckdb_runner_spark.operators.pipeline_r4_ext  # noqa: F401
-    import c2_duckdb_runner_spark.operators.paper_patterns_ext  # noqa: F401
-    import c2_duckdb_runner_spark.operators.stats_tests_ext  # noqa: F401
-    import c2_duckdb_runner_spark.operators.inference_ext  # noqa: F401
-    import c2_duckdb_runner_spark.operators.attribution_retrieval_ext  # noqa: F401
-    import c2_duckdb_runner_spark.operators.walks_mixture_ext  # noqa: F401
-    import c2_duckdb_runner_spark.operators.decompose_eval_ext  # noqa: F401
-    import c2_duckdb_runner_spark.operators.forecast_eval_ext  # noqa: F401
-    import c2_duckdb_runner_spark.operators.chunking_health_ext  # noqa: F401
-    import c2_duckdb_runner_spark.operators.mlsplit_spectral_ext  # noqa: F401
-    import c2_duckdb_runner_spark.operators.randomness_decay_ext  # noqa: F401
-    import c2_duckdb_runner_spark.operators.abtest_growth_ext  # noqa: F401
-    import c2_duckdb_runner_spark.operators.blocking_eval_ext  # noqa: F401
-    import c2_duckdb_runner_spark.operators.summary_power_ext  # noqa: F401
-    import c2_duckdb_runner_spark.operators.skyline_linkage_ext  # noqa: F401
-    import c2_duckdb_runner_spark.operators.waterfall_bitemporal_ext  # noqa: F401
-    import c2_duckdb_runner_spark.operators.markov_attribution_ext  # noqa: F401
-    import c2_duckdb_runner_spark.operators.wau_contamination_ext  # noqa: F401
-    import c2_duckdb_runner_spark.operators.control_calibration_ext  # noqa: F401
-    import c2_duckdb_runner_spark.operators.streaks_backlog_ext  # noqa: F401
-    import c2_duckdb_runner_spark.operators.drift_eval_ext  # noqa: F401
-    import c2_duckdb_runner_spark.operators.simjoin_symbolic_ext  # noqa: F401
-    import c2_duckdb_runner_spark.operators.agreement_privacy_ext  # noqa: F401
-    import c2_duckdb_runner_spark.operators.paired_metrics_ext  # noqa: F401
-    import c2_duckdb_runner_spark.operators.allocation_fusion_ext  # noqa: F401
-    import c2_duckdb_runner_spark.operators.concentration_votes_ext  # noqa: F401
-    import c2_duckdb_runner_spark.operators.ranked_tests_ext  # noqa: F401
-    import c2_duckdb_runner_spark.operators.sequential_robust_ext  # noqa: F401
-    import c2_duckdb_runner_spark.operators.pretrain_objectives_ext  # noqa: F401
-    import c2_duckdb_runner_spark.operators.rates_portmanteau_ext  # noqa: F401
-    import c2_duckdb_runner_spark.operators.scale_rank_ext  # noqa: F401
-    import c2_duckdb_runner_spark.operators.round5_ext  # noqa: F401
-    import c2_duckdb_runner_spark.operators.round5b_ext  # noqa: F401
-    import c2_duckdb_runner_spark.operators.round5c_ext  # noqa: F401
-    import c2_duckdb_runner_spark.operators.round5d_ext  # noqa: F401
-    import c2_duckdb_runner_spark.operators.round5e_ext  # noqa: F401
-    import c2_duckdb_runner_spark.operators.round6_ext  # noqa: F401
-    import c2_duckdb_runner_spark.operators.round6b_ext  # noqa: F401
-    import c2_duckdb_runner_spark.operators.round6c_ext  # noqa: F401
-    import c2_duckdb_runner_spark.operators.round6d_ext  # noqa: F401
-    import c2_duckdb_runner_spark.operators.round7_ext  # noqa: F401
-    import c2_duckdb_runner_spark.operators.round7b_ext  # noqa: F401
-    import c2_duckdb_runner_spark.operators.round7c_ext  # noqa: F401
-    import c2_duckdb_runner_spark.operators.round7d_ext  # noqa: F401
-    import c2_duckdb_runner_spark.operators.round8_ext  # noqa: F401
-    import c2_duckdb_runner_spark.operators.round8b_ext  # noqa: F401
-    import c2_duckdb_runner_spark.operators.round8c_ext  # noqa: F401
+    """Import every module that registers queries and put REGISTRY in
+    ``_MODULES`` order (idempotent)."""
+    global _loaded
+    with _load_lock:
+        if _loaded:
+            return
+        pos = {}
+        for i, m in enumerate(_MODULES):
+            pos[importlib.import_module(f"{__package__}.{m}").__name__] = i
+        ordered = sorted(REGISTRY.values(), key=lambda q: pos[q.src_fn.__module__])
+        REGISTRY.clear()
+        REGISTRY.update((q.key, q) for q in ordered)
+        _loaded = True
 
 
 def queries() -> dict[str, QueryFn]:
@@ -220,7 +244,7 @@ def src_hashes() -> dict[str, dict[str, str]]:
     ``src_hash`` covers the operator's own function body plus its oracle
     SQL; ``mod_hash`` covers the whole defining module file, catching
     changes to same-module helpers the function calls. Sweep assembly
-    (tools/assemble_sweep.py) refuses to carry a prior round's 100x proof
+    (``tools/sweep.py``'s ``assemble``) refuses to carry a prior round's 100x proof
     for a key unless BOTH hashes are unchanged — the mechanical version
     of the hand-asserted "code unchanged" provenance the r10 artifact
     carried (VERDICT r10 ask #4).

@@ -1,10 +1,12 @@
 from __future__ import annotations
 
 import os
+import shutil
 
 import duckdb
 import pytest
 
+from c2_duckdb_runner_spark import hostile
 from c2_duckdb_runner_spark.session import get_spark
 from c2_duckdb_runner_spark.tables import TABLES
 
@@ -34,3 +36,16 @@ def duck():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture(scope="session")
+def hostile_dir(sf_dir, tmp_path_factory):
+    """A complete hostile sf twin: the six fuzz tables rewritten, the
+    other tables copied unchanged."""
+    out = str(tmp_path_factory.mktemp("hostile"))
+    hostile.make_hostile_fixtures(sf_dir, out)
+    for t in TABLES:
+        dst = os.path.join(out, f"{t}.parquet")
+        if not os.path.exists(dst):
+            shutil.copy(os.path.join(sf_dir, f"{t}.parquet"), dst)
+    return out

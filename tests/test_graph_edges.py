@@ -17,21 +17,19 @@ them. Two properties are pinned here:
 
 from __future__ import annotations
 
-import os
-import shutil
-
-import duckdb
 import pytest
 from pyspark.sql import functions as F
 
 import __spark_entry__ as entrymod
-from c2_duckdb_runner_spark import hostile, session
-from c2_duckdb_runner_spark.tables import TABLES
+from c2_duckdb_runner_spark import session
+from c2_duckdb_runner_spark.operators.graph import (
+    _EDGES_SQL,
+    _edges,
+    cust_supp_pairs,
+)
 from tests.compare import assert_frames_match
+from tools.oracle_staged import connect
 
-# Load the registry in its canonical order before any operator module is
-# imported on its own (tests/test_properties.py pins the first-50 prefix);
-# the graph helpers are imported inside the tests for the same reason.
 QUERIES = entrymod.queries()
 ORACLES = entrymod.oracle_sql()
 
@@ -56,25 +54,8 @@ EDGE_KEYS = [
 
 
 @pytest.fixture(scope="module")
-def hostile_dir(sf_dir, tmp_path_factory):
-    """A complete hostile sf twin: the six fuzz tables rewritten, the
-    other tables copied unchanged."""
-    out = str(tmp_path_factory.mktemp("hostile_graph"))
-    hostile.make_hostile_fixtures(sf_dir, out)
-    for t in TABLES:
-        dst = os.path.join(out, f"{t}.parquet")
-        if not os.path.exists(dst):
-            shutil.copy(os.path.join(sf_dir, f"{t}.parquet"), dst)
-    return out
-
-
-@pytest.fixture(scope="module")
 def hostile_duck(hostile_dir):
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{hostile_dir}/{t}.parquet'"
-        )
+    con = connect(hostile_dir)
     yield con
     con.close()
 
@@ -82,8 +63,6 @@ def hostile_duck(hostile_dir):
 def test_hostile_twin_has_null_endpoints(spark, hostile_dir, hostile_duck):
     """Precondition for the differential below: the twin really carries
     NULL endpoints, and the helper really drops them."""
-    from c2_duckdb_runner_spark.operators.graph import cust_supp_pairs
-
     n_null_c, n_null_s = hostile_duck.execute(
         "SELECT COUNT(*) FILTER (WHERE o_custkey IS NULL), "
         "COUNT(*) FILTER (WHERE l_suppkey IS NULL) "
@@ -105,8 +84,6 @@ def test_edge_key_matches_oracle_on_hostile_twin(
 
 
 def _max_distinct_degree(duck) -> int:
-    from c2_duckdb_runner_spark.operators.graph import _EDGES_SQL
-
     return duck.execute(
         f"SELECT MAX(d) FROM (SELECT src, COUNT(*) AS d FROM ({_EDGES_SQL}) "
         "GROUP BY src)"
@@ -120,8 +97,6 @@ def _scratch_with(cols: set[str]):
 
 
 def test_adjacency_arrays_bounded_by_distinct_degree(spark, sf_dir, duck):
-    from c2_duckdb_runner_spark.operators.graph import _edges
-
     bound = _max_distinct_degree(duck)
     assert bound > 1
     max_outdeg = (

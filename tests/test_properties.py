@@ -510,6 +510,33 @@ def test_first_50_registration_prefix_pinned():
     assert list(entrymod.queries())[:50] == DRIVER_SAMPLE_PREFIX_R03
 
 
+def test_first_50_prefix_independent_of_import_order(tmp_path):
+    """The same prefix in a fresh interpreter that imports an operator
+    module before the driver entry point (from a foreign cwd, as the
+    driver does)."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = (
+        "import json\n"
+        "import c2_duckdb_runner_spark.operators.graph\n"
+        "import __spark_entry__ as e\n"
+        "print(json.dumps(list(e.queries())[:50]))\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=tmp_path,
+        env={**os.environ, "PYTHONPATH": repo},
+        capture_output=True,
+        text=True,
+        check=True,
+    ).stdout
+    assert json.loads(out.splitlines()[-1]) == DRIVER_SAMPLE_PREFIX_R03
+
+
 def test_coverage_md_counts_not_stale():
     """COVERAGE.md's header counts and key inventory are generated from
     the registry (tools/gen_coverage.py); this pins the committed file to

@@ -4,22 +4,15 @@ The 100x sweep artifact may carry a prior round's proof for a key ONLY
 when the key's operator source (function body + oracle SQL) AND its
 defining module file are hash-identical to what the prior run covered;
 anything else must be re-run or explicitly overridden. These tests pin
-tools/assemble_sweep.assemble (the pure core) and registry.src_hashes.
+tools/sweep.assemble (the pure core), the rows-only merge refusal
+and registry.src_hashes.
 """
 
 from __future__ import annotations
 
-import importlib.util
-import os
+import json
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-_spec = importlib.util.spec_from_file_location(
-    "assemble_sweep", os.path.join(REPO, "tools", "assemble_sweep.py")
-)
-assemble_sweep = importlib.util.module_from_spec(_spec)
-_spec.loader.exec_module(_spec and assemble_sweep)
-assemble = assemble_sweep.assemble
+from tools.sweep import assemble, load_results
 
 H_A = {"src_hash": "aaaa", "mod_hash": "mmmm"}
 H_B = {"src_hash": "bbbb", "mod_hash": "mmmm"}
@@ -113,6 +106,22 @@ def test_carry_is_idempotent_across_rounds():
     )
     assert refused == []
     assert merged2["q"]["provenance"].count("carried:") == 1
+
+
+def test_rows_only_part_is_refused(tmp_path):
+    """A rows-only part (a weaker gate: no values compared) never merges
+    into a hash-sweep artifact, in either artifact form."""
+    import pytest
+
+    ro = {"status": "pass", "mode": "rows-only", "rows_match": True,
+          "schema_match": None, "hash_match": None}
+    for form in ({"q": ro}, {"what": "", "results": {"q": ro}}):
+        p = tmp_path / "part.json"
+        p.write_text(json.dumps(form))
+        with pytest.raises(SystemExit, match="rows-only"):
+            load_results(str(p))
+    p.write_text(json.dumps({"results": {"q": dict(ENTRY)}}))
+    assert load_results(str(p)) == {"q": ENTRY}
 
 
 def test_registry_src_hashes_cover_every_key_and_react_to_source():

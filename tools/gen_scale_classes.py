@@ -23,7 +23,7 @@ hand-waving:
 - ``row-proportional``: rows grow ~linearly and the projected 100x result
   exceeds CAP (collecting a 600M-row frame is the infeasibility, not the
   oracle) — the 100x gate for these is rows-only: COUNT(*) over the full
-  query on BOTH engines at the 100x replica (sweep_sf1.py --rows-only),
+  query on BOTH engines at the 100x replica (tools/sweep.py --rows-only),
   plus the sf0.1 full-value differential and the repo-wide plan bans.
   Per-row semantics carry no accumulating magnitude by construction under
   the replica scale model (gen_scale.py: entity count grows, per-entity
@@ -72,17 +72,24 @@ NOTES = {
 }
 
 
+def _results(path: str) -> dict:
+    """Per-key results of a flat ``{key: result}`` artifact or of the
+    wrapped ``{..., results}`` form tools/sweep.py writes."""
+    d = json.load(open(path))
+    return d.get("results", d)
+
+
 def classify() -> dict[str, dict]:
     import __spark_entry__ as entry
 
     keys = sorted(entry.queries())
-    ra = json.load(open(SF001))
-    rb = json.load(open(SF01))
+    ra = _results(SF001)
+    rb = _results(SF01)
     missing = [k for k in keys if k not in ra or k not in rb]
     if missing:
         raise SystemExit(
             f"unclassifiable: {len(missing)} registry keys missing from the "
-            f"full-sweep artifacts (rerun tools/full_sweep.py): {missing[:5]}"
+            f"full-sweep artifacts (rerun tools/sweep.py): {missing[:5]}"
         )
     stale = sorted(set(ra) - set(keys))
     if stale:
@@ -93,7 +100,7 @@ def classify() -> dict[str, dict]:
     # window — grow sf0.01->sf0.1 while filling the grid, then go flat)
     r8_rows: dict[str, int] = {}
     if os.path.exists(SF10_R8):
-        for k, v in json.load(open(SF10_R8))["results"].items():
+        for k, v in _results(SF10_R8).items():
             if v.get("spark_rows") is not None:
                 r8_rows[k] = v["spark_rows"]
 

@@ -54,22 +54,22 @@ sys.path.insert(0, REPO)
 
 import duckdb  # noqa: E402
 
-_OFFSET = 10_000_000  # graph.py:29 — supplier-node key offset
+from c2_duckdb_runner_spark.tables import TABLES  # noqa: E402
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
+_OFFSET = 10_000_000  # graph.py:29 — supplier-node key offset
 
 # one bounded stage = one fresh connection; never let a single query own
 # more than this (the Spark JVM shares the host during sweeps)
 _DUCK_MEM = os.environ.get("SPARK_GRAFT_DUCK_MEM", "40GB")
-# per-process spill subdir: see sweep_sf1.py — shared temp dirs
-# corrupt concurrent lanes via colliding temp-file names
+# per-process spill subdir: concurrent processes sharing one temp_directory
+# collide on its temp-file names and corrupt each other's spill
 _SPILL = f"/tmp/duck_spill/{os.getpid()}"
 
 
-def _connect(sf_dir: str, work: str) -> duckdb.DuckDBPyConnection:
+def connect(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """A memory-capped DuckDB connection with one view per fixture table in
+    ``sf_dir``: a ``<table>.parquet`` file or a Spark-written directory of
+    them. The monolithic oracles run here too (``tools/sweep.py``)."""
     con = duckdb.connect()
     os.makedirs(_SPILL, exist_ok=True)
     con.execute(f"SET memory_limit='{_DUCK_MEM}'")
@@ -85,6 +85,11 @@ def _connect(sf_dir: str, work: str) -> duckdb.DuckDBPyConnection:
                 )
         elif os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
+    return con
+
+
+def _connect(sf_dir: str, work: str) -> duckdb.DuckDBPyConnection:
+    con = connect(sf_dir)
     # staged intermediates become views named after their file stem; a
     # stem colliding with a base table would silently SHADOW it and
     # corrupt every downstream staged query — fail loudly instead
