@@ -29,6 +29,17 @@ Classes (the X-series continues fuzzing.py's exclusion ledger):
   HIGHEST; DuckDB's ordered aggregates treat NaN differently from its
   ORDER BY. Affects only rows whose ordered set contains NaN.
 
+- H-oracle-rejects: Spark returns rows for a hostile input that the
+  DuckDB oracle rejects with an error, so there is no oracle result to
+  compare (``tools/sweep.py`` records such a key as a ``fail``, not as
+  ``both_error``). Spark's ``floor`` of a double saturates at
+  9223372036854775807 where DuckDB's CAST to BIGINT raises out of range;
+  Spark's ``sin``/``cos`` of ±inf is NaN where DuckDB raises; Spark's
+  JSON functions return NULL on malformed JSON where DuckDB raises.
+  DuckDB has no saturating cast to mirror Spark's, and guarding the
+  oracle (TRY_CAST, json_valid) would yield NULL where Spark yields a
+  value, so these keys are fenced instead.
+
 FENCES maps key -> (class, reason). Keep reasons specific: name the
 witness column/value from CORRECTNESS_hostile_r11.json.
 """
@@ -254,5 +265,33 @@ FENCES: dict[str, tuple[str, str]] = {
         "subnet string built from hostile empty/NULL source: Spark "
         "yields '.0/24' where DuckDB yields NULL (D8 SPLIT_PART "
         "NULL-swallowing family; witness subnet row)",
+    ),
+    # ----- H-oracle-rejects: Spark accepts, DuckDB raises ---------------
+    "fn_math": (
+        "H-oracle-rejects",
+        "hostile l_extendedprice 1e+305: Spark floor(price / 1000) "
+        "saturates to 9223372036854775807, DuckDB CAST(floor(...) AS "
+        "BIGINT) raises 'out of range for the destination type INT64'",
+    ),
+    "fn_trig": (
+        "H-oracle-rejects",
+        "hostile p_retailprice inf: Spark sin/cos(inf) is NaN, DuckDB "
+        "raises 'input value inf is out of range for numeric function'",
+    ),
+    "fn_json": (
+        "H-oracle-rejects",
+        "hostile props '🦆 duck': Spark get_json_object returns NULL, "
+        "DuckDB ->> / json_extract_string raise 'Malformed JSON at byte 0'",
+    ),
+    "fn_from_json": (
+        "H-oracle-rejects",
+        "hostile props '🦆 duck': Spark from_json yields a NULL field, "
+        "DuckDB's ->> in the oracle raises 'Malformed JSON at byte 0'",
+    ),
+    "sql_create_function_udf": (
+        "H-oracle-rejects",
+        "hostile l_extendedprice inf: Spark floor(inf * ...) saturates to "
+        "9223372036854775807, DuckDB CAST(floor(...) AS BIGINT) raises "
+        "'value inf ... out of range for the destination type INT64'",
     ),
 }

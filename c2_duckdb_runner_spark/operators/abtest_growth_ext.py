@@ -25,16 +25,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from c2_duckdb_runner_spark.operators.graph import _OFFSET, _edges
+from c2_duckdb_runner_spark.operators.inference_ext import sdiv
 from c2_duckdb_runner_spark.registry import register
 from c2_duckdb_runner_spark.tables import load
-
-
-def _sdiv(num: str, den: str, engine: str) -> str:
-    op = "div" if engine == "spark" else "//"
-    return (
-        f"CASE WHEN ({num}) >= 0 THEN ({num}) {op} ({den})"
-        f" ELSE -((-({num})) {op} ({den})) END"
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -45,14 +38,14 @@ def _sdiv(num: str, den: str, engine: str) -> str:
 def _cuped_oracle() -> str:
     sdx_duck = (
         "("
-        + _sdiv("1000 * ax", "n_users", "duck")
+        + sdiv("1000 * ax", "n_users", "duck")
         + " - "
-        + _sdiv("1000 * sx", "n", "duck")
+        + sdiv("1000 * sx", "n", "duck")
         + ")"
     )
-    y_mean = _sdiv("1000 * ay", "n_users", "duck")
-    adj = _sdiv(f"th_micro * {sdx_duck}", "1000000", "duck")
-    th = _sdiv(
+    y_mean = sdiv("1000 * ay", "n_users", "duck")
+    adj = sdiv(f"th_micro * {sdx_duck}", "1000000", "duck")
+    th = sdiv(
         "1000000 * (n * sxy - CAST(sx AS HUGEINT) * sy)",
         "GREATEST(n * sxx - CAST(sx AS HUGEINT) * sx, 1)",
         "duck",
@@ -138,7 +131,7 @@ def ab_cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n",
         "sx",
         F.expr(
-            _sdiv(
+            sdiv(
                 "1000000 * (n * sxy - CAST(sx AS DECIMAL(19,0)) * sy)",
                 "GREATEST(n * sxx - CAST(sx AS DECIMAL(19,0)) * sx, 1)",
                 "spark",
@@ -153,19 +146,19 @@ def ab_cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("y").cast("bigint").alias("ay"),
     )
     sdx = (
-        _sdiv("1000 * ax", "n_users", "spark")
+        sdiv("1000 * ax", "n_users", "spark")
         + " - "
-        + _sdiv("1000 * sx", "n", "spark")
+        + sdiv("1000 * sx", "n", "spark")
     )
     return arms.crossJoin(F.broadcast(theta)).select(
         F.col("arm").cast("bigint").alias("arm"),
         "n_users",
-        F.expr(f"CAST({_sdiv('1000 * ay', 'n_users', 'spark')} AS BIGINT)").alias(
+        F.expr(f"CAST({sdiv('1000 * ay', 'n_users', 'spark')} AS BIGINT)").alias(
             "y_mean_micro"
         ),
         F.expr(
-            f"CAST({_sdiv('1000 * ay', 'n_users', 'spark')}"
-            f" - {_sdiv(f'th_micro * ({sdx})', '1000000', 'spark')} AS BIGINT)"
+            f"CAST({sdiv('1000 * ay', 'n_users', 'spark')}"
+            f" - {sdiv(f'th_micro * ({sdx})', '1000000', 'spark')} AS BIGINT)"
         ).alias("y_adj_micro"),
         F.col("th_micro").cast("bigint").alias("theta_micro"),
     )
@@ -345,7 +338,7 @@ lagged AS (
 )
 SELECT event_type, epoch_ms(w) AS week_ms, rev AS rev_cents,
        CAST(CASE WHEN prev IS NULL OR prev = 0 THEN NULL
-            ELSE {_sdiv('1000000 * (rev - prev)', 'prev', 'duck')} END AS BIGINT)
+            ELSE {sdiv('1000000 * (rev - prev)', 'prev', 'duck')} END AS BIGINT)
          AS wow_change_micro
 FROM lagged
 """,
@@ -380,6 +373,6 @@ def window_pct_change_wow(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("rev").alias("rev_cents"),
         F.expr(
             "CAST(CASE WHEN prev IS NULL OR prev = 0 THEN NULL"
-            f" ELSE {_sdiv('1000000 * (rev - prev)', 'prev', 'spark')} END AS BIGINT)"
+            f" ELSE {sdiv('1000000 * (rev - prev)', 'prev', 'spark')} END AS BIGINT)"
         ).alias("wow_change_micro"),
     )

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from c2_duckdb_runner_spark.operators.inference_ext import DAILY_MILLI_SQL, daily_milli
 from c2_duckdb_runner_spark.registry import register
 from c2_duckdb_runner_spark.tables import load
 
@@ -33,18 +34,11 @@ from c2_duckdb_runner_spark.tables import load
 # ts_xmr_control_chart
 # ---------------------------------------------------------------------------
 
-_DAILY_SQL = """
-  SELECT event_type, date_trunc('day', ts) AS d,
-         (10 * CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS BIGINT))
-           // CAST(COUNT(*) AS BIGINT) AS x
-  FROM events GROUP BY event_type, date_trunc('day', ts)
-"""
-
 
 @register(
     "ts_xmr_control_chart",
     oracle=f"""
-WITH daily AS ({_DAILY_SQL}),
+WITH daily AS ({DAILY_MILLI_SQL}),
 mr AS (
   SELECT event_type, d, x,
          abs(x - LAG(x) OVER (PARTITION BY event_type ORDER BY d)) AS m
@@ -85,16 +79,7 @@ def ts_xmr_control_chart(spark: SparkSession, sf_dir: str) -> DataFrame:
     One keyed rollup, one per-key LAG pass, a per-key stats row joined
     back for the out-of-control count — all on the bounded daily
     series."""
-    daily = (
-        load(spark, sf_dir, "events")
-        .groupBy("event_type", F.date_trunc("day", F.col("ts")).alias("d"))
-        .agg(
-            F.expr(
-                "(10 * CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS BIGINT))"
-                " div CAST(COUNT(*) AS BIGINT)"
-            ).alias("x")
-        )
-    )
+    daily = daily_milli(spark, sf_dir)
     we = Window.partitionBy("event_type").orderBy("d")
     mr = daily.select(
         "event_type",

@@ -28,37 +28,24 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from c2_duckdb_runner_spark.operators.inference_ext import (
+    DAILY_MILLI_SQL,
+    daily_milli,
+    sdiv,
+)
 from c2_duckdb_runner_spark.registry import register
 from c2_duckdb_runner_spark.tables import load
-
-
-def _sdiv(num: str, den: str, engine: str) -> str:
-    """Sign-split integral division: both engines truncate toward zero,
-    but splitting on sign makes the agreement explicit for negative
-    numerators (denominators are always positive here)."""
-    op = "div" if engine == "spark" else "//"
-    return (
-        f"CASE WHEN ({num}) >= 0 THEN ({num}) {op} ({den})"
-        f" ELSE -((-({num})) {op} ({den})) END"
-    )
 
 
 # ---------------------------------------------------------------------------
 # ts_seasonal_decompose_additive
 # ---------------------------------------------------------------------------
 
-_DAILY_SQL = """
-  SELECT event_type, date_trunc('day', ts) AS d,
-         (10 * CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS BIGINT))
-           // CAST(COUNT(*) AS BIGINT) AS x
-  FROM events GROUP BY event_type, date_trunc('day', ts)
-"""
-
 
 @register(
     "ts_seasonal_decompose_additive",
     oracle=f"""
-WITH daily AS ({_DAILY_SQL}),
+WITH daily AS ({DAILY_MILLI_SQL}),
 tr AS (
   SELECT event_type, d, x,
          CAST(SUM(x) OVER w7 AS BIGINT) // CAST(COUNT(*) OVER w7 AS BIGINT)
@@ -74,8 +61,8 @@ dev AS (
 ),
 seas AS (
   SELECT event_type, d, x, trend, dv,
-         {_sdiv('CAST(SUM(dv) OVER wd AS BIGINT)',
-                'CAST(COUNT(*) OVER wd AS BIGINT)', 'duck')} AS seasonal
+         {sdiv('CAST(SUM(dv) OVER wd AS BIGINT)',
+               'CAST(COUNT(*) OVER wd AS BIGINT)', 'duck')} AS seasonal
   FROM dev
   WINDOW wd AS (PARTITION BY event_type, dow)
 )
@@ -99,16 +86,7 @@ def ts_seasonal_decompose_additive(spark: SparkSession, sf_dir: str) -> DataFram
     the decomposition is a constant-size computation per key after one
     scan's keyed rollup. Weekday parity: Spark weekday()+1 == DuckDB
     isodow (1=Monday..7=Sunday)."""
-    daily = (
-        load(spark, sf_dir, "events")
-        .groupBy("event_type", F.date_trunc("day", F.col("ts")).alias("d"))
-        .agg(
-            F.expr(
-                "(10 * CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS BIGINT))"
-                " div CAST(COUNT(*) AS BIGINT)"
-            ).alias("x")
-        )
-    )
+    daily = daily_milli(spark, sf_dir)
     w7 = (
         Window.partitionBy("event_type")
         .orderBy("d")
@@ -149,7 +127,7 @@ def ts_seasonal_decompose_additive(spark: SparkSession, sf_dir: str) -> DataFram
         "x",
         "trend",
         "dv",
-        F.expr(_sdiv("dsum", "dcnt", "spark")).alias("seasonal"),
+        F.expr(sdiv("dsum", "dcnt", "spark")).alias("seasonal"),
     )
     return seas.select(
         "event_type",
@@ -195,7 +173,7 @@ d AS (
 SELECT CAST(COUNT(*) AS INT) AS n_strata,
        CAST(SUM(nt) AS BIGINT) AS n_treated,
        CAST(SUM(nc) AS BIGINT) AS n_control,
-       CAST({_sdiv('SUM(nt * diff_micro)', 'SUM(nt)', 'duck')} AS BIGINT)
+       CAST({sdiv('SUM(nt * diff_micro)', 'SUM(nt)', 'duck')} AS BIGINT)
          AS att_micro
 FROM d
 """,
@@ -249,7 +227,7 @@ def causal_stratified_att(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("nt").cast("bigint").alias("n_treated"),
         F.sum("nc").cast("bigint").alias("n_control"),
         F.expr(
-            "CAST(" + _sdiv("SUM(nt * diff_micro)", "SUM(nt)", "spark") + " AS BIGINT)"
+            "CAST(" + sdiv("SUM(nt * diff_micro)", "SUM(nt)", "spark") + " AS BIGINT)"
         ).alias("att_micro"),
     )
 

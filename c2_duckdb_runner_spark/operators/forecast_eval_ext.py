@@ -27,25 +27,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from c2_duckdb_runner_spark.operators.inference_ext import (
+    DAILY_MILLI_SQL,
+    daily_milli,
+    sdiv,
+)
 from c2_duckdb_runner_spark.registry import register
 from c2_duckdb_runner_spark.tables import load
 
-
-def _sdiv(num: str, den: str, engine: str) -> str:
-    """Sign-split integral division (see decompose_eval_ext)."""
-    op = "div" if engine == "spark" else "//"
-    return (
-        f"CASE WHEN ({num}) >= 0 THEN ({num}) {op} ({den})"
-        f" ELSE -((-({num})) {op} ({den})) END"
-    )
-
-
-_DAILY_SQL = """
-  SELECT event_type, date_trunc('day', ts) AS d,
-         (10 * CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS BIGINT))
-           // CAST(COUNT(*) AS BIGINT) AS x
-  FROM events GROUP BY event_type, date_trunc('day', ts)
-"""
 
 # ---------------------------------------------------------------------------
 # ts_holt_linear_forecast
@@ -57,7 +46,7 @@ _HOLT_H = 7  # forecast horizon in days
 @register(
     "ts_holt_linear_forecast",
     oracle=f"""
-WITH RECURSIVE daily AS ({_DAILY_SQL}),
+WITH RECURSIVE daily AS ({DAILY_MILLI_SQL}),
 pts AS (
   SELECT event_type, x,
          ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY d) AS i
@@ -71,9 +60,9 @@ hw AS (
     ON p1.event_type = p2.event_type AND p1.i = 1 AND p2.i = 2
   UNION ALL
   SELECT hw.event_type, hw.i + 1,
-         {_sdiv('p.x + 3 * (hw.l + hw.b)', '4', 'duck')},
-         {_sdiv(
-             "(" + _sdiv('p.x + 3 * (hw.l + hw.b)', '4', 'duck')
+         {sdiv('p.x + 3 * (hw.l + hw.b)', '4', 'duck')},
+         {sdiv(
+             "(" + sdiv('p.x + 3 * (hw.l + hw.b)', '4', 'duck')
              + " - hw.l) + 3 * hw.b",
              '4', 'duck')}
   FROM hw JOIN pts p ON p.event_type = hw.event_type AND p.i = hw.i + 1
@@ -101,23 +90,14 @@ def ts_holt_linear_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one keyed rollup, then per-key constant work; keys
     process independently (no cross-key state), so a million series cost
     one shuffle."""
-    daily = (
-        load(spark, sf_dir, "events")
-        .groupBy("event_type", F.date_trunc("day", F.col("ts")).alias("d"))
-        .agg(
-            F.expr(
-                "(10 * CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS BIGINT))"
-                " div CAST(COUNT(*) AS BIGINT)"
-            ).alias("x")
-        )
-    )
+    daily = daily_milli(spark, sf_dir)
     arr = daily.groupBy("event_type").agg(
         F.expr("transform(sort_array(collect_list(struct(d, x))), p -> p.x)").alias(
             "xs"
         )
     )
-    l_upd = _sdiv("x + 3 * (s.l + s.b)", "4L", "spark")
-    b_upd = _sdiv(f"(({l_upd}) - s.l) + 3 * s.b", "4L", "spark")
+    l_upd = sdiv("x + 3 * (s.l + s.b)", "4L", "spark")
+    b_upd = sdiv(f"(({l_upd}) - s.l) + 3 * s.b", "4L", "spark")
     folded = arr.select(
         "event_type",
         F.size("xs").cast("bigint").alias("n_points"),

@@ -22,6 +22,11 @@ arithmetic so both engines agree bit-for-bit:
   privacy screen that complements text_pii_redact (row-level redaction)
   with a group-level disclosure check.
 
+It also owns the integer daily-series kit the ts_* / daily-stats family
+builds on: ``daily_milli`` (the Spark per-type daily mean in milli-units),
+``DAILY_MILLI_SQL`` (its independently written oracle twin) and ``sdiv``
+(the sign-split integral division formatter for both engines).
+
 Reference reach: the delegated SQL slot (``main.cc:181-182``).
 """
 
@@ -35,14 +40,12 @@ from c2_duckdb_runner_spark.registry import register
 from c2_duckdb_runner_spark.tables import load
 
 # ---------------------------------------------------------------------------
-# stats_anova_f_daily
+# The integer daily-series kit, shared by the ts_* / daily-stats family
 # ---------------------------------------------------------------------------
 
-# F critical value at alpha=0.05 for df1=4, df2≈145 is ~2.43; 2.5 is the
-# conservative integer-micro threshold used for the one-bit verdict.
-_ANOVA_CRIT_MICRO = 2_500_000
-
-_DAILY_SQL = """
+# The oracle side, written independently of daily_milli (neither is
+# generated from the other, so the differential compares two renderings).
+DAILY_MILLI_SQL = """
   SELECT event_type, date_trunc('day', ts) AS d,
          (10 * CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS BIGINT))
            // CAST(COUNT(*) AS BIGINT) AS x
@@ -50,8 +53,9 @@ _DAILY_SQL = """
 """
 
 
-def _daily_milli(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Daily mean event value per type, in integer MILLI-units.
+def daily_milli(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Daily mean event value per type, in integer MILLI-units:
+    ``(event_type, d, x)`` with ``x = (10·Σ round(value·100)) div count``.
 
     The integral division is part of the statistic's definition (both
     engines truncate toward zero on positive operands), so every
@@ -68,10 +72,30 @@ def _daily_milli(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def sdiv(num: str, den: str, engine: str) -> str:
+    """Sign-split integral division: both engines truncate toward zero,
+    but splitting on sign makes the agreement explicit for negative
+    numerators (denominators are always positive here)."""
+    op = "div" if engine == "spark" else "//"
+    return (
+        f"CASE WHEN ({num}) >= 0 THEN ({num}) {op} ({den})"
+        f" ELSE -((-({num})) {op} ({den})) END"
+    )
+
+
+# ---------------------------------------------------------------------------
+# stats_anova_f_daily
+# ---------------------------------------------------------------------------
+
+# F critical value at alpha=0.05 for df1=4, df2≈145 is ~2.43; 2.5 is the
+# conservative integer-micro threshold used for the one-bit verdict.
+_ANOVA_CRIT_MICRO = 2_500_000
+
+
 @register(
     "stats_anova_f_daily",
     oracle=f"""
-WITH daily AS ({_DAILY_SQL}),
+WITH daily AS ({DAILY_MILLI_SQL}),
 g AS (
   SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_g,
          CAST(SUM(x) AS BIGINT) AS t_g,
@@ -119,7 +143,7 @@ def stats_anova_f_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the events collapse to a (k·~30)-row daily table in one
     scan; everything after is constant-size. At 100 TB the daily rollup
     is the only cost, and it re-aggregates from pre-binned partials."""
-    daily = _daily_milli(spark, sf_dir)
+    daily = daily_milli(spark, sf_dir)
     g = daily.groupBy("event_type").agg(
         F.count("*").cast("bigint").alias("n_g"),
         F.sum("x").cast("bigint").alias("t_g"),
@@ -177,7 +201,7 @@ def stats_anova_f_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "ts_autocorr_lags",
     oracle=f"""
-WITH daily AS ({_DAILY_SQL}),
+WITH daily AS ({DAILY_MILLI_SQL}),
 means AS (
   SELECT event_type, CAST(SUM(x) AS BIGINT) // CAST(COUNT(*) AS BIGINT) AS m
   FROM daily GROUP BY event_type
@@ -229,7 +253,7 @@ def ts_autocorr_lags(spark: SparkSession, sf_dir: str) -> DataFrame:
     by event_type, so no global sort exists at any scale. ~30 points per
     key regardless of corpus size: the downsample carries the statistic,
     exactly like ts_mann_kendall_trend."""
-    daily = _daily_milli(spark, sf_dir)
+    daily = daily_milli(spark, sf_dir)
     means = daily.groupBy("event_type").agg(
         F.expr("CAST(SUM(x) AS BIGINT) div CAST(COUNT(*) AS BIGINT)").alias("m")
     )

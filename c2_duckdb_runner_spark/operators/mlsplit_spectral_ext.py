@@ -29,6 +29,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from c2_duckdb_runner_spark.operators.graph import _OFFSET, _edges
+from c2_duckdb_runner_spark.operators.inference_ext import (
+    DAILY_MILLI_SQL,
+    daily_milli,
+    sdiv,
+)
 from c2_duckdb_runner_spark.registry import register
 from c2_duckdb_runner_spark.session import scratch_persist
 from c2_duckdb_runner_spark.tables import load
@@ -437,26 +442,10 @@ def _trig_case(col: str, table: tuple[int, ...]) -> str:
     return f"CASE {whens} END"
 
 
-def _sdiv(num: str, den: str, engine: str) -> str:
-    op = "div" if engine == "spark" else "//"
-    return (
-        f"CASE WHEN ({num}) >= 0 THEN ({num}) {op} ({den})"
-        f" ELSE -((-({num})) {op} ({den})) END"
-    )
-
-
-_DAILY_SQL = """
-  SELECT event_type, date_trunc('day', ts) AS d,
-         (10 * CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS BIGINT))
-           // CAST(COUNT(*) AS BIGINT) AS x
-  FROM events GROUP BY event_type, date_trunc('day', ts)
-"""
-
-
 @register(
     "ts_dft_weekly_power",
     oracle=f"""
-WITH daily AS ({_DAILY_SQL}),
+WITH daily AS ({DAILY_MILLI_SQL}),
 idx AS (
   SELECT event_type, x,
          CAST((ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY d) - 1) % 7
@@ -471,8 +460,8 @@ ft AS (
 ),
 sc AS (
   SELECT event_type, n_points,
-         {_sdiv('re_raw', '1000000', 'duck')} AS re_milli,
-         {_sdiv('im_raw', '1000000', 'duck')} AS im_milli
+         {sdiv('re_raw', '1000000', 'duck')} AS re_milli,
+         {sdiv('im_raw', '1000000', 'duck')} AS im_milli
   FROM ft
 )
 SELECT event_type, n_points,
@@ -494,16 +483,7 @@ def ts_dft_weekly_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one keyed rollup to the bounded daily series, a
     per-key window for the day index, one keyed aggregate. Constant
     work per key."""
-    daily = (
-        load(spark, sf_dir, "events")
-        .groupBy("event_type", F.date_trunc("day", F.col("ts")).alias("d"))
-        .agg(
-            F.expr(
-                "(10 * CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS BIGINT))"
-                " div CAST(COUNT(*) AS BIGINT)"
-            ).alias("x")
-        )
-    )
+    daily = daily_milli(spark, sf_dir)
     idx = daily.select(
         "event_type",
         "x",
@@ -531,8 +511,8 @@ def ts_dft_weekly_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     sc = ft.select(
         "event_type",
         "n_points",
-        F.expr(_sdiv("re_raw", "1000000", "spark")).alias("re_milli"),
-        F.expr(_sdiv("im_raw", "1000000", "spark")).alias("im_milli"),
+        F.expr(sdiv("re_raw", "1000000", "spark")).alias("re_milli"),
+        F.expr(sdiv("im_raw", "1000000", "spark")).alias("im_milli"),
     )
     return sc.select(
         "event_type",

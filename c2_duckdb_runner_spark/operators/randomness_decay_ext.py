@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from c2_duckdb_runner_spark.operators.inference_ext import DAILY_MILLI_SQL, daily_milli
 from c2_duckdb_runner_spark.registry import register
 from c2_duckdb_runner_spark.tables import load
 
@@ -169,18 +170,11 @@ def agg_time_decay_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 # stats_runs_test
 # ---------------------------------------------------------------------------
 
-_DAILY_SQL = """
-  SELECT event_type, date_trunc('day', ts) AS d,
-         (10 * CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS BIGINT))
-           // CAST(COUNT(*) AS BIGINT) AS x
-  FROM events GROUP BY event_type, date_trunc('day', ts)
-"""
-
 
 @register(
     "stats_runs_test",
     oracle=f"""
-WITH daily AS ({_DAILY_SQL}),
+WITH daily AS ({DAILY_MILLI_SQL}),
 med AS (
   SELECT event_type, x AS m
   FROM (
@@ -234,16 +228,7 @@ def stats_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     oscillation — the randomness gate a forecasting pipeline checks
     before trusting ts_holt_linear_forecast's extrapolation. All
     windows partition by event_type over the bounded daily series."""
-    daily = (
-        load(spark, sf_dir, "events")
-        .groupBy("event_type", F.date_trunc("day", F.col("ts")).alias("d"))
-        .agg(
-            F.expr(
-                "(10 * CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS BIGINT))"
-                " div CAST(COUNT(*) AS BIGINT)"
-            ).alias("x")
-        )
-    )
+    daily = daily_milli(spark, sf_dir)
     we = Window.partitionBy("event_type")
     med = (
         daily.select(

@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from c2_duckdb_runner_spark.operators.inference_ext import _DAILY_SQL, _daily_milli
+from c2_duckdb_runner_spark.operators.inference_ext import DAILY_MILLI_SQL, daily_milli
 from c2_duckdb_runner_spark.registry import register
 from c2_duckdb_runner_spark.tables import load
 
@@ -142,7 +142,7 @@ def rank_wilson_lower_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
 _LB_THRESH = 7_814_728_000_000  # χ²(3) at 0.95 = 7.814728, at micro² scale
 
 _LB_ORACLE = f"""
-WITH daily AS ({_DAILY_SQL}),
+WITH daily AS ({DAILY_MILLI_SQL}),
 means AS (
   SELECT event_type, CAST(SUM(x) AS BIGINT) // CAST(COUNT(*) AS BIGINT) AS m
   FROM daily GROUP BY event_type
@@ -195,7 +195,7 @@ def ts_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one keyed daily rollup; windows partition by event type over
     the calendar-bounded series."""
-    daily = _daily_milli(spark, sf_dir)
+    daily = daily_milli(spark, sf_dir)
     means = daily.groupBy("event_type").agg(
         F.expr("CAST(SUM(x) AS BIGINT) div CAST(COUNT(*) AS BIGINT)").alias("m")
     )

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from c2_duckdb_runner_spark.operators.inference_ext import daily_milli
 from c2_duckdb_runner_spark.registry import register
 from c2_duckdb_runner_spark.tables import load
 
@@ -266,16 +267,7 @@ def ts_page_hinkley(spark: SparkSession, sf_dir: str) -> DataFrame:
     ts_* family contract) partitioned by type. Integer milli end-to-end:
     x uses the shared (10·cents) div count convention, so both engines
     agree bit-for-bit."""
-    e = load(spark, sf_dir, "events")
-    daily = (
-        e.select(
-            "event_type",
-            F.date_trunc("day", "ts").alias("d"),
-            F.expr("CAST(round(value * 100) AS BIGINT)").alias("c"),
-        )
-        .groupBy("event_type", "d")
-        .agg(F.expr("(10 * SUM(c)) div COUNT(*)").alias("x"))
-    )
+    daily = daily_milli(spark, sf_dir)
     mu = daily.groupBy("event_type").agg(
         F.expr("CAST(SUM(x) AS BIGINT) div COUNT(*)").alias("mean_milli"),
         F.count("*").cast("bigint").alias("nd"),

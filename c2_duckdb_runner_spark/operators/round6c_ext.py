@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from c2_duckdb_runner_spark.operators.inference_ext import daily_milli
 from c2_duckdb_runner_spark.registry import register
 from c2_duckdb_runner_spark.session import scratch_persist
 from c2_duckdb_runner_spark.tables import load
@@ -178,16 +179,10 @@ def stats_wilcoxon_signed_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     join, |diff| histogram and cumulative window all run on the
     calendar-bounded daily series. The cumulative window ranks the
     HISTOGRAM (an aggregate), never raw rows."""
-    e = load(spark, sf_dir, "events")
-    daily = (
-        e.filter(F.col("event_type").isin("view", "click"))
-        .select(
-            "event_type",
-            F.date_trunc("day", "ts").alias("d"),
-            F.expr("CAST(round(value * 100) AS BIGINT)").alias("c"),
-        )
-        .groupBy("event_type", "d")
-        .agg(F.expr("(10 * SUM(c)) div COUNT(*)").alias("x"))
+    # the filter is on a grouping key, so Catalyst pushes it below the
+    # aggregate: only view/click rows are rolled up
+    daily = daily_milli(spark, sf_dir).filter(
+        F.col("event_type").isin("view", "click")
     )
     a = daily.filter("event_type = 'view'").select(
         "d", F.col("x").alias("xa")

@@ -26,16 +26,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from c2_duckdb_runner_spark.operators.inference_ext import (
+    DAILY_MILLI_SQL,
+    daily_milli,
+    sdiv,
+)
 from c2_duckdb_runner_spark.registry import register
 from c2_duckdb_runner_spark.tables import load
-
-
-def _sdiv(num: str, den: str, engine: str) -> str:
-    op = "div" if engine == "spark" else "//"
-    return (
-        f"CASE WHEN ({num}) >= 0 THEN ({num}) {op} ({den})"
-        f" ELSE -((-({num})) {op} ({den})) END"
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -315,18 +312,11 @@ def corpus_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ts_anomaly_stl_residual
 # ---------------------------------------------------------------------------
 
-_DAILY_SQL = """
-  SELECT event_type, date_trunc('day', ts) AS d,
-         (10 * CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS BIGINT))
-           // CAST(COUNT(*) AS BIGINT) AS x
-  FROM events GROUP BY event_type, date_trunc('day', ts)
-"""
-
 
 @register(
     "ts_anomaly_stl_residual",
     oracle=f"""
-WITH daily AS ({_DAILY_SQL}),
+WITH daily AS ({DAILY_MILLI_SQL}),
 tr AS (
   SELECT event_type, d, x,
          CAST(SUM(x) OVER w7 AS BIGINT) // CAST(COUNT(*) OVER w7 AS BIGINT)
@@ -342,8 +332,8 @@ dev AS (
 ),
 seas AS (
   SELECT event_type, d, x, dv,
-         {_sdiv('CAST(SUM(dv) OVER wd AS BIGINT)',
-                'CAST(COUNT(*) OVER wd AS BIGINT)', 'duck')} AS seasonal
+         {sdiv('CAST(SUM(dv) OVER wd AS BIGINT)',
+               'CAST(COUNT(*) OVER wd AS BIGINT)', 'duck')} AS seasonal
   FROM dev
   WINDOW wd AS (PARTITION BY event_type, dow)
 ),
@@ -387,16 +377,7 @@ def ts_anomaly_stl_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     Every window partitions by event type (+weekday) over the bounded
     daily series; the MAD needs one extra per-key pass over ~30 rows.
     Constant work per key at any corpus size."""
-    daily = (
-        load(spark, sf_dir, "events")
-        .groupBy("event_type", F.date_trunc("day", F.col("ts")).alias("d"))
-        .agg(
-            F.expr(
-                "(10 * CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS BIGINT))"
-                " div CAST(COUNT(*) AS BIGINT)"
-            ).alias("x")
-        )
-    )
+    daily = daily_milli(spark, sf_dir)
     w7 = Window.partitionBy("event_type").orderBy("d").rowsBetween(-3, 3)
     tr = daily.select(
         "event_type",
@@ -420,7 +401,7 @@ def ts_anomaly_stl_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "d",
         "x",
-        (F.col("dv") - F.expr(_sdiv("dsum", "dcnt", "spark"))).cast("bigint").alias("r"),
+        (F.col("dv") - F.expr(sdiv("dsum", "dcnt", "spark"))).cast("bigint").alias("r"),
     )
     we = Window.partitionBy("event_type")
     med = (

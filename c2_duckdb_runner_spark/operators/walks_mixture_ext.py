@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from c2_duckdb_runner_spark.operators.graph import _OFFSET, _edges
+from c2_duckdb_runner_spark.operators.inference_ext import DAILY_MILLI_SQL, daily_milli
 from c2_duckdb_runner_spark.registry import register
 from c2_duckdb_runner_spark.session import scratch_persist
 from c2_duckdb_runner_spark.tables import load
@@ -356,18 +357,11 @@ def text_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ts_theil_sen_slope
 # ---------------------------------------------------------------------------
 
-_DAILY_SQL = """
-  SELECT event_type, date_trunc('day', ts) AS d,
-         (10 * CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS BIGINT))
-           // CAST(COUNT(*) AS BIGINT) AS x
-  FROM events GROUP BY event_type, date_trunc('day', ts)
-"""
-
 
 @register(
     "ts_theil_sen_slope",
     oracle=f"""
-WITH daily AS ({_DAILY_SQL}),
+WITH daily AS ({DAILY_MILLI_SQL}),
 slopes AS (
   SELECT a.event_type,
          CASE WHEN b.x - a.x >= 0
@@ -404,16 +398,7 @@ def ts_theil_sen_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     — the VALUE at rank (n+1) div 2 is deterministic regardless of how
     equal slopes tie-break. Pair enumeration runs on the ~30-point daily
     rollup (~435 pairs/key at any corpus size), partitioned by key."""
-    daily = (
-        load(spark, sf_dir, "events")
-        .groupBy("event_type", F.date_trunc("day", F.col("ts")).alias("d"))
-        .agg(
-            F.expr(
-                "(10 * CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS BIGINT))"
-                " div CAST(COUNT(*) AS BIGINT)"
-            ).alias("x")
-        )
-    )
+    daily = daily_milli(spark, sf_dir)
     a, b = daily.alias("a"), daily.alias("b")
     slopes = a.join(
         b,

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from c2_duckdb_runner_spark.operators.textanalysis import _hits_duck, _hits_spark
+from c2_duckdb_runner_spark.operators.inference_ext import DAILY_MILLI_SQL, daily_milli
 from c2_duckdb_runner_spark.registry import register
 from c2_duckdb_runner_spark.tables import load
 
@@ -221,18 +222,11 @@ def eval_confusion_matrix_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ts_sliding_median_smooth
 # ---------------------------------------------------------------------------
 
-_DAILY_SQL = """
-  SELECT event_type, date_trunc('day', ts) AS d,
-         (10 * CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS BIGINT))
-           // CAST(COUNT(*) AS BIGINT) AS x
-  FROM events GROUP BY event_type, date_trunc('day', ts)
-"""
-
 
 @register(
     "ts_sliding_median_smooth",
     oracle=f"""
-WITH daily AS ({_DAILY_SQL}),
+WITH daily AS ({DAILY_MILLI_SQL}),
 fr AS (
   SELECT event_type, d, x,
          list_sort(list(x) OVER (PARTITION BY event_type ORDER BY d
@@ -257,16 +251,7 @@ def ts_sliding_median_smooth(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one keyed rollup + one per-key ordered window whose
     state is a bounded 7-element frame; constant work per key."""
-    daily = (
-        load(spark, sf_dir, "events")
-        .groupBy("event_type", F.date_trunc("day", F.col("ts")).alias("d"))
-        .agg(
-            F.expr(
-                "(10 * CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS BIGINT))"
-                " div CAST(COUNT(*) AS BIGINT)"
-            ).alias("x")
-        )
-    )
+    daily = daily_milli(spark, sf_dir)
     w7 = Window.partitionBy("event_type").orderBy("d").rowsBetween(-3, 3)
     fr = daily.select(
         "event_type",

@@ -238,16 +238,70 @@ def oracle_sql() -> dict[str, str]:
     return {k: q.oracle for k, q in REGISTRY.items() if q.oracle is not None}
 
 
+# Modules whose code a query may borrow: a change to one of them must
+# invalidate the provenance of every key whose module imports it.
+# Infrastructure (tables, session, registry) is left out on purpose, so
+# that touching it does not invalidate every carried proof at once.
+_HELPER_PACKAGES = (f"{__package__}.operators", f"{__package__}.functions")
+
+
+def _read_source(path: str) -> bytes:
+    with open(path, "rb") as fh:
+        return fh.read()
+
+
+def _helper_imports(src: bytes) -> set[str]:
+    """Names of the operators.* / functions.* modules ``src`` imports
+    from, found with ``ast`` (function-local imports included)."""
+    import ast
+
+    out: set[str] = set()
+    for node in ast.walk(ast.parse(src)):
+        if isinstance(node, ast.ImportFrom) and node.module and not node.level:
+            if node.module in _HELPER_PACKAGES:  # from ...operators import m
+                out.update(f"{node.module}.{a.name}" for a in node.names)
+            else:
+                out.add(node.module)
+        elif isinstance(node, ast.Import):
+            out.update(a.name for a in node.names)
+    return {m for m in out if m.rpartition(".")[0] in _HELPER_PACKAGES}
+
+
+def _mod_hash(path: str) -> str:
+    """sha256 of the module file, extended by every helper module it
+    imports from, transitively (sorted by module name). A module that
+    imports no helper module hashes exactly its own bytes."""
+    import hashlib
+    import importlib.util
+
+    own = _read_source(path)
+    deps: dict[str, bytes] = {}
+    todo = _helper_imports(own)
+    while todo:
+        name = todo.pop()
+        spec = importlib.util.find_spec(name)
+        if spec is None or spec.origin in (None, path):
+            continue
+        deps[name] = _read_source(spec.origin)
+        todo |= _helper_imports(deps[name]) - set(deps)
+    h = hashlib.sha256(own)
+    for name in sorted(deps):
+        h.update(b"\x00" + name.encode() + b"\x00" + deps[name])
+    return h.hexdigest()[:16]
+
+
 def src_hashes() -> dict[str, dict[str, str]]:
     """Per-key source provenance hashes for scale-sweep artifacts.
 
     ``src_hash`` covers the operator's own function body plus its oracle
-    SQL; ``mod_hash`` covers the whole defining module file, catching
-    changes to same-module helpers the function calls. Sweep assembly
-    (``tools/sweep.py``'s ``assemble``) refuses to carry a prior round's 100x proof
-    for a key unless BOTH hashes are unchanged — the mechanical version
-    of the hand-asserted "code unchanged" provenance the r10 artifact
-    carried (VERDICT r10 ask #4).
+    SQL; ``mod_hash`` covers the whole defining module file plus every
+    ``operators.*`` / ``functions.*`` module it imports from (``_mod_hash``),
+    catching changes to same-module helpers and to shared helpers such as
+    ``graph.cust_supp_pairs`` or ``inference_ext.daily_milli``. Sweep
+    assembly (``tools/sweep.py``'s ``assemble``) refuses to carry a prior
+    round's 100x proof for a key unless BOTH hashes are unchanged — the
+    mechanical version of the hand-asserted "code unchanged" provenance
+    the r10 artifact carried (VERDICT r10 ask #4).
     """
     import hashlib
     import inspect
@@ -260,8 +314,7 @@ def src_hashes() -> dict[str, dict[str, str]]:
         src = inspect.getsource(fn)
         path = inspect.getsourcefile(fn) or ""
         if path not in mod_cache:
-            with open(path, "rb") as fh:
-                mod_cache[path] = hashlib.sha256(fh.read()).hexdigest()[:16]
+            mod_cache[path] = _mod_hash(path)
         h = hashlib.sha256()
         h.update(src.encode())
         h.update(b"\x00")

@@ -12,8 +12,8 @@ Determinism notes (what makes these oracle-checkable):
   FileStreamSource rejects a bare file path ("basePath must be a directory").
 - ``events.ts`` is parquet TIMESTAMP(NANOS) → TIMESTAMP_NTZ on this Spark
   build (or bigint where ``nanosAsLong`` is honored); normalized to µs
-  TimestampType at the source, identically to the batch path
-  (``_events_stream``).
+  TimestampType at the source (``_events_stream``) by the same function
+  the batch path uses, ``tables._normalize_events_ts``.
 - Append mode + watermark IS deterministic under availableNow: after the
   data batch, Spark runs a no-data batch that advances the watermark to
   max(ts) - delay and flushes every window with end <= watermark. The
@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from c2_duckdb_runner_spark.registry import register
-from c2_duckdb_runner_spark.tables import load, read_parquet
+from c2_duckdb_runner_spark.tables import _normalize_events_ts, load, read_parquet
 
 _SINK_IDS = itertools.count()
 
@@ -47,12 +47,7 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = spark.readStream.schema(static.schema).parquet(f"{sf_dir}/events*.parquet")
     # Normalize ts at the SOURCE: F.window over TIMESTAMP_NTZ yields NTZ
     # w.start/w.end, so downstream unix_millis() would fail if we cast later.
-    ts_type = dict(src.dtypes).get("ts")
-    if ts_type == "bigint":
-        src = src.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-    elif ts_type == "timestamp_ntz":
-        src = src.withColumn("ts", F.col("ts").cast("timestamp"))
-    return src
+    return _normalize_events_ts(src)
 
 
 def _run_to_memory(spark: SparkSession, df: DataFrame, mode: str) -> DataFrame:
@@ -589,13 +584,6 @@ def stream_parquet_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     (no rename dance, no manifest service). Stateless append with
     availableNow is row-deterministic, so the full oracle checks values,
     not just counts."""
-    import shutil
-
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    out_dir = f"/tmp/c2spark_io/{tag}/stream_sink_events"
-    ckpt = f"{out_dir}_ckpt"
-    shutil.rmtree(out_dir, ignore_errors=True)
-    shutil.rmtree(ckpt, ignore_errors=True)
     src = _events_stream(spark, sf_dir)
     proj = src.filter(F.col("event_type") != "error").select(
         "event_id",
@@ -603,16 +591,7 @@ def stream_parquet_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.round("value", 6).alias("val"),
     )
-    q = (
-        proj.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.parquet(out_dir)
+    return _run_to_parquet(spark, proj, "sink_events", sf_dir)
 
 
 def _stream_tumbling_approx_estimates(

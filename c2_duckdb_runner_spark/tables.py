@@ -114,12 +114,13 @@ def read_parquet(spark: SparkSession, *paths: str) -> DataFrame:
     return df
 
 
-def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one fixture table (one parquet file per table, per TESTDATA.md).
+def _normalize_events_ts(df: DataFrame) -> DataFrame:
+    """Normalize ``events.ts`` to TimestampType, for a batch or a
+    streaming frame.
 
     ``events.ts`` is parquet TIMESTAMP(NANOS). Depending on the Spark build
     it surfaces either as LongType nanos (``nanosAsLong`` honored) or as
-    TIMESTAMP_NTZ (this 4.1.2 build). Normalize both to TimestampType:
+    TIMESTAMP_NTZ (this 4.1.2 build):
 
     - bigint nanos → ``timestamp_micros(ts div 1000)`` (integer ``div``, not
       ``/``: epoch-ns ≈ 1.7e18 overflows double's 53-bit mantissa);
@@ -129,14 +130,19 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     DuckDB 1.0 reads the same column as µs TIMESTAMP, so both engines see
     identical values either way.
     """
-    df = read_parquet(spark, f"{sf_dir}/{name}.parquet")
-    if name == "events":
-        ts_type = dict(df.dtypes).get("ts")
-        if ts_type == "bigint":
-            df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-        elif ts_type == "timestamp_ntz":
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+    ts_type = dict(df.dtypes).get("ts")
+    if ts_type == "bigint":
+        return df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
+    if ts_type == "timestamp_ntz":
+        return df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
+
+
+def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Load one fixture table (one parquet file per table, per TESTDATA.md);
+    ``events.ts`` is normalized by ``_normalize_events_ts``."""
+    df = read_parquet(spark, f"{sf_dir}/{name}.parquet")
+    return _normalize_events_ts(df) if name == "events" else df
 
 
 def load_spread(

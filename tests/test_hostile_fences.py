@@ -30,7 +30,7 @@ def test_fence_ledger_is_registered_and_classed():
     classes = {c for c, _ in FENCES.values()}
     assert classes <= {
         "X5-unicode-case", "H-neg0-group", "H-ties", "H-domain",
-        "H-seq-null", "H-sketch-accuracy", "H-null-law",
+        "H-seq-null", "H-sketch-accuracy", "H-null-law", "H-oracle-rejects",
     }
     for k, (cls, reason) in FENCES.items():
         assert len(reason) > 40, f"{k}: fence reason must cite a witness"
@@ -125,6 +125,36 @@ def test_duckdb_printf_vs_spark_format_string(spark):
         "format_string('%.2f', double('-0.0'))"
     ).collect()[0]
     assert tuple(s) == ("null", "NaN", "-0.00")
+
+
+@pytest.mark.parametrize(
+    "spark_sql, spark_value, duck_sql, duck_error",
+    [
+        # fn_math, sql_create_function_udf: saturating floor vs CAST error
+        ("SELECT floor(double('1e305') / 1000)", 9223372036854775807,
+         "SELECT CAST(floor(CAST(1e305 AS DOUBLE) / 1000) AS BIGINT)",
+         "out of range"),
+        ("SELECT CAST(floor(double('inf') * 100 + 0.5) AS BIGINT)",
+         9223372036854775807,
+         "SELECT CAST(floor(CAST('inf' AS DOUBLE) * 100 + 0.5) AS BIGINT)",
+         "out of range"),
+        # fn_trig: sin(inf) is NaN in Spark, an error in DuckDB
+        ("SELECT isnan(sin(double('inf')))", True,
+         "SELECT sin(CAST('inf' AS DOUBLE))", "out of range"),
+        # fn_json, fn_from_json: malformed JSON is NULL in Spark
+        ("SELECT get_json_object('🦆 duck', '$.k') IS NULL"
+         " AND from_json('🦆 duck', 'k INT').k IS NULL", True,
+         "SELECT '🦆 duck'->>'$.k'", "Malformed JSON"),
+    ],
+)
+def test_oracle_rejects_what_spark_accepts(
+    spark, spark_sql, spark_value, duck_sql, duck_error
+):
+    """H-oracle-rejects: Spark returns a value for the witness input, the
+    DuckDB oracle raises on it."""
+    assert spark.sql(spark_sql).collect()[0][0] == spark_value
+    with pytest.raises(duckdb.Error, match=duck_error):
+        _duck1(duck_sql)
 
 
 @pytest.mark.parametrize("cls", ["H-ties", "H-seq-null"])

@@ -2,7 +2,8 @@
 
 The 100x sweep artifact may carry a prior round's proof for a key ONLY
 when the key's operator source (function body + oracle SQL) AND its
-defining module file are hash-identical to what the prior run covered;
+defining module file, with the helper modules it imports from, are
+hash-identical to what the prior run covered;
 anything else must be re-run or explicitly overridden. These tests pin
 tools/sweep.assemble (the pure core), the rows-only merge refusal
 and registry.src_hashes.
@@ -141,3 +142,26 @@ def test_registry_src_hashes_cover_every_key_and_react_to_source():
     assert a["module"] == b["module"]
     assert a["mod_hash"] == b["mod_hash"]
     assert a["src_hash"] != b["src_hash"]
+
+
+def test_mod_hash_covers_imported_helper_modules(monkeypatch):
+    """A key's mod_hash changes when a helper module its module imports
+    from changes (rates_portmanteau_ext imports inference_ext's daily
+    series kit); a key whose module imports no helper module keeps it."""
+    from c2_duckdb_runner_spark import registry
+
+    before = registry.src_hashes()
+    read = registry._read_source
+    monkeypatch.setattr(
+        registry,
+        "_read_source",
+        lambda path: read(path) + (b"\n# edited\n" if path.endswith(
+            "operators/inference_ext.py") else b""),
+    )
+    after = registry.src_hashes()
+    assert after["ts_ljung_box"]["module"].endswith("rates_portmanteau_ext.py")
+    assert after["ts_ljung_box"]["mod_hash"] != before["ts_ljung_box"]["mod_hash"]
+    assert after["ts_ljung_box"]["src_hash"] == before["ts_ljung_box"]["src_hash"]
+    assert after["ts_autocorr_lags"]["mod_hash"] != before["ts_autocorr_lags"]["mod_hash"]
+    # tier_a imports only infrastructure (registry, tables)
+    assert after["scan_dir_enumerate"] == before["scan_dir_enumerate"]

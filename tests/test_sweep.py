@@ -3,7 +3,8 @@ classifier.
 
 The classifier runs on the hostile sf0.001 twin over one key of each
 status the full hostile sweep recorded (CORRECTNESS_hostile_r11.json):
-a pass, a ``both_error`` and a fence.
+a pass, a ``both_error`` and a fence. A Spark frame that returns rows
+against an oracle that raises is a ``fail``, never a ``both_error``.
 """
 
 from __future__ import annotations
@@ -88,3 +89,16 @@ def test_hostile_classify(spark, hostile_dir, hostile_con, key, status):
         assert ent["err"] and ent["oracle_err"]
     if status == "fenced":
         assert ent["class"] == "X5-unicode-case"
+
+
+@pytest.mark.parametrize("hostile", [False, True])
+def test_spark_rows_against_raising_oracle_is_fail(spark, sf_dir, duck, hostile):
+    """Spark accepts, DuckDB rejects (a CAST of inf to BIGINT): that is a
+    divergence, recorded with the oracle's error."""
+    ent = classify(spark, duck, "spark_accepts_oracle_rejects",
+                   lambda s, _: s.range(3), "SELECT CAST('inf'::DOUBLE AS BIGINT)",
+                   sf_dir, hostile=hostile)
+    assert ent["status"] == "fail", ent
+    assert ent["spark_rows"] == 3
+    assert "out of range" in ent["oracle_err"]
+    assert ent["err"] is None

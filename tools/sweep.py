@@ -16,8 +16,10 @@ row counts, the column names (case-insensitive) and the ``repr`` of every
 - ``--hostile``: the rules for a hostile fixture twin: the six fuzz
   tables rewritten by ``hostile.make_hostile_fixtures``, the other tables
   copied (the ``hostile_dir`` fixture in tests/conftest.py builds one):
-  1. ``both_error``: the key raised (in Spark or in its oracle) and its
-     oracle, run again on its own, raises too: the input is rejected.
+  1. ``both_error``: the key raised in Spark and its oracle, run again on
+     its own, raises too: the input is rejected. A key whose Spark side
+     returns rows while its oracle raises is a ``fail`` with
+     ``oracle_err`` (in every mode): Spark accepts what DuckDB rejects.
   2. H-int: exactly integral floats become ints on both sides before the
      compare. DuckDB's ``fetchdf`` turns NULL-bearing integer columns into
      float64; NaN and non-integral values are unchanged.
@@ -147,8 +149,12 @@ def classify(
                 ent["spark_only"] = [r for r in a if r not in sb][:2]
                 ent["oracle_only"] = [r for r in b if r not in sa][:2]
     except Exception as ex:  # noqa: BLE001
+        if ent["spark_rows"] is not None and ent["oracle_rows"] is None:
+            # Spark returned rows and the oracle raised: a divergence
+            ent["oracle_err"] = str(ex)[:300]
+            return {**ent, "status": "fail"}
         ent["err"] = str(ex)[:300]
-        if hostile and oracle is not None:
+        if hostile and oracle is not None and ent["spark_rows"] is None:
             try:
                 con.execute(oracle).fetchdf()
             except Exception as oex:  # noqa: BLE001
