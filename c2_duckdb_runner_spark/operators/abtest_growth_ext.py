@@ -26,7 +26,7 @@ from pyspark.sql.window import Window
 
 from c2_duckdb_runner_spark.operators.graph import _OFFSET, _edges
 from c2_duckdb_runner_spark.operators.inference_ext import sdiv
-from c2_duckdb_runner_spark.registry import register
+from c2_duckdb_runner_spark.registry import fdoc, register
 from c2_duckdb_runner_spark.tables import load
 
 
@@ -214,8 +214,7 @@ FROM l{_LPA_ROUNDS} GROUP BY label HAVING COUNT(*) > 1
 
 
 @register("graph_label_propagation_sync", oracle=_lpa_oracle())
-def graph_label_propagation_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Synchronous label propagation (Raghavan et al., 2007) over the
+@fdoc(f"""Synchronous label propagation (Raghavan et al., 2007) over the
     customer-supplier graph, {_LPA_ROUNDS} rounds: every node
     simultaneously adopts the most frequent label among its neighbors,
     ties to the smallest label — the determinism knobs (synchronous
@@ -231,7 +230,8 @@ def graph_label_propagation_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side-combinable partial, so the argmax shuffle carries one
     partially-folded row per node instead of pushing every (node, label)
     count through a row_number window's full shuffle + sort (the
-    simsearch_kmeans_assign recipe). Same total tie-break, same rows."""
+    simsearch_kmeans_assign recipe). Same total tie-break, same rows.""")
+def graph_label_propagation_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
     from c2_duckdb_runner_spark.session import scratch_persist
 
     # Persist hash-partitioned on dst: every round's message join keys on

@@ -31,6 +31,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from c2_duckdb_runner_spark.operators.graph import _edges
+from c2_duckdb_runner_spark.operators.simsearch import (
+    PROBE_DEPTH,
+    PROBE_RANKED_SQL,
+    probe_scores,
+    probe_topk,
+)
 from c2_duckdb_runner_spark.registry import register
 from c2_duckdb_runner_spark.session import scratch_persist, shuffle_width
 from c2_duckdb_runner_spark.tables import load
@@ -142,41 +148,18 @@ def graph_wl_refinement(spark: SparkSession, sf_dir: str) -> DataFrame:
 # search_err_eval — integer-exact Expected Reciprocal Rank @10
 # ---------------------------------------------------------------------------
 
-_ERR_N_QUERIES = 10
-_ERR_DEPTH = 10
 _ERR_DEN = 2520 * 1024  # lcm(1..10) * 2^10 — clears every 1/r and (1/2)^k
 
 
 _ERR_ORACLE = f"""
-WITH e AS (
-  SELECT vec_id, label, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-  FROM embeddings
-),
-n AS (
-  SELECT vec_id, label, v,
-         sqrt(list_reduce(list_transform(v, x -> x * x), (a, b) -> a + b)) AS nrm
-  FROM e
-),
-q AS (SELECT vec_id AS q_id, label AS qlabel, v AS qv, nrm AS qnrm
-      FROM n WHERE vec_id <= {_ERR_N_QUERIES}),
-scored AS (
-  SELECT q.q_id, q.qlabel, n.vec_id, n.label,
-         ROUND(list_reduce(list_transform(range(1, 65), i -> n.v[i] * q.qv[i]),
-               (x, y) -> x + y) / (n.nrm * q.qnrm), 6) AS cos
-  FROM n, q WHERE n.vec_id <> q.q_id
-),
-ranked AS (
-  SELECT q_id, qlabel, label,
-         ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id) AS rnk
-  FROM scored
-),
+WITH {PROBE_RANKED_SQL},
 top AS (
   SELECT q_id, rnk, CASE WHEN label = qlabel THEN 1 ELSE 0 END AS rel,
          CAST(SUM(CASE WHEN label = qlabel THEN 1 ELSE 0 END)
               OVER (PARTITION BY q_id ORDER BY rnk
                     ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
               AS BIGINT) AS c_before
-  FROM ranked WHERE rnk <= {_ERR_DEPTH}
+  FROM ranked WHERE rnk <= {PROBE_DEPTH}
 )
 SELECT q_id,
   CAST(SUM(rel) AS BIGINT) AS n_rel_at_k,
@@ -197,50 +180,11 @@ def search_err_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     (emitted as err_num/err_den; no float ever enters the hash beyond
     the same rounded-cosine ordering key NDCG uses).
 
-    Scale shape identical to search_ndcg_eval: the query side (10 rows)
-    broadcasts against the corpus, scoring is a map-only ordered fold,
-    and ranking windows partition BY QUERY — per-query state only."""
-    e = load(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("v")
-    )
-    n = e.select(
-        "vec_id",
-        "label",
-        "v",
-        F.expr(
-            "sqrt(aggregate(transform(v, x -> x * x), CAST(0.0 AS DOUBLE),"
-            " (a, b) -> a + b))"
-        ).alias("nrm"),
-    )
-    q = n.where(F.col("vec_id") <= _ERR_N_QUERIES).limit(_ERR_N_QUERIES + 1).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("label").alias("qlabel"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qnrm"),
-    )
-    scored = (
-        n.crossJoin(F.broadcast(q))
-        .where(F.col("vec_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            "qlabel",
-            "vec_id",
-            "label",
-            F.round(
-                F.expr(
-                    "aggregate(zip_with(v, qv, (x, y) -> x * y),"
-                    " CAST(0.0 AS DOUBLE), (a, b) -> a + b) / (nrm * qnrm)"
-                ),
-                6,
-            ).alias("cos"),
-        )
-    )
-    ranked = scored.withColumn(
-        "rnk",
-        F.row_number().over(
-            Window.partitionBy("q_id").orderBy(F.desc("cos"), F.col("vec_id"))
-        ),
-    ).where(F.col("rnk") <= _ERR_DEPTH)
+    Scale shape identical to search_ndcg_eval: the probe set broadcasts
+    against the corpus, scoring is a map-only ordered fold, and the
+    per-query top-10 is the salted two-stage exact top-k
+    (simsearch.probe_topk) — no reducer sorts a whole query's scores."""
+    ranked = probe_topk(probe_scores(spark, sf_dir))
     top = ranked.select(
         "q_id",
         "rnk",

@@ -28,7 +28,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from c2_duckdb_runner_spark.registry import register
+from c2_duckdb_runner_spark.operators.simsearch import (
+    PROBE_DEPTH,
+    PROBE_QUERIES,
+    PROBE_RANKED_SQL,
+    probe_scores,
+    probe_topk,
+)
+from c2_duckdb_runner_spark.registry import fdoc, register
 from c2_duckdb_runner_spark.tables import load
 
 # ---------------------------------------------------------------------------
@@ -169,8 +176,7 @@ SELECT doc_id, rrf_micro, rank_lex, rank_len
 FROM fused ORDER BY rrf_micro DESC, doc_id LIMIT {_RRF_TOP}
 """,
 )
-def search_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Reciprocal-rank fusion of two retrieval lists — the hybrid-search
+@fdoc(f"""Reciprocal-rank fusion of two retrieval lists — the hybrid-search
     combiner (Cormack et al., SIGIR'09): each ranker contributes
     10⁶ div (60 + rank) and the fused top-{_RRF_TOP} is ordered by the
     integer sum, so a document ranked well by EITHER list surfaces.
@@ -182,7 +188,8 @@ def search_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     assignment windows run on the bounded candidate lists (≤{_RRF_CAND}
     rows — the single-partition window is over a constant-size list, the
     same shape a distributed search head uses when merging per-shard
-    top-k lists). The fusion join is two 100-row lists."""
+    top-k lists). The fusion join is two 100-row lists.""")
+def search_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     t = docs.select("doc_id", F.explode(F.split("text", " ")).alias("tok"))
     tf = (
@@ -246,40 +253,14 @@ def search_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 # search_mrr_eval
 # ---------------------------------------------------------------------------
 
-_MRR_N_QUERIES = 10
-_MRR_DEPTH = 10
-
-
 @register(
     "search_mrr_eval",
     oracle=f"""
-WITH e AS (
-  SELECT vec_id, label,
-         list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-  FROM embeddings
-),
-n AS (
-  SELECT vec_id, label, v,
-         sqrt(list_reduce(list_transform(v, x -> x * x), (a, b) -> a + b)) AS nrm
-  FROM e
-),
-q AS (SELECT vec_id AS q_id, label AS qlabel, v AS qv, nrm AS qnrm
-      FROM n WHERE vec_id <= {_MRR_N_QUERIES}),
-scored AS (
-  SELECT q.q_id, q.qlabel, n.vec_id, n.label,
-         ROUND(list_reduce(list_transform(range(1, 65), i -> n.v[i] * q.qv[i]),
-               (x, y) -> x + y) / (n.nrm * q.qnrm), 6) AS cos
-  FROM n, q WHERE n.vec_id <> q.q_id
-),
-ranked AS (
-  SELECT q_id, qlabel, label,
-         ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id) AS rnk
-  FROM scored
-),
+WITH {PROBE_RANKED_SQL},
 hits AS (
   SELECT q_id,
          MIN(CASE WHEN label = qlabel THEN rnk END) AS first_rel
-  FROM ranked WHERE rnk <= {_MRR_DEPTH} GROUP BY q_id
+  FROM ranked WHERE rnk <= {PROBE_DEPTH} GROUP BY q_id
 )
 SELECT q_id, CAST(COALESCE(first_rel, 0) AS INT) AS first_rel_rank,
        CAST(CASE WHEN first_rel IS NULL THEN 0
@@ -287,74 +268,20 @@ SELECT q_id, CAST(COALESCE(first_rel, 0) AS INT) AS first_rel_rank,
 FROM hits
 """,
 )
-def search_mrr_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mean-reciprocal-rank evaluation harness for the simsearch family:
-    {_MRR_N_QUERIES} probe vectors retrieve their top-{_MRR_DEPTH} cosine
+@fdoc(f"""Mean-reciprocal-rank evaluation harness for the simsearch family:
+    {PROBE_QUERIES} probe vectors retrieve their top-{PROBE_DEPTH} cosine
     neighbors; a neighbor is relevant when its label matches the probe's;
     the reciprocal rank of the first hit ships in integer micro-units
     (10⁶ div rank — exact, no float mean), 0 when the list has no hit.
 
     Determinism: cosine rounds to 6 decimals with vec_id tie-break — the
     same pinned ordering simsearch_topk_bruteforce hash-matches on.
-    Scale shape: the {_MRR_N_QUERIES}-row probe set broadcasts; the corpus
+    Scale shape: the {PROBE_QUERIES}-row probe set broadcasts; the corpus
     scores map-only (no corpus shuffle for scoring); the per-query top-10
-    uses the salted two-stage exact top-k (rank in (query, salt) keep k,
-    re-rank the bounded survivors per query — sample_domain_cap's
-    pattern), so no reducer ever sorts a whole query's score column."""
-    e = (
-        load(spark, sf_dir, "embeddings")
-        .withColumn("v", F.expr("transform(embedding, x -> CAST(x AS DOUBLE))"))
-        .withColumn(
-            "nrm",
-            F.expr(
-                "sqrt(aggregate(transform(v, x -> x * x),"
-                " CAST(0.0 AS DOUBLE), (a, b) -> a + b))"
-            ),
-        )
-        .select("vec_id", "label", "v", "nrm")
-    )
-    q = e.filter(F.col("vec_id") <= _MRR_N_QUERIES).limit(_MRR_N_QUERIES + 1).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("label").alias("qlabel"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qnrm"),
-    )
-    scored = (
-        e.crossJoin(F.broadcast(q))
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            "qlabel",
-            "vec_id",
-            "label",
-            F.round(
-                F.expr(
-                    "aggregate(zip_with(v, qv, (x, y) -> x * y),"
-                    " CAST(0.0 AS DOUBLE), (x, y) -> x + y)"
-                )
-                / (F.col("nrm") * F.col("qnrm")),
-                6,
-            ).alias("cos"),
-        )
-    )
-    # salted two-stage exact top-k (sample_domain_cap's pattern): stage 1
-    # ranks inside (q_id, salt) buckets and keeps k per bucket, stage 2
-    # re-ranks the <= 8k survivors per query — identical to a single
-    # per-query rank, but no reducer ever sorts a whole query's corpus.
-    salt = (F.xxhash64("vec_id") % 8).alias("salt")
-    w1 = Window.partitionBy("q_id", "salt").orderBy(F.col("cos").desc(), "vec_id")
-    pre = (
-        scored.select("q_id", "qlabel", "label", "cos", "vec_id", salt)
-        .select(
-            "q_id", "qlabel", "label", "cos", "vec_id",
-            F.row_number().over(w1).alias("r1"),
-        )
-        .filter(F.col("r1") <= _MRR_DEPTH)
-    )
-    wq = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), "vec_id")
-    ranked = pre.select(
-        "q_id", "qlabel", "label", F.row_number().over(wq).alias("rnk")
-    ).filter(F.col("rnk") <= _MRR_DEPTH)
+    uses the salted two-stage exact top-k (simsearch.probe_topk), so no
+    reducer ever sorts a whole query's score column.""")
+def search_mrr_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ranked = probe_topk(probe_scores(spark, sf_dir))
     hits = ranked.groupBy("q_id").agg(
         F.min(F.when(F.col("label") == F.col("qlabel"), F.col("rnk"))).alias(
             "first_rel"
@@ -390,8 +317,7 @@ SELECT doc_id, source, n_chars, priority
 FROM pri ORDER BY priority, doc_id LIMIT {_WPS_K}
 """,
 )
-def sample_weighted_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Weighted sampling without replacement via deterministic priorities
+@fdoc(f"""Weighted sampling without replacement via deterministic priorities
     (the integer exponential-clock trick): each doc draws a 60-bit md5
     "clock" and divides it by its weight (length in chars), and the
     {_WPS_K} smallest priorities win — heavier docs get proportionally
@@ -402,7 +328,8 @@ def sample_weighted_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: priority is a map-only expression; selection is a
     TakeOrdered top-k (per-partition heaps merged at the driver), so no
     global sort and no shuffle of the corpus. The md5 domain is 15 hex
-    digits = 60 bits, inside BIGINT in both engines."""
+    digits = 60 bits, inside BIGINT in both engines.""")
+def sample_weighted_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     pri = load(spark, sf_dir, "documents").select(
         "doc_id",
         "source",

@@ -22,7 +22,7 @@ from c2_duckdb_runner_spark.operators.dedup import (
     _jaccard_pairs_sql,
     _minhash_sig_table,
 )
-from c2_duckdb_runner_spark.registry import register
+from c2_duckdb_runner_spark.registry import fdoc, register
 from c2_duckdb_runner_spark.session import scratch_persist
 
 _PC_MIN_PCT = 95  # pairs completeness floor
@@ -51,8 +51,7 @@ _SAMPLE_PRED = (
         f"FROM ({_jaccard_pairs_sql('0.8', sample_mod=2)})"
     ),
 )
-def er_blocking_quality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Blocking-quality report for the MinHash-LSH candidate stage, on
+@fdoc(f"""Blocking-quality report for the MinHash-LSH candidate stage, on
     the deterministic md5-parity doc sample both engines agree on:
 
     - PAIRS COMPLETENESS: ≥ {_PC_MIN_PCT}% of exact Jaccard-0.8 truth
@@ -68,7 +67,8 @@ def er_blocking_quality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     audit reuses the production signature table (one corpus sign pass,
     scratch-persisted) and the truth reuses the shingles already inside
     it — nothing is recomputed. Cites operators/dedup.py:370-430 (the
-    audited blocking) and Christen's blocking-survey metrics."""
+    audited blocking) and Christen's blocking-survey metrics.""")
+def er_blocking_quality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     sig = _minhash_sig_table(spark, sf_dir)
     sample = sig.filter(F.expr(_SAMPLE_PRED))
     # r11 optimization round: truth feeds both the completeness semi-join

@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from c2_duckdb_runner_spark.registry import register
+from c2_duckdb_runner_spark.registry import fdoc, register
 from c2_duckdb_runner_spark.tables import load, load_spread
 
 # ---------------------------------------------------------------------------
@@ -89,8 +89,7 @@ SELECT chunk_hash, n_occurrences, n_docs, chunk_len
 FROM agg ORDER BY n_occurrences DESC, chunk_hash LIMIT {_CDC_TOP}
 """,
 )
-def dedup_cdc_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Content-defined chunking: a boundary falls after every position
+@fdoc(f"""Content-defined chunking: a boundary falls after every position
     whose {_CDC_GRAM}-gram hashes to 0 mod {_CDC_MOD}, so chunk edges
     are decided by CONTENT, not offset — insert one word at the front of
     a document and every downstream chunk still hashes the same, which
@@ -108,7 +107,8 @@ def dedup_cdc_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-dominating exchange bytes at scale). Now the text never
     leaves its scan task: one map pass, one (partially aggregated) hash
     groupBy, one TakeOrdered. Boundary arithmetic and md5 are
-    char-for-char the expressions the oracle replays."""
+    char-for-char the expressions the oracle replays.""")
+def dedup_cdc_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_spread(spark, sf_dir, "documents", "doc_id").select(
         "doc_id", "text", F.length("text").cast("bigint").alias("L")
     )
@@ -199,8 +199,7 @@ def _msp_oracle() -> str:
 
 
 @register("agg_markov_stationary_power", oracle=_msp_oracle())
-def agg_markov_stationary_power(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stationary distribution of the event-type Markov chain by
+@fdoc(f"""Stationary distribution of the event-type Markov chain by
     {_MSP_ITERS} power iterations: the transition matrix comes from
     per-user consecutive event pairs (micro-unit integral row
     normalization), the start vector is uniform with the integral
@@ -213,7 +212,8 @@ def agg_markov_stationary_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     sized however big the corpus — so each iteration is a broadcast
     join + k-row aggregate; only the pair extraction (one user-keyed
     window) touches the corpus. The iterative-CTE oracle mirrors
-    graph.py's unrolled-PageRank pattern."""
+    graph.py's unrolled-PageRank pattern.""")
+def agg_markov_stationary_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = load(spark, sf_dir, "events").select(
         F.col("event_type").alias("cur"),
         F.lead("event_type")

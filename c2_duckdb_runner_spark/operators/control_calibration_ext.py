@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from c2_duckdb_runner_spark.operators.inference_ext import DAILY_MILLI_SQL, daily_milli
-from c2_duckdb_runner_spark.registry import register
+from c2_duckdb_runner_spark.registry import fdoc, register
 from c2_duckdb_runner_spark.tables import load
 
 # ---------------------------------------------------------------------------
@@ -164,8 +164,7 @@ SELECT CAST(bin AS INT) AS bin, n, n_pos,
 FROM gaps CROSS JOIN tot
 """,
 )
-def eval_calibration_ece(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Expected calibration error: treat the length-based score
+@fdoc(f"""Expected calibration error: treat the length-based score
     min(1, n_chars/{_ECE_SCALE_CHARS}) as a predicted probability of the
     doc being English, bin into 10 confidence deciles, and compare each
     bin's mean confidence against its actual positive rate — ECE is the
@@ -175,7 +174,8 @@ def eval_calibration_ece(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one map-side scoring pass, one 10-row binned aggregate,
     one constant-size total — the ECE re-aggregates from per-partition
-    bin partials at any corpus size."""
+    bin partials at any corpus size.""")
+def eval_calibration_ece(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = load(spark, sf_dir, "documents").select(
         F.expr(
             f"LEAST((1000000 * n_chars) div {_ECE_SCALE_CHARS}, 1000000L)"
@@ -264,8 +264,7 @@ SELECT akey AS entity_key,
 FROM matched
 """,
 )
-def er_golden_record_survivorship(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Golden-record survivorship — the MDM step AFTER record linkage:
+@fdoc(f"""Golden-record survivorship — the MDM step AFTER record linkage:
     for every Fellegi-Sunter match (score ≥ {_GOLD_THRESHOLD}, same
     blocked candidate join as er_fellegi_sunter, cites
     matching_ext.py:38), build one canonical record with per-field
@@ -277,7 +276,8 @@ def er_golden_record_survivorship(spark: SparkSession, sf_dir: str) -> DataFrame
     Scale shape: the scalable blocking bounds the candidate join; the
     survivorship itself is per-pair expressions — map-only after the
     match. With multi-member clusters the same rules become the greatest/
-    min-struct aggregates dedup_latest_by_key already demonstrates."""
+    min-struct aggregates dedup_latest_by_key already demonstrates.""")
+def er_golden_record_survivorship(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load(spark, sf_dir, "customer")
     a = cust.select(
         F.col("c_custkey").alias("akey"),

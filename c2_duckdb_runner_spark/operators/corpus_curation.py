@@ -28,7 +28,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from c2_duckdb_runner_spark.registry import register
+from c2_duckdb_runner_spark.registry import fdoc, register
 from c2_duckdb_runner_spark.tables import load
 
 _EMAIL_RE = "[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+[.][a-zA-Z][a-zA-Z]+"
@@ -343,14 +343,14 @@ SELECT t1, t2, n_docs FROM pairs
 ORDER BY n_docs DESC, t1, t2 LIMIT {_PAIR_K}
 """,
 )
-def text_cooccurrence_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Frequent co-occurring term pairs (market-basket over documents),
+@fdoc(f"""Frequent co-occurring term pairs (market-basket over documents),
     Apriori-pruned: rank terms by document frequency, keep the top
     {_VOCAB_K}, and only pair within that broadcast vocabulary — the
     quadratic self-join is bounded by C(vocab, 2) per doc regardless of
     document length or corpus size. The doc_id self-join co-partitions
     both sides on the same key (one shuffle each), and the final top-20 is
-    a TakeOrderedAndProject, not a global sort."""
+    a TakeOrderedAndProject, not a global sort.""")
+def text_cooccurrence_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     tok = (
         load(spark, sf_dir, "documents")
         .select("doc_id", F.explode(F.split("text", " ")).alias("term"))

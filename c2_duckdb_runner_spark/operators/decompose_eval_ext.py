@@ -33,7 +33,13 @@ from c2_duckdb_runner_spark.operators.inference_ext import (
     daily_milli,
     sdiv,
 )
-from c2_duckdb_runner_spark.registry import register
+from c2_duckdb_runner_spark.operators.simsearch import (
+    PROBE_DEPTH,
+    PROBE_RANKED_SQL,
+    probe_scores,
+    probe_topk,
+)
+from c2_duckdb_runner_spark.registry import fdoc, register
 from c2_duckdb_runner_spark.tables import load
 
 
@@ -266,8 +272,7 @@ SELECT user_id, CAST(r1 AS INT) AS rank_h1, CAST(r2 AS INT) AS rank_h2,
 FROM ranked ORDER BY r1 - r2 DESC, user_id LIMIT {_MOVERS_TOP}
 """,
 )
-def rank_movers_halves(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rank movers: which users climbed the revenue leaderboard most
+@fdoc(f"""Rank movers: which users climbed the revenue leaderboard most
     between the first and second half of the observation window (cut at
     min(ts)+15 days)? Both halves' revenues come from ONE conditional
     aggregate; the leaderboard is restricted to the overall
@@ -278,7 +283,8 @@ def rank_movers_halves(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Integer cents everywhere; every ordering is total (user_id
     tie-break), so ranks, gains and the top-{_MOVERS_TOP} cut are
-    deterministic cross-engine."""
+    deterministic cross-engine.""")
+def rank_movers_halves(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load(spark, sf_dir, "events")
     bounds = ev.agg(
         (F.min("ts") + F.expr("INTERVAL 15 DAYS")).alias("cut")
@@ -333,8 +339,6 @@ def rank_movers_halves(spark: SparkSession, sf_dir: str) -> DataFrame:
 # search_ndcg_eval
 # ---------------------------------------------------------------------------
 
-_NDCG_N_QUERIES = 10
-_NDCG_DEPTH = 10
 # floor(10^6 / log2(1 + r)) for r = 1..10 — precomputed ONCE here and
 # inlined verbatim into both engines' plans, so no float log runs anywhere.
 _NDCG_DISCOUNT = (
@@ -354,46 +358,24 @@ def _discount_case(col: str) -> str:
 @register(
     "search_ndcg_eval",
     oracle=f"""
-WITH e AS (
-  SELECT vec_id, label,
-         list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-  FROM embeddings
-),
-n AS (
-  SELECT vec_id, label, v,
-         sqrt(list_reduce(list_transform(v, x -> x * x), (a, b) -> a + b)) AS nrm
-  FROM e
-),
-q AS (SELECT vec_id AS q_id, label AS qlabel, v AS qv, nrm AS qnrm
-      FROM n WHERE vec_id <= {_NDCG_N_QUERIES}),
-scored AS (
-  SELECT q.q_id, q.qlabel, n.vec_id, n.label,
-         ROUND(list_reduce(list_transform(range(1, 65), i -> n.v[i] * q.qv[i]),
-               (x, y) -> x + y) / (n.nrm * q.qnrm), 6) AS cos
-  FROM n, q WHERE n.vec_id <> q.q_id
-),
-ranked AS (
-  SELECT q_id, qlabel, label,
-         ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id) AS rnk
-  FROM scored
-),
+WITH {PROBE_RANKED_SQL},
 dcg AS (
   SELECT q_id,
          CAST(SUM(CASE WHEN label = qlabel
               THEN {_discount_case('rnk')} ELSE 0 END) AS BIGINT) AS dcg_micro,
          CAST(SUM(CASE WHEN label = qlabel THEN 1 ELSE 0 END) AS BIGINT)
            AS n_rel_at_k
-  FROM ranked WHERE rnk <= {_NDCG_DEPTH} GROUP BY q_id
+  FROM ranked WHERE rnk <= {PROBE_DEPTH} GROUP BY q_id
 ),
 nrel AS (
-  SELECT q_id, LEAST(CAST(COUNT(*) AS BIGINT), {_NDCG_DEPTH}) AS n_ideal
+  SELECT q_id, LEAST(CAST(COUNT(*) AS BIGINT), {PROBE_DEPTH}) AS n_ideal
   FROM ranked WHERE label = qlabel GROUP BY q_id
 ),
 ideal AS (
   SELECT q_id, n_ideal,
          CAST(SUM(CASE WHEN u.r <= n_ideal
               THEN {_discount_case('u.r')} ELSE 0 END) AS BIGINT) AS idcg_micro
-  FROM nrel CROSS JOIN UNNEST(range(1, {_NDCG_DEPTH} + 1)) AS u(r)
+  FROM nrel CROSS JOIN UNNEST(range(1, {PROBE_DEPTH} + 1)) AS u(r)
   GROUP BY q_id, n_ideal
 )
 SELECT dcg.q_id AS q_id, CAST(dcg.n_rel_at_k AS INT) AS n_rel_at_k,
@@ -404,76 +386,24 @@ SELECT dcg.q_id AS q_id, CAST(dcg.n_rel_at_k AS INT) AS n_rel_at_k,
 FROM dcg JOIN ideal ON dcg.q_id = ideal.q_id
 """,
 )
-def search_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """NDCG@{_NDCG_DEPTH} retrieval evaluation — the graded companion to
+@fdoc(f"""NDCG@{PROBE_DEPTH} retrieval evaluation — the graded companion to
     search_mrr_eval on the same probe set (label match = binary
     relevance): DCG sums the precomputed integer discount table at the
     hit ranks, IDCG sums its prefix of length min(#relevant, k), and
     the normalized score is one integral division. Because ranks only
-    take values 1..{_NDCG_DEPTH}, the 1/log2(1+r) discounts are a
+    take values 1..{PROBE_DEPTH}, the 1/log2(1+r) discounts are a
     10-entry constant table inlined into BOTH plans — no engine ever
     evaluates a float log, so the scores hash-match exactly.
 
     Scale shape identical to search_mrr_eval: broadcast probes, map-only
     corpus scoring, salted two-stage per-query top-k (no reducer sorts a
     whole query's scores); the ideal-list size is a plain per-query
-    count, and its construction explodes a constant 10-element range."""
-    e = (
-        load(spark, sf_dir, "embeddings")
-        .withColumn("v", F.expr("transform(embedding, x -> CAST(x AS DOUBLE))"))
-        .withColumn(
-            "nrm",
-            F.expr(
-                "sqrt(aggregate(transform(v, x -> x * x),"
-                " CAST(0.0 AS DOUBLE), (a, b) -> a + b))"
-            ),
-        )
-        .select("vec_id", "label", "v", "nrm")
-    )
-    q = e.filter(F.col("vec_id") <= _NDCG_N_QUERIES).limit(_NDCG_N_QUERIES + 1).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("label").alias("qlabel"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qnrm"),
-    )
-    scored = (
-        e.crossJoin(F.broadcast(q))
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            "qlabel",
-            "vec_id",
-            "label",
-            F.round(
-                F.expr(
-                    "aggregate(zip_with(v, qv, (x, y) -> x * y),"
-                    " CAST(0.0 AS DOUBLE), (x, y) -> x + y)"
-                )
-                / (F.col("nrm") * F.col("qnrm")),
-                6,
-            ).alias("cos"),
-        )
-    )
-    # salted two-stage exact top-k (sample_domain_cap's pattern): no
-    # reducer ever sorts a whole query's corpus; the ideal-list size is
-    # counted from the unranked scores, so it needs no window at all.
-    salt = (F.xxhash64("vec_id") % 8).alias("salt")
-    w1 = Window.partitionBy("q_id", "salt").orderBy(F.col("cos").desc(), "vec_id")
-    pre = (
-        scored.select("q_id", "qlabel", "label", "cos", "vec_id", salt)
-        .select(
-            "q_id", "qlabel", "label", "cos", "vec_id",
-            F.row_number().over(w1).alias("r1"),
-        )
-        .filter(F.col("r1") <= _NDCG_DEPTH)
-    )
-    wq = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), "vec_id")
-    ranked = pre.select(
-        "q_id", "qlabel", "label", F.row_number().over(wq).alias("rnk")
-    )
+    count, and its construction explodes a constant 10-element range.""")
+def search_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
+    scored = probe_scores(spark, sf_dir)
+    ranked = probe_topk(scored)
     dcg = (
-        ranked.filter(F.col("rnk") <= _NDCG_DEPTH)
-        .groupBy("q_id")
+        ranked.groupBy("q_id")
         .agg(
             F.sum(
                 F.when(
@@ -488,11 +418,13 @@ def search_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("n_rel_at_k"),
         )
     )
+    # the ideal-list size is counted from the unranked scores, so it needs
+    # no window at all
     nrel = (
         scored.filter(F.col("label") == F.col("qlabel"))
         .groupBy("q_id")
         .agg(
-            F.least(F.count("*").cast("bigint"), F.lit(_NDCG_DEPTH).cast("bigint")).alias(
+            F.least(F.count("*").cast("bigint"), F.lit(PROBE_DEPTH).cast("bigint")).alias(
                 "n_ideal"
             )
         )
@@ -501,7 +433,7 @@ def search_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         nrel.select(
             "q_id",
             "n_ideal",
-            F.explode(F.expr(f"sequence(1, {_NDCG_DEPTH})")).alias("r"),
+            F.explode(F.expr(f"sequence(1, {PROBE_DEPTH})")).alias("r"),
         )
         .groupBy("q_id", "n_ideal")
         .agg(

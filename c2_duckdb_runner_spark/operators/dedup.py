@@ -30,6 +30,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from c2_duckdb_runner_spark.operators.simsearch import EMBEDDED_SQL, embedded
 from c2_duckdb_runner_spark.registry import register
 from c2_duckdb_runner_spark.session import scratch_persist, shuffle_width
 from c2_duckdb_runner_spark.tables import load, load_spread
@@ -762,17 +763,8 @@ def _cos_dot_kernel():
 
     return dot_pd
 
-_COS_ORACLE = """
-WITH e AS (
-  SELECT vec_id, label,
-         list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-  FROM embeddings
-),
-n AS (
-  SELECT vec_id, label, v,
-         sqrt(list_reduce(list_transform(v, x -> x * x), (a, b) -> a + b)) AS nrm
-  FROM e
-)
+_COS_ORACLE = f"""
+WITH {EMBEDDED_SQL}
 SELECT a.vec_id AS a_id, b.vec_id AS b_id,
        ROUND(list_reduce(list_transform(range(1, 65), i -> a.v[i] * b.v[i]),
                          (x, y) -> x + y) / (a.nrm * b.nrm), 6) AS cos
@@ -811,18 +803,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     7, on a wide cluster over a real IVF cell count it collapses to 1
     and the a-side explode disappears entirely.
     """
-    e = (
-        load(spark, sf_dir, "embeddings")
-        .withColumn("v", F.expr("transform(embedding, x -> CAST(x AS DOUBLE))"))
-        .withColumn(
-            "nrm",
-            F.expr(
-                "sqrt(aggregate(transform(v, x -> x * x), "
-                "CAST(0.0 AS DOUBLE), (a, b) -> a + b))"
-            ),
-        )
-        .select("vec_id", "label", "v", "nrm")
-    )
+    e = embedded(spark, sf_dir)
     # cell count: a label-only pruned scan — the one cheap job that lets
     # the salt size itself from the data instead of a local[32] constant
     n_cells = (

@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from c2_duckdb_runner_spark.registry import register
+from c2_duckdb_runner_spark.registry import fdoc, register
 from c2_duckdb_runner_spark.tables import load, load_spread
 
 # ---------------------------------------------------------------------------
@@ -70,8 +70,7 @@ SELECT d.doc_id AS doc_id, best.nn_id AS nn_id,
 FROM d LEFT JOIN best ON best.doc_id = d.doc_id
 """,
 )
-def dedup_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sorted-neighborhood dedup (Hernández & Stolfo) — the entity-
+@fdoc(f"""Sorted-neighborhood dedup (Hernández & Stolfo) — the entity-
     resolution classic: sort by a semantic key, slide a window of
     {_SNM_W}, verify candidates with exact edit distance. It catches
     near-dups whose minhashes/simhashes diverge but whose sort keys put
@@ -86,7 +85,8 @@ def dedup_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
     +1..+{_SNM_W}, equi-join on (bucket, rank)), so each record generates
     ≤ {_SNM_W} ordered pairs — never a bucket cross product. Levenshtein
     runs on ≤ {_SNM_W}·n pairs, and the nearest-pick is total-ordered
-    (lev, then id)."""
+    (lev, then id).""")
+def dedup_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_spread(spark, sf_dir, "documents", "doc_id").select(
         "doc_id", "text", F.expr("split(text, ' ')[0]").alias("bucket")
     )

@@ -32,7 +32,7 @@ from c2_duckdb_runner_spark.operators.inference_ext import (
     daily_milli,
     sdiv,
 )
-from c2_duckdb_runner_spark.registry import register
+from c2_duckdb_runner_spark.registry import fdoc, register
 from c2_duckdb_runner_spark.tables import load
 
 
@@ -73,8 +73,7 @@ SELECT hw.event_type AS event_type, len.n AS n_points,
 FROM hw JOIN len ON hw.event_type = len.event_type AND hw.i = len.n
 """,
 )
-def ts_holt_linear_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Holt's linear (double) exponential smoothing per event type over
+@fdoc(f"""Holt's linear (double) exponential smoothing per event type over
     the daily milli-unit series, with α=β=1/4 so both updates are exact
     integral divisions: l' = (x + 3(l+b)) div 4, b' = ((l'-l) + 3b)
     div 4 (sign-split — trend is routinely negative), initialized at
@@ -89,7 +88,8 @@ def ts_holt_linear_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one keyed rollup, then per-key constant work; keys
     process independently (no cross-key state), so a million series cost
-    one shuffle."""
+    one shuffle.""")
+def ts_holt_linear_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = daily_milli(spark, sf_dir)
     arr = daily.groupBy("event_type").agg(
         F.expr("transform(sort_array(collect_list(struct(d, x))), p -> p.x)").alias(
@@ -245,8 +245,7 @@ SELECT CAST(level AS INT) AS level, CAST(COUNT(*) AS BIGINT) AS n_users
 FROM lvl GROUP BY level
 """,
 )
-def funnel_window_constrained(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Time-constrained conversion funnel (ClickHouse windowFunnel
+@fdoc(f"""Time-constrained conversion funnel (ClickHouse windowFunnel
     semantics): a user reaches level 2 only if a click lands within
     {_FUNNEL_WINDOW_DAYS} days AFTER their first view, and level 3 only
     if a purchase lands within {_FUNNEL_WINDOW_DAYS} days after that
@@ -260,7 +259,8 @@ def funnel_window_constrained(spark: SparkSession, sf_dir: str) -> DataFrame:
     arrays (each bounded by the user's own event count); everything
     after is per-row array expressions and a 3-row aggregate. No
     event-to-event join exists, so the cost is linear in events at any
-    scale."""
+    scale.""")
+def funnel_window_constrained(spark: SparkSession, sf_dir: str) -> DataFrame:
     u = (
         load(spark, sf_dir, "events")
         .groupBy("user_id")

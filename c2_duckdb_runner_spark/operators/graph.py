@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from c2_duckdb_runner_spark.registry import register
+from c2_duckdb_runner_spark.registry import fdoc, register
 from c2_duckdb_runner_spark.session import scratch_persist, shuffle_width
 from c2_duckdb_runner_spark.tables import load
 
@@ -123,8 +123,7 @@ def _pagerank_oracle() -> str:
 
 
 @register("graph_pagerank_iterations", oracle=_pagerank_oracle())
-def graph_pagerank_iterations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PageRank, {_ITERS} exact Lloyd-style iterations (damping 0.85,
+@fdoc(f"""PageRank, {_ITERS} exact Lloyd-style iterations (damping 0.85,
     integer micro-units). Per iteration: contributions flow src→dst over
     the edge list (one dst-keyed shuffle), damped, and re-joined to the
     node spine for sourceless nodes.
@@ -136,7 +135,8 @@ def graph_pagerank_iterations(spark: SparkSession, sf_dir: str) -> DataFrame:
     flat — the same iterative-algorithm discipline as dedup_cluster_cc
     and simsearch_kmeans_train. Dangling mass: nodes here always have
     out-edges (the graph is symmetrized); the general dangling-node
-    redistribution term is deliberately out of scope and documented."""
+    redistribution term is deliberately out of scope and documented.""")
+def graph_pagerank_iterations(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the edge build (join + symmetrize + distinct) feeds deg, the node
     # spine, and the contribution loop — persist it once or every consumer
     # replays the order⨝lineitem join

@@ -28,7 +28,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from c2_duckdb_runner_spark.registry import register
+from c2_duckdb_runner_spark.registry import fdoc, register
 from c2_duckdb_runner_spark.tables import load_spread
 
 _GRAM_W = 4  # shingle width (tokens)
@@ -87,8 +87,7 @@ LEFT JOIN exact ON exact.doc_id = bs.doc_id
 LEFT JOIN best ON best.doc_id = bs.doc_id
 """,
 )
-def dedup_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental ingest dedup — the shape a continuous crawl actually
+@fdoc(f"""Incremental ingest dedup — the shape a continuous crawl actually
     runs: the arriving batch (doc_id % 10 = 0 stands in for today's
     partition, ~10% of the corpus at any scale) is screened against the EXISTING corpus, which is never
     re-deduplicated. Two screens, same as production: truncation/head fingerprint (md5 of the 8-token head, the screen
@@ -102,7 +101,8 @@ def dedup_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     SHUFFLES THE BATCH (plus index probes on the gram key). Stop-shingles
     (corpus df > {_DF_CAP}) are fenced before the join — the same
     super-node rule as graph_jaccard_neighbor_sim, declared in the oracle,
-    bounding any gram's fan-out. Containment is exact integer ppm."""
+    bounding any gram's fan-out. Containment is exact integer ppm.""")
+def dedup_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = load_spread(spark, sf_dir, "documents", "doc_id").select(
         "doc_id", "source", F.split("text", " ").alias("t"), "text"
     )
@@ -230,8 +230,7 @@ SELECT CAST(phash AS BIGINT) AS phash,
 FROM ph GROUP BY phash HAVING COUNT(*) >= 2
 """,
 )
-def mm_image_phash_dedup_stub(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Perceptual-hash image dedup — near-dup detection for the MEDIA
+@fdoc(f"""Perceptual-hash image dedup — near-dup detection for the MEDIA
     column: an aHash-family signature (sample pixels → mean → threshold
     bits) collides for re-encoded/re-scaled copies where the byte-level
     content hash cannot. Emits clusters (≥ 2 images per hash) with the
@@ -244,7 +243,8 @@ def mm_image_phash_dedup_stub(spark: SparkSession, sf_dir: str) -> DataFrame:
     production path: binary payload through an Arrow-batched mapInPandas
     (numpy per batch, no per-row Python), then ONE hash-keyed rollup —
     identical in shape to dedup_exact. Payloads are ASCII, so the oracle
-    replays the byte sampling as ``ascii(substring(...))`` exactly."""
+    replays the byte sampling as ``ascii(substring(...))`` exactly.""")
+def mm_image_phash_dedup_stub(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = load_spread(spark, sf_dir, "documents", "doc_id").select(
         "doc_id", F.encode("text", "utf-8").alias("payload")
     )

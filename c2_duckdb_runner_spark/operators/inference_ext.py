@@ -49,19 +49,23 @@ DAILY_MILLI_SQL = """
   SELECT event_type, date_trunc('day', ts) AS d,
          (10 * CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS BIGINT))
            // CAST(COUNT(*) AS BIGINT) AS x
-  FROM events GROUP BY event_type, date_trunc('day', ts)
+  FROM events WHERE ts IS NOT NULL
+  GROUP BY event_type, date_trunc('day', ts)
 """
 
 
 def daily_milli(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Daily mean event value per type, in integer MILLI-units:
     ``(event_type, d, x)`` with ``x = (10·Σ round(value·100)) div count``.
+    Events with a NULL ``ts`` belong to no day and are dropped, so ``d`` is
+    never NULL.
 
     The integral division is part of the statistic's definition (both
     engines truncate toward zero on positive operands), so every
     downstream sum/product is exact cross-engine."""
     return (
         load(spark, sf_dir, "events")
+        .filter(F.col("ts").isNotNull())
         .groupBy("event_type", F.date_trunc("day", F.col("ts")).alias("d"))
         .agg(
             F.expr(

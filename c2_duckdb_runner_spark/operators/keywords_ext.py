@@ -25,7 +25,7 @@ import hashlib
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from c2_duckdb_runner_spark.registry import register
+from c2_duckdb_runner_spark.registry import fdoc, register
 from c2_duckdb_runner_spark.tables import load, load_spread
 
 # ---------------------------------------------------------------------------
@@ -88,8 +88,7 @@ ORDER BY score_ppm DESC, phrase ASC
 LIMIT {_RAKE_TOP}
 """,
 )
-def text_rake_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RAKE keyword extraction (Rose et al.) — unsupervised key-phrase
+@fdoc(f"""RAKE keyword extraction (Rose et al.) — unsupervised key-phrase
     mining: candidate phrases are maximal stopword-free token runs (capped
     at {_MAX_PHRASE} words), each word scores deg/freq over the whole
     corpus (deg = total length of phrases containing it — rewarding words
@@ -103,7 +102,8 @@ def text_rake_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     word key and re-joins the phrase-word pairs — every shuffle is keyed
     (doc, word, or phrase), nothing corpus-sized on one key. Scores are
     integer ppm (deg·10⁶ div freq), so the ranking is engine-exact; the
-    duplicate-phrase rollup happens once per distinct phrase string."""
+    duplicate-phrase rollup happens once per distinct phrase string.""")
+def text_rake_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     tok = load_spread(spark, sf_dir, "documents", "doc_id").select(
         "doc_id",
         F.posexplode(F.split("text", " ")).alias("pos0", "tok"),

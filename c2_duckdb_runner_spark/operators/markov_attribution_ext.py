@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from c2_duckdb_runner_spark.registry import register
+from c2_duckdb_runner_spark.registry import fdoc, register
 from c2_duckdb_runner_spark.tables import load
 
 # ---------------------------------------------------------------------------
@@ -126,8 +126,7 @@ FROM eff CROSS JOIN tote
 
 
 @register("attribution_markov_removal", oracle=_mkv_oracle())
-def attribution_markov_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Markov removal-effect attribution: journeys (per-user event
+@fdoc(f"""Markov removal-effect attribution: journeys (per-user event
     sequences truncated at the first purchase → CONV; journeys without
     one end in NULL) define a transition matrix; conversion mass is the
     CONV component after {_MKV_ROUNDS} power iterations with absorbing
@@ -160,7 +159,8 @@ def attribution_markov_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     ALSO measured slower than just recomputing — cache write + cached-
     plan matching cost more than the 1 s pass); the loop then runs over
     two ~30-row LogicalRDD leaves — per round one broadcast join and one
-    tiny aggregate. Measured 6.5 s → ~3.9 s at sf0.1."""
+    tiny aggregate. Measured 6.5 s → ~3.9 s at sf0.1.""")
+def attribution_markov_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     # plain load (measured): the journey windows bring their own
     # user_id exchange, so the pass is already parallel — a load_spread
     # repartition here just pays a redundant shuffle (2.2–5.9 s vs 1.1 s)
@@ -409,8 +409,7 @@ UNION ALL
 SELECT CAST(level AS INT), qi_key, c_mktsegment, grp_n, k_ok FROM pass1
 """,
 )
-def privacy_generalization_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Samarati-style generalization ladder: quasi-identifier groups are
+@fdoc(f"""Samarati-style generalization ladder: quasi-identifier groups are
     released at (nation, segment) when they already hide ≥ {_GEN_K}
     individuals; the members of every failing group escalate one rung to
     (region, segment) and are re-counted there (with the k flag showing
@@ -422,7 +421,8 @@ def privacy_generalization_ladder(spark: SparkSession, sf_dir: str) -> DataFrame
     Scale shape: the nation→region rung is a broadcast dimension join;
     level-0 sizes ride one window over the QI keying, and each rung is
     one keyed aggregate — no row ever visits more than its own two
-    cells."""
+    cells.""")
+def privacy_generalization_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load(spark, sf_dir, "customer").join(
         F.broadcast(
             load(spark, sf_dir, "nation").select("n_nationkey", "n_regionkey")

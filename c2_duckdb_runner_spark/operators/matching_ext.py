@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from c2_duckdb_runner_spark.registry import register
+from c2_duckdb_runner_spark.registry import fdoc, register
 from c2_duckdb_runner_spark.tables import load, load_spread
 
 # ---------------------------------------------------------------------------
@@ -250,8 +250,7 @@ SELECT source, doc_id, CAST(rk AS INT) AS rk
 FROM ranked WHERE rk <= {_CAP}
 """,
 )
-def sample_domain_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-domain document cap — "no domain contributes more than K docs"
+@fdoc(f"""Per-domain document cap — "no domain contributes more than K docs"
     (the C4 / Dolma over-representation rule), priority = md5(doc_id), so
     the kept subset is a reproducible uniform sample of each domain.
 
@@ -263,7 +262,8 @@ def sample_domain_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     survivors per domain. The heaviest reducer sees max(K·salts,
     |domain|/salts) rows instead of |domain|. Output identical to the
     naive oracle, by construction.
-    """
+    """)
+def sample_domain_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_spread(spark, sf_dir, "documents", "doc_id").select(
         "source", "doc_id", F.expr(_PRIO_SPARK).alias("u")
     )

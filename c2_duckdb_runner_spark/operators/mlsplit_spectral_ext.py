@@ -34,7 +34,7 @@ from c2_duckdb_runner_spark.operators.inference_ext import (
     daily_milli,
     sdiv,
 )
-from c2_duckdb_runner_spark.registry import register
+from c2_duckdb_runner_spark.registry import fdoc, register
 from c2_duckdb_runner_spark.session import scratch_persist
 from c2_duckdb_runner_spark.tables import load
 
@@ -126,8 +126,7 @@ def _n2v_oracle() -> str:
 
 
 @register("graph_node2vec_biased_walk", oracle=_n2v_oracle())
-def graph_node2vec_biased_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """node2vec second-order walk: after a uniform first hop, each next
+@fdoc(f"""node2vec second-order walk: after a uniform first hop, each next
     hop draws a candidate neighbor with weight {_W_RET} (return to the
     previous node), {_W_COM} (candidate is a common neighbor — BFS-ish),
     or {_W_FAR} (outward — DFS-ish), the p/q bias of Grover & Leskovec.
@@ -148,7 +147,8 @@ def graph_node2vec_biased_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
     only (row_number partitioned by src is invariant under the src
     filter), not the whole edge list. Frontier stays one row per walker
     after every hop's range filter, so cost per hop is O(Σ outdeg(cur))
-    — the same as any neighbor expansion — at any number of walkers."""
+    — the same as any neighbor expansion — at any number of walkers.""")
+def graph_node2vec_biased_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Persist the edge relation ALREADY hash-partitioned on src: every hop
     # joins on cur = src and the adjacency-check joins on prev = psrc, so
     # caching the partitioned layout lets all 2x{_N2V_BIASED_STEPS}+1 joins

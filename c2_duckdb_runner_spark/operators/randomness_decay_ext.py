@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from c2_duckdb_runner_spark.operators.inference_ext import DAILY_MILLI_SQL, daily_milli
-from c2_duckdb_runner_spark.registry import register
+from c2_duckdb_runner_spark.registry import fdoc, register
 from c2_duckdb_runner_spark.tables import load
 
 # ---------------------------------------------------------------------------
@@ -57,8 +57,7 @@ SELECT CAST(rank AS INT) AS rank, word, freq,
 FROM probe
 """,
 )
-def text_zipf_rank_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Zipf's-law probe: the word frequency at ranks 1, 2, 4, ..., 32
+@fdoc(f"""Zipf's-law probe: the word frequency at ranks 1, 2, 4, ..., 32
     and the exact ratio f(r)/f(2r) in micro-units — under Zipf
     (f ∝ 1/r^s) this ratio is the constant 2^s down the whole column,
     so the table reads as a log-log slope without either engine taking
@@ -71,7 +70,8 @@ def text_zipf_rank_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrderedAndProject — and the rank window runs over that BOUNDED
     64-row list, never a single-reducer sort of the whole vocabulary.
     The rank-to-double-rank pairing is a self-join on the tiny probe
-    set."""
+    set.""")
+def text_zipf_rank_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load(spark, sf_dir, "documents").select(
         F.explode(F.split("text", " ")).alias("w")
     )
@@ -128,8 +128,7 @@ FROM aged GROUP BY user_id
 ORDER BY decayed_score_micro DESC, user_id LIMIT {_DECAY_TOP}
 """,
 )
-def agg_time_decay_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recency-weighted engagement score: each event contributes
+@fdoc(f"""Recency-weighted engagement score: each event contributes
     value · 2^-(age in {_DECAY_HALF_LIFE_DAYS}-day half-lives), with the
     age quantized to whole half-lives so the decay factor is an exact
     power of two — the weight is one integer shift (guarded at 62 to
@@ -140,7 +139,8 @@ def agg_time_decay_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     day's partial scores can be merged later by shifting them another
     k half-lives, which is how a 100 TB event store maintains decayed
     scores incrementally instead of rescanning. One scan, one keyed
-    aggregate, TakeOrdered."""
+    aggregate, TakeOrdered.""")
+def agg_time_decay_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load(spark, sf_dir, "events")
     anchor = ev.agg(F.max("ts").alias("now"))
     aged = ev.crossJoin(F.broadcast(anchor)).select(

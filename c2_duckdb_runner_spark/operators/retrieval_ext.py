@@ -24,7 +24,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from c2_duckdb_runner_spark.operators.graph import cust_supp_pairs
-from c2_duckdb_runner_spark.registry import register
+from c2_duckdb_runner_spark.operators.simsearch import EMBEDDED_SQL, embedded
+from c2_duckdb_runner_spark.registry import fdoc, register
 from c2_duckdb_runner_spark.session import shuffle_width
 from c2_duckdb_runner_spark.tables import load
 
@@ -53,17 +54,7 @@ def _mmr_oracle() -> str:
     (cosq − max_sim_to_selected)/2  (λ = 0.5) and takes the total-ordered
     argmax — exactly the DataFrame loop, step for step.
     """
-    base = """
-e AS (
-  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-  FROM embeddings
-),
-n AS (
-  SELECT vec_id, v,
-         sqrt(list_reduce(list_transform(v, x -> x * x), (a, b) -> a + b))
-           AS nrm
-  FROM e
-),
+    base = f"""{EMBEDDED_SQL},
 q AS (SELECT v AS qv, nrm AS qnrm FROM n WHERE vec_id = 1),
 pool AS (
   SELECT n.vec_id AS vec_id, n.v AS v, n.nrm AS nrm,
@@ -117,18 +108,7 @@ def simsearch_rerank_mmr(spark: SparkSession, sf_dir: str) -> DataFrame:
     reduce-first-recurse-small discipline as ts_ewma_smooth. Oracle:
     the identical greedy unrolled as a DuckDB CTE chain (the
     simsearch_kmeans_train technique)."""
-    e = (
-        load(spark, sf_dir, "embeddings")
-        .withColumn("v", F.expr("transform(embedding, x -> CAST(x AS DOUBLE))"))
-        .withColumn(
-            "nrm",
-            F.expr(
-                "sqrt(aggregate(transform(v, x -> x * x), CAST(0.0 AS DOUBLE),"
-                " (a, b) -> a + b))"
-            ),
-        )
-        .select("vec_id", "v", "nrm")
-    )
+    e = embedded(spark, sf_dir)
     q = e.filter(F.col("vec_id") == _QUERY_ID).limit(1).select(
         F.col("v").alias("qv"), F.col("nrm").alias("qnrm")
     )
@@ -262,8 +242,7 @@ ORDER BY jaccard_ppm DESC, s1 ASC, s2 ASC
 LIMIT {_SIM_TOP}
 """,
 )
-def graph_jaccard_neighbor_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Neighborhood Jaccard similarity — which suppliers serve the most
+@fdoc(f"""Neighborhood Jaccard similarity — which suppliers serve the most
     similar customer sets (|N(a)∩N(b)| / |N(a)∪N(b)|): the co-engagement
     similarity used for related-item graphs and entity resolution, top-20
     most-similar pairs.
@@ -315,7 +294,8 @@ def graph_jaccard_neighbor_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
     instances (the explicit repartition forecloses the map-side combine
     below it): at scaled parallelism each task's pair universe is far
     larger than its input, so the measured combine collapse tends to
-    1.0× and the trade buys bounded memory for ~0 extra bytes."""
+    1.0× and the trade buys bounded memory for ~0 extra bytes.""")
+def graph_jaccard_neighbor_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
     cs = cust_supp_pairs(spark, sf_dir).distinct()

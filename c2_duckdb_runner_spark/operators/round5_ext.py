@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from c2_duckdb_runner_spark.operators.graph import cust_supp_pairs
-from c2_duckdb_runner_spark.registry import register
+from c2_duckdb_runner_spark.registry import fdoc, register
 from c2_duckdb_runner_spark.session import scratch_persist, shuffle_width
 from c2_duckdb_runner_spark.tables import load
 
@@ -70,8 +70,7 @@ ORDER BY borda DESC, doc_id ASC LIMIT {_BORDA_TOP}
 
 
 @register("search_fusion_borda", oracle=_BORDA_ORACLE)
-def search_fusion_borda(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Borda-count fusion of the three rankers used by
+@fdoc(f"""Borda-count fusion of the three rankers used by
     search_fusion_condorcet: a candidate earns (k+1-rank) points per list
     it appears in (0 if absent), fused score = point sum — positional
     voting, the O(k) alternative to Condorcet's O(k²) duel matrix with
@@ -82,7 +81,8 @@ def search_fusion_borda(spark: SparkSession, sf_dir: str) -> DataFrame:
     BOUNDED lists; the candidate union is a full-outer join of three
     {_BORDA_DEPTH}-row lists and the point sum is arithmetic — no
     per-pair work at all. The oracle's global windows are the O(n log n)
-    spec, not the plan."""
+    spec, not the plan.""")
+def search_fusion_borda(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
 
     def _topk(keyed: DataFrame, sort_cols, alias: str) -> DataFrame:
@@ -193,8 +193,7 @@ FROM est e LEFT JOIN exact x ON x.probe_key = e.probe_key
 
 
 @register("sketch_count_min_estimate", oracle=_CMS_ORACLE)
-def sketch_count_min_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Count-min sketch over the lineitem part-key stream: {_CMS_D} md5-
+@fdoc(f"""Count-min sketch over the lineitem part-key stream: {_CMS_D} md5-
     derived hash rows × {_CMS_W} counters, point estimate = min over rows
     of the landed counter — the mergeable heavy-hitter sketch every
     streaming frequency pipeline carries. The estimate is one-sided
@@ -206,7 +205,8 @@ def sketch_count_min_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     defining sketch property (contrast agg_hll_sketch_union). Probing
     joins the {len(_CMS_PROBES)}-row probe set against the broadcast
     counter table. The oracle replays the identical md5 bucket map, so
-    the differential checks every counter, not a tolerance."""
+    the differential checks every counter, not a tolerance.""")
+def sketch_count_min_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem").select("l_partkey")
     # constant array via F.lit(list): ONE ArrayData in codegen — F.array()
     # of literals re-materializes the array per row (measured ~3 s/query)
@@ -311,8 +311,7 @@ FROM marked GROUP BY source
 
 
 @register("pipeline_pack_sequences", oracle=_PACK_ORACLE)
-def pipeline_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Concat-and-chunk sequence packing audit — the GPT-style pretraining
+@fdoc(f"""Concat-and-chunk sequence packing audit — the GPT-style pretraining
     batcher: per source shard, documents concatenate in doc_id order and
     slice into {_PACK_CTX}-token context windows. Reports per shard the
     chunk count, the number of BOUNDARY-STRADDLING documents (each one is
@@ -324,7 +323,8 @@ def pipeline_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     packer always runs per shard — the global order of shards is
     irrelevant to the chunks), one aggregate per shard. A doc straddles a
     boundary iff floor(start/{_PACK_CTX}) < floor((end-1)/{_PACK_CTX}) —
-    pure integer arithmetic on the running sum."""
+    pure integer arithmetic on the running sum.""")
+def pipeline_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = load(spark, sf_dir, "documents").select(
         "source",
         "doc_id",
@@ -568,8 +568,7 @@ ORDER BY auth_micro DESC, supplier ASC LIMIT {_HITS_TOP}"""
 
 
 @register("graph_hits_rounds", oracle=_hits_oracle())
-def graph_hits_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HITS (Kleinberg) on the directed purchase graph — customers are
+@fdoc(f"""HITS (Kleinberg) on the directed purchase graph — customers are
     hubs, suppliers authorities: auth ← Σ hub over buyers, hub ← Σ auth
     over purchased suppliers, max-normalized to 10⁶ each half-round so
     the scores stay in exact integer micro-units (the L∞ variant of the
@@ -588,7 +587,8 @@ def graph_hits_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast→SMJ cliff at 10× (measured shuffle_x 43.5 → the pinned
     form re-shuffles nothing that grows). Normalizers are 1-row
     broadcast maxes. The oracle replays every round bit-for-bit as an
-    unrolled CTE chain (graph.py's PageRank recipe)."""
+    unrolled CTE chain (graph.py's PageRank recipe).""")
+def graph_hits_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = cust_supp_pairs(spark, sf_dir)
     nparts = shuffle_width(spark)
     # One shuffle builds the deduped c-partitioned copy: HashPartitioning(c)

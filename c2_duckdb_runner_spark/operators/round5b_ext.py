@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from c2_duckdb_runner_spark.operators.graph import _EDGES_SQL, _OFFSET, _edges
-from c2_duckdb_runner_spark.registry import register
+from c2_duckdb_runner_spark.registry import fdoc, register
 from c2_duckdb_runner_spark.session import scratch_persist, shuffle_width
 from c2_duckdb_runner_spark.tables import load
 
@@ -76,8 +76,7 @@ ORDER BY rank_micros DESC, node ASC LIMIT {_PPR_TOP}"""
 
 
 @register("graph_ppr_seed_teleport", oracle=_ppr_oracle())
-def graph_ppr_seed_teleport(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Personalized PageRank: the teleport term lands ONLY on the seed set
+@fdoc(f"""Personalized PageRank: the teleport term lands ONLY on the seed set
     (customer nodes ≡ 0 mod {_PPR_SEED_MOD}), so rank measures proximity
     to trusted nodes, not global centrality — TrustRank, the standard
     seed-propagated quality score for crawl corpora. {_PPR_ITERS} exact
@@ -109,7 +108,8 @@ def graph_ppr_seed_teleport(spark: SparkSession, sf_dir: str) -> DataFrame:
     node set is never DISTINCTed: contrib's key set IS the distinct dst
     set (the dst-keyed aggregate over all edges), so only src-minus-dst
     nodes need adding — a no-exchange distinct over the already
-    src-partitioned frame plus an N-row co-partitioned anti join."""
+    src-partitioned frame plus an N-row co-partitioned anti join.""")
+def graph_ppr_seed_teleport(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
     edges_deg = scratch_persist(
@@ -325,8 +325,7 @@ FROM load CROSS JOIN n
 
 
 @register("pipeline_moe_balance_round", oracle=_MOE_ORACLE)
-def pipeline_moe_balance_round(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mixture-of-Experts router balance audit + one AUXILIARY-LOSS-FREE
+@fdoc(f"""Mixture-of-Experts router balance audit + one AUXILIARY-LOSS-FREE
     bias update: route every document to one of {_MOE_EXPERTS} experts
     (deterministic md5 router proxy), compare per-expert load to the even
     capacity ceil(n/{_MOE_EXPERTS}), and emit the sign-rule bias step
@@ -337,7 +336,8 @@ def pipeline_moe_balance_round(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one map-side-combining aggregate to {_MOE_EXPERTS}
     counters + a broadcast 1-row total — constant-size output regardless
-    of corpus."""
+    of corpus.""")
+def pipeline_moe_balance_round(spark: SparkSession, sf_dir: str) -> DataFrame:
     routed = load(spark, sf_dir, "documents").select(
         F.expr(
             "CAST(conv(substring(md5(CAST(doc_id AS STRING)), 1, 15),"

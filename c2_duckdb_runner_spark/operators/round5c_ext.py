@@ -26,7 +26,7 @@ from c2_duckdb_runner_spark.operators.dedup import (
     _jaccard_pairs_sql,
     _exploded_shingles,
 )
-from c2_duckdb_runner_spark.registry import register
+from c2_duckdb_runner_spark.registry import fdoc, register
 from c2_duckdb_runner_spark.session import scratch_persist
 from c2_duckdb_runner_spark.tables import load
 
@@ -92,8 +92,7 @@ FROM (
 
 
 @register("dedup_minhash_oph", oracle=_oph_oracle())
-def dedup_minhash_oph(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One-permutation minhash with rotational densification: one 60-bit
+@fdoc(f"""One-permutation minhash with rotational densification: one 60-bit
     md5 per shingle; slot = h mod {_OPH_K}, slot value = min(h div
     {_OPH_K}); an empty slot borrows the first non-empty slot to its
     right (cyclically). P(slot match) ≈ Jaccard, so the signature is a
@@ -108,7 +107,8 @@ def dedup_minhash_oph(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate collapsing to ≤{_OPH_K} rows/doc, then a doc-keyed pivot —
     no pair enumeration anywhere in the sketch path (the exact-Jaccard
     side is the audit's ground truth, shingle-blocked as in
-    dedup_near_ngram_jaccard, and the sample keeps it audit-sized)."""
+    dedup_near_ngram_jaccard, and the sample keeps it audit-sized).""")
+def dedup_minhash_oph(spark: SparkSession, sf_dir: str) -> DataFrame:
     _, _, match = _oph_cols_sql()
     # r12: raw stream via _exploded_shingles (inferred-filter dodge)
     sh_raw = _exploded_shingles(spark, sf_dir, sample_mod=_OPH_SAMPLE_MOD)

@@ -21,7 +21,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from c2_duckdb_runner_spark.registry import register
+from c2_duckdb_runner_spark.operators.simsearch import (
+    PROBE_DEPTH,
+    PROBE_QUERIES,
+    PROBE_RANKED_SQL,
+    probe_scores,
+    probe_topk,
+)
+from c2_duckdb_runner_spark.registry import fdoc, register
 from c2_duckdb_runner_spark.session import scratch_persist
 from c2_duckdb_runner_spark.tables import load
 
@@ -29,39 +36,14 @@ from c2_duckdb_runner_spark.tables import load
 # eval_average_precision
 # ---------------------------------------------------------------------------
 
-_AP_N_QUERIES = 10
-_AP_DEPTH = 10
-
 _AP_ORACLE = f"""
-WITH e AS (
-  SELECT vec_id, label,
-         list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-  FROM embeddings
-),
-n AS (
-  SELECT vec_id, label, v,
-         sqrt(list_reduce(list_transform(v, x -> x * x), (a, b) -> a + b)) AS nrm
-  FROM e
-),
-q AS (SELECT vec_id AS q_id, label AS qlabel, v AS qv, nrm AS qnrm
-      FROM n WHERE vec_id <= {_AP_N_QUERIES}),
-scored AS (
-  SELECT q.q_id, q.qlabel, n.vec_id, n.label,
-         ROUND(list_reduce(list_transform(range(1, 65), i -> n.v[i] * q.qv[i]),
-               (x, y) -> x + y) / (n.nrm * q.qnrm), 6) AS cos
-  FROM n, q WHERE n.vec_id <> q.q_id
-),
-ranked AS (
-  SELECT q_id, qlabel, label,
-         ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id) AS rnk
-  FROM scored
-),
+WITH {PROBE_RANKED_SQL},
 hits AS (
   SELECT q_id, rnk,
          CASE WHEN label = qlabel THEN 1 ELSE 0 END AS rel,
          CAST(SUM(CASE WHEN label = qlabel THEN 1 ELSE 0 END)
               OVER (PARTITION BY q_id ORDER BY rnk) AS BIGINT) AS relcnt
-  FROM ranked WHERE rnk <= {_AP_DEPTH}
+  FROM ranked WHERE rnk <= {PROBE_DEPTH}
 ),
 agg AS (
   SELECT q_id,
@@ -78,73 +60,20 @@ FROM agg
 
 
 @register("eval_average_precision", oracle=_AP_ORACLE)
-def eval_average_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Average precision @{_AP_DEPTH} per probe query (the per-query term
+@fdoc(f"""Average precision @{PROBE_DEPTH} per probe query (the per-query term
     of MAP): AP = (Σ over relevant ranks i of precision@i) / R, with
     precision@i kept as the exact integer (10⁶·relcnt@i) div i and the
     final mean as one integer division — 0 for queries with no hit.
     Completes the retrieval-eval ladder: MRR (first hit), NDCG (graded
     discount), ERR (cascade), AP (order-sensitive area under P-R).
 
-    Scale shape: {_AP_N_QUERIES} probes broadcast; the corpus scores
-    map-only; per-query top-{_AP_DEPTH} via the salted two-stage exact
+    Scale shape: {PROBE_QUERIES} probes broadcast; the corpus scores
+    map-only; per-query top-{PROBE_DEPTH} via the salted two-stage exact
     top-k (rank in (q, salt) keep k, re-rank the bounded survivors), so
     no reducer sorts a whole query's score column; the running relevant
-    count is a window over ≤{_AP_DEPTH} rows per query."""
-    e = (
-        load(spark, sf_dir, "embeddings")
-        .withColumn("v", F.expr("transform(embedding, x -> CAST(x AS DOUBLE))"))
-        .withColumn(
-            "nrm",
-            F.expr(
-                "sqrt(aggregate(transform(v, x -> x * x),"
-                " CAST(0.0 AS DOUBLE), (a, b) -> a + b))"
-            ),
-        )
-        .select("vec_id", "label", "v", "nrm")
-    )
-    q = e.filter(F.col("vec_id") <= _AP_N_QUERIES).limit(_AP_N_QUERIES + 1).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("label").alias("qlabel"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qnrm"),
-    )
-    scored = (
-        e.crossJoin(F.broadcast(q))
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            "qlabel",
-            "vec_id",
-            "label",
-            F.round(
-                F.expr(
-                    "aggregate(zip_with(v, qv, (x, y) -> x * y),"
-                    " CAST(0.0 AS DOUBLE), (x, y) -> x + y)"
-                )
-                / (F.col("nrm") * F.col("qnrm")),
-                6,
-            ).alias("cos"),
-        )
-    )
-    salt = (F.xxhash64("vec_id") % 8).alias("salt")
-    w1 = Window.partitionBy("q_id", "salt").orderBy(F.col("cos").desc(), "vec_id")
-    pre = (
-        scored.select("q_id", "qlabel", "label", "cos", "vec_id", salt)
-        .select(
-            "q_id",
-            "qlabel",
-            "label",
-            "cos",
-            "vec_id",
-            F.row_number().over(w1).alias("r1"),
-        )
-        .filter(F.col("r1") <= _AP_DEPTH)
-    )
-    wq = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), "vec_id")
-    ranked = pre.select(
-        "q_id", "qlabel", "label", F.row_number().over(wq).alias("rnk")
-    ).filter(F.col("rnk") <= _AP_DEPTH)
+    count is a window over ≤{PROBE_DEPTH} rows per query.""")
+def eval_average_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ranked = probe_topk(probe_scores(spark, sf_dir))
     wrun = (
         Window.partitionBy("q_id")
         .orderBy("rnk")
@@ -249,8 +178,7 @@ LIMIT {_ADC_TOP}
 
 
 @register("simsearch_pq_adc", oracle=_adc_oracle())
-def simsearch_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Product-quantization ASYMMETRIC distance search — the query side of
+@fdoc(f"""Product-quantization ASYMMETRIC distance search — the query side of
     simsearch_pq_assign: the corpus exists only as {_ADC_SUBSPACES}
     small codes per vector, the query stays full-precision, and a
     candidate's distance is the sum of {_ADC_SUBSPACES} entries from a
@@ -266,7 +194,8 @@ def simsearch_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: codes = one corpus-sized relation keyed by vec; the LUT
     is a 32-row broadcast; scoring is a broadcast join + 4-column
-    arithmetic; output is a TakeOrdered top-{_ADC_TOP}."""
+    arithmetic; output is a TakeOrdered top-{_ADC_TOP}.""")
+def simsearch_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "embeddings").select(
         "vec_id",
         F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("v"),

@@ -16,9 +16,14 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
-from c2_duckdb_runner_spark.registry import register
+from c2_duckdb_runner_spark.operators.simsearch import (
+    PROBE_DEPTH,
+    PROBE_RANKED_SQL,
+    probe_scores,
+    probe_topk,
+)
+from c2_duckdb_runner_spark.registry import fdoc, register
 from c2_duckdb_runner_spark.tables import load
 
 # ---------------------------------------------------------------------------
@@ -81,43 +86,21 @@ def text_type_token_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
 # eval_recall_at_k
 # ---------------------------------------------------------------------------
 
-_RK_N_QUERIES = 10
-_RK_DEPTH = 10
+# the recall depth under its older name, which test_invariants_r5 imports
+_RK_DEPTH = PROBE_DEPTH
 
 _RK_ORACLE = f"""
-WITH e AS (
-  SELECT vec_id, label,
-         list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-  FROM embeddings
-),
-n AS (
-  SELECT vec_id, label, v,
-         sqrt(list_reduce(list_transform(v, x -> x * x), (a, b) -> a + b)) AS nrm
-  FROM e
-),
-q AS (SELECT vec_id AS q_id, label AS qlabel, v AS qv, nrm AS qnrm
-      FROM n WHERE vec_id <= {_RK_N_QUERIES}),
+WITH {PROBE_RANKED_SQL},
 pool AS (
   SELECT q.q_id, CAST(COUNT(*) AS BIGINT) AS n_corpus_rel
   FROM q JOIN e ON e.label = q.qlabel AND e.vec_id <> q.q_id
   GROUP BY q.q_id
 ),
-scored AS (
-  SELECT q.q_id, q.qlabel, n.vec_id, n.label,
-         ROUND(list_reduce(list_transform(range(1, 65), i -> n.v[i] * q.qv[i]),
-               (x, y) -> x + y) / (n.nrm * q.qnrm), 6) AS cos
-  FROM n, q WHERE n.vec_id <> q.q_id
-),
-ranked AS (
-  SELECT q_id, qlabel, label,
-         ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id) AS rnk
-  FROM scored
-),
 hits AS (
   SELECT q_id,
          CAST(SUM(CASE WHEN label = qlabel THEN 1 ELSE 0 END) AS BIGINT)
            AS n_rel_at_k
-  FROM ranked WHERE rnk <= {_RK_DEPTH} GROUP BY q_id
+  FROM ranked WHERE rnk <= {PROBE_DEPTH} GROUP BY q_id
 )
 SELECT h.q_id, CAST(h.n_rel_at_k AS INT) AS n_rel_at_k,
        CAST(p.n_corpus_rel AS BIGINT) AS n_corpus_rel,
@@ -129,80 +112,24 @@ FROM hits h JOIN pool p ON p.q_id = h.q_id
 
 
 @register("eval_recall_at_k", oracle=_RK_ORACLE)
-def eval_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall@{_RK_DEPTH} per probe query: retrieved-relevant over ALL
+@fdoc(f"""Recall@{PROBE_DEPTH} per probe query: retrieved-relevant over ALL
     corpus-relevant (same-label docs) — the recall axis of the retrieval
     ladder (AP covers the precision axis on the identical harness), the
     number an ANN index quotes against exact search. Exact integer
     micro.
 
     Scale shape: probes broadcast, corpus scores map-only, per-query
-    top-{_RK_DEPTH} via the salted two-stage exact top-k; the
-    corpus-relevant pool size is one broadcast-join aggregate."""
-    e = (
-        load(spark, sf_dir, "embeddings")
-        .withColumn("v", F.expr("transform(embedding, x -> CAST(x AS DOUBLE))"))
-        .withColumn(
-            "nrm",
-            F.expr(
-                "sqrt(aggregate(transform(v, x -> x * x),"
-                " CAST(0.0 AS DOUBLE), (a, b) -> a + b))"
-            ),
-        )
-        .select("vec_id", "label", "v", "nrm")
-    )
-    q = e.filter(F.col("vec_id") <= _RK_N_QUERIES).limit(_RK_N_QUERIES + 1).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("label").alias("qlabel"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qnrm"),
-    )
+    top-{PROBE_DEPTH} via the salted two-stage exact top-k; the
+    corpus-relevant pool size is a per-query count over the same scored
+    rows, as search_ndcg_eval counts its ideal-list size.""")
+def eval_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
+    scored = probe_scores(spark, sf_dir)
     pool = (
-        e.select("vec_id", "label")
-        .crossJoin(F.broadcast(q.select("q_id", "qlabel")))
-        .filter(
-            (F.col("label") == F.col("qlabel"))
-            & (F.col("vec_id") != F.col("q_id"))
-        )
+        scored.filter(F.col("label") == F.col("qlabel"))
         .groupBy("q_id")
         .agg(F.count("*").cast("bigint").alias("n_corpus_rel"))
     )
-    scored = (
-        e.crossJoin(F.broadcast(q))
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            "qlabel",
-            "vec_id",
-            "label",
-            F.round(
-                F.expr(
-                    "aggregate(zip_with(v, qv, (x, y) -> x * y),"
-                    " CAST(0.0 AS DOUBLE), (x, y) -> x + y)"
-                )
-                / (F.col("nrm") * F.col("qnrm")),
-                6,
-            ).alias("cos"),
-        )
-    )
-    salt = (F.xxhash64("vec_id") % 8).alias("salt")
-    w1 = Window.partitionBy("q_id", "salt").orderBy(F.col("cos").desc(), "vec_id")
-    pre = (
-        scored.select("q_id", "qlabel", "label", "cos", "vec_id", salt)
-        .select(
-            "q_id",
-            "qlabel",
-            "label",
-            "cos",
-            "vec_id",
-            F.row_number().over(w1).alias("r1"),
-        )
-        .filter(F.col("r1") <= _RK_DEPTH)
-    )
-    wq = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), "vec_id")
-    ranked = pre.select(
-        "q_id", "qlabel", "label", F.row_number().over(wq).alias("rnk")
-    ).filter(F.col("rnk") <= _RK_DEPTH)
+    ranked = probe_topk(scored)
     hits = ranked.groupBy("q_id").agg(
         F.sum(F.expr("CASE WHEN label = qlabel THEN 1 ELSE 0 END"))
         .cast("bigint")

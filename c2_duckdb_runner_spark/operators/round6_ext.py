@@ -32,9 +32,15 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
-from c2_duckdb_runner_spark.registry import register
+from c2_duckdb_runner_spark.operators.simsearch import (
+    PROBE_DEPTH,
+    PROBE_QUERIES,
+    PROBE_RANKED_SQL,
+    probe_scores,
+    probe_topk,
+)
+from c2_duckdb_runner_spark.registry import fdoc, register
 from c2_duckdb_runner_spark.session import scratch_persist
 from c2_duckdb_runner_spark.tables import load, load_spread
 
@@ -85,8 +91,7 @@ FROM est
 
 
 @register("sketch_ams_f2_moment", oracle=_AMS_ORACLE)
-def sketch_ams_f2_moment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """AMS Tug-of-War sketch of the l_partkey frequency vector: each of
+@fdoc(f"""AMS Tug-of-War sketch of the l_partkey frequency vector: each of
     the {_AMS_D} estimators is (Σ_rows s_j(key))² where s_j = ±1 comes
     from bit j of the 60-bit md5 hash; the median of the five squares
     estimates F2 = Σ_x c_x² (self-join size / skew) in ONE pass with
@@ -99,7 +104,8 @@ def sketch_ams_f2_moment(spark: SparkSession, sf_dir: str) -> DataFrame:
     results crossed with broadcast. At 100 TB the z sums approach the
     int64 edge only past ~10^18 rows; the production variant widens the
     SQUARES to DECIMAL(38,0) — documented, not needed at any tested sf
-    (|z| ≤ rows, so z² ≤ 3.6·10¹³ at the 10x replica)."""
+    (|z| ≤ rows, so z² ≤ 3.6·10¹³ at the 10x replica).""")
+def sketch_ams_f2_moment(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem").select("l_partkey")
     z = li.agg(
         *[
@@ -244,12 +250,10 @@ def text_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
 # eval_rank_biased_precision
 # ---------------------------------------------------------------------------
 
-_RBP_N_QUERIES = 10
-_RBP_DEPTH = 10
 # RBP(p=4/5) = (1-p)·Σ rel_i·p^(i-1) = (Σ rel_i·4^(i-1)·5^(10-i)) / 5^10 —
 # exact integer weights over the common denominator 5^10
-_RBP_DEN = 5**_RBP_DEPTH
-_RBP_W = {i: 4 ** (i - 1) * 5 ** (_RBP_DEPTH - i) for i in range(1, _RBP_DEPTH + 1)}
+_RBP_DEN = 5**PROBE_DEPTH
+_RBP_W = {i: 4 ** (i - 1) * 5 ** (PROBE_DEPTH - i) for i in range(1, PROBE_DEPTH + 1)}
 _RBP_CASE = (
     "CASE rnk "
     + " ".join(f"WHEN {i} THEN {w}" for i, w in _RBP_W.items())
@@ -257,34 +261,12 @@ _RBP_CASE = (
 )
 
 _RBP_ORACLE = f"""
-WITH e AS (
-  SELECT vec_id, label,
-         list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-  FROM embeddings
-),
-n AS (
-  SELECT vec_id, label, v,
-         sqrt(list_reduce(list_transform(v, x -> x * x), (a, b) -> a + b)) AS nrm
-  FROM e
-),
-q AS (SELECT vec_id AS q_id, label AS qlabel, v AS qv, nrm AS qnrm
-      FROM n WHERE vec_id <= {_RBP_N_QUERIES}),
-scored AS (
-  SELECT q.q_id, q.qlabel, n.vec_id, n.label,
-         ROUND(list_reduce(list_transform(range(1, 65), i -> n.v[i] * q.qv[i]),
-               (x, y) -> x + y) / (n.nrm * q.qnrm), 6) AS cos
-  FROM n, q WHERE n.vec_id <> q.q_id
-),
-ranked AS (
-  SELECT q_id, qlabel, label,
-         ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id) AS rnk
-  FROM scored
-),
+WITH {PROBE_RANKED_SQL},
 hits AS (
   SELECT q_id,
          CASE WHEN label = qlabel THEN 1 ELSE 0 END AS rel,
          {_RBP_CASE} AS w
-  FROM ranked WHERE rnk <= {_RBP_DEPTH}
+  FROM ranked WHERE rnk <= {PROBE_DEPTH}
 )
 SELECT q_id, CAST(SUM(rel) AS INT) AS n_rel_at_k,
        CAST(SUM(rel * w) AS BIGINT) AS rbp_num,
@@ -294,71 +276,18 @@ FROM hits GROUP BY q_id
 
 
 @register("eval_rank_biased_precision", oracle=_RBP_ORACLE)
-def eval_rank_biased_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rank-biased precision @{_RBP_DEPTH} (persistence p = 0.8) per probe
+@fdoc(f"""Rank-biased precision @{PROBE_DEPTH} (persistence p = 0.8) per probe
     query: the user-model retrieval metric where rank i earns weight
     p^(i-1) — kept EXACT as the rational 4^(i-1)·5^(10-i) over the
     common denominator 5^10, so both engines agree to the last ppm
     (p^9·10⁶ is not an integer; the rational form is).
 
-    Scale shape: identical to eval_average_precision — {_RBP_N_QUERIES}
+    Scale shape: identical to eval_average_precision — {PROBE_QUERIES}
     probes broadcast, map-only scoring, salted two-stage exact top-k so
     no reducer ever sorts a full query's score column; the weight is a
-    10-arm CASE on the bounded rank."""
-    e = (
-        load(spark, sf_dir, "embeddings")
-        .withColumn("v", F.expr("transform(embedding, x -> CAST(x AS DOUBLE))"))
-        .withColumn(
-            "nrm",
-            F.expr(
-                "sqrt(aggregate(transform(v, x -> x * x),"
-                " CAST(0.0 AS DOUBLE), (a, b) -> a + b))"
-            ),
-        )
-        .select("vec_id", "label", "v", "nrm")
-    )
-    q = e.filter(F.col("vec_id") <= _RBP_N_QUERIES).limit(_RBP_N_QUERIES + 1).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("label").alias("qlabel"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qnrm"),
-    )
-    scored = (
-        e.crossJoin(F.broadcast(q))
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            "qlabel",
-            "vec_id",
-            "label",
-            F.round(
-                F.expr(
-                    "aggregate(zip_with(v, qv, (x, y) -> x * y),"
-                    " CAST(0.0 AS DOUBLE), (x, y) -> x + y)"
-                )
-                / (F.col("nrm") * F.col("qnrm")),
-                6,
-            ).alias("cos"),
-        )
-    )
-    salt = (F.xxhash64("vec_id") % 8).alias("salt")
-    w1 = Window.partitionBy("q_id", "salt").orderBy(F.col("cos").desc(), "vec_id")
-    pre = (
-        scored.select("q_id", "qlabel", "label", "cos", "vec_id", salt)
-        .select(
-            "q_id",
-            "qlabel",
-            "label",
-            "cos",
-            "vec_id",
-            F.row_number().over(w1).alias("r1"),
-        )
-        .filter(F.col("r1") <= _RBP_DEPTH)
-    )
-    wq = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), "vec_id")
-    ranked = pre.select(
-        "q_id", "qlabel", "label", F.row_number().over(wq).alias("rnk")
-    ).filter(F.col("rnk") <= _RBP_DEPTH)
+    10-arm CASE on the bounded rank.""")
+def eval_rank_biased_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ranked = probe_topk(probe_scores(spark, sf_dir))
     hits = ranked.select(
         "q_id",
         F.expr("CASE WHEN label = qlabel THEN 1 ELSE 0 END").alias("rel"),
@@ -492,10 +421,7 @@ FROM b GROUP BY cap
 
 
 @register("pipeline_length_bucket_batching", oracle=_BATCH_ORACLE)
-def pipeline_length_bucket_batching(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Padding-waste report for power-of-two length-bucketed batching
+@fdoc(f"""Padding-waste report for power-of-two length-bucketed batching
     (batch size {_BATCH_SIZE}): every doc pads up to its bucket cap, so
     pad_ppm = wasted fraction of the bucket's token budget — the number
     a pretraining pipeline uses to choose its fixed sequence lengths
@@ -503,7 +429,10 @@ def pipeline_length_bucket_batching(
     that trades padding waste for boundary straddlers).
 
     Scale shape: map-only bucket assignment (a 9-arm CASE in codegen) +
-    one grouped aggregate; output is bucket-domain-sized."""
+    one grouped aggregate; output is bucket-domain-sized.""")
+def pipeline_length_bucket_batching(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
     d = load(spark, sf_dir, "documents").select(
         F.expr("CAST(size(split(text, ' ')) AS BIGINT)").alias("ntok")
     )

@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from c2_duckdb_runner_spark.operators.inference_ext import daily_milli
-from c2_duckdb_runner_spark.registry import register
+from c2_duckdb_runner_spark.registry import fdoc, register
 from c2_duckdb_runner_spark.tables import load
 
 # ---------------------------------------------------------------------------
@@ -64,14 +64,14 @@ FROM c
 
 
 @register("mlsplit_kfold_stratified", oracle=_KFOLD_ORACLE)
-def mlsplit_kfold_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stratified {_KFOLDS}-fold assignment: fold = md5(doc_id) mod
+@fdoc(f"""Stratified {_KFOLDS}-fold assignment: fold = md5(doc_id) mod
     {_KFOLDS} within each source stratum, plus the per-stratum max-min
     fold-size imbalance — the audit that a biased id space (sequential
     ids, sharded ids) hasn't skewed the split.
 
     Scale shape: map-only fold assignment, one grouped count (stratum ×
-    fold, domain-bounded), imbalance windows run over that aggregate."""
+    fold, domain-bounded), imbalance windows run over that aggregate.""")
+def mlsplit_kfold_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     f = load(spark, sf_dir, "documents").select(
         "source", F.expr(f"CAST({_KF_H_SPARK} % {_KFOLDS} AS INT)").alias("fold")
     )
@@ -223,7 +223,7 @@ WITH daily AS (
   SELECT event_type, date_trunc('day', ts) AS d,
          (10 * CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS BIGINT))
            // CAST(COUNT(*) AS BIGINT) AS x
-  FROM events GROUP BY 1, 2
+  FROM events WHERE ts IS NOT NULL GROUP BY 1, 2
 ),
 m AS (
   SELECT event_type, CAST(SUM(x) AS BIGINT) AS sx,
@@ -255,8 +255,7 @@ FROM ph GROUP BY event_type, nd, mean_milli
 
 
 @register("ts_page_hinkley", oracle=_PH_ORACLE)
-def ts_page_hinkley(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Page-Hinkley sequential drift test on the per-type daily revenue
+@fdoc(f"""Page-Hinkley sequential drift test on the per-type daily revenue
     series: PH_t = m_t - min_(s<=t) m_s with m_t the cumulative deviation
     from the series mean — the classic upward-shift detector; alarm days
     are those exceeding λ = {_PH_LAMBDA} milli. Complements the
@@ -266,7 +265,8 @@ def ts_page_hinkley(spark: SparkSession, sf_dir: str) -> DataFrame:
     window runs over the per-type DAILY series (calendar-bounded, the
     ts_* family contract) partitioned by type. Integer milli end-to-end:
     x uses the shared (10·cents) div count convention, so both engines
-    agree bit-for-bit."""
+    agree bit-for-bit.""")
+def ts_page_hinkley(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = daily_milli(spark, sf_dir)
     mu = daily.groupBy("event_type").agg(
         F.expr("CAST(SUM(x) AS BIGINT) div COUNT(*)").alias("mean_milli"),
@@ -332,8 +332,7 @@ ORDER BY df DESC, ngram LIMIT {_BP_TOP}
 
 
 @register("text_boilerplate_ngrams", oracle=_BP_ORACLE)
-def text_boilerplate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Boilerplate detector: 5-grams appearing in ≥ {_BP_MIN_DF} distinct
+@fdoc(f"""Boilerplate detector: 5-grams appearing in ≥ {_BP_MIN_DF} distinct
     documents, ranked by document frequency — the C4/RefinedWeb signal
     for navigation chrome, cookie banners and license footers that
     within-document repetition filters (text_repetition_ratio) cannot
@@ -341,7 +340,8 @@ def text_boilerplate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one linear explode of DISTINCT per-doc 5-grams, one
     gram-keyed count, result pre-cut with orderBy().limit()
-    (TakeOrderedAndProject) — never a global window."""
+    (TakeOrderedAndProject) — never a global window.""")
+def text_boilerplate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     from c2_duckdb_runner_spark.tables import load_spread
 
     g = (

@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from c2_duckdb_runner_spark.operators.inference_ext import daily_milli
-from c2_duckdb_runner_spark.registry import register
+from c2_duckdb_runner_spark.registry import fdoc, register
 from c2_duckdb_runner_spark.session import scratch_persist
 from c2_duckdb_runner_spark.tables import load
 
@@ -141,7 +141,8 @@ WITH daily AS (
   SELECT event_type, date_trunc('day', ts) AS d,
          (10 * CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS BIGINT))
            // CAST(COUNT(*) AS BIGINT) AS x
-  FROM events WHERE event_type IN ('view', 'click') GROUP BY 1, 2
+  FROM events WHERE ts IS NOT NULL AND event_type IN ('view', 'click')
+  GROUP BY 1, 2
 ),
 paired AS (
   SELECT a.d, a.x - b.x AS diff
@@ -260,8 +261,7 @@ FROM o, tot
 
 
 @register("eval_krippendorff_alpha", oracle=_KRIPP_ORACLE)
-def eval_krippendorff_alpha(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Krippendorff's alpha (nominal) treating each order's line items as
+@fdoc(f"""Krippendorff's alpha (nominal) treating each order's line items as
     repeated ratings of the order's return flag — the inter-annotator
     agreement coefficient that, unlike Cohen's kappa, accepts a VARIABLE
     number of ratings per unit (here 2..17) and is the standard metric
@@ -276,7 +276,8 @@ def eval_krippendorff_alpha(spark: SparkSession, sf_dir: str) -> DataFrame:
     per the estimator's definition.
 
     Scale shape: one unit-keyed aggregate (map-combining), one label
-    aggregate, 1-row outputs crossed via broadcast."""
+    aggregate, 1-row outputs crossed via broadcast.""")
+def eval_krippendorff_alpha(spark: SparkSession, sf_dir: str) -> DataFrame:
     r = load(spark, sf_dir, "lineitem").select(
         F.col("l_orderkey").alias("unit"),
         F.col("l_returnflag").alias("label"),
@@ -352,8 +353,7 @@ FROM r
 
 
 @register("sample_temperature_mixture", oracle=_TEMP_ORACLE)
-def sample_temperature_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Temperature-scaled mixture allocation (τ = 0.5): source weights
+@fdoc(f"""Temperature-scaled mixture allocation (τ = 0.5): source weights
     ∝ n^τ = √n — the standard multilingual/multi-domain reweighting that
     upweights small sources without letting any source vanish —
     integerized over a {_TEMP_BUDGET}-slot budget by the shared
@@ -362,7 +362,8 @@ def sample_temperature_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     immediately rounded, the sample_neyman_allocation contract.
 
     Scale shape: one source-keyed count; apportionment runs on the
-    source domain (the rank window is over the AGGREGATE)."""
+    source domain (the rank window is over the AGGREGATE).""")
+def sample_temperature_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = load(spark, sf_dir, "documents").groupBy("source").agg(
         F.count("*").cast("bigint").alias("n_docs")
     )

@@ -60,8 +60,7 @@ SELECT party, CAST(COUNT(*) AS BIGINT) AS seats FROM top GROUP BY party
 
 
 @register("alloc_sainte_lague", oracle=_SL_ORACLE)
-def alloc_sainte_lague(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sainte-Lague (Webster) apportionment: seats go to the highest
+@fdoc(f"""Sainte-Lague (Webster) apportionment: seats go to the highest
     v/(2s+1) quotients — the divisor method proportional in expectation
     (D'Hondt's v/(s+1) systematically favors large parties; running BOTH
     shows the policy difference on identical data). Quotients rank
@@ -72,7 +71,8 @@ def alloc_sainte_lague(spark: SparkSession, sf_dir: str) -> DataFrame:
     Ties break (party, d): total order.
 
     Scale shape: bounded party aggregate -> {_SL_SEATS}-way explode ->
-    TakeOrdered; output party-domain-sized."""
+    TakeOrdered; output party-domain-sized.""")
+def alloc_sainte_lague(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load(spark, sf_dir, "orders").select("o_custkey", "o_totalprice")
     c = load(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     n = load(spark, sf_dir, "nation").select("n_nationkey", "n_name")

@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from c2_duckdb_runner_spark.registry import register
+from c2_duckdb_runner_spark.registry import fdoc, register
 from c2_duckdb_runner_spark.session import scratch_persist
 from c2_duckdb_runner_spark.tables import load
 
@@ -55,8 +55,7 @@ SELECT k1, name1, k2 AS nearest_key, name2 AS nearest_name, dist
 FROM ranked WHERE rn = 1
 """,
 )
-def dedup_editdistance_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Blocked edit-distance dedup: each part's NEAREST near-duplicate name
+@fdoc(f"""Blocked edit-distance dedup: each part's NEAREST near-duplicate name
     (Levenshtein ≤ {_MAX_DIST}, ties broken by smaller key) — the
     pick-a-canonical-neighbor shape. The declared semantics (the oracle)
     block on the head noun with a length band; the Spark plan computes the
@@ -80,7 +79,8 @@ def dedup_editdistance_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     part. (A dedup operator whose output can exceed its input is itself a
     scale bug; neighbor-per-record, keeper flags, or cluster ids are the
     O(n) alternatives — this and dedup_semantic_keep / dedup_cluster_cc
-    demonstrate all three.)"""
+    demonstrate all three.)""")
+def dedup_editdistance_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     # NULL names are not dedupable (r11 hostile pin — the oracle's NULL
     # block silently dropped them while the same-name path kept them)
     part = (
@@ -228,8 +228,7 @@ SELECT bucket, CAST(COUNT(*) AS BIGINT) AS n,
 FROM b GROUP BY bucket
 """,
 )
-def layout_zorder_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Z-order clustering of lineitem on (l_partkey, l_suppkey): Morton-
+@fdoc(f"""Z-order clustering of lineitem on (l_partkey, l_suppkey): Morton-
     interleave the two keys, split the curve into {_ZBUCKETS} equal
     buckets, and report each bucket's min/max on BOTH dimensions — the
     per-file stats a predicate on EITHER column would prune against.
@@ -247,7 +246,8 @@ def layout_zorder_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     (4) NTILE's bucket is pure arithmetic on (rank, n). The oracle is
     plain NTILE over the curve order — byte-identical output proves the
     rank algebra. No row ever funnels through a single WindowExec
-    partition (the round-5 verdict's last `weak`)."""
+    partition (the round-5 verdict's last `weak`).""")
+def layout_zorder_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
     import os
 

@@ -18,6 +18,12 @@ from exact to scale-path:
   per-query top-k via window row_number. The realistic training-pipeline
   shape (the corpus shuffles once, keyed on bucket, not per query).
 
+The module is also the one home of the cosine-probe kit that every
+cosine key builds on: ``embedded`` (the vectors in doubles with their L2
+norm), ``probe_scores`` and ``probe_topk`` (the retrieval-eval probe set
+and its exact per-query top-k), and their independently written oracle
+twins ``EMBEDDED_SQL`` and ``PROBE_RANKED_SQL``.
+
 Everything stays JVM-side: dot products are ``aggregate(zip_with(...))``
 (whole-stage codegen), never a Python UDF. Cosines are folded strictly
 left-to-right over the same doubles in Spark and DuckDB, rounded to 6 dp
@@ -44,7 +50,13 @@ _DOT = (
     "CAST(0.0 AS DOUBLE), (x, y) -> x + y)"
 )
 
-_DUCK_BASE = """
+# The retrieval-eval probe harness: probes vec_id 0..PROBE_QUERIES each
+# rank the rest of the corpus by cosine; the top PROBE_DEPTH are scored.
+PROBE_QUERIES = 10
+PROBE_DEPTH = 10
+
+# oracle twin of ``embedded``: the CTEs e (doubled vector) and n (+ norm)
+EMBEDDED_SQL = """
 e AS (
   SELECT vec_id, label,
          list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
@@ -54,7 +66,9 @@ n AS (
   SELECT vec_id, label, v,
          sqrt(list_reduce(list_transform(v, x -> x * x), (a, b) -> a + b)) AS nrm
   FROM e
-),
+)"""
+
+_DUCK_BASE = f"""{EMBEDDED_SQL},
 q AS (SELECT v AS qv, nrm AS qnrm, label AS qlabel FROM n WHERE vec_id = 1)
 """
 
@@ -63,15 +77,92 @@ _DUCK_COS = (
     " (x, y) -> x + y) / (n.nrm * q.qnrm), 6)"
 )
 
+# oracle twin of ``probe_topk(probe_scores(...))`` before its rank filter:
+# the CTEs e, n, q (probes), scored (probe x corpus) and ranked (plain
+# per-query ROW_NUMBER, unfiltered)
+PROBE_RANKED_SQL = f"""{EMBEDDED_SQL},
+q AS (SELECT vec_id AS q_id, label AS qlabel, v AS qv, nrm AS qnrm
+      FROM n WHERE vec_id <= {PROBE_QUERIES}),
+scored AS (
+  SELECT q.q_id, q.qlabel, n.vec_id, n.label,
+         ROUND(list_reduce(list_transform(range(1, 65), i -> n.v[i] * q.qv[i]),
+               (x, y) -> x + y) / (n.nrm * q.qnrm), 6) AS cos
+  FROM n, q WHERE n.vec_id <> q.q_id
+),
+ranked AS (
+  SELECT q_id, qlabel, label,
+         ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id) AS rnk
+  FROM scored
+)"""
 
-def _scored(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus with v/nrm plus the (broadcast) query vector columns qv/qnrm."""
-    e = (
+
+def embedded(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The embeddings as ``(vec_id, label, v, nrm)``: v is the vector in
+    doubles, nrm its L2 norm folded left to right."""
+    return (
         load(spark, sf_dir, "embeddings")
         .withColumn("v", F.expr(_V))
         .withColumn("nrm", F.expr(_NRM))
         .select("vec_id", "label", "v", "nrm")
     )
+
+
+def probe_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``(q_id, qlabel, vec_id, label, cos)`` for the probes
+    ``vec_id <= PROBE_QUERIES`` against the rest of the corpus.
+
+    vec_id starts at 0, so the probe set has PROBE_QUERIES + 1 rows; the
+    limit makes that bound provable, and the probe set broadcasts, so the
+    corpus is scored map-only and never shuffles."""
+    e = embedded(spark, sf_dir)
+    q = e.filter(F.col("vec_id") <= PROBE_QUERIES).limit(PROBE_QUERIES + 1).select(
+        F.col("vec_id").alias("q_id"),
+        F.col("label").alias("qlabel"),
+        F.col("v").alias("qv"),
+        F.col("nrm").alias("qnrm"),
+    )
+    return (
+        e.crossJoin(F.broadcast(q))
+        .filter(F.col("vec_id") != F.col("q_id"))
+        .select(
+            "q_id",
+            "qlabel",
+            "vec_id",
+            "label",
+            F.round(F.expr(_DOT) / (F.col("nrm") * F.col("qnrm")), 6).alias("cos"),
+        )
+    )
+
+
+def probe_topk(scored: DataFrame) -> DataFrame:
+    """``(q_id, qlabel, label, rnk)`` for each probe's top PROBE_DEPTH
+    rows of ``probe_scores``, ranked by (cos DESC, vec_id).
+
+    Salted two-stage exact top-k (sample_domain_cap's pattern): stage 1
+    ranks inside (q_id, salt) buckets and keeps k per bucket, stage 2
+    re-ranks the <= 8k survivors per query. It is exact because a row in
+    a query's global top k is also in the top k of its own bucket (a
+    subset of the query's rows), and (cos, vec_id) is a total order; yet
+    no reducer ever sorts a whole query's corpus."""
+    salt = (F.xxhash64("vec_id") % 8).alias("salt")
+    w1 = Window.partitionBy("q_id", "salt").orderBy(F.col("cos").desc(), "vec_id")
+    pre = (
+        scored.select("q_id", "qlabel", "label", "cos", "vec_id", salt)
+        .select(
+            "q_id", "qlabel", "label", "cos", "vec_id",
+            F.row_number().over(w1).alias("r1"),
+        )
+        .filter(F.col("r1") <= PROBE_DEPTH)
+    )
+    wq = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), "vec_id")
+    return pre.select(
+        "q_id", "qlabel", "label", F.row_number().over(wq).alias("rnk")
+    ).filter(F.col("rnk") <= PROBE_DEPTH)
+
+
+def _scored(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Corpus with v/nrm plus the (broadcast) query vector columns qv/qnrm."""
+    e = embedded(spark, sf_dir)
     q = (
         e.filter(F.col("vec_id") == _QUERY_ID)
         .limit(1)  # vec_id unique: provably 1-row build for the loop join
@@ -200,12 +291,7 @@ def simsearch_ivf_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     any cosine is computed. Distances fold left-to-right in double in BOTH
     engines (aggregate ≙ list_reduce, same element order), so the values —
     and therefore every cell boundary — are bit-identical."""
-    e = (
-        load(spark, sf_dir, "embeddings")
-        .withColumn("v", F.expr(_V))
-        .withColumn("nrm", F.expr(_NRM))
-        .select("vec_id", "v", "nrm")
-    )
+    e = embedded(spark, sf_dir)
     cents = (
         e.filter(F.col("vec_id") < _N_CENT)
         .select(F.struct(F.col("vec_id").alias("c_id"), F.col("v").alias("cvec")).alias("c"))
@@ -309,12 +395,7 @@ def simsearch_batch_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch kNN: 3 probe vectors at once, per-query top-5 via window
     row_number. The query set is broadcast; the corpus is scanned once and
     never shuffled until the k-row window reduce."""
-    e = (
-        load(spark, sf_dir, "embeddings")
-        .withColumn("v", F.expr(_V))
-        .withColumn("nrm", F.expr(_NRM))
-        .select("vec_id", "v", "nrm")
-    )
+    e = embedded(spark, sf_dir)
     qs = e.filter(F.col("vec_id").isin(1, 2, 3)).limit(3).select(
         F.col("vec_id").alias("q_id"),
         F.col("v").alias("qv"),

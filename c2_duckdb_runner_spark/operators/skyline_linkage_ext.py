@@ -31,7 +31,7 @@ from c2_duckdb_runner_spark.operators.graph import (
     _bfs_oracle,
     _edges,
 )
-from c2_duckdb_runner_spark.registry import register
+from c2_duckdb_runner_spark.registry import fdoc, register
 from c2_duckdb_runner_spark.session import scratch_persist
 from c2_duckdb_runner_spark.tables import load
 
@@ -83,8 +83,7 @@ WHERE NOT EXISTS (
 )
 """,
 )
-def query_skyline_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pareto skyline of the part catalog: every part for which no other
+@fdoc(f"""Pareto skyline of the part catalog: every part for which no other
     part is at-least-as-cheap AND at-least-as-big with one strict — the
     classic SKYLINE OF operator, here as the DISTRIBUTIVE two-stage
     algorithm: stage 1 computes a local skyline inside each of
@@ -99,7 +98,8 @@ def query_skyline_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: stage-1 windows partition by bucket (corpus-parallel);
     stage 2 touches only Σ local-skyline rows, which for anti-correlated
     real data is orders of magnitude below the input. Ties on both
-    dimensions are mutually non-dominating and all kept."""
+    dimensions are mutually non-dominating and all kept.""")
+def query_skyline_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = load(spark, sf_dir, "part").select(
         "p_partkey",
         F.expr("CAST(round(p_retailprice * 100) AS BIGINT)").alias("price_cents"),
@@ -197,8 +197,7 @@ SELECT field,
 FROM fields
 """,
 )
-def er_em_hard_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One hard-EM training iteration for the Fellegi-Sunter model (the
+@fdoc(f"""One hard-EM training iteration for the Fellegi-Sunter model (the
     Splink loop, deterministic variant): E-step classifies the blocked
     candidate pairs with the CURRENT weights (score ≥
     {_EM_MATCH_THRESHOLD} ⇒ match — hard assignment instead of
@@ -215,7 +214,8 @@ def er_em_hard_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     matching_ext.py:38); the E and M steps together are ONE aggregation
     over the candidate pairs (the four per-field sums share the pass),
     so a training iteration costs exactly one candidate-generation join
-    + one reduce at any corpus size."""
+    + one reduce at any corpus size.""")
+def er_em_hard_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load(spark, sf_dir, "customer")
     a = cust.select(
         F.col("c_custkey").alias("akey"),
@@ -325,8 +325,7 @@ WHERE dist > 0
 GROUP BY dist
 """,
 )
-def graph_harmonic_closeness_seeds(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Harmonic closeness of the BFS seed set (every 100th customer):
+@fdoc(f"""Harmonic closeness of the BFS seed set (every 100th customer):
     per BFS level d, the node count and its harmonic contribution
     n_d · (10⁶ div d) — summing the column gives Σ 1/dist, the
     centrality that stays finite under disconnection (unreached nodes
@@ -336,7 +335,8 @@ def graph_harmonic_closeness_seeds(spark: SparkSession, sf_dir: str) -> DataFram
     pins, so the oracle replays them bit-for-bit.
 
     Scale shape: identical to BFS (one keyed edges⨝distances shuffle +
-    one min-fold per round), then a {_BFS_ROUNDS}-row aggregate."""
+    one min-fold per round), then a {_BFS_ROUNDS}-row aggregate.""")
+def graph_harmonic_closeness_seeds(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = scratch_persist(_edges(spark, sf_dir))
     dist = (
         load(spark, sf_dir, "customer")

@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from c2_duckdb_runner_spark.registry import register
+from c2_duckdb_runner_spark.registry import fdoc, register
 from c2_duckdb_runner_spark.tables import load, load_spread
 
 # ---------------------------------------------------------------------------
@@ -75,8 +75,7 @@ SELECT doc_id, n_terms, score_micro FROM agg
 ORDER BY score_micro DESC, doc_id ASC LIMIT {_BM25_TOP}
 """,
 )
-def search_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BM25 lexical retrieval — the keyword scorer of every hybrid search
+@fdoc(f"""BM25 lexical retrieval — the keyword scorer of every hybrid search
     stack (BM25 recall + embedding rerank): Okapi BM25 with k1=1.2,
     b=0.75 over the corpus's own term statistics, top-{_BM25_TOP} docs
     for a {len(_BM25_QUERY)}-term query.
@@ -89,7 +88,8 @@ def search_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact integer (tf, df, len, N, Σlen) and the formula is ONE fixed
     expression tree — identical IEEE evaluation on both engines — with
     the per-doc term-score sum folded in (score, doc) order and floored
-    to integer micro-units for the hash."""
+    to integer micro-units for the hash.""")
+def search_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_spread(spark, sf_dir, "documents", "doc_id").select(
         "doc_id", F.explode(F.split("text", " ")).alias("tok")
     )

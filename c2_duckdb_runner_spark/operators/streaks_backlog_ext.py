@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from c2_duckdb_runner_spark.registry import register
+from c2_duckdb_runner_spark.registry import fdoc, register
 from c2_duckdb_runner_spark.tables import load
 
 # ---------------------------------------------------------------------------
@@ -60,15 +60,15 @@ SELECT user_id, CAST(longest_streak AS BIGINT) AS longest_streak, n_active_days
 FROM per_user ORDER BY longest_streak DESC, user_id LIMIT {_STREAK_TOP}
 """,
 )
-def window_streak_longest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Longest consecutive-day activity streak per user, top-{_STREAK_TOP}:
+@fdoc(f"""Longest consecutive-day activity streak per user, top-{_STREAK_TOP}:
     the dnum − ROW_NUMBER island key (consecutive days share a constant
     difference) groups each run of adjacent days without any lag/flag
     pass — one user-keyed window, one island count, one per-user max.
     The engagement-streak leaderboard every retention team ships.
 
     Epoch-day integers; total-ordered TakeOrdered selection. All windows
-    and aggregates share the user keying."""
+    and aggregates share the user keying.""")
+def window_streak_longest(spark: SparkSession, sf_dir: str) -> DataFrame:
     ud = (
         load(spark, sf_dir, "events")
         .select(

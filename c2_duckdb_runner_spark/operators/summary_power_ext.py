@@ -31,7 +31,7 @@ from c2_duckdb_runner_spark.operators.inference_ext import (
     daily_milli,
     sdiv,
 )
-from c2_duckdb_runner_spark.registry import register
+from c2_duckdb_runner_spark.registry import fdoc, register
 from c2_duckdb_runner_spark.tables import load
 
 
@@ -172,8 +172,7 @@ UNION ALL
 SELECT 'OTHER', CAST(t - s AS BIGINT), CAST(0 AS INT) FROM tot CROSS JOIN ts
 """,
 )
-def agg_topn_plus_other(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-{_TOPN}-plus-OTHER revenue rollup — the dashboard pattern that
+@fdoc(f"""Top-{_TOPN}-plus-OTHER revenue rollup — the dashboard pattern that
     keeps the head as rows and folds the tail into one line whose value
     is total − Σ(top): the tail is NEVER enumerated, so the report costs
     one keyed aggregate + one TakeOrdered + two scalar sums regardless
@@ -181,7 +180,8 @@ def agg_topn_plus_other(spark: SparkSession, sf_dir: str) -> DataFrame:
     rank and the LIMIT are total-ordered, OTHER carries rank 0.
 
     The window that assigns head ranks runs over the {_TOPN}-row
-    TakeOrdered result, never the key domain."""
+    TakeOrdered result, never the key domain.""")
+def agg_topn_plus_other(spark: SparkSession, sf_dir: str) -> DataFrame:
     rev = (
         load(spark, sf_dir, "lineitem")
         .groupBy("l_partkey")

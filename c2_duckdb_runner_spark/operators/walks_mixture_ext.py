@@ -32,7 +32,7 @@ from pyspark.sql.window import Window
 
 from c2_duckdb_runner_spark.operators.graph import _OFFSET, _edges
 from c2_duckdb_runner_spark.operators.inference_ext import DAILY_MILLI_SQL, daily_milli
-from c2_duckdb_runner_spark.registry import register
+from c2_duckdb_runner_spark.registry import fdoc, register
 from c2_duckdb_runner_spark.session import scratch_persist
 from c2_duckdb_runner_spark.tables import load
 
@@ -93,8 +93,7 @@ def _walks_oracle() -> str:
 
 
 @register("graph_random_walks_hash", oracle=_walks_oracle())
-def graph_random_walks_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fixed-length random walks over the symmetric customer-supplier
+@fdoc(f"""Fixed-length random walks over the symmetric customer-supplier
     graph, the corpus generator for DeepWalk-family graph embeddings:
     {_WALK_SEEDS} seed walkers take {_WALK_STEPS} hops; at each hop the
     next node is the current node's neighbor number H mod outdeg under a
@@ -108,7 +107,8 @@ def graph_random_walks_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter, so a million concurrent walkers cost {_WALK_STEPS} linear
     joins total — the frontier never fans out beyond one row per walker.
 
-    Edges come from graph._edges (supplier ids offset by 10M)."""
+    Edges come from graph._edges (supplier ids offset by 10M).""")
+def graph_random_walks_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = _edges(spark, sf_dir)
     wsrc = Window.partitionBy("src")
     ranked = scratch_persist(
@@ -195,8 +195,7 @@ FROM scored
 ORDER BY (ratio_sum_micro // n_toks) DESC, doc_id LIMIT {_DSIR_TOP}
 """,
 )
-def sample_dsir_hashed_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DSIR-style data selection: score each document by the mean hashed
+@fdoc(f"""DSIR-style data selection: score each document by the mean hashed
     n-gram importance ratio p_target(f)/p_raw(f), target = the English
     sub-corpus, features = word unigrams hashed into {_DSIR_BUCKETS}
     buckets. The paper's log-likelihood-ratio sum becomes a mean of
@@ -210,7 +209,8 @@ def sample_dsir_hashed_importance(spark: SparkSession, sf_dir: str) -> DataFrame
     over the token stream plus one doc-keyed aggregate; the final
     selection is a TakeOrdered top-{_DSIR_TOP}. This is DSIR's actual
     production shape: the importance model is tiny, the corpus only
-    streams. Cites dedup.py's cross-engine md5-bucket convention."""
+    streams. Cites dedup.py's cross-engine md5-bucket convention.""")
+def sample_dsir_hashed_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load(spark, sf_dir, "documents").select(
         "doc_id", "lang", F.explode(F.split("text", " ")).alias("tok")
     )
@@ -301,8 +301,7 @@ SELECT w1, w2, c_xy, pmi_ratio_micro
 FROM pmi ORDER BY pmi_ratio_micro DESC, w1, w2 LIMIT {_PMI_TOP}
 """,
 )
-def text_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Collocation mining by pointwise mutual information: adjacent word
+@fdoc(f"""Collocation mining by pointwise mutual information: adjacent word
     pairs (count ≥ {_PMI_MIN_COUNT}) ranked by p(x,y)/(p(x)·p(y)) — PMI
     with the log dropped (exp-PMI), which preserves the ranking while
     staying an EXACT integer: 10⁶·c_xy·Nu² div (Nb·c_x·c_y), routed
@@ -313,7 +312,8 @@ def text_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcasts, the unigram dictionary joins are keyed on the word (the
     dictionary is vocabulary-sized, not corpus-sized), and the final
     ranking is a TakeOrdered. Complements text_cooccurrence_pairs (raw
-    counts) with the independence-normalized statistic."""
+    counts) with the independence-normalized statistic.""")
+def text_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load(spark, sf_dir, "documents").select(
         "doc_id", F.split("text", " ").alias("toks")
     )

@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from c2_duckdb_runner_spark.registry import register
+from c2_duckdb_runner_spark.registry import fdoc, register
 from c2_duckdb_runner_spark.tables import load
 
 # ---------------------------------------------------------------------------
@@ -78,8 +78,7 @@ curve AS (
 SELECT CAST(dnum * 86400000 AS BIGINT) AS day_ms, wau FROM curve
 """,
 )
-def agg_rolling_wau_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Trailing-{_WAU_WINDOW}-day active users, the delta-encoding way: a
+@fdoc(f"""Trailing-{_WAU_WINDOW}-day active users, the delta-encoding way: a
     user active on day d counts toward days [d, d+{_WAU_WINDOW - 1}], so
     merge each user's activity days into coverage intervals (new island
     when the gap exceeds the window), emit +1/−1 at interval edges, and
@@ -90,7 +89,8 @@ def agg_rolling_wau_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the BOUNDED day spine (epoch-day integers).
 
     One user-keyed window pass builds the islands; the spine prefix sum
-    is over calendar days, not users. Exact at any corpus size."""
+    is over calendar days, not users. Exact at any corpus size.""")
+def agg_rolling_wau_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     ud = (
         load(spark, sf_dir, "events")
         .select(
@@ -169,8 +169,7 @@ FROM h a JOIN h b ON a.hh = b.hh AND a.source < b.source
 GROUP BY a.source, b.source
 """,
 )
-def dedup_cross_source_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross-source contamination matrix: source pairs sharing document
+@fdoc(f"""Cross-source contamination matrix: source pairs sharing document
     head-fingerprints (md5 of the first {_XS_HEAD_TOKENS} tokens — the
     cheap screen dedup_incremental_batch also leads with). A mixture
     that weights two heavily-overlapping sources as independent
@@ -180,7 +179,8 @@ def dedup_cross_source_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the (fingerprint, source) relation is DISTINCT-collapsed
     FIRST, so the self-join fans out per fingerprint only over the
     sources that share it — bounded by the source count, never the
-    duplicate multiplicity. One hash shuffle, one keyed count."""
+    duplicate multiplicity. One hash shuffle, one keyed count.""")
+def dedup_cross_source_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     h = (
         load(spark, sf_dir, "documents")
         .select(

@@ -537,6 +537,22 @@ def test_first_50_prefix_independent_of_import_order(tmp_path):
     assert json.loads(out.splitlines()[-1]) == DRIVER_SAMPLE_PREFIX_R03
 
 
+def test_registry_docs_have_no_raw_placeholders():
+    """A docstring that names a module constant in braces must be an
+    ``@fdoc`` f-string: a plain string literal keeps ``{_NAME}`` verbatim
+    in ``__doc__`` and in ``Query.doc``."""
+    import re
+
+    from c2_duckdb_runner_spark import registry
+
+    registry._load_all_modules()
+    raw = [
+        k for k, q in registry.REGISTRY.items()
+        if re.search(r"\{_[A-Z0-9_]+", q.doc)
+    ]
+    assert raw == []
+
+
 def test_coverage_md_counts_not_stale():
     """COVERAGE.md's header counts and key inventory are generated from
     the registry (tools/gen_coverage.py); this pins the committed file to
