@@ -46,7 +46,7 @@ def sessions_pattern_regex(spark: SparkSession, sf_dir: str) -> DataFrame:
     each user's stream collapses to a symbol string (first letter of each
     event type, (ts, event_id)-ordered), and behavior patterns become
     regexes: `vc[^p]*p` counts view→click→eventual-purchase journeys,
-    `e.{{0,2}}e.{{0,2}}e` flags error bursts (three errors within a
+    `e.{0,2}e.{0,2}e` flags error bursts (three errors within a
     five-event span — the bot/incident signature). This is how flow
     mining ships on engines without MATCH_RECOGNIZE, and the per-user
     string is bounded by the user's event count — per-group state.

@@ -23,13 +23,11 @@ Oracle-parity notes:
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from c2_duckdb_runner_spark.registry import fdoc, register
-from c2_duckdb_runner_spark.tables import load
+from c2_duckdb_runner_spark.tables import load, out_path
 
 _EMAIL_RE = "[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+[.][a-zA-Z][a-zA-Z]+"
 _PHONE_RE = "[0-9]{3}-[0-9]{4}-[0-9]{4}"
@@ -384,9 +382,6 @@ def _df_order():
     return Window.orderBy(F.col("df").desc(), F.col("term"))
 
 
-_IO_ROOT = "/tmp/c2spark_io"
-
-
 @register(
     "scan_file_prune_stats",
     oracle="""
@@ -409,8 +404,7 @@ def scan_file_prune_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB the same layout turns a full-corpus scan into reading ~1/8 of
     the files; the residual filter still applies inside the scan, pushed
     to parquet."""
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    path = f"{_IO_ROOT}/{tag}/lineitem_by_shipdate"
+    path = out_path(sf_dir, "lineitem_by_shipdate")
     li = load(spark, sf_dir, "lineitem")
     (
         li.repartitionByRange(8, "l_shipdate")

@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from c2_duckdb_runner_spark.registry import register
-from c2_duckdb_runner_spark.tables import load
+from c2_duckdb_runner_spark.tables import load, out_path
 
 
 @register(
@@ -353,17 +353,10 @@ def join_dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFram
     are listed and read (check PartitionFilters: dynamicpruning#N in the
     plan — pinned by tests/test_plans.py). Static pruning can't do this:
     the pruning values come from the dim side, not a literal."""
-    import os
-
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    path = f"/tmp/c2spark_io/{tag}/orders_by_priority"
-    orders = load(spark, sf_dir, "orders")
-    # layout write is idempotent per sf; reuse once written (bench reruns)
-    marker = os.path.join(path, "_SUCCESS")
-    if not os.path.exists(marker):
-        orders.write.mode("overwrite").partitionBy("o_orderpriority").parquet(
-            path
-        )
+    path = out_path(sf_dir, "orders_by_priority")
+    load(spark, sf_dir, "orders").write.mode("overwrite").partitionBy(
+        "o_orderpriority"
+    ).parquet(path)
     fact = spark.read.parquet(path)
     dim = spark.createDataFrame(
         [

@@ -22,8 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from c2_duckdb_runner_spark.registry import register
-from c2_duckdb_runner_spark.sources.formats import _out
-from c2_duckdb_runner_spark.tables import load
+from c2_duckdb_runner_spark.tables import load, out_path
 
 
 @register(
@@ -70,7 +69,7 @@ def lakehouse_snapshot_timetravel(spark: SparkSession, sf_dir: str) -> DataFrame
     query emits both versions' aggregates; the commit protocol
     (write-files-then-manifest, manifest rename as the atomic point) is
     the same order Delta/Iceberg commit in."""
-    path = _out(sf_dir, "mini_lakehouse")
+    path = out_path(sf_dir, "mini_lakehouse")
     base = load(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 5 == 0).select(
         F.col("o_orderkey").alias("k"),
         (F.col("o_orderkey") % 2).alias("bucket"),
@@ -80,37 +79,32 @@ def lakehouse_snapshot_timetravel(spark: SparkSession, sf_dir: str) -> DataFrame
         F.expr("TRY_CAST(round(o_totalprice * 100) AS BIGINT)").alias("cents"),
         F.lit("base").alias("status"),
     )
-    marker = os.path.join(path, "_built")
-    if not os.path.exists(marker):
-        os.makedirs(path, exist_ok=True)
-        # v1: one immutable file per bucket, THEN the manifest — data
-        # before metadata, the universal commit order.
-        for b in (0, 1):
-            base.filter(F.col("bucket") == b).write.mode("overwrite").parquet(
-                f"{path}/bucket{b}_v1"
-            )
-        with open(f"{path}/v1.json", "w") as fh:
-            json.dump({"version": 1, "files": ["bucket0_v1", "bucket1_v1"]}, fh)
-        # v2: the upsert touches only even keys -> bucket 0. Copy-on-write:
-        # rewrite bucket 0 with the merge applied, re-list bucket 1 as-is.
-        upserted = (
-            base.filter(F.col("bucket") == 0)
-            .select(
-                "k",
-                "bucket",
-                F.when(F.col("k") % 10 == 0, F.col("cents") + 777)
-                .otherwise(F.col("cents"))
-                .alias("cents"),
-                F.when(F.col("k") % 10 == 0, F.lit("updated"))
-                .otherwise(F.col("status"))
-                .alias("status"),
-            )
+    # v1: one immutable file per bucket, THEN the manifest — data
+    # before metadata, the universal commit order.
+    for b in (0, 1):
+        base.filter(F.col("bucket") == b).write.mode("overwrite").parquet(
+            f"{path}/bucket{b}_v1"
         )
-        upserted.write.mode("overwrite").parquet(f"{path}/bucket0_v2")
-        with open(f"{path}/v2.json", "w") as fh:
-            json.dump({"version": 2, "files": ["bucket0_v2", "bucket1_v1"]}, fh)
-        with open(marker, "w") as fh:
-            fh.write("")
+    with open(f"{path}/v1.json", "w") as fh:
+        json.dump({"version": 1, "files": ["bucket0_v1", "bucket1_v1"]}, fh)
+    # v2: the upsert touches only even keys -> bucket 0. Copy-on-write:
+    # rewrite bucket 0 with the merge applied, re-list bucket 1 as-is.
+    upserted = (
+        base.filter(F.col("bucket") == 0)
+        .select(
+            "k",
+            "bucket",
+            F.when(F.col("k") % 10 == 0, F.col("cents") + 777)
+            .otherwise(F.col("cents"))
+            .alias("cents"),
+            F.when(F.col("k") % 10 == 0, F.lit("updated"))
+            .otherwise(F.col("status"))
+            .alias("status"),
+        )
+    )
+    upserted.write.mode("overwrite").parquet(f"{path}/bucket0_v2")
+    with open(f"{path}/v2.json", "w") as fh:
+        json.dump({"version": 2, "files": ["bucket0_v2", "bucket1_v1"]}, fh)
 
     def read_version(v: int) -> DataFrame:
         with open(f"{path}/v{v}.json") as fh:
@@ -154,9 +148,9 @@ def lakehouse_vacuum_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle pins the expected reference/orphan classification by
     construction, so a wrong resolution (e.g. vacuum reading the v1
     manifest) hash-mismatches."""
-    # Ensure the mini-lake exists (idempotent build inside).
+    # Build the mini-lake for this dataset.
     lakehouse_snapshot_timetravel(spark, sf_dir).collect()
-    path = _out(sf_dir, "mini_lakehouse")
+    path = out_path(sf_dir, "mini_lakehouse")
     with open(f"{path}/v2.json") as fh:
         latest = set(json.load(fh)["files"])
     data_dirs = sorted(

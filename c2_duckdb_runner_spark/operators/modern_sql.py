@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from c2_duckdb_runner_spark.registry import register
+from c2_duckdb_runner_spark.session import conf_override
 from c2_duckdb_runner_spark.tables import load
 
 
@@ -56,10 +57,9 @@ def sql_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
     recursion materializes (localCheckpoint — distributed executor
     storage, n_suppliers output rows, no driver collect), so the
     session-wide runaway guard stays armed for every later query."""
-    key = "spark.sql.cteRecursionRowLimit"
-    prior = spark.conf.get(key, None)
-    spark.conf.set(key, str(1_000_000_000))
-    try:
+    with conf_override(
+        spark, {"spark.sql.cteRecursionRowLimit": str(1_000_000_000)}
+    ):
         load(spark, sf_dir, "supplier").createOrReplaceTempView("supplier_rc")
         df = spark.sql("""
 WITH RECURSIVE chain(sk, anc, depth) AS (
@@ -70,11 +70,6 @@ WITH RECURSIVE chain(sk, anc, depth) AS (
 SELECT sk AS s_suppkey, MAX(depth) AS depth FROM chain GROUP BY sk
 """)
         return df.localCheckpoint(eager=True)
-    finally:
-        if prior is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prior)
 
 
 @register(

@@ -148,7 +148,7 @@ def search_rbo_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rank-biased overlap @10 (p = ½) between the char-length and
     token-count rankers: RBO = Σ_d p^d·|A_d ∩ B_d|/d, rewritten per-doc
     as a SUFFIX-WEIGHT lookup on max(rank_A, rank_B) — a doc in both
-    top-10s contributes sw(max) = Σ_{{d≥max}} (2520//d)·2^(10−d), making
+    top-10s contributes sw(max) = Σ_{d≥max} (2520//d)·2^(10−d), making
     RBO·2520·1023 a whole number (same dyadic trick as search_err_eval).
     Where search_rrf_fusion/search_fusion_condorcet COMBINE rankers,
     RBO quantifies their agreement — the metric you check BEFORE fusing.

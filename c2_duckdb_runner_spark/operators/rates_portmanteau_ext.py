@@ -186,7 +186,7 @@ FROM r
 @register("ts_ljung_box", oracle=_LB_ORACLE)
 def ts_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ljung-Box portmanteau test per event type over the daily mean
-    series: Q = n(n+2)·Σ_{{k≤3}} r_k²/(n−k) with the SAME micro-int
+    series: Q = n(n+2)·Σ_{k≤3} r_k²/(n−k) with the SAME micro-int
     autocorrelations ts_autocorr_lags emits (inference_ext.py:219) —
     the whiteness gate for forecast residuals. r_k² is micro²-scaled so
     Q stays an exact integer (shared truncation), and the 95% χ²(3)

@@ -22,12 +22,13 @@ Reference reach: delegated SQL slot only (``main.cc:181-182``).
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from c2_duckdb_runner_spark.registry import register
-from c2_duckdb_runner_spark.tables import load, load_spread
+from c2_duckdb_runner_spark.tables import load, load_spread, out_path
 
 _BUCKETS = 8
 
@@ -44,42 +45,37 @@ _BUCKETS = 8
 def join_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fact-fact join over tables bucketed on the join key.
 
-    Both sides are written once with ``bucketBy(8, key).sortBy(key)`` (the
-    one-time layout investment), then the merge join consumes matching
+    Both sides are written with ``bucketBy(8, key).sortBy(key)`` on every
+    call (the layout investment), then the merge join consumes matching
     buckets directly — ``Bucketed: true`` in the scan, no Exchange in the
     plan (pinned by tests/test_plans.py). The ``merge`` hint keeps AQE from
     "helpfully" broadcasting the small fixture side, which would hide the
     co-location this query exists to demonstrate.
     """
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    root = f"/tmp/c2spark_buckets/{tag}"
-    li_t, o_t = f"c2s_li_b_{tag}".replace(".", "_"), f"c2s_o_b_{tag}".replace(".", "_")
-    # The bucketed write is the one-time layout investment; every later join
-    # on the key rides it for free. Reuse the layout when this session
-    # already wrote it (repeat queries, bench best-of-2) instead of paying
-    # the write again — which is exactly how the pattern amortizes at scale.
-    if not spark.catalog.tableExists(li_t):
-        (
-            load(spark, sf_dir, "lineitem")
-            .select("l_orderkey", "l_quantity")
-            .write.mode("overwrite")
-            .bucketBy(_BUCKETS, "l_orderkey")
-            .sortBy("l_orderkey")
-            .option("path", f"{root}/lineitem")
-            .format("parquet")
-            .saveAsTable(li_t)
-        )
-    if not spark.catalog.tableExists(o_t):
-        (
-            load(spark, sf_dir, "orders")
-            .select("o_orderkey", "o_orderpriority")
-            .write.mode("overwrite")
-            .bucketBy(_BUCKETS, "o_orderkey")
-            .sortBy("o_orderkey")
-            .option("path", f"{root}/orders")
-            .format("parquet")
-            .saveAsTable(o_t)
-        )
+    root = out_path(sf_dir, "buckets")
+    # Table names carry the same dataset tag as the layout directory.
+    tag = re.sub(r"\W", "_", os.path.basename(os.path.dirname(root)))
+    li_t, o_t = f"c2s_li_b_{tag}", f"c2s_o_b_{tag}"
+    (
+        load(spark, sf_dir, "lineitem")
+        .select("l_orderkey", "l_quantity")
+        .write.mode("overwrite")
+        .bucketBy(_BUCKETS, "l_orderkey")
+        .sortBy("l_orderkey")
+        .option("path", f"{root}/lineitem")
+        .format("parquet")
+        .saveAsTable(li_t)
+    )
+    (
+        load(spark, sf_dir, "orders")
+        .select("o_orderkey", "o_orderpriority")
+        .write.mode("overwrite")
+        .bucketBy(_BUCKETS, "o_orderkey")
+        .sortBy("o_orderkey")
+        .option("path", f"{root}/orders")
+        .format("parquet")
+        .saveAsTable(o_t)
+    )
     li = spark.table(li_t).hint("merge")
     o = spark.table(o_t)
     return (

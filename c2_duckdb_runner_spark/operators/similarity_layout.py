@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 from c2_duckdb_runner_spark.registry import fdoc, register
 from c2_duckdb_runner_spark.session import scratch_persist
-from c2_duckdb_runner_spark.tables import load
+from c2_duckdb_runner_spark.tables import load, out_path
 
 _MAX_DIST = 2
 
@@ -249,7 +249,6 @@ FROM b GROUP BY bucket
     partition (the round-5 verdict's last `weak`).""")
 def layout_zorder_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
-    import os
 
     z = load(spark, sf_dir, "lineitem").select(
         "l_partkey", "l_suppkey", "l_orderkey", "l_linenumber",
@@ -264,11 +263,10 @@ def layout_zorder_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
             "l_partkey", "l_suppkey"
         ).withColumn("pid", F.spark_partition_id())
     )
-    tag = os.path.basename(os.path.normpath(sf_dir))
     (
         zp.drop("pid")
         .write.mode("overwrite")
-        .parquet(f"/tmp/c2spark_io/{tag}/lineitem_zorder")
+        .parquet(out_path(sf_dir, "lineitem_zorder"))
     )
     counts = zp.groupBy("pid").agg(F.count("*").cast("bigint").alias("cnt"))
     wcum = Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, 0)

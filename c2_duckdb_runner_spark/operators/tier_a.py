@@ -16,13 +16,12 @@ exactly the read-bytes saving the reference's monitored FS exists to measure
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from c2_duckdb_runner_spark.registry import register
-from c2_duckdb_runner_spark.tables import load
+from c2_duckdb_runner_spark.tables import load, out_path
 
 # Reference default threshold: Env_ke = 0.5 (main.cc:369-375).
 DEFAULT_KE = 0.5
@@ -166,7 +165,7 @@ def sink_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     (main.cc:186-192, DuckDB-private wire format). Our sink contract is
     parquet (SURVEY.md §7 hard-point 5): write the filtered result, read it
     back, aggregate — proving a round trip through our sink."""
-    out = os.path.join(tempfile.gettempdir(), "c2spark_sink_parquet")
+    out = out_path(sf_dir, "sink_parquet")
     (
         load(spark, sf_dir, "lineitem")
         .filter(F.col("l_quantity") > 25)

@@ -11,6 +11,8 @@ and leave physical planning to Catalyst + AQE.
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -65,6 +67,24 @@ def shuffle_width(spark: SparkSession) -> int:
         return int(spark.conf.get("spark.sql.shuffle.partitions"))
     except (TypeError, ValueError):
         return spark.sparkContext.defaultParallelism
+
+
+@contextmanager
+def conf_override(spark: SparkSession, confs: dict[str, str]) -> Iterator[None]:
+    """Set ``confs`` on the session for the block, then restore each prior
+    value, unsetting any that had none. The override is session-wide, so
+    another thread's query on the same session sees it while it lasts."""
+    prior = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in prior.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 # --- scratch persist tracking ------------------------------------------

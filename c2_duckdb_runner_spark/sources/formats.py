@@ -11,8 +11,8 @@ The binary-columnar sink (``main.cc:186-192``, DuckDB's private vector wire
 format) is deliberately NOT byte-replicated (SURVEY.md §7): our columnar
 contracts are parquet and Arrow record batches (``mapInArrow``).
 
-Writes land under /tmp (never in the read-only fixture tree), one dir per
-scale factor, ``overwrite`` mode so reruns are idempotent.
+Writes land under ``tables.out_path`` (never in the read-only fixture
+tree), ``overwrite`` mode, and every call writes what it reads.
 """
 
 from __future__ import annotations
@@ -23,14 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from c2_duckdb_runner_spark.registry import register
-from c2_duckdb_runner_spark.tables import load
-
-_IO_ROOT = "/tmp/c2spark_io"
-
-
-def _out(sf_dir: str, name: str) -> str:
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    return f"{_IO_ROOT}/{tag}/{name}"
+from c2_duckdb_runner_spark.tables import load, out_path
 
 
 @register("scan_csv_roundtrip", oracle="SELECT * FROM nation")
@@ -38,7 +31,7 @@ def scan_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CSV sink+source: write nation as headered CSV, read it back with an
     explicit schema (never inferSchema in production — one extra full pass).
     Round-trip must equal the parquet original."""
-    path = _out(sf_dir, "nation_csv")
+    path = out_path(sf_dir, "nation_csv")
     nation = load(spark, sf_dir, "nation")
     nation.write.mode("overwrite").option("header", True).csv(path)
     return spark.read.schema(nation.schema).option("header", True).csv(path)
@@ -48,7 +41,7 @@ def scan_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 def scan_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON-lines sink+source for customer (exercises double round-trip:
     Spark writes shortest-repr doubles, which re-parse bit-exact)."""
-    path = _out(sf_dir, "customer_json")
+    path = out_path(sf_dir, "customer_json")
     customer = load(spark, sf_dir, "customer")
     customer.write.mode("overwrite").json(path)
     return spark.read.schema(customer.schema).json(path)
@@ -68,7 +61,7 @@ def scan_partitioned_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     PRUNING (only the o_orderstatus=F directory is listed/scanned; check
     `.explain` PartitionFilters). This is the layout that matters most at
     100 TB: pruning beats row-group skipping by orders of magnitude."""
-    path = _out(sf_dir, "orders_by_status")
+    path = out_path(sf_dir, "orders_by_status")
     orders = load(spark, sf_dir, "orders")
     orders.write.mode("overwrite").partitionBy("o_orderstatus").parquet(path)
     back = spark.read.parquet(path)
@@ -100,7 +93,7 @@ def scan_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine must read the union schema without rewriting history. (mergeSchema
     costs a footer read per file; production pins the merged schema in a
     catalog instead of re-inferring per query — both paths shown here.)"""
-    path = _out(sf_dir, "nation_evolving")
+    path = out_path(sf_dir, "nation_evolving")
     nation = load(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     nation.write.mode("overwrite").parquet(f"{path}/gen=1")
     nation.withColumn(
@@ -145,7 +138,7 @@ def scan_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     reader/writer, predicate pushdown, column pruning — same scan planning
     as parquet). Round-trip must equal the parquet original, which the
     oracle reads directly."""
-    path = _out(sf_dir, "supplier_orc")
+    path = out_path(sf_dir, "supplier_orc")
     supplier = load(spark, sf_dir, "supplier")
     supplier.write.mode("overwrite").orc(path)
     return spark.read.schema(supplier.schema).orc(path)
@@ -171,7 +164,7 @@ def scan_binary_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     parity check, the strongest contract a text sink can state. The
     binary path/content schema is exactly what image/audio payload
     ingestion uses at scale."""
-    path = _out(sf_dir, "docs_text_by_source")
+    path = out_path(sf_dir, "docs_text_by_source")
     d = load(spark, sf_dir, "documents")
     (
         d.select("doc_id", "text", "source")
@@ -204,7 +197,7 @@ def sink_parquet_zstd(spark: SparkSession, sf_dir: str) -> DataFrame:
     speed) and dictionary encoding left on; round-trip must equal the
     original table. Codec choice is a per-write option, not a session
     mutation, so mixed-codec lakes read transparently."""
-    path = _out(sf_dir, "part_zstd")
+    path = out_path(sf_dir, "part_zstd")
     part = load(spark, sf_dir, "part")
     part.write.mode("overwrite").option("compression", "zstd").parquet(path)
     return spark.read.parquet(path)
@@ -222,7 +215,7 @@ def scan_text_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     original typed projection. This is the lowest-common-denominator
     interchange format (log shipping, queue bodies) and the same per-file
     task fan-out as the reference's directory scan (main.cc:297-324)."""
-    path = _out(sf_dir, "documents_text")
+    path = out_path(sf_dir, "documents_text")
     d = load(spark, sf_dir, "documents")
 
     # Hostile-safe framing: free-form strings may contain the delimiter or
@@ -266,19 +259,16 @@ def scan_recursive_glob(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``*.parquet`` leaves (a sidecar .txt proves the filter). The reference's
     enumerator (main.cc:297-320) is single-level by design; this is the
     multi-level lake equivalent."""
-    import os
-
-    base = _out(sf_dir, "supplier_nested")
+    base = out_path(sf_dir, "supplier_nested")
     sup = load(spark, sf_dir, "supplier")
-    if not os.path.exists(os.path.join(base, "a", "deep", "_SUCCESS")):
-        sup.filter(F.col("s_suppkey") % 2 == 0).write.mode("overwrite").parquet(
-            f"{base}/a/deep"
-        )
-        sup.filter(F.col("s_suppkey") % 2 == 1).write.mode("overwrite").parquet(
-            f"{base}/b"
-        )
-        with open(f"{base}/a/ignore_me.txt", "w") as fh:
-            fh.write("not data")
+    sup.filter(F.col("s_suppkey") % 2 == 0).write.mode("overwrite").parquet(
+        f"{base}/a/deep"
+    )
+    sup.filter(F.col("s_suppkey") % 2 == 1).write.mode("overwrite").parquet(
+        f"{base}/b"
+    )
+    with open(f"{base}/a/ignore_me.txt", "w") as fh:
+        fh.write("not data")
     return (
         spark.read.option("recursiveFileLookup", "true")
         .option("pathGlobFilter", "*.parquet")
@@ -324,8 +314,8 @@ def sink_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract (many → exactly 4). At 100 TB this is the nightly maintenance
     job that keeps scan task counts proportional to DATA, not to ingest
     cadence."""
-    shattered = _out(sf_dir, "orders_shattered")
-    compacted = _out(sf_dir, "orders_compacted")
+    shattered = out_path(sf_dir, "orders_shattered")
+    compacted = out_path(sf_dir, "orders_compacted")
     orders = load(spark, sf_dir, "orders")
     orders.repartition(64).write.mode("overwrite").parquet(shattered)
     spark.read.parquet(shattered).repartition(4).write.mode(
@@ -350,20 +340,16 @@ def scan_nested_struct_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     profile struct is fully decoded to answer a 2-field query — the single
     biggest silent read-amplification at scale. The struct-field filter
     also pushes down."""
-    path = _out(sf_dir, "customer_nested")
-    import os
-
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        c = load(spark, sf_dir, "customer")
-        c.select(
-            "c_custkey",
-            F.struct(
-                F.col("c_name").alias("name"),
-                F.col("c_nationkey").alias("nat"),
-                F.col("c_acctbal").alias("bal"),
-                F.col("c_mktsegment").alias("seg"),
-            ).alias("profile"),
-        ).write.mode("overwrite").parquet(path)
+    path = out_path(sf_dir, "customer_nested")
+    load(spark, sf_dir, "customer").select(
+        "c_custkey",
+        F.struct(
+            F.col("c_name").alias("name"),
+            F.col("c_nationkey").alias("nat"),
+            F.col("c_acctbal").alias("bal"),
+            F.col("c_mktsegment").alias("seg"),
+        ).alias("profile"),
+    ).write.mode("overwrite").parquet(path)
     back = spark.read.parquet(path)
     return back.filter(F.col("profile.bal") > 1000).select(
         "c_custkey",
@@ -393,18 +379,14 @@ def scan_csv_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark's PERMISSIVE semantics route exactly the 3 bad rows to the
     corrupt column. Plan: one scan, one projection-free aggregate; the
     quarantine split is a codegen'd CASE, not a second read."""
-    path = _out(sf_dir, "quarantine_csv")
-    marker = os.path.join(path, "_done")
-    if not os.path.exists(marker):
-        os.makedirs(path, exist_ok=True)
-        lines = [f"id_{i},{(i + 1) * 10}" for i in range(8)]
-        lines.insert(3, "id_bad1,not_a_number")
-        lines.insert(6, "id_bad2,12.5x")
-        lines.append("id_bad3,55,overflow_extra_column")
-        with open(os.path.join(path, "feed.csv"), "w") as fh:
-            fh.write("\n".join(lines) + "\n")
-        with open(marker, "w") as fh:
-            fh.write("")
+    path = out_path(sf_dir, "quarantine_csv")
+    os.makedirs(path, exist_ok=True)
+    lines = [f"id_{i},{(i + 1) * 10}" for i in range(8)]
+    lines.insert(3, "id_bad1,not_a_number")
+    lines.insert(6, "id_bad2,12.5x")
+    lines.append("id_bad3,55,overflow_extra_column")
+    with open(os.path.join(path, "feed.csv"), "w") as fh:
+        fh.write("\n".join(lines) + "\n")
     df = (
         spark.read.schema("item string, qty int, _corrupt_record string")
         .option("mode", "PERMISSIVE")
@@ -452,7 +434,7 @@ def scan_parquet_bloom_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     needle-in-haystack lookups on non-layout keys: no re-sort, no index
     service, ~1% file-size overhead. Result is layout-independent (the
     filter re-applies after skipping), which is what the oracle checks."""
-    path = _out(sf_dir, "events_bloom")
+    path = out_path(sf_dir, "events_bloom")
     ev = load(spark, sf_dir, "events")
     (
         ev.repartition(8)  # several row groups so skipping has targets
@@ -492,11 +474,9 @@ def scan_json_multiline(spark: SparkSession, sf_dir: str) -> DataFrame:
     many medium files, not one giant array — which is exactly how the
     fixture is written. Deterministic 4-record fixture → oracle by
     construction (VALUES)."""
-    path = _out(sf_dir, "api_export_json")
-    marker = os.path.join(path, "_done")
-    if not os.path.exists(marker):
-        os.makedirs(path, exist_ok=True)
-        doc = """[
+    path = out_path(sf_dir, "api_export_json")
+    os.makedirs(path, exist_ok=True)
+    doc = """[
   {"id": 1, "name": "alpha", "score": 10.5},
   {"id": 2, "name": "beta",
    "score": 20.25},
@@ -504,10 +484,8 @@ def scan_json_multiline(spark: SparkSession, sf_dir: str) -> DataFrame:
   {"id": 4,
    "name": "delta", "score": -1.75}
 ]"""
-        with open(os.path.join(path, "export.json"), "w") as fh:
-            fh.write(doc)
-        with open(marker, "w") as fh:
-            fh.write("")
+    with open(os.path.join(path, "export.json"), "w") as fh:
+        fh.write(doc)
     return (
         spark.read.schema("id int, name string, score double")
         .option("multiLine", "true")
@@ -530,7 +508,7 @@ def scan_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet original (the oracle). Like multiLine JSON, row elements can
     span lines, but files split per top-level record boundary, so
     parallelism survives within large documents."""
-    path = _out(sf_dir, "nation_xml")
+    path = out_path(sf_dir, "nation_xml")
     nation = load(spark, sf_dir, "nation").select(
         "n_nationkey", "n_name", "n_regionkey"
     )

@@ -38,6 +38,7 @@ from pyspark.sql.datasource import (
 )
 
 from c2_duckdb_runner_spark.registry import register
+from c2_duckdb_runner_spark.session import conf_override
 from c2_duckdb_runner_spark.tables import load
 
 
@@ -292,9 +293,7 @@ def stream_python_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("total_value"),
     )
     name = "c2s_replay_sink"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with conf_override(spark, {"spark.sql.shuffle.partitions": "8"}):
         q = (
             agg.writeStream.format("memory")
             .queryName(name)
@@ -317,8 +316,6 @@ def stream_python_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         q.processAllAvailable()
         q.stop()
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     sink = spark.table(name)
     out = spark.createDataFrame(sink.collect(), schema=sink.schema)
     spark.catalog.dropTempView(name)

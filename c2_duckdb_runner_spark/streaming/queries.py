@@ -37,9 +37,18 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from c2_duckdb_runner_spark.registry import register
-from c2_duckdb_runner_spark.tables import _normalize_events_ts, load, read_parquet
+from c2_duckdb_runner_spark.session import conf_override
+from c2_duckdb_runner_spark.tables import (
+    _normalize_events_ts,
+    load,
+    out_path,
+    read_parquet,
+)
 
 _SINK_IDS = itertools.count()
+# Stream queries run their stateful shuffles at this width (see
+# _run_to_memory).
+_STATE_WIDTH = {"spark.sql.shuffle.partitions": "8"}
 
 
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -59,9 +68,7 @@ def _run_to_memory(spark: SparkSession, df: DataFrame, mode: str) -> DataFrame:
     real cluster you'd size this to the key cardinality instead.
     """
     name = f"c2s_sink_{os.getpid()}_{next(_SINK_IDS)}"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with conf_override(spark, _STATE_WIDTH):
         q = (
             df.writeStream.format("memory")
             .queryName(name)
@@ -70,8 +77,6 @@ def _run_to_memory(spark: SparkSession, df: DataFrame, mode: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     sink = spark.table(name)
     # Executor-side snapshot: the memory sink's rows are already bounded by
     # window/key cardinality, but localCheckpoint copies them into executor
@@ -96,14 +101,11 @@ def _run_to_parquet(
     and nothing proportional to the corpus ever transits the driver."""
     import shutil
 
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    out_dir = f"/tmp/c2spark_io/{sf_tag}/stream_drain_{tag}"
+    out_dir = out_path(sf_dir, f"stream_drain_{tag}")
     ckpt = f"{out_dir}_ckpt"
     shutil.rmtree(out_dir, ignore_errors=True)
     shutil.rmtree(ckpt, ignore_errors=True)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with conf_override(spark, _STATE_WIDTH):
         q = (
             df.writeStream.format("parquet")
             .option("path", out_dir)
@@ -113,8 +115,6 @@ def _run_to_parquet(
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return spark.read.parquet(out_dir)
 
 
@@ -283,7 +283,7 @@ def stream_foreach_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     targets). The final table re-aggregates to per-type totals; with
     availableNow the batches partition the input, so re-aggregation equals
     the batch-free oracle."""
-    out_dir = f"/tmp/c2spark_io/{os.path.basename(os.path.normpath(sf_dir))}/fb_events"
+    out_dir = out_path(sf_dir, "fb_events")
     agg = (
         _events_stream(spark, sf_dir)
         .groupBy("event_type")
@@ -303,9 +303,7 @@ def stream_foreach_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     shutil.rmtree(out_dir, ignore_errors=True)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with conf_override(spark, _STATE_WIDTH):
         q = (
             agg.writeStream.foreachBatch(write_batch)
             .outputMode("complete")
@@ -313,8 +311,6 @@ def stream_foreach_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     final = spark.read.parquet(out_dir)
     # complete mode rewrites the whole aggregate per batch; the last batch id
     # carries the final state
@@ -520,22 +516,13 @@ def stream_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="Update",
         timeMode="None",
     )
-    prev_provider = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", None
-    )
     rocks = (
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
     )
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass", rocks)
-    try:
+    with conf_override(
+        spark, {"spark.sql.streaming.stateStore.providerClass": rocks}
+    ):
         return _run_to_memory(spark, out, "update")
-    finally:
-        if prev_provider is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev_provider
-            )
 
 
 def _tws_fallback_apply_in_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -755,9 +742,7 @@ def stream_dlq_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     checked implicitly by the counts."""
     import shutil
 
-    out_dir = (
-        f"/tmp/c2spark_io/{os.path.basename(os.path.normpath(sf_dir))}/dlq_split"
-    )
+    out_dir = out_path(sf_dir, "dlq_split")
     src = _events_stream(spark, sf_dir).select(
         "event_id",
         "event_type",
@@ -784,9 +769,7 @@ def stream_dlq_split(spark: SparkSession, sf_dir: str) -> DataFrame:
             batch_df.unpersist()
 
     shutil.rmtree(out_dir, ignore_errors=True)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with conf_override(spark, _STATE_WIDTH):
         q = (
             src.writeStream.foreachBatch(split_batch)
             .outputMode("append")
@@ -794,8 +777,6 @@ def stream_dlq_split(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
 
     def sink_agg(name: str) -> DataFrame:
         return (

@@ -7,12 +7,21 @@ footer, as in the reference's engine (``main.cc:181-183`` declares no
 schema anywhere), but it is inferred once per file version, not on every
 load — ``read_parquet`` keeps it keyed by each file's path, size and
 mtime, so a later load of the same unchanged files submits no Spark job.
+
+Queries that write output and read it back (format round trips, layouts,
+stream sinks) put it at ``out_path(sf_dir, name)``: a directory private to
+this process and to the dataset's real path, so no read sees a layout
+written from another dataset, and every call writes what it reads.
 """
 
 from __future__ import annotations
 
+import atexit
+import hashlib
 import os
+import shutil
 import stat
+import tempfile
 import threading
 from collections import OrderedDict
 
@@ -32,12 +41,6 @@ TABLES = [
     "documents",
     "embeddings",
 ]
-
-# Dimension tables small enough to broadcast at ANY scale factor (TPC-H
-# region=5 rows, nation=25 — fixed size regardless of SF). supplier/part/
-# customer scale with SF so they are NOT on this list.
-BROADCAST_DIMS = {"region", "nation"}
-
 
 # Distinct file sets whose inferred schema is kept; the least recently used
 # is dropped first.
@@ -86,14 +89,10 @@ def read_parquet(spark: SparkSession, *paths: str) -> DataFrame:
 
     A directory (or glob, or URI) keeps plain ``spark.read.parquet``: its
     partition discovery and hidden-file listing happen at read time, so a
-    key over the path alone could go stale. The package's write-then-read
-    round trips of freshly written output also stay on plain
-    ``spark.read.parquet``: each output is read once, so a cache would
-    gain nothing and could only go stale. They are the ``out_dir`` reads
-    in ``streaming/queries.py``, the partitioned layout in ``joins.py``,
-    the manifest versions in ``lakehouse_ext.py``, the range layout in
-    ``corpus_curation.py``, the sink in ``tier_a.py`` and the round trips
-    in ``sources/formats.py``.
+    key over the path alone could go stale. Output written under
+    ``out_path`` and read back also stays on plain ``spark.read.parquet``:
+    each call rewrites it and reads it once, so a cache would gain
+    nothing and could only go stale.
     """
     key = _schema_key(spark, paths)
     if key is None:
@@ -112,6 +111,30 @@ def read_parquet(spark: SparkSession, *paths: str) -> DataFrame:
         while len(_schemas) > SCHEMA_CACHE_SIZE:
             _schemas.popitem(last=False)
     return df
+
+
+_out_root: str | None = None
+_out_root_lock = threading.Lock()
+
+
+def out_path(sf_dir: str, name: str) -> str:
+    """The directory for write-then-read output ``name`` of dataset
+    ``sf_dir``: ``<root>/<basename>-<8 hex of sha1(realpath(sf_dir))>/<name>``.
+
+    ``<root>`` is a ``mkdtemp`` made on the first call in this process (not
+    at import: Python workers import the package too) and removed at
+    interpreter exit. Two datasets with the same basename get different
+    directories. This function creates and clears nothing below the root;
+    the caller writes in ``overwrite`` mode (or clears) before it reads.
+    """
+    global _out_root
+    with _out_root_lock:
+        if _out_root is None:
+            _out_root = tempfile.mkdtemp(prefix="c2spark_io_")
+            atexit.register(shutil.rmtree, _out_root, ignore_errors=True)
+    real = os.path.realpath(sf_dir)
+    digest = hashlib.sha1(real.encode()).hexdigest()[:8]
+    return os.path.join(_out_root, f"{os.path.basename(real)}-{digest}", name)
 
 
 def _normalize_events_ts(df: DataFrame) -> DataFrame:
@@ -164,10 +187,6 @@ def load_spread(
     if df.rdd.getNumPartitions() < max(2, cores // 2):
         df = df.repartition(cores, key)
     return df
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load(spark, sf_dir, t) for t in TABLES}
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

@@ -270,8 +270,9 @@ def test_file_prune_stats_reads_subset(q, spark, sf_dir):
     df.collect()  # materialize so the layout exists
     import os as _os
 
-    tag = _os.path.basename(_os.path.normpath(sf_dir))
-    files = _glob.glob(f"/tmp/c2spark_io/{tag}/lineitem_by_shipdate/part-*")
+    from c2_duckdb_runner_spark.tables import out_path
+
+    files = _glob.glob(f"{out_path(sf_dir, 'lineitem_by_shipdate')}/part-*")
     plan = pi.formatted_plan(df)
     scanned = plan.count("part-")
     assert len(files) == 8, files

@@ -1,7 +1,8 @@
 """The schema-caching Parquet loader (``tables.read_parquet``): a file set's
 schema is inferred once per file version, so a warm load submits no Spark
 job, a rewritten file is inferred again, and ``run_scan`` keeps its error
-isolation on a warm cache."""
+isolation on a warm cache. And the scratch-output rule (``tables.out_path``):
+a write-then-read key reads what it wrote from the dataset it was given."""
 
 from __future__ import annotations
 
@@ -12,11 +13,16 @@ import sys
 from concurrent.futures import ThreadPoolExecutor
 
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
+import pytest
 
+import __spark_entry__ as entrymod
 from c2_duckdb_runner_spark import tables
 from c2_duckdb_runner_spark.runner import run_scan
+from tests.compare import assert_frames_match
 from tests.test_runner import _new_jobs
+from tools.oracle_staged import connect
 
 PKG = os.path.join(os.path.dirname(os.path.dirname(__file__)), "c2_duckdb_runner_spark")
 
@@ -151,4 +157,79 @@ def test_fixture_reads_go_through_tables():
                 with open(path) as fh:
                     if direct.search(fh.read()):
                         hits.append(os.path.relpath(path, PKG))
+    assert hits == []
+
+
+# Keys that write a layout and read it back; each once kept the first
+# layout it wrote for a dataset basename.
+WRITE_THEN_READ_KEYS = [
+    "join_dynamic_partition_pruning",
+    "join_bucketed_colocated",
+    "scan_recursive_glob",
+    "scan_nested_struct_pruning",
+    "scan_csv_quarantine",
+    "scan_json_multiline",
+    "lakehouse_snapshot_timetravel",
+    "lakehouse_vacuum_audit",
+]
+
+# The twin keeps the rows of these tables whose key is even.
+_HALVED = {"orders": "o_orderkey", "customer": "c_custkey", "supplier": "s_suppkey"}
+
+
+@pytest.fixture(scope="module")
+def same_name_twin(sf_dir, tmp_path_factory):
+    """A dataset with ``sf_dir``'s basename in another parent directory,
+    holding half the orders, customers and suppliers."""
+    out = tmp_path_factory.mktemp("twin") / os.path.basename(os.path.normpath(sf_dir))
+    out.mkdir()
+    for t in tables.TABLES:
+        src = os.path.join(sf_dir, f"{t}.parquet")
+        if t in _HALVED:
+            tbl = pq.read_table(src)
+            even = pc.equal(pc.bit_wise_and(tbl[_HALVED[t]], 1), 0)
+            pq.write_table(tbl.filter(even), out / f"{t}.parquet")
+        else:
+            shutil.copy(src, out / f"{t}.parquet")
+    return str(out)
+
+
+def test_out_path_is_per_dataset(sf_dir, same_name_twin):
+    a, b = tables.out_path(sf_dir, "x"), tables.out_path(same_name_twin, "x")
+    assert a != b
+    assert os.path.basename(os.path.dirname(a)).startswith(
+        os.path.basename(os.path.normpath(sf_dir)) + "-")
+    assert tables.out_path(sf_dir + "/", "x") == a
+
+
+@pytest.mark.parametrize("key", WRITE_THEN_READ_KEYS)
+def test_write_then_read_key_reads_its_own_dataset(spark, sf_dir, same_name_twin, key):
+    """In one session, the key matches its oracle on the fixture and then
+    on a same-named twin with other rows: nothing written for the first
+    dataset is read for the second."""
+    for d in (sf_dir, same_name_twin):
+        got = entrymod.queries()[key](spark, d).toPandas()
+        con = connect(d)
+        try:
+            want = con.execute(entrymod.oracle_sql()[key]).fetchdf()
+        finally:
+            con.close()
+        assert_frames_match(got, want, f"{key} @ {d}")
+
+
+def test_scratch_paths_come_from_out_path():
+    """``tables.out_path`` is the only scratch-layout decision: no module
+    builds a temp path or skips a write because a marker or table exists."""
+    banned = re.compile(
+        r"c2spark_io|c2spark_buckets|gettempdir|tableExists|/tmp/"
+        r"""|["'/]_(SUCCESS|done|built)["']""")
+    hits = []
+    for root, _, files in os.walk(PKG):
+        for f in files:
+            path = os.path.join(root, f)
+            if f.endswith(".py") and path != os.path.join(PKG, "tables.py"):
+                with open(path) as fh:
+                    for i, line in enumerate(fh, 1):
+                        if banned.search(line):
+                            hits.append(f"{os.path.relpath(path, PKG)}:{i}")
     assert hits == []
