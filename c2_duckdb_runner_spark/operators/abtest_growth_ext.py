@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from c2_duckdb_runner_spark.operators.graph import _OFFSET, _edges
+from c2_duckdb_runner_spark.operators.graph import _EDGES_SQL, _edges
 from c2_duckdb_runner_spark.operators.inference_ext import sdiv
 from c2_duckdb_runner_spark.registry import fdoc, register
 from c2_duckdb_runner_spark.tables import load
@@ -169,16 +169,6 @@ def ab_cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _LPA_ROUNDS = 3
-
-_EDGES_SQL = f"""
-  SELECT DISTINCT o_custkey AS src, {_OFFSET} + l_suppkey AS dst
-  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-  WHERE o_custkey IS NOT NULL AND l_suppkey IS NOT NULL
-  UNION
-  SELECT DISTINCT {_OFFSET} + l_suppkey AS src, o_custkey AS dst
-  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-  WHERE o_custkey IS NOT NULL AND l_suppkey IS NOT NULL
-"""
 
 
 def _lpa_oracle() -> str:

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from c2_duckdb_runner_spark.operators.inference_ext import DAILY_MILLI_SQL, daily_milli
+from c2_duckdb_runner_spark.operators.matching_ext import ER_CANDIDATES_SQL, er_candidates
 from c2_duckdb_runner_spark.registry import fdoc, register
 from c2_duckdb_runner_spark.tables import load
 
@@ -225,33 +226,7 @@ _GOLD_THRESHOLD = 30
 @register(
     "er_golden_record_survivorship",
     oracle=f"""
-WITH a AS (
-  SELECT c_custkey AS akey, c_name AS aname, c_acctbal AS abal,
-         c_mktsegment AS aseg, c_nationkey AS anat,
-         CAST(floor(c_acctbal / 1000.0) AS INT) AS aband
-  FROM customer
-),
-b AS (
-  SELECT c_custkey + 500000 AS bkey,
-         CASE WHEN c_custkey % 3 = 0 THEN upper(c_name) ELSE c_name END AS bname,
-         CASE WHEN c_custkey % 5 = 0 THEN c_acctbal + 0.37 ELSE c_acctbal END AS bbal,
-         CASE WHEN c_custkey % 7 = 0 THEN NULL ELSE c_mktsegment END AS bseg,
-         c_nationkey AS bnat
-  FROM customer
-),
-b2 AS (SELECT *, CAST(floor(bbal / 1000.0) AS INT) AS bband FROM b),
-matched AS (
-  SELECT akey, bkey, aname, bname, abal, bbal, aseg, bseg, anat
-  FROM a JOIN b2 ON anat = bnat AND aband = bband
-              AND substring(lower(aname), length(aname) - 2, 3)
-                = substring(lower(bname), length(bname) - 2, 3)
-  WHERE (CASE WHEN aname = bname THEN 24
-              WHEN lower(aname) = lower(bname) THEN 18
-              ELSE -10 END)
-        + (CASE WHEN abs(abal - bbal) < 0.005 THEN 15 ELSE -6 END)
-        + (CASE WHEN aseg IS NULL OR bseg IS NULL THEN 0
-                WHEN aseg = bseg THEN 9 ELSE -4 END) >= {_GOLD_THRESHOLD}
-)
+WITH {ER_CANDIDATES_SQL}
 SELECT akey AS entity_key,
        CASE WHEN length(aname) > length(bname) THEN aname
             WHEN length(aname) < length(bname) THEN bname
@@ -261,13 +236,13 @@ SELECT akey AS entity_key,
          AS golden_bal_cents,
        COALESCE(aseg, bseg) AS golden_segment,
        CAST(anat AS INT) AS golden_nation
-FROM matched
+FROM pairs WHERE score >= {_GOLD_THRESHOLD}
 """,
 )
 @fdoc(f"""Golden-record survivorship — the MDM step AFTER record linkage:
-    for every Fellegi-Sunter match (score ≥ {_GOLD_THRESHOLD}, same
-    blocked candidate join as er_fellegi_sunter, cites
-    matching_ext.py:38), build one canonical record with per-field
+    for every Fellegi-Sunter match (score ≥ {_GOLD_THRESHOLD} over the
+    blocked candidate pairs of matching_ext's record-linkage kit,
+    ``er_candidates``), build one canonical record with per-field
     survival rules: name = longest (ties lexicographically lowest),
     balance = maximum in cents, segment = first non-null, nation =
     block-shared. Every rule is total-ordered, so the golden record is
@@ -278,46 +253,7 @@ FROM matched
     match. With multi-member clusters the same rules become the greatest/
     min-struct aggregates dedup_latest_by_key already demonstrates.""")
 def er_golden_record_survivorship(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = load(spark, sf_dir, "customer")
-    a = cust.select(
-        F.col("c_custkey").alias("akey"),
-        F.col("c_name").alias("aname"),
-        F.col("c_acctbal").alias("abal"),
-        F.col("c_mktsegment").alias("aseg"),
-        F.col("c_nationkey").alias("anat"),
-        F.expr("CAST(floor(c_acctbal / 1000.0) AS INT)").alias("aband"),
-    )
-    b = cust.select(
-        (F.col("c_custkey") + 500000).alias("bkey"),
-        F.expr(
-            "CASE WHEN c_custkey % 3 = 0 THEN upper(c_name) ELSE c_name END"
-        ).alias("bname"),
-        F.expr(
-            "CASE WHEN c_custkey % 5 = 0 THEN c_acctbal + 0.37 ELSE c_acctbal END"
-        ).alias("bbal"),
-        F.expr(
-            "CASE WHEN c_custkey % 7 = 0 THEN NULL ELSE c_mktsegment END"
-        ).alias("bseg"),
-        F.col("c_nationkey").alias("bnat"),
-    ).withColumn("bband", F.expr("CAST(floor(bbal / 1000.0) AS INT)"))
-    matched = a.join(
-        b,
-        (F.col("anat") == F.col("bnat"))
-        & (F.col("aband") == F.col("bband"))
-        & (
-            F.expr("substring(lower(aname), length(aname) - 2, 3)")
-            == F.expr("substring(lower(bname), length(bname) - 2, 3)")
-        ),
-    ).filter(
-        F.expr(
-            "(CASE WHEN aname = bname THEN 24"
-            " WHEN lower(aname) = lower(bname) THEN 18 ELSE -10 END)"
-            " + (CASE WHEN abs(abal - bbal) < 0.005 THEN 15 ELSE -6 END)"
-            " + (CASE WHEN aseg IS NULL OR bseg IS NULL THEN 0"
-            " WHEN aseg = bseg THEN 9 ELSE -4 END)"
-        )
-        >= _GOLD_THRESHOLD
-    )
+    matched = er_candidates(spark, sf_dir).filter(F.col("score") >= _GOLD_THRESHOLD)
     return matched.select(
         F.col("akey").alias("entity_key"),
         F.expr(

@@ -31,7 +31,6 @@ from pyspark.sql import functions as F
 from c2_duckdb_runner_spark.registry import fdoc, register
 from c2_duckdb_runner_spark.tables import load_spread
 
-_GRAM_W = 4  # shingle width (tokens)
 _DF_CAP = 100  # corpus grams seen in more docs than this are stop-shingles
 _KEEP_PPM = 600_000  # drop a batch doc at containment >= 0.6
 

@@ -7,7 +7,10 @@ large curation pipeline carries (reference reach: the delegated SQL slot,
 - Fellegi–Sunter entity resolution — blocked pairwise field comparison
   with integer log-likelihood-ratio weights and a match / possible /
   nonmatch decision, THE probabilistic record-linkage model (Fellegi &
-  Sunter, JASA 1969) behind every dedupe-across-sources pass;
+  Sunter, JASA 1969) behind every dedupe-across-sources pass. Its
+  candidate pairs are the module's record-linkage kit, ``er_candidates``
+  and its oracle twin ``ER_CANDIDATES_SQL``, which the golden-record and
+  hard-EM keys build on too;
 - positional phrase search — an inverted POSITIONAL index answering a
   multi-token phrase query by position-adjacency joins (the operator BM25
   cannot express: BM25 is bag-of-words, phrases need positions);
@@ -22,7 +25,7 @@ same stored doubles and literals.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -30,74 +33,40 @@ from c2_duckdb_runner_spark.registry import fdoc, register
 from c2_duckdb_runner_spark.tables import load, load_spread
 
 # ---------------------------------------------------------------------------
-# er_fellegi_sunter
+# The Fellegi–Sunter candidate-pair kit
 # ---------------------------------------------------------------------------
 
-_ER_SHIFT = 500_000  # B-side key offset (ground-truth link = b_key - shift)
-
-# Integer agreement/disagreement weights (scaled log2 m/u ratios): exact
-# name +24 / case-only +18 / miss -10; acctbal ±0.005 +15 / -6; segment +9 /
-# -4 / either-null 0. Classes: match >= 30, possible >= 10.
-_ER_CASE_SQL = """
-WITH a AS (
-  SELECT c_custkey AS akey, c_name AS aname, c_acctbal AS abal,
-         c_mktsegment AS aseg, c_nationkey AS anat,
-         CAST(floor(c_acctbal / 1000.0) AS INT) AS aband
-  FROM customer
-),
-b AS (
-  SELECT c_custkey + 500000 AS bkey,
-         CASE WHEN c_custkey % 3 = 0 THEN upper(c_name) ELSE c_name END AS bname,
-         CASE WHEN c_custkey % 5 = 0 THEN c_acctbal + 0.37 ELSE c_acctbal END AS bbal,
-         CASE WHEN c_custkey % 7 = 0 THEN NULL ELSE c_mktsegment END AS bseg,
-         c_nationkey AS bnat
-  FROM customer
-),
-b2 AS (SELECT *, CAST(floor(bbal / 1000.0) AS INT) AS bband FROM b),
-pairs AS (
-  SELECT akey, bkey,
-         (CASE WHEN aname = bname THEN 24
-               WHEN lower(aname) = lower(bname) THEN 18
-               ELSE -10 END)
-         + (CASE WHEN abs(abal - bbal) < 0.005 THEN 15 ELSE -6 END)
-         + (CASE WHEN aseg IS NULL OR bseg IS NULL THEN 0
-                 WHEN aseg = bseg THEN 9 ELSE -4 END) AS score
-  FROM a JOIN b2 ON anat = bnat AND aband = bband
-              AND substring(lower(aname), length(aname) - 2, 3)
-                = substring(lower(bname), length(bname) - 2, 3)
-)
-SELECT akey AS a_key, bkey - 500000 AS b_key, CAST(score AS INT) AS score,
-       CASE WHEN score >= 30 THEN 'match'
-            WHEN score >= 10 THEN 'possible'
-            ELSE 'nonmatch' END AS cls,
-       CAST(CASE WHEN akey = bkey - 500000 THEN 1 ELSE 0 END AS INT) AS is_true
-FROM pairs WHERE score >= 10
-"""
+ER_SHIFT = 500_000  # B-side key offset (ground-truth link: akey = bkey - ER_SHIFT)
 
 
-@register("er_fellegi_sunter", oracle=_ER_CASE_SQL)
-def er_fellegi_sunter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fellegi–Sunter probabilistic record linkage over a planted dirty copy.
+def _band(x: Column) -> Column:
+    """The blocking band floor(x / 1000) as INT. A balance with no finite
+    INT band (±inf, NaN, |x| >= 1e9) gets NULL and leaves the join."""
+    return F.when(F.abs(x) < 1e9, F.floor(x / 1000.0).cast("int"))
 
-    Source B is the customer table re-extracted with deterministic damage
-    (every 3rd name case-flipped, every 5th balance jittered +0.37, every
-    7th segment lost). Blocking on (nationkey, floor(acctbal/1000),
-    lower-name 3-char suffix) bounds candidate pairs — the suffix is the
-    key that SCALES: nation x band alone is a fixed grid, so its blocks
-    grow linearly with the corpus and pair counts quadratically (measured
-    7x wall at 10x rows before the suffix key); a name-derived component
-    keeps block sizes bounded, and being case-folded it never separates a
-    true link; field comparisons award integer weights (agreement up,
-    disagreement down, missing 0 — the F-S decision rule), summed into a
-    score classed match / possible / nonmatch. Only score >= 10 pairs are
-    emitted, and non-linked customers cannot reach 10 (name miss -10 floors
-    them), so the output is O(true links), not O(block pairs).
 
-    Scale shape: one shuffle per side on the block key; per-block fan-out
-    is bounded by the band granularity (production blocking uses tighter
-    keys — the pattern is identical). Jitter crossing a band edge loses
-    that pair — real blocking recall loss, deterministic in both engines.
-    """
+def _suffix(name: str) -> Column:
+    return F.expr(f"substring(lower({name}), length({name}) - 2, 3)")
+
+
+def er_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The blocked F-S candidate pairs ``(akey, bkey, aname, bname, abal,
+    bbal, aseg, bseg, anat, score)``.
+
+    Source A is ``customer``; source B is the same table re-extracted with
+    deterministic damage (every 3rd name case-flipped, every 5th balance
+    jittered +0.37, every 7th segment lost, keys shifted by ER_SHIFT).
+    Pairs block on (nation, balance band, lower-case 3-char name suffix);
+    the suffix is the component that scales: nation x band alone is a
+    fixed grid, so its blocks grow linearly with the corpus and pair
+    counts quadratically (measured 7x wall at 10x rows before the suffix
+    key). Being case-folded it never separates a true link; jitter that
+    crosses a band edge loses that pair, deterministically in both
+    engines. ``score`` sums integer agreement weights (scaled log2 m/u
+    ratios): exact name +24 / case-only +18 / miss -10; balance within
+    0.005 +15 / else -6; segment +9 / -4 / either NULL 0.
+
+    Oracle twin: ``ER_CANDIDATES_SQL``, the CTEs a, b, b2 and pairs."""
     c = load(spark, sf_dir, "customer")
     a = c.select(
         F.col("c_custkey").alias("akey"),
@@ -105,10 +74,10 @@ def er_fellegi_sunter(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("c_acctbal").alias("abal"),
         F.col("c_mktsegment").alias("aseg"),
         F.col("c_nationkey").alias("anat"),
-        F.expr("CAST(floor(c_acctbal / 1000.0) AS INT)").alias("aband"),
+        _band(F.col("c_acctbal")).alias("aband"),
     )
     b = c.select(
-        (F.col("c_custkey") + _ER_SHIFT).alias("bkey"),
+        (F.col("c_custkey") + ER_SHIFT).alias("bkey"),
         F.expr(
             "CASE WHEN c_custkey % 3 = 0 THEN upper(c_name) ELSE c_name END"
         ).alias("bname"),
@@ -119,13 +88,7 @@ def er_fellegi_sunter(spark: SparkSession, sf_dir: str) -> DataFrame:
             "CASE WHEN c_custkey % 7 = 0 THEN NULL ELSE c_mktsegment END"
         ).alias("bseg"),
         F.col("c_nationkey").alias("bnat"),
-    ).withColumn("bband", F.expr("CAST(floor(bbal / 1000.0) AS INT)"))
-    a = a.withColumn(
-        "asuf", F.expr("substring(lower(aname), length(aname) - 2, 3)")
-    )
-    b = b.withColumn(
-        "bsuf", F.expr("substring(lower(bname), length(bname) - 2, 3)")
-    )
+    ).withColumn("bband", _band(F.col("bbal")))
     score = (
         F.when(F.col("aname") == F.col("bname"), 24)
         .when(F.lower("aname") == F.lower("bname"), 18)
@@ -135,17 +98,88 @@ def er_fellegi_sunter(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(F.col("aseg") == F.col("bseg"), 9)
         .otherwise(-4)
     )
+    return a.join(
+        b,
+        (F.col("anat") == F.col("bnat"))
+        & (F.col("aband") == F.col("bband"))
+        & (_suffix("aname") == _suffix("bname")),
+    ).select(
+        "akey", "bkey", "aname", "bname", "abal", "bbal", "aseg", "bseg", "anat",
+        score.alias("score"),
+    )
+
+
+# the oracle's ``_band``
+_BAND_SQL = "CASE WHEN abs({0}) < 1e9 THEN CAST(floor({0} / 1000.0) AS INT) END"
+
+# oracle twin of ``er_candidates``: the CTEs a, b, b2 and pairs
+ER_CANDIDATES_SQL = f"""
+a AS (
+  SELECT c_custkey AS akey, c_name AS aname, c_acctbal AS abal,
+         c_mktsegment AS aseg, c_nationkey AS anat,
+         {_BAND_SQL.format("c_acctbal")} AS aband
+  FROM customer
+),
+b AS (
+  SELECT c_custkey + {ER_SHIFT} AS bkey,
+         CASE WHEN c_custkey % 3 = 0 THEN upper(c_name) ELSE c_name END AS bname,
+         CASE WHEN c_custkey % 5 = 0 THEN c_acctbal + 0.37 ELSE c_acctbal END AS bbal,
+         CASE WHEN c_custkey % 7 = 0 THEN NULL ELSE c_mktsegment END AS bseg,
+         c_nationkey AS bnat
+  FROM customer
+),
+b2 AS (SELECT *, {_BAND_SQL.format("bbal")} AS bband FROM b),
+pairs AS (
+  SELECT akey, bkey, aname, bname, abal, bbal, aseg, bseg, anat,
+         (CASE WHEN aname = bname THEN 24
+               WHEN lower(aname) = lower(bname) THEN 18
+               ELSE -10 END)
+         + (CASE WHEN abs(abal - bbal) < 0.005 THEN 15 ELSE -6 END)
+         + (CASE WHEN aseg IS NULL OR bseg IS NULL THEN 0
+                 WHEN aseg = bseg THEN 9 ELSE -4 END) AS score
+  FROM a JOIN b2 ON anat = bnat AND aband = bband
+              AND substring(lower(aname), length(aname) - 2, 3)
+                = substring(lower(bname), length(bname) - 2, 3)
+)"""
+
+
+# ---------------------------------------------------------------------------
+# er_fellegi_sunter
+# ---------------------------------------------------------------------------
+
+
+@register(
+    "er_fellegi_sunter",
+    oracle=f"""
+WITH {ER_CANDIDATES_SQL}
+SELECT akey AS a_key, bkey - {ER_SHIFT} AS b_key, CAST(score AS INT) AS score,
+       CASE WHEN score >= 30 THEN 'match'
+            WHEN score >= 10 THEN 'possible'
+            ELSE 'nonmatch' END AS cls,
+       CAST(CASE WHEN akey = bkey - {ER_SHIFT} THEN 1 ELSE 0 END AS INT) AS is_true
+FROM pairs WHERE score >= 10
+""",
+)
+def er_fellegi_sunter(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Fellegi–Sunter probabilistic record linkage over a planted dirty copy.
+
+    The candidate pairs and their integer scores come from the
+    ``er_candidates`` kit; this key applies the F-S decision rule, classing
+    each score match (>= 30) / possible (>= 10) / nonmatch. Only score >=
+    10 pairs are emitted, and non-linked customers cannot reach 10 (name
+    miss -10 floors them), so the output is O(true links), not O(block
+    pairs).
+
+    Scale shape: one shuffle per side on the block key; per-block fan-out
+    is bounded by the band granularity and the name suffix (production
+    blocking uses tighter keys — the pattern is identical).
+    """
     return (
-        a.join(
-            b,
-            (F.col("anat") == F.col("bnat"))
-            & (F.col("aband") == F.col("bband"))
-            & (F.col("asuf") == F.col("bsuf")),
-        )
+        er_candidates(spark, sf_dir)
         .select(
             F.col("akey").alias("a_key"),
-            (F.col("bkey") - _ER_SHIFT).alias("b_key"),
-            score.cast("int").alias("score"),
+            (F.col("bkey") - ER_SHIFT).alias("b_key"),
+            F.col("score").cast("int").alias("score"),
         )
         .filter(F.col("score") >= 10)
         .select(

@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from c2_duckdb_runner_spark.operators.graph import _OFFSET, _edges
+from c2_duckdb_runner_spark.operators.graph import _EDGES_SQL, _edges
 from c2_duckdb_runner_spark.operators.inference_ext import (
     DAILY_MILLI_SQL,
     daily_milli,
@@ -45,16 +45,6 @@ from c2_duckdb_runner_spark.tables import load
 _N2V_SEEDS = 10
 _N2V_BIASED_STEPS = 3  # biased hops after the first uniform hop
 _W_RET, _W_COM, _W_FAR = 2, 6, 3  # ≙ 1/p : 1 : 1/q with p=3, q=2 (scaled ×6)
-
-_EDGES_SQL = f"""
-  SELECT DISTINCT o_custkey AS src, {_OFFSET} + l_suppkey AS dst
-  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-  WHERE o_custkey IS NOT NULL AND l_suppkey IS NOT NULL
-  UNION
-  SELECT DISTINCT {_OFFSET} + l_suppkey AS src, o_custkey AS dst
-  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-  WHERE o_custkey IS NOT NULL AND l_suppkey IS NOT NULL
-"""
 
 
 def _n2v_coin(engine: str, step: int) -> str:

@@ -42,11 +42,7 @@ from c2_duckdb_runner_spark.tables import load, load_spread
 # the proxy's false-drop rate is the recall you trade for the cost cut).
 _CASCADE_PROXY_MIN = 40  # tokens
 # Deterministic "LLM" verdict: a md5-derived centi-score — stands in for a
-# model logit; same recipe both engines.
-_LLM_SCORE_SPARK = (
-    "CAST(conv(substring(md5(CAST(doc_id AS STRING) || ':' || text), 1, 4), "
-    "16, 10) AS INT) % 100"
-)
+# model logit; the Spark side computes the same hash in its pandas UDF.
 _LLM_SCORE_DUCK = (
     "CAST(('0x' || substring(md5(CAST(doc_id AS VARCHAR) || ':' || text), 1, 4)) "
     "AS INT) % 100"

@@ -31,6 +31,7 @@ from c2_duckdb_runner_spark.operators.graph import (
     _bfs_oracle,
     _edges,
 )
+from c2_duckdb_runner_spark.operators.matching_ext import ER_CANDIDATES_SQL, er_candidates
 from c2_duckdb_runner_spark.registry import fdoc, register
 from c2_duckdb_runner_spark.session import scratch_persist
 from c2_duckdb_runner_spark.tables import load
@@ -122,40 +123,14 @@ _EM_MATCH_THRESHOLD = 30
 @register(
     "er_em_hard_iteration",
     oracle=f"""
-WITH a AS (
-  SELECT c_custkey AS akey, c_name AS aname, c_acctbal AS abal,
-         c_mktsegment AS aseg, c_nationkey AS anat,
-         CAST(floor(c_acctbal / 1000.0) AS INT) AS aband
-  FROM customer
-),
-b AS (
-  SELECT c_custkey + 500000 AS bkey,
-         CASE WHEN c_custkey % 3 = 0 THEN upper(c_name) ELSE c_name END AS bname,
-         CASE WHEN c_custkey % 5 = 0 THEN c_acctbal + 0.37 ELSE c_acctbal END AS bbal,
-         CASE WHEN c_custkey % 7 = 0 THEN NULL ELSE c_mktsegment END AS bseg,
-         c_nationkey AS bnat
-  FROM customer
-),
-b2 AS (SELECT *, CAST(floor(bbal / 1000.0) AS INT) AS bband FROM b),
-pairs AS (
-  SELECT akey, bkey,
-         CASE WHEN aname = bname THEN 1 ELSE 0 END AS ag_name,
+WITH {ER_CANDIDATES_SQL},
+lab AS (
+  SELECT CASE WHEN aname = bname THEN 1 ELSE 0 END AS ag_name,
          CASE WHEN lower(aname) = lower(bname) THEN 1 ELSE 0 END AS ag_name_ci,
          CASE WHEN abs(abal - bbal) < 0.005 THEN 1 ELSE 0 END AS ag_bal,
          CASE WHEN aseg IS NOT NULL AND bseg IS NOT NULL AND aseg = bseg
               THEN 1 ELSE 0 END AS ag_seg,
-         (CASE WHEN aname = bname THEN 24
-               WHEN lower(aname) = lower(bname) THEN 18
-               ELSE -10 END)
-         + (CASE WHEN abs(abal - bbal) < 0.005 THEN 15 ELSE -6 END)
-         + (CASE WHEN aseg IS NULL OR bseg IS NULL THEN 0
-                 WHEN aseg = bseg THEN 9 ELSE -4 END) AS score
-  FROM a JOIN b2 ON anat = bnat AND aband = bband
-              AND substring(lower(aname), length(aname) - 2, 3)
-                = substring(lower(bname), length(bname) - 2, 3)
-),
-lab AS (
-  SELECT *, CASE WHEN score >= {_EM_MATCH_THRESHOLD} THEN 1 ELSE 0 END AS m
+         CASE WHEN score >= {_EM_MATCH_THRESHOLD} THEN 1 ELSE 0 END AS m
   FROM pairs
 ),
 tot AS (
@@ -209,44 +184,14 @@ FROM fields
     worth the big agreement weight — the audit that justifies
     er_fellegi_sunter's hand-set constants from the data itself.
 
-    Scale shape: the pair relation reuses er_fellegi_sunter's scalable
-    blocking (nation × balance-band × name-suffix, cites
-    matching_ext.py:38); the E and M steps together are ONE aggregation
+    Scale shape: the pair relation is matching_ext's record-linkage kit,
+    ``er_candidates`` (the scalable nation × balance-band × name-suffix
+    blocking); the E and M steps together are ONE aggregation
     over the candidate pairs (the four per-field sums share the pass),
     so a training iteration costs exactly one candidate-generation join
     + one reduce at any corpus size.""")
 def er_em_hard_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = load(spark, sf_dir, "customer")
-    a = cust.select(
-        F.col("c_custkey").alias("akey"),
-        F.col("c_name").alias("aname"),
-        F.col("c_acctbal").alias("abal"),
-        F.col("c_mktsegment").alias("aseg"),
-        F.col("c_nationkey").alias("anat"),
-        F.expr("CAST(floor(c_acctbal / 1000.0) AS INT)").alias("aband"),
-    )
-    b = cust.select(
-        (F.col("c_custkey") + 500000).alias("bkey"),
-        F.expr(
-            "CASE WHEN c_custkey % 3 = 0 THEN upper(c_name) ELSE c_name END"
-        ).alias("bname"),
-        F.expr(
-            "CASE WHEN c_custkey % 5 = 0 THEN c_acctbal + 0.37 ELSE c_acctbal END"
-        ).alias("bbal"),
-        F.expr(
-            "CASE WHEN c_custkey % 7 = 0 THEN NULL ELSE c_mktsegment END"
-        ).alias("bseg"),
-        F.col("c_nationkey").alias("bnat"),
-    ).withColumn("bband", F.expr("CAST(floor(bbal / 1000.0) AS INT)"))
-    pairs = a.join(
-        b,
-        (F.col("anat") == F.col("bnat"))
-        & (F.col("aband") == F.col("bband"))
-        & (
-            F.expr("substring(lower(aname), length(aname) - 2, 3)")
-            == F.expr("substring(lower(bname), length(bname) - 2, 3)")
-        ),
-    ).select(
+    pairs = er_candidates(spark, sf_dir).select(
         F.expr("CASE WHEN aname = bname THEN 1 ELSE 0 END").alias("ag_name"),
         F.expr(
             "CASE WHEN lower(aname) = lower(bname) THEN 1 ELSE 0 END"
@@ -258,13 +203,7 @@ def er_em_hard_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
             "CASE WHEN aseg IS NOT NULL AND bseg IS NOT NULL AND aseg = bseg"
             " THEN 1 ELSE 0 END"
         ).alias("ag_seg"),
-        F.expr(
-            "(CASE WHEN aname = bname THEN 24"
-            " WHEN lower(aname) = lower(bname) THEN 18 ELSE -10 END)"
-            " + (CASE WHEN abs(abal - bbal) < 0.005 THEN 15 ELSE -6 END)"
-            " + (CASE WHEN aseg IS NULL OR bseg IS NULL THEN 0"
-            " WHEN aseg = bseg THEN 9 ELSE -4 END)"
-        ).alias("score"),
+        "score",
     )
     lab = pairs.withColumn(
         "m", (F.col("score") >= _EM_MATCH_THRESHOLD).cast("int")

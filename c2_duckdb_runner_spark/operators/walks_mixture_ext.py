@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from c2_duckdb_runner_spark.operators.graph import _OFFSET, _edges
+from c2_duckdb_runner_spark.operators.graph import _EDGES_SQL, _edges
 from c2_duckdb_runner_spark.operators.inference_ext import DAILY_MILLI_SQL, daily_milli
 from c2_duckdb_runner_spark.registry import fdoc, register
 from c2_duckdb_runner_spark.session import scratch_persist
@@ -47,15 +47,7 @@ _RANKED_SQL = f"""
   SELECT src, dst,
          ROW_NUMBER() OVER (PARTITION BY src ORDER BY dst) - 1 AS idx,
          COUNT(*) OVER (PARTITION BY src) AS outdeg
-  FROM (
-    SELECT DISTINCT o_custkey AS src, {_OFFSET} + l_suppkey AS dst
-    FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-    WHERE o_custkey IS NOT NULL AND l_suppkey IS NOT NULL
-    UNION
-    SELECT DISTINCT {_OFFSET} + l_suppkey AS src, o_custkey AS dst
-    FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-    WHERE o_custkey IS NOT NULL AND l_suppkey IS NOT NULL
-  )
+  FROM ({_EDGES_SQL})
 """
 
 
