@@ -10,6 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from c2_duckdb_runner_spark.operators.inference_ext import CENTS_SQL, cents
 from c2_duckdb_runner_spark.registry import register
 from c2_duckdb_runner_spark.tables import load
 
@@ -286,11 +287,11 @@ def fn_array_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "fn_xml_parse",
-    oracle="""
+    oracle=f"""
 SELECT o_orderkey,
        o_orderkey AS xa_key,
        o_orderstatus AS xs_status,
-       CAST(round(o_totalprice * 100) AS BIGINT) AS xi_cents
+       {CENTS_SQL.format('o_totalprice')} AS xi_cents
 FROM orders
 """,
 )
@@ -308,7 +309,7 @@ def fn_xml_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("</k><s>"),
         F.col("o_orderstatus"),
         F.lit("</s><c>"),
-        F.round(F.col("o_totalprice") * 100).cast("bigint").cast("string"),
+        cents("o_totalprice").cast("string"),
         F.lit("</c></o>"),
     )
     d = o.select("o_orderkey", xml.alias("x"))

@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from c2_duckdb_runner_spark.operators.graph import _EDGES_SQL, _edges
-from c2_duckdb_runner_spark.operators.inference_ext import sdiv
+from c2_duckdb_runner_spark.operators.inference_ext import CENTS_SQL, cents, sdiv
 from c2_duckdb_runner_spark.registry import fdoc, register
 from c2_duckdb_runner_spark.tables import load
 
@@ -55,10 +55,10 @@ WITH bounds AS (SELECT MIN(ts) + INTERVAL 15 DAY AS cut FROM events),
 u AS (
   SELECT user_id, user_id % 2 AS arm,
          (1000 * CAST(SUM(CASE WHEN ts < cut
-              THEN CAST(round(value * 100) AS BIGINT) ELSE 0 END) AS BIGINT))
+              THEN {CENTS_SQL.format('value')} ELSE 0 END) AS BIGINT))
            // GREATEST(SUM(CASE WHEN ts < cut THEN 1 ELSE 0 END), 1) AS x,
          (1000 * CAST(SUM(CASE WHEN ts >= cut
-              THEN CAST(round(value * 100) AS BIGINT) ELSE 0 END) AS BIGINT))
+              THEN {CENTS_SQL.format('value')} ELSE 0 END) AS BIGINT))
            // GREATEST(SUM(CASE WHEN ts >= cut THEN 1 ELSE 0 END), 1) AS y
   FROM events CROSS JOIN bounds GROUP BY user_id
 ),
@@ -100,24 +100,20 @@ def ab_cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus pass."""
     ev = load(spark, sf_dir, "events")
     bounds = ev.agg((F.min("ts") + F.expr("INTERVAL 15 DAYS")).alias("cut"))
-    cents = "CAST(round(value * 100) AS BIGINT)"
+    pre, post = F.col("ts") < F.col("cut"), F.col("ts") >= F.col("cut")
     u = (
         ev.crossJoin(F.broadcast(bounds))
         .groupBy("user_id")
         .agg(
-            F.expr(
-                f"(1000 * CAST(SUM(CASE WHEN ts < cut THEN {cents} ELSE 0 END)"
-                " AS BIGINT))"
-                " div GREATEST(SUM(CASE WHEN ts < cut THEN 1 ELSE 0 END), 1L)"
-            ).alias("x"),
-            F.expr(
-                f"(1000 * CAST(SUM(CASE WHEN ts >= cut THEN {cents} ELSE 0 END)"
-                " AS BIGINT))"
-                " div GREATEST(SUM(CASE WHEN ts >= cut THEN 1 ELSE 0 END), 1L)"
-            ).alias("y"),
+            F.sum(F.when(pre, cents("value")).otherwise(0)).alias("sx"),
+            F.sum(F.when(pre, 1).otherwise(0)).alias("nx"),
+            F.sum(F.when(post, cents("value")).otherwise(0)).alias("sy"),
+            F.sum(F.when(post, 1).otherwise(0)).alias("ny"),
         )
         .select(
-            (F.col("user_id") % 2).alias("arm"), "x", "y"
+            (F.col("user_id") % 2).alias("arm"),
+            F.expr("(1000 * sx) div GREATEST(nx, 1L)").alias("x"),
+            F.expr("(1000 * sy) div GREATEST(ny, 1L)").alias("y"),
         )
     )
     s = u.agg(
@@ -318,7 +314,7 @@ def agg_new_vs_returning_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
 WITH weekly AS (
   SELECT event_type, date_trunc('week', ts) AS w,
-         CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS rev
+         CAST(SUM({CENTS_SQL.format('value')}) AS BIGINT) AS rev
   FROM events GROUP BY event_type, date_trunc('week', ts)
 ),
 lagged AS (
@@ -346,7 +342,7 @@ def window_pct_change_wow(spark: SparkSession, sf_dir: str) -> DataFrame:
         load(spark, sf_dir, "events")
         .groupBy("event_type", F.date_trunc("week", F.col("ts")).alias("w"))
         .agg(
-            F.sum(F.expr("CAST(round(value * 100) AS BIGINT)"))
+            F.sum(cents("value"))
             .cast("bigint")
             .alias("rev")
         )

@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from c2_duckdb_runner_spark.operators.inference_ext import CENTS_SQL, cents
 from c2_duckdb_runner_spark.registry import register
 from c2_duckdb_runner_spark.tables import load
 
@@ -345,11 +346,11 @@ def agg_percentile_disc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "agg_argminmax",
-    oracle="""
+    oracle=f"""
 SELECT o_custkey,
-       arg_max(o_orderkey, CAST(round(o_totalprice * 100) AS BIGINT) * 10000000
+       arg_max(o_orderkey, {CENTS_SQL.format('o_totalprice')} * 10000000
                            + o_orderkey) AS biggest_order,
-       arg_min(o_orderkey, CAST(round(o_totalprice * 100) AS BIGINT) * 10000000
+       arg_min(o_orderkey, {CENTS_SQL.format('o_totalprice')} * 10000000
                            + o_orderkey) AS smallest_order,
        CAST(MAX(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS max_price
 FROM orders GROUP BY o_custkey
@@ -365,7 +366,7 @@ def agg_argminmax(spark: SparkSession, sf_dir: str) -> DataFrame:
     formulation of a per-group argmax at any scale."""
     o = load(spark, sf_dir, "orders")
     key = (
-        F.round(F.col("o_totalprice") * 100).cast("bigint") * F.lit(10000000)
+        cents("o_totalprice") * F.lit(10000000)
         + F.col("o_orderkey")
     )
     return o.groupBy("o_custkey").agg(

@@ -31,6 +31,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from c2_duckdb_runner_spark.operators.graph import _edges
+from c2_duckdb_runner_spark.operators.inference_ext import CENTS_SQL, cents
+from c2_duckdb_runner_spark.operators.matching_ext import _BAND_SQL, _band
 from c2_duckdb_runner_spark.operators.simsearch import (
     PROBE_DEPTH,
     PROBE_RANKED_SQL,
@@ -219,11 +221,11 @@ def search_err_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 # privacy_l_diversity
 # ---------------------------------------------------------------------------
 
-_LDIV_ORACLE = """
+_LDIV_ORACLE = f"""
 WITH g AS (
   SELECT CAST(c_nationkey AS INT) AS nationkey, c_mktsegment AS segment,
          CAST(COUNT(*) AS BIGINT) AS group_n,
-         CAST(COUNT(DISTINCT CAST(floor(c_acctbal/1000.0) AS INT)) AS BIGINT)
+         CAST(COUNT(DISTINCT {_BAND_SQL.format('c_acctbal')}) AS BIGINT)
            AS n_sensitive
   FROM customer GROUP BY 1, 2
 )
@@ -246,7 +248,7 @@ def privacy_l_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
         c.select(
             F.col("c_nationkey").cast("int").alias("nationkey"),
             F.col("c_mktsegment").alias("segment"),
-            F.expr("CAST(floor(c_acctbal/1000.0) AS INT)").alias("band"),
+            _band(F.col("c_acctbal")).alias("band"),
         )
         .groupBy("nationkey", "segment")
         .agg(
@@ -354,10 +356,10 @@ def stats_cohens_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
 # stats_spearman_daily
 # ---------------------------------------------------------------------------
 
-_SPEARMAN_ORACLE = """
+_SPEARMAN_ORACLE = f"""
 WITH d AS (
   SELECT CAST(ts AS DATE) AS day,
-         CAST(SUM(CAST(round(value*100) AS BIGINT)) AS BIGINT) AS cents,
+         CAST(SUM({CENTS_SQL.format('value')}) AS BIGINT) AS cents,
          CAST(COUNT(*) AS BIGINT) AS n_ev
   FROM events GROUP BY 1
 ),
@@ -393,7 +395,7 @@ def stats_spearman_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = (
         e.select(
             F.to_date("ts").alias("day"),
-            F.expr("CAST(round(value*100) AS BIGINT)").alias("c"),
+            cents("value").alias("c"),
         )
         .groupBy("day")
         .agg(F.sum("c").alias("cents"), F.count("*").alias("n_ev"))

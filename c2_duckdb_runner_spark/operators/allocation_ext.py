@@ -19,13 +19,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from c2_duckdb_runner_spark.operators.inference_ext import CENTS_SQL, cents
 from c2_duckdb_runner_spark.registry import register
 from c2_duckdb_runner_spark.tables import load
 
 
 @register(
     "alloc_largest_remainder",
-    oracle="""
+    oracle=f"""
 WITH li AS (
   SELECT l_orderkey AS k, l_linenumber AS ln,
          CAST(l_quantity AS BIGINT) AS q
@@ -33,7 +34,7 @@ WITH li AS (
 ),
 o AS (
   SELECT o_orderkey AS k,
-         CAST(round(o_totalprice * 100) AS BIGINT) AS total_cents
+         {CENTS_SQL.format('o_totalprice')} AS total_cents
   FROM orders WHERE o_orderkey % 9 = 0
 ),
 j AS (
@@ -88,7 +89,7 @@ def alloc_largest_remainder(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("o_orderkey") % 9 == 0)
         .select(
             F.col("o_orderkey").alias("k"),
-            F.expr("CAST(round(o_totalprice * 100) AS BIGINT)").alias(
+            cents("o_totalprice").alias(
                 "total_cents"
             ),
         )

@@ -30,6 +30,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from c2_duckdb_runner_spark.operators.inference_ext import CENTS_SQL, cents
+from c2_duckdb_runner_spark.operators.matching_ext import _BAND_SQL, _band
 from c2_duckdb_runner_spark.registry import register
 from c2_duckdb_runner_spark.session import scratch_persist
 from c2_duckdb_runner_spark.tables import load
@@ -38,10 +40,10 @@ from c2_duckdb_runner_spark.tables import load
 # privacy_t_closeness
 # ---------------------------------------------------------------------------
 
-_TCLOSE_ORACLE = """
+_TCLOSE_ORACLE = f"""
 WITH base AS (
   SELECT CAST(c_nationkey AS INT) AS nationkey, c_mktsegment AS segment,
-         GREATEST(0, LEAST(10, CAST(floor(c_acctbal/1000.0) AS INT) + 1)) AS band
+         GREATEST(0, LEAST(10, {_BAND_SQL.format('c_acctbal')} + 1)) AS band
   FROM customer
 ),
 gb AS (SELECT nationkey, segment, band, CAST(COUNT(*) AS BIGINT) AS gn
@@ -91,9 +93,8 @@ def privacy_t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
         c.select(
             F.col("c_nationkey").cast("int").alias("nationkey"),
             F.col("c_mktsegment").alias("segment"),
-            F.expr(
-                "GREATEST(0, LEAST(10, CAST(floor(c_acctbal/1000.0) AS INT) + 1))"
-            ).alias("band"),
+            F.greatest(F.lit(0), F.least(F.lit(10), _band(F.col("c_acctbal")) + 1))
+            .alias("band"),
         )
     )
     gb = base.groupBy("nationkey", "segment", "band").agg(F.count("*").alias("gn"))
@@ -140,7 +141,7 @@ _FBETA_THRS = (25, 50, 100, 150, 200, 250)
 _FBETA_ORACLE = f"""
 WITH s AS (
   SELECT CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS y,
-         CAST(round(value*100) AS BIGINT) AS cents
+         {CENTS_SQL.format('value')} AS cents
   FROM events
 ),
 agg AS (
@@ -178,7 +179,7 @@ def eval_fbeta_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "events")
     s = e.select(
         F.expr("CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END").alias("y"),
-        F.expr("CAST(round(value*100) AS BIGINT)").alias("cents"),
+        cents("value").alias("cents"),
     )
     aggs = []
     for t in _FBETA_THRS:
@@ -229,9 +230,9 @@ def eval_fbeta_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ts_max_drawdown
 # ---------------------------------------------------------------------------
 
-_DRAWDOWN_ORACLE = """
+_DRAWDOWN_ORACLE = f"""
 WITH d AS (SELECT CAST(ts AS DATE) AS day,
-                  CAST(SUM(CAST(round(value*100) AS BIGINT)) AS BIGINT) AS cents
+                  CAST(SUM({CENTS_SQL.format('value')}) AS BIGINT) AS cents
            FROM events GROUP BY 1),
 m AS (SELECT day, cents,
              CAST(MAX(cents) OVER (ORDER BY day) AS BIGINT) AS peak FROM d)
@@ -257,7 +258,7 @@ def ts_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = (
         e.select(
             F.to_date("ts").alias("day"),
-            F.expr("CAST(round(value*100) AS BIGINT)").alias("c"),
+            cents("value").alias("c"),
         )
         .groupBy("day")
         .agg(F.sum("c").alias("cents"))

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from c2_duckdb_runner_spark.operators.graph import _EDGES_SQL as _GRAPH_EDGES_SQL
+from c2_duckdb_runner_spark.operators.inference_ext import CENTS_SQL, cents
 from c2_duckdb_runner_spark.registry import register
 from c2_duckdb_runner_spark.tables import load
 
@@ -85,12 +86,12 @@ def sessions_pattern_regex(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "agg_rfm_segmentation",
-    oracle="""
+    oracle=f"""
 WITH p AS (
   SELECT user_id,
          MAX(epoch_ms(ts) // 86400000) AS last_day,
          CAST(COUNT(*) AS BIGINT) AS freq,
-         CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS cents
+         CAST(SUM({CENTS_SQL.format('value')}) AS BIGINT) AS cents
   FROM events WHERE event_type = 'purchase' GROUP BY user_id
 ),
 mx AS (SELECT MAX(last_day) AS maxd FROM p),
@@ -131,7 +132,7 @@ def agg_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.expr("MAX(unix_millis(ts) div 86400000)").alias("last_day"),
             F.count("*").cast("bigint").alias("freq"),
-            F.sum(F.expr("CAST(round(value * 100) AS BIGINT)"))
+            F.sum(cents("value"))
             .cast("bigint")
             .alias("cents"),
         )

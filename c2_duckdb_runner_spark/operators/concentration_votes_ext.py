@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from c2_duckdb_runner_spark.operators.graph import cust_supp_pairs
+from c2_duckdb_runner_spark.operators.inference_ext import CENTS_SQL, cents
 from c2_duckdb_runner_spark.registry import register
 from c2_duckdb_runner_spark.session import scratch_persist
 from c2_duckdb_runner_spark.tables import load
@@ -34,10 +35,10 @@ from c2_duckdb_runner_spark.tables import load
 # agg_pareto_8020
 # ---------------------------------------------------------------------------
 
-_PARETO_ORACLE = """
+_PARETO_ORACLE = f"""
 WITH s AS (
   SELECT o_custkey,
-         CAST(SUM(CAST(round(o_totalprice*100) AS BIGINT)) AS BIGINT) AS cents
+         CAST(SUM({CENTS_SQL.format('o_totalprice')}) AS BIGINT) AS cents
   FROM orders GROUP BY 1
 ),
 h AS (SELECT cents AS v, CAST(COUNT(*) AS BIGINT) AS cnt FROM s GROUP BY 1),
@@ -70,7 +71,7 @@ def agg_pareto_8020(spark: SparkSession, sf_dir: str) -> DataFrame:
     the population — same scale doctrine as eval_decile_lift_table."""
     o = load(spark, sf_dir, "orders")
     s = o.groupBy("o_custkey").agg(
-        F.sum(F.expr("CAST(round(o_totalprice*100) AS BIGINT)"))
+        F.sum(cents("o_totalprice"))
         .cast("bigint")
         .alias("cents")
     )
@@ -106,10 +107,10 @@ def agg_pareto_8020(spark: SparkSession, sf_dir: str) -> DataFrame:
 # agg_lorenz_deciles
 # ---------------------------------------------------------------------------
 
-_LORENZ_ORACLE = """
+_LORENZ_ORACLE = f"""
 WITH s AS (
   SELECT o_custkey,
-         CAST(SUM(CAST(round(o_totalprice*100) AS BIGINT)) AS BIGINT) AS cents
+         CAST(SUM({CENTS_SQL.format('o_totalprice')}) AS BIGINT) AS cents
   FROM orders GROUP BY 1
 ),
 h AS (SELECT cents AS v, CAST(COUNT(*) AS BIGINT) AS cnt FROM s GROUP BY 1),
@@ -158,7 +159,7 @@ def agg_lorenz_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load(spark, sf_dir, "orders")
     s = scratch_persist(
         o.groupBy("o_custkey").agg(
-            F.sum(F.expr("CAST(round(o_totalprice*100) AS BIGINT)"))
+            F.sum(cents("o_totalprice"))
             .cast("bigint")
             .alias("cents")
         )

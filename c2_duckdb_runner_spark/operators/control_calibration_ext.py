@@ -26,7 +26,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from c2_duckdb_runner_spark.operators.inference_ext import DAILY_MILLI_SQL, daily_milli
+from c2_duckdb_runner_spark.operators.inference_ext import (
+    CENTS_SQL,
+    DAILY_MILLI_SQL,
+    cents,
+    daily_milli,
+)
 from c2_duckdb_runner_spark.operators.matching_ext import ER_CANDIDATES_SQL, er_candidates
 from c2_duckdb_runner_spark.registry import fdoc, register
 from c2_duckdb_runner_spark.tables import load
@@ -231,8 +236,8 @@ SELECT akey AS entity_key,
        CASE WHEN length(aname) > length(bname) THEN aname
             WHEN length(aname) < length(bname) THEN bname
             ELSE LEAST(aname, bname) END AS golden_name,
-       CAST(GREATEST(CAST(round(abal * 100) AS BIGINT),
-                     CAST(round(bbal * 100) AS BIGINT)) AS BIGINT)
+       CAST(GREATEST({CENTS_SQL.format('abal')},
+                     {CENTS_SQL.format('bbal')}) AS BIGINT)
          AS golden_bal_cents,
        COALESCE(aseg, bseg) AS golden_segment,
        CAST(anat AS INT) AS golden_nation
@@ -261,10 +266,7 @@ def er_golden_record_survivorship(spark: SparkSession, sf_dir: str) -> DataFrame
             " WHEN length(aname) < length(bname) THEN bname"
             " ELSE LEAST(aname, bname) END"
         ).alias("golden_name"),
-        F.expr(
-            "CAST(GREATEST(CAST(round(abal * 100) AS BIGINT),"
-            " CAST(round(bbal * 100) AS BIGINT)) AS BIGINT)"
-        ).alias("golden_bal_cents"),
+        F.greatest(cents("abal"), cents("bbal")).alias("golden_bal_cents"),
         F.coalesce(F.col("aseg"), F.col("bseg")).alias("golden_segment"),
         F.col("anat").cast("int").alias("golden_nation"),
     )
@@ -277,11 +279,11 @@ def er_golden_record_survivorship(spark: SparkSession, sf_dir: str) -> DataFrame
 
 @register(
     "sql_named_window_clause",
-    oracle="""
+    oracle=f"""
 WITH ranked AS (
   SELECT o_orderpriority, o_orderkey,
          ROW_NUMBER() OVER w AS rn,
-         CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT)) OVER w AS BIGINT)
+         CAST(SUM({CENTS_SQL.format('o_totalprice')}) OVER w AS BIGINT)
            AS running_cents
   FROM orders
   WINDOW w AS (PARTITION BY o_orderpriority ORDER BY o_orderdate, o_orderkey)
@@ -302,14 +304,15 @@ def sql_named_window_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
     The running sum is integer cents; the frame is the two functions'
     natural default (rows-unbounded-preceding for ROW_NUMBER, range for
     SUM — identical results here because the order is total)."""
-    load(spark, sf_dir, "orders").createOrReplaceTempView("orders_nw")
+    load(spark, sf_dir, "orders").withColumn(
+        "cents", cents("o_totalprice")
+    ).createOrReplaceTempView("orders_nw")
     return spark.sql(
         """
         WITH ranked AS (
           SELECT o_orderpriority, o_orderkey,
                  ROW_NUMBER() OVER w AS rn,
-                 CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT)) OVER w
-                      AS BIGINT) AS running_cents
+                 CAST(SUM(cents) OVER w AS BIGINT) AS running_cents
           FROM orders_nw
           WINDOW w AS (PARTITION BY o_orderpriority
                        ORDER BY o_orderdate, o_orderkey)

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from c2_duckdb_runner_spark.operators.inference_ext import CENTS_SQL, cents
 from c2_duckdb_runner_spark.registry import register
 from c2_duckdb_runner_spark.tables import load, load_spread
 
@@ -145,10 +146,10 @@ def text_repetition_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ts_ewma_smooth",
-    oracle="""
+    oracle=f"""
 WITH hr AS (
   SELECT event_type, epoch_ms(ts) // 3600000 AS h,
-         SUM(CAST(round(value * 100) AS BIGINT)) AS s, COUNT(*) AS n
+         SUM({CENTS_SQL.format('value')}) AS s, COUNT(*) AS n
   FROM events GROUP BY event_type, h
 ),
 ser AS (
@@ -184,7 +185,7 @@ def ts_ewma_smooth(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "event_type",
             F.expr("unix_millis(ts) div 3600000").alias("h"),
-            F.expr("CAST(round(value * 100) AS BIGINT)").alias("cents"),
+            cents("value").alias("cents"),
         )
         .groupBy("event_type", "h")
         .agg(F.sum("cents").alias("s"), F.count("*").alias("n"))

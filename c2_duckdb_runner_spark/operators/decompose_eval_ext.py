@@ -29,7 +29,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from c2_duckdb_runner_spark.operators.inference_ext import (
+    CENTS_SQL,
     DAILY_MILLI_SQL,
+    cents,
     daily_milli,
     sdiv,
 )
@@ -157,7 +159,7 @@ _ATT_MAX_BAND = 9
     "causal_stratified_att",
     oracle=f"""
 WITH e AS (
-  SELECT CAST(round(value * 100) AS BIGINT) AS cents,
+  SELECT {CENTS_SQL.format('value')} AS cents,
          user_id % 2 AS treated,
          LEAST(CAST(floor(value / {_ATT_BAND_W}) AS INT), {_ATT_MAX_BAND}) AS band
   FROM events
@@ -200,7 +202,7 @@ def causal_stratified_att(spark: SparkSession, sf_dir: str) -> DataFrame:
     stratum), so at 100 TB the estimator merges from partition partials
     without a second pass."""
     e = load(spark, sf_dir, "events").select(
-        F.expr("CAST(round(value * 100) AS BIGINT)").alias("cents"),
+        cents("value").alias("cents"),
         (F.col("user_id") % 2).alias("treated"),
         F.expr(
             f"LEAST(CAST(floor(value / {_ATT_BAND_W}) AS INT), {_ATT_MAX_BAND})"
@@ -252,9 +254,9 @@ _MOVERS_TOP = 15
 WITH bounds AS (SELECT MIN(ts) + INTERVAL 15 DAY AS cut FROM events),
 rev AS (
   SELECT user_id,
-         CAST(SUM(CASE WHEN ts < cut THEN CAST(round(value * 100) AS BIGINT)
+         CAST(SUM(CASE WHEN ts < cut THEN {CENTS_SQL.format('value')}
                   ELSE 0 END) AS BIGINT) AS rev1,
-         CAST(SUM(CASE WHEN ts >= cut THEN CAST(round(value * 100) AS BIGINT)
+         CAST(SUM(CASE WHEN ts >= cut THEN {CENTS_SQL.format('value')}
                   ELSE 0 END) AS BIGINT) AS rev2
   FROM events CROSS JOIN bounds GROUP BY user_id
 ),
@@ -296,7 +298,7 @@ def rank_movers_halves(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(
                 F.when(
                     F.col("ts") < F.col("cut"),
-                    F.expr("CAST(round(value * 100) AS BIGINT)"),
+                    cents("value"),
                 ).otherwise(0)
             )
             .cast("bigint")
@@ -304,7 +306,7 @@ def rank_movers_halves(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(
                 F.when(
                     F.col("ts") >= F.col("cut"),
-                    F.expr("CAST(round(value * 100) AS BIGINT)"),
+                    cents("value"),
                 ).otherwise(0)
             )
             .cast("bigint")

@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from c2_duckdb_runner_spark.operators.inference_ext import CENTS_SQL, cents
 from c2_duckdb_runner_spark.registry import register
 from c2_duckdb_runner_spark.tables import load
 
@@ -37,9 +38,9 @@ from c2_duckdb_runner_spark.tables import load
 # eval_auc_rank — exact AUC as an integer fraction
 # ---------------------------------------------------------------------------
 
-_AUC_ORACLE = """
+_AUC_ORACLE = f"""
 WITH s AS (
-  SELECT CAST(round(value*100) AS BIGINT) AS c,
+  SELECT {CENTS_SQL.format('value')} AS c,
          CAST(SUM(CASE WHEN event_type='purchase' THEN 1 ELSE 0 END) AS BIGINT) AS pos,
          CAST(SUM(CASE WHEN event_type<>'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS neg
   FROM events GROUP BY 1
@@ -73,7 +74,7 @@ def eval_auc_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "events")
     hist = (
         e.select(
-            F.expr("CAST(round(value*100) AS BIGINT)").alias("c"),
+            cents("value").alias("c"),
             F.expr(
                 "CAST(CASE WHEN event_type='purchase' THEN 1 ELSE 0 END AS BIGINT)"
             ).alias("p"),
@@ -448,7 +449,7 @@ WITH agg AS (
     CAST(SUM(CASE WHEN c_custkey % 2 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS c_obs,
 {stats}
   FROM (SELECT c_nationkey, c_custkey,
-               CAST(round(c_acctbal*100) AS BIGINT) AS cents FROM customer)
+               {CENTS_SQL.format('c_acctbal')} AS cents FROM customer)
   GROUP BY 1
 ),
 t AS (
@@ -488,7 +489,7 @@ def stats_bh_fdr(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load(spark, sf_dir, "customer").select(
         "c_nationkey",
         "c_custkey",
-        F.expr("CAST(round(c_acctbal*100) AS BIGINT)").alias("cents"),
+        cents("c_acctbal").alias("cents"),
     )
     aggs = [
         F.count("*").alias("n"),

@@ -28,7 +28,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from c2_duckdb_runner_spark.operators.inference_ext import (
+    CENTS_SQL,
     DAILY_MILLI_SQL,
+    cents,
     daily_milli,
     sdiv,
 )
@@ -129,7 +131,7 @@ def ts_holt_linear_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _side_deciles_sql(side: int, alias: str) -> str:
     return f"""
 h_{alias} AS (
-  SELECT CAST(round(value * 100) AS BIGINT) AS v, CAST(COUNT(*) AS BIGINT) AS cnt
+  SELECT {CENTS_SQL.format('value')} AS v, CAST(COUNT(*) AS BIGINT) AS cnt
   FROM events WHERE user_id % 2 = {side} GROUP BY 1
 ),
 c_{alias} AS (
@@ -175,7 +177,7 @@ def stats_qq_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     def side(side_val: int, alias: str) -> DataFrame:
         h = (
             ev.filter(F.col("user_id") % 2 == side_val)
-            .groupBy(F.expr("CAST(round(value * 100) AS BIGINT)").alias("v"))
+            .groupBy(cents("value").alias("v"))
             .agg(F.count("*").cast("bigint").alias("cnt"))
         )
         wv = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, 0)

@@ -40,8 +40,10 @@ ER_SHIFT = 500_000  # B-side key offset (ground-truth link: akey = bkey - ER_SHI
 
 
 def _band(x: Column) -> Column:
-    """The blocking band floor(x / 1000) as INT. A balance with no finite
-    INT band (±inf, NaN, |x| >= 1e9) gets NULL and leaves the join."""
+    """The balance band floor(x / 1000) as INT: the ER blocking key, and
+    the sensitive attribute of privacy_l_diversity / privacy_t_closeness.
+    A balance with no finite INT band (±inf, NaN, |x| >= 1e9) gets NULL,
+    so it leaves the join and counts as no band."""
     return F.when(F.abs(x) < 1e9, F.floor(x / 1000.0).cast("int"))
 
 

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from c2_duckdb_runner_spark.operators.graph import _OFFSET, cust_supp_pairs
+from c2_duckdb_runner_spark.operators.inference_ext import CENTS_SQL, cents
 from c2_duckdb_runner_spark.registry import register
 from c2_duckdb_runner_spark.session import scratch_persist
 from c2_duckdb_runner_spark.tables import load
@@ -37,10 +38,10 @@ from c2_duckdb_runner_spark.tables import load
 # ts_kendall_tau_daily
 # ---------------------------------------------------------------------------
 
-_KENDALL_ORACLE = """
+_KENDALL_ORACLE = f"""
 WITH d AS (
   SELECT CAST(ts AS DATE) AS day,
-         CAST(SUM(CAST(round(value*100) AS BIGINT)) AS BIGINT) AS cents,
+         CAST(SUM({CENTS_SQL.format('value')}) AS BIGINT) AS cents,
          CAST(COUNT(*) AS BIGINT) AS n_ev
   FROM events GROUP BY 1
 ),
@@ -78,7 +79,7 @@ def ts_kendall_tau_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = (
         e.select(
             F.to_date("ts").alias("day"),
-            F.expr("CAST(round(value*100) AS BIGINT)").alias("c"),
+            cents("value").alias("c"),
         )
         .groupBy("day")
         .agg(F.sum("c").alias("cents"), F.count("*").alias("n_ev"))

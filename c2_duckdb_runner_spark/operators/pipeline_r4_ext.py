@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from c2_duckdb_runner_spark.operators.inference_ext import CENTS_SQL, cents
 from c2_duckdb_runner_spark.registry import register
 from c2_duckdb_runner_spark.tables import load, load_spread
 
@@ -285,7 +286,7 @@ def _boot_oracle() -> str:
     )
     return f"""
 WITH e AS (
-  SELECT event_id, CAST(round(value * 100) AS BIGINT) AS cents FROM events
+  SELECT event_id, {CENTS_SQL.format('value')} AS cents FROM events
 ),
 agg AS (
   SELECT CAST(COUNT(*) AS BIGINT) AS n,
@@ -316,7 +317,7 @@ def stats_bootstrap_mean_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial aggregation — is how you put error bars on any corpus metric
     without a second pass."""
     e = load(spark, sf_dir, "events").select(
-        "event_id", F.expr("CAST(round(value * 100) AS BIGINT)").alias("cents")
+        "event_id", cents("value").alias("cents")
     )
     aggs = [
         F.count("*").cast("bigint").alias("n"),

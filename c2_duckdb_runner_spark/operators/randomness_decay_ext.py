@@ -25,7 +25,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from c2_duckdb_runner_spark.operators.inference_ext import DAILY_MILLI_SQL, daily_milli
+from c2_duckdb_runner_spark.operators.inference_ext import (
+    CENTS_SQL,
+    DAILY_MILLI_SQL,
+    cents,
+    daily_milli,
+)
 from c2_duckdb_runner_spark.registry import fdoc, register
 from c2_duckdb_runner_spark.tables import load
 
@@ -115,7 +120,7 @@ _DECAY_TOP = 25
 WITH anchor AS (SELECT MAX(ts) AS now FROM events),
 aged AS (
   SELECT user_id,
-         CAST(round(value * 100) AS BIGINT) AS cents,
+         {CENTS_SQL.format('value')} AS cents,
          LEAST(CAST(date_diff('day', CAST(ts AS DATE), CAST(now AS DATE))
                AS BIGINT) // {_DECAY_HALF_LIFE_DAYS}, 62) AS half_lives
   FROM events CROSS JOIN anchor
@@ -145,7 +150,7 @@ def agg_time_decay_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     anchor = ev.agg(F.max("ts").alias("now"))
     aged = ev.crossJoin(F.broadcast(anchor)).select(
         "user_id",
-        F.expr("CAST(round(value * 100) AS BIGINT)").alias("cents"),
+        cents("value").alias("cents"),
         F.expr(
             "LEAST(CAST(datediff(CAST(now AS DATE), CAST(ts AS DATE)) AS BIGINT)"
             f" div {_DECAY_HALF_LIFE_DAYS}, 62L)"

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from c2_duckdb_runner_spark.operators.inference_ext import CENTS_SQL, cents
 from c2_duckdb_runner_spark.registry import register
 from c2_duckdb_runner_spark.tables import load
 
@@ -32,10 +33,10 @@ from c2_duckdb_runner_spark.tables import load
 # stats_friedman_test
 # ---------------------------------------------------------------------------
 
-_FRIEDMAN_ORACLE = """
+_FRIEDMAN_ORACLE = f"""
 WITH d AS (
   SELECT CAST(ts AS DATE) AS day, event_type,
-         CAST(SUM(CAST(round(value*100) AS BIGINT)) AS BIGINT) AS cents
+         CAST(SUM({CENTS_SQL.format('value')}) AS BIGINT) AS cents
   FROM events GROUP BY 1, 2
 ),
 full_days AS (SELECT day FROM d GROUP BY day HAVING COUNT(*) = 5),
@@ -74,7 +75,7 @@ def stats_friedman_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.select(
             F.to_date("ts").alias("day"),
             "event_type",
-            F.expr("CAST(round(value*100) AS BIGINT)").alias("c"),
+            cents("value").alias("c"),
         )
         .groupBy("day", "event_type")
         .agg(F.sum("c").alias("cents"))
@@ -204,10 +205,10 @@ def search_rbo_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ts_seasonality_strength
 # ---------------------------------------------------------------------------
 
-_SEASTR_ORACLE = """
+_SEASTR_ORACLE = f"""
 WITH daily AS (
   SELECT event_type, CAST(ts AS DATE) AS day,
-         CAST((10 * CAST(SUM(CAST(round(value*100) AS BIGINT)) AS BIGINT))
+         CAST((10 * CAST(SUM({CENTS_SQL.format('value')}) AS BIGINT))
               // CAST(COUNT(*) AS BIGINT) AS BIGINT) AS milli
   FROM events GROUP BY 1, 2
 ),
@@ -253,12 +254,8 @@ def ts_seasonality_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "events")
     daily = (
         e.groupBy("event_type", F.to_date("ts").alias("day"))
-        .agg(
-            F.expr(
-                "CAST((10 * CAST(SUM(CAST(round(value*100) AS BIGINT)) AS BIGINT))"
-                " div CAST(COUNT(*) AS BIGINT) AS BIGINT)"
-            ).alias("milli")
-        )
+        .agg(F.sum(cents("value")).alias("s"), F.count("*").alias("n"))
+        .select("event_type", "day", F.expr("(10 * s) div n").alias("milli"))
         .withColumn("dow", F.expr("weekday(day) + 1"))
     )
     seas = daily.groupBy("event_type", "dow").agg(

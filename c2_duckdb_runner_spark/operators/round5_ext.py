@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from c2_duckdb_runner_spark.operators.graph import cust_supp_pairs
+from c2_duckdb_runner_spark.operators.inference_ext import CENTS_SQL, cents
 from c2_duckdb_runner_spark.registry import fdoc, register
 from c2_duckdb_runner_spark.session import scratch_persist, shuffle_width
 from c2_duckdb_runner_spark.tables import load
@@ -368,10 +369,10 @@ def pipeline_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
 # eval_bradley_terry_rounds
 # ---------------------------------------------------------------------------
 
-_BT_ORACLE = """
+_BT_ORACLE = f"""
 WITH ev AS (
   SELECT user_id, event_type, ts, event_id,
-         CAST(round(value * 100) AS BIGINT) AS cents
+         {CENTS_SQL.format('value')} AS cents
   FROM events
 ),
 seq AS (
@@ -440,7 +441,7 @@ def eval_bradley_terry_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "ts",
         "event_id",
-        F.expr("CAST(round(value * 100) AS BIGINT)").alias("cents"),
+        cents("value").alias("cents"),
     )
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     seq = ev.select(

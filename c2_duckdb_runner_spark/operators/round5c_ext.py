@@ -26,6 +26,7 @@ from c2_duckdb_runner_spark.operators.dedup import (
     _jaccard_pairs_sql,
     _exploded_shingles,
 )
+from c2_duckdb_runner_spark.operators.inference_ext import CENTS_SQL, cents
 from c2_duckdb_runner_spark.registry import fdoc, register
 from c2_duckdb_runner_spark.session import scratch_persist
 from c2_duckdb_runner_spark.tables import load
@@ -173,7 +174,7 @@ _KW_CHI2_95_DF4 = 9_487_729  # chi-square(4) 95th percentile, micro-units
 _KW_ORACLE = f"""
 WITH daily AS (
   SELECT event_type AS g, CAST(ts AS DATE) AS day,
-         CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS v
+         CAST(SUM({CENTS_SQL.format('value')}) AS BIGINT) AS v
   FROM events GROUP BY 1, 2
 ),
 hist AS (SELECT v, CAST(COUNT(*) AS BIGINT) AS t FROM daily GROUP BY v),
@@ -239,7 +240,7 @@ def stats_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("event_type").alias("g"),
             F.expr("CAST(ts AS DATE)").alias("day"),
         ).agg(
-            F.sum(F.expr("CAST(round(value * 100) AS BIGINT)"))
+            F.sum(cents("value"))
             .cast("bigint")
             .alias("v")
         )

@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from c2_duckdb_runner_spark.operators.inference_ext import daily_milli
+from c2_duckdb_runner_spark.operators.inference_ext import CENTS_SQL, cents, daily_milli
 from c2_duckdb_runner_spark.registry import fdoc, register
 from c2_duckdb_runner_spark.tables import load
 
@@ -93,9 +93,9 @@ def mlsplit_kfold_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
 # stats_mad_robust_z
 # ---------------------------------------------------------------------------
 
-_MAD_ORACLE = """
+_MAD_ORACLE = f"""
 WITH v AS (
-  SELECT event_type, CAST(round(value * 100) AS BIGINT) AS x FROM events
+  SELECT event_type, {CENTS_SQL.format('value')} AS x FROM events
 ),
 h AS (SELECT event_type, x, CAST(COUNT(*) AS BIGINT) AS cnt
       FROM v GROUP BY 1, 2),
@@ -150,7 +150,7 @@ def stats_mad_robust_z(spark: SparkSession, sf_dir: str) -> DataFrame:
     Rule: low median = smallest value whose cumulative count reaches
     ceil(n/2); integer-exact on both engines."""
     v = load(spark, sf_dir, "events").select(
-        "event_type", F.expr("CAST(round(value * 100) AS BIGINT)").alias("x")
+        "event_type", cents("value").alias("x")
     )
     h = v.groupBy("event_type", "x").agg(
         F.count("*").cast("bigint").alias("cnt")
@@ -221,7 +221,7 @@ _PH_LAMBDA = 50_000  # alarm threshold, milli-units
 _PH_ORACLE = f"""
 WITH daily AS (
   SELECT event_type, date_trunc('day', ts) AS d,
-         (10 * CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS BIGINT))
+         (10 * CAST(SUM({CENTS_SQL.format('value')}) AS BIGINT))
            // CAST(COUNT(*) AS BIGINT) AS x
   FROM events WHERE ts IS NOT NULL GROUP BY 1, 2
 ),

@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from c2_duckdb_runner_spark.operators.inference_ext import daily_milli
+from c2_duckdb_runner_spark.operators.inference_ext import CENTS_SQL, cents, daily_milli
 from c2_duckdb_runner_spark.registry import fdoc, register
 from c2_duckdb_runner_spark.session import scratch_persist
 from c2_duckdb_runner_spark.tables import load
@@ -136,10 +136,10 @@ def stats_hodges_lehmann(spark: SparkSession, sf_dir: str) -> DataFrame:
 # stats_wilcoxon_signed_rank
 # ---------------------------------------------------------------------------
 
-_WSR_ORACLE = """
+_WSR_ORACLE = f"""
 WITH daily AS (
   SELECT event_type, date_trunc('day', ts) AS d,
-         (10 * CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS BIGINT))
+         (10 * CAST(SUM({CENTS_SQL.format('value')}) AS BIGINT))
            // CAST(COUNT(*) AS BIGINT) AS x
   FROM events WHERE ts IS NOT NULL AND event_type IN ('view', 'click')
   GROUP BY 1, 2
@@ -407,9 +407,9 @@ def sample_temperature_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
 # stats_iqr_fences
 # ---------------------------------------------------------------------------
 
-_IQR_ORACLE = """
+_IQR_ORACLE = f"""
 WITH v AS (
-  SELECT event_type, CAST(round(value * 100) AS BIGINT) AS x FROM events
+  SELECT event_type, {CENTS_SQL.format('value')} AS x FROM events
 ),
 h AS (SELECT event_type, x, CAST(COUNT(*) AS BIGINT) AS cnt
       FROM v GROUP BY 1, 2),
@@ -450,7 +450,7 @@ def stats_iqr_fences(spark: SparkSession, sf_dir: str) -> DataFrame:
     run over the per-type HISTOGRAM; the outlier count is one broadcast
     join + aggregate over the raw stream."""
     v = load(spark, sf_dir, "events").select(
-        "event_type", F.expr("CAST(round(value * 100) AS BIGINT)").alias("x")
+        "event_type", cents("value").alias("x")
     )
     h = v.groupBy("event_type", "x").agg(
         F.count("*").cast("bigint").alias("cnt")

@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from c2_duckdb_runner_spark.operators.inference_ext import CENTS_SQL, cents
 from c2_duckdb_runner_spark.registry import fdoc, register
 from c2_duckdb_runner_spark.tables import load
 
@@ -62,7 +63,7 @@ _CHI2_95_MICRO = (
 
 _MOOD_ORACLE = f"""
 WITH v AS (
-  SELECT event_type, CAST(round(value * 100) AS BIGINT) AS x FROM events
+  SELECT event_type, {CENTS_SQL.format('value')} AS x FROM events
 ),
 h AS (SELECT x, CAST(COUNT(*) AS BIGINT) AS cnt FROM v GROUP BY 1),
 n AS (SELECT CAST(SUM(cnt) AS BIGINT) AS n FROM h),
@@ -118,7 +119,7 @@ def stats_mood_median_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     median, one conditional-sum scan."""
     v = load(spark, sf_dir, "events").select(
         "event_type",
-        F.expr("CAST(round(value * 100) AS BIGINT)").alias("x"),
+        cents("value").alias("x"),
     )
     h = v.groupBy("x").agg(F.count("*").cast("bigint").alias("cnt"))
     c = h.select(
@@ -635,10 +636,10 @@ def text_simpson_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
 # stats_theil_between_nations
 # ---------------------------------------------------------------------------
 
-_THEIL_ORACLE = """
+_THEIL_ORACLE = f"""
 WITH rev AS (
   SELECT n_name AS nation,
-         CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+         CAST(SUM({CENTS_SQL.format('o_totalprice')}) AS BIGINT)
            AS cents
   FROM orders
   JOIN customer ON c_custkey = o_custkey
@@ -688,7 +689,7 @@ def stats_theil_between_nations(
         .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
         .groupBy(F.col("n_name").alias("nation"))
         .agg(
-            F.sum(F.expr("CAST(round(o_totalprice * 100) AS BIGINT)"))
+            F.sum(cents("o_totalprice"))
             .cast("bigint")
             .alias("cents")
         )
@@ -723,7 +724,7 @@ _DHONDT_SEATS = 50
 _DHONDT_ORACLE = f"""
 WITH rev AS (
   SELECT n_name AS party,
-         CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS v
+         CAST(SUM({CENTS_SQL.format('o_totalprice')}) AS BIGINT) AS v
   FROM orders
   JOIN customer ON c_custkey = o_custkey
   JOIN nation ON n_nationkey = c_nationkey
@@ -766,7 +767,7 @@ def alloc_dhondt_divisor(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
         .groupBy(F.col("n_name").alias("party"))
         .agg(
-            F.sum(F.expr("CAST(round(o_totalprice * 100) AS BIGINT)"))
+            F.sum(cents("o_totalprice"))
             .cast("bigint")
             .alias("v")
         )

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from c2_duckdb_runner_spark.operators.inference_ext import CENTS_SQL, cents
 from c2_duckdb_runner_spark.registry import fdoc, register
 from c2_duckdb_runner_spark.session import scratch_persist
 from c2_duckdb_runner_spark.tables import load, load_spread
@@ -119,10 +120,10 @@ def ts_hampel_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ts_bollinger_breakout
 # ---------------------------------------------------------------------------
 
-_BOLLINGER_ORACLE = """
+_BOLLINGER_ORACLE = f"""
 WITH daily AS (
   SELECT event_type AS t, strftime(date_trunc('day', ts), '%Y-%m-%d') AS d,
-         CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS x
+         CAST(SUM({CENTS_SQL.format('value')}) AS BIGINT) AS x
   FROM events GROUP BY 1, 2
 ),
 w AS (
@@ -166,7 +167,7 @@ def ts_bollinger_breakout(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd").alias("d"),
         )
         .agg(
-            F.sum(F.expr("CAST(round(value * 100) AS BIGINT)"))
+            F.sum(cents("value"))
             .cast("bigint")
             .alias("x")
         )

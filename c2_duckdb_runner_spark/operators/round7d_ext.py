@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from c2_duckdb_runner_spark.operators.inference_ext import CENTS_SQL, cents
 from c2_duckdb_runner_spark.registry import fdoc, register
 from c2_duckdb_runner_spark.tables import load, load_spread
 
@@ -42,7 +43,7 @@ _SL_SEATS = 50
 _SL_ORACLE = f"""
 WITH rev AS (
   SELECT n_name AS party,
-         CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS v
+         CAST(SUM({CENTS_SQL.format('o_totalprice')}) AS BIGINT) AS v
   FROM orders JOIN customer ON c_custkey = o_custkey
   JOIN nation ON n_nationkey = c_nationkey GROUP BY 1
 ),
@@ -81,7 +82,7 @@ def alloc_sainte_lague(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
         .groupBy(F.col("n_name").alias("party"))
         .agg(
-            F.sum(F.expr("CAST(round(o_totalprice * 100) AS BIGINT)"))
+            F.sum(cents("o_totalprice"))
             .cast("bigint")
             .alias("v")
         )
@@ -364,10 +365,10 @@ def eval_fleiss_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ts_variance_ratio_test
 # ---------------------------------------------------------------------------
 
-_VR_ORACLE = """
+_VR_ORACLE = f"""
 WITH daily AS (
   SELECT date_trunc('day', ts) AS d,
-         CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS x
+         CAST(SUM({CENTS_SQL.format('value')}) AS BIGINT) AS x
   FROM events GROUP BY 1
 ),
 lagged AS (
@@ -414,7 +415,7 @@ def ts_variance_ratio_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         load(spark, sf_dir, "events")
         .groupBy(F.date_trunc("day", "ts").alias("d"))
         .agg(
-            F.sum(F.expr("CAST(round(value * 100) AS BIGINT)"))
+            F.sum(cents("value"))
             .cast("bigint")
             .alias("x")
         )

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from c2_duckdb_runner_spark.operators.inference_ext import CENTS_SQL, cents
 from c2_duckdb_runner_spark.registry import fdoc, register
 from c2_duckdb_runner_spark.session import scratch_persist
 from c2_duckdb_runner_spark.tables import load
@@ -304,7 +305,7 @@ WITH daily AS (
   SELECT n_name AS nation, CAST(o_orderdate AS DATE) AS day,
          CAST(datediff('day', DATE '1995-01-01', CAST(o_orderdate AS DATE))
               AS BIGINT) AS x,
-         CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS y
+         CAST(SUM({CENTS_SQL.format('o_totalprice')}) AS BIGINT) AS y
   FROM orders JOIN customer ON c_custkey = o_custkey
   JOIN nation ON n_nationkey = c_nationkey
   GROUP BY 1, 2, 3
@@ -360,7 +361,7 @@ def window_rolling_ols_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("CAST(o_orderdate AS DATE)").alias("day"),
         )
         .agg(
-            F.sum(F.expr("CAST(round(o_totalprice * 100) AS BIGINT)"))
+            F.sum(cents("o_totalprice"))
             .cast("bigint")
             .alias("y")
         )
@@ -492,10 +493,10 @@ def sample_systematic_cumweight(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ts_ar1_phi_ppm
 # ---------------------------------------------------------------------------
 
-_AR1_ORACLE = """
+_AR1_ORACLE = f"""
 WITH daily AS (
   SELECT n_name AS nation, CAST(o_orderdate AS DATE) AS day,
-         CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS y
+         CAST(SUM({CENTS_SQL.format('o_totalprice')}) AS BIGINT) AS y
   FROM orders JOIN customer ON c_custkey = o_custkey
   JOIN nation ON n_nationkey = c_nationkey GROUP BY 1, 2
 ),
@@ -547,7 +548,7 @@ def ts_ar1_phi_ppm(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("CAST(o_orderdate AS DATE)").alias("day"),
         )
         .agg(
-            F.sum(F.expr("CAST(round(o_totalprice * 100) AS BIGINT)"))
+            F.sum(cents("o_totalprice"))
             .cast("bigint")
             .alias("y")
         )
@@ -598,7 +599,7 @@ _PSI_TERM = (
 
 _PSI_ORACLE = f"""
 WITH sc AS (
-  SELECT CAST(round(o_totalprice * 100) AS BIGINT) AS v,
+  SELECT {CENTS_SQL.format('o_totalprice')} AS v,
          CASE WHEN CAST(o_orderdate AS DATE) < {_PSI_SPLIT}
               THEN 0 ELSE 1 END AS half
   FROM orders
@@ -652,7 +653,7 @@ FROM arr
 def eval_psi_population_stability(spark: SparkSession, sf_dir: str) -> DataFrame:
     sc = scratch_persist(
         load(spark, sf_dir, "orders").select(
-            F.expr("CAST(round(o_totalprice * 100) AS BIGINT)").alias("v"),
+            cents("o_totalprice").alias("v"),
             F.expr(
                 f"CASE WHEN CAST(o_orderdate AS DATE) < {_PSI_SPLIT}"
                 " THEN 0 ELSE 1 END"

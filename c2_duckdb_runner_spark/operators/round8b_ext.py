@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from c2_duckdb_runner_spark.operators.inference_ext import CENTS_SQL, cents
 from c2_duckdb_runner_spark.registry import fdoc, register
 from c2_duckdb_runner_spark.session import scratch_persist
 from c2_duckdb_runner_spark.tables import load, load_spread
@@ -213,7 +214,7 @@ _CVM_B = "purchase"
 _CVM_ORACLE = f"""
 WITH daily AS (
   SELECT event_type AS g, CAST(ts AS DATE) AS day,
-         CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS v
+         CAST(SUM({CENTS_SQL.format('value')}) AS BIGINT) AS v
   FROM events WHERE event_type IN ('{_CVM_A}', '{_CVM_B}')
   GROUP BY 1, 2
 ),
@@ -268,7 +269,7 @@ def stats_cvm_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("CAST(ts AS DATE)").alias("day"),
         )
         .agg(
-            F.sum(F.expr("CAST(round(value * 100) AS BIGINT)"))
+            F.sum(cents("value"))
             .cast("bigint")
             .alias("v")
         )

@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from c2_duckdb_runner_spark.operators.graph import _OFFSET, cust_supp_pairs
+from c2_duckdb_runner_spark.operators.inference_ext import CENTS_SQL, cents
 from c2_duckdb_runner_spark.registry import fdoc, register
 from c2_duckdb_runner_spark.session import scratch_persist
 from c2_duckdb_runner_spark.tables import load
@@ -135,12 +136,12 @@ _XC_MAXLAG = 3
 _XC_ORACLE = f"""
 WITH x AS (
   SELECT CAST(ts AS DATE) AS day,
-         CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS v
+         CAST(SUM({CENTS_SQL.format('value')}) AS BIGINT) AS v
   FROM events WHERE event_type = 'click' GROUP BY 1
 ),
 y AS (
   SELECT CAST(ts AS DATE) AS day,
-         CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS v
+         CAST(SUM({CENTS_SQL.format('value')}) AS BIGINT) AS v
   FROM events WHERE event_type = 'purchase' GROUP BY 1
 ),
 lags AS (SELECT CAST(unnest(range(-{_XC_MAXLAG}, {_XC_MAXLAG + 1})) AS BIGINT)
@@ -177,7 +178,7 @@ def ts_cross_corr_lead_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
             ev.filter(F.col("event_type") == et)
             .groupBy(F.expr("CAST(ts AS DATE)").alias("day"))
             .agg(
-                F.sum(F.expr("CAST(round(value * 100) AS BIGINT)"))
+                F.sum(cents("value"))
                 .cast("bigint")
                 .alias("v")
             )

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from c2_duckdb_runner_spark.operators.inference_ext import CENTS_SQL, cents
 from c2_duckdb_runner_spark.registry import register
 from c2_duckdb_runner_spark.tables import load, load_spread
 
@@ -145,9 +146,9 @@ def join_set_similarity_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ts_sax_symbolic
 # ---------------------------------------------------------------------------
 
-_SAX_ORACLE = """
+_SAX_ORACLE = f"""
 WITH d AS (SELECT CAST(ts AS DATE) AS day,
-                  CAST(SUM(CAST(round(value*100) AS BIGINT)) AS BIGINT) AS cents
+                  CAST(SUM({CENTS_SQL.format('value')}) AS BIGINT) AS cents
            FROM events GROUP BY 1),
 q AS (SELECT day, cents, NTILE(4) OVER (ORDER BY cents, day) AS qt FROM d),
 w AS (SELECT date_trunc('week', day) AS week_start, day,
@@ -174,7 +175,7 @@ def ts_sax_symbolic(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = (
         e.select(
             F.to_date("ts").alias("day"),
-            F.expr("CAST(round(value*100) AS BIGINT)").alias("c"),
+            cents("value").alias("c"),
         )
         .groupBy("day")
         .agg(F.sum("c").alias("cents"))

@@ -31,6 +31,7 @@ from c2_duckdb_runner_spark.operators.graph import (
     _bfs_oracle,
     _edges,
 )
+from c2_duckdb_runner_spark.operators.inference_ext import CENTS_SQL, cents
 from c2_duckdb_runner_spark.operators.matching_ext import ER_CANDIDATES_SQL, er_candidates
 from c2_duckdb_runner_spark.registry import fdoc, register
 from c2_duckdb_runner_spark.session import scratch_persist
@@ -69,9 +70,9 @@ def _skyline_windows(df: DataFrame, part_cols: list[str]) -> DataFrame:
 
 @register(
     "query_skyline_pareto",
-    oracle="""
+    oracle=f"""
 WITH p AS (
-  SELECT p_partkey, CAST(round(p_retailprice * 100) AS BIGINT) AS price_cents,
+  SELECT p_partkey, {CENTS_SQL.format('p_retailprice')} AS price_cents,
          CAST(p_size AS INT) AS p_size
   FROM part
 )
@@ -103,7 +104,7 @@ WHERE NOT EXISTS (
 def query_skyline_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = load(spark, sf_dir, "part").select(
         "p_partkey",
-        F.expr("CAST(round(p_retailprice * 100) AS BIGINT)").alias("price_cents"),
+        cents("p_retailprice").alias("price_cents"),
         F.col("p_size").cast("int").alias("p_size"),
     )
     bucketed = p.withColumn(

@@ -21,13 +21,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from c2_duckdb_runner_spark.operators.inference_ext import CENTS_SQL, cents
 from c2_duckdb_runner_spark.registry import register
 from c2_duckdb_runner_spark.tables import load
 
 
 @register(
     "set_union_by_name",
-    oracle="""
+    oracle=f"""
 WITH a AS (
   SELECT o_orderkey AS k, o_totalprice AS price, o_orderstatus AS status
   FROM orders WHERE o_orderkey % 7 = 0
@@ -38,7 +39,7 @@ b AS (
 ),
 u AS (SELECT * FROM a UNION ALL BY NAME SELECT * FROM b)
 SELECT status, CAST(COUNT(*) AS BIGINT) AS n,
-       CAST(SUM(CAST(round(price * 100) AS BIGINT)) AS BIGINT) AS cents
+       CAST(SUM({CENTS_SQL.format('price')}) AS BIGINT) AS cents
 FROM u GROUP BY status
 """,
 )
@@ -66,7 +67,7 @@ def set_union_by_name(spark: SparkSession, sf_dir: str) -> DataFrame:
     u = a.unionByName(b)
     return u.groupBy("status").agg(
         F.count("*").cast("bigint").alias("n"),
-        F.sum(F.expr("CAST(round(price * 100) AS BIGINT)")).cast("bigint").alias("cents"),
+        F.sum(cents("price")).cast("bigint").alias("cents"),
     )
 
 
@@ -126,10 +127,10 @@ def agg_pivot_dynamic(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "agg_hdr_latency_buckets",
-    oracle="""
+    oracle=f"""
 WITH v AS (
   SELECT event_type,
-         CAST(round(value * 100) AS BIGINT) AS lat
+         {CENTS_SQL.format('value')} AS lat
   FROM events WHERE value > 0
 ),
 b AS (
@@ -159,7 +160,7 @@ def agg_hdr_latency_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("value") > 0)
         .select(
             "event_type",
-            F.expr("CAST(round(value * 100) AS BIGINT)").alias("lat"),
+            cents("value").alias("lat"),
         )
     )
     b = v.select(

@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from c2_duckdb_runner_spark.operators.inference_ext import CENTS_SQL, cents
 from c2_duckdb_runner_spark.registry import fdoc, register
 from c2_duckdb_runner_spark.tables import load, load_spread
 
@@ -143,12 +144,12 @@ def search_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "stats_ks_drift_test",
-    oracle="""
+    oracle=f"""
 WITH v AS (
   SELECT event_type,
          CASE WHEN epoch_ms(ts) // 86400000 < 19738 THEN 1 ELSE 2 END
            AS half,
-         CAST(round(value * 100) AS BIGINT) AS x
+         {CENTS_SQL.format('value')} AS x
   FROM events
 ),
 c AS (
@@ -196,7 +197,7 @@ def stats_ks_drift_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.expr("unix_millis(ts) div 86400000") < 19738, 1)
         .otherwise(2)
         .alias("half"),
-        F.expr("CAST(round(value * 100) AS BIGINT)").alias("x"),
+        cents("value").alias("x"),
     )
     c = v.groupBy("event_type", "x").agg(
         F.count(F.when(F.col("half") == 1, 1)).alias("c1"),
@@ -235,10 +236,10 @@ def stats_ks_drift_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "stats_mad_outliers",
-    oracle="""
+    oracle=f"""
 WITH v AS (
   SELECT event_type, event_id,
-         CAST(round(value * 100) AS BIGINT) AS x
+         {CENTS_SQL.format('value')} AS x
   FROM events
 ),
 med AS (
@@ -274,7 +275,7 @@ def stats_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = load(spark, sf_dir, "events").select(
         "event_type",
         "event_id",
-        F.expr("CAST(round(value * 100) AS BIGINT)").alias("x"),
+        cents("value").alias("x"),
     )
     med = v.groupBy("event_type").agg(
         F.expr("percentile_disc(0.5) WITHIN GROUP (ORDER BY x)").alias("m")
@@ -307,9 +308,9 @@ def stats_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "audit_benford_digits",
-    oracle="""
+    oracle=f"""
 WITH v AS (
-  SELECT CAST(substring(CAST(CAST(round(value * 100) AS BIGINT) AS VARCHAR),
+  SELECT CAST(substring(CAST({CENTS_SQL.format('value')} AS VARCHAR),
                         1, 1) AS BIGINT) AS d
   FROM events WHERE value >= 1
 ),
@@ -338,10 +339,9 @@ def audit_benford_digits(spark: SparkSession, sf_dir: str) -> DataFrame:
         load(spark, sf_dir, "events")
         .filter(F.col("value") >= 1)
         .select(
-            F.expr(
-                "CAST(substring(CAST(CAST(round(value * 100) AS BIGINT) "
-                "AS STRING), 1, 1) AS BIGINT)"
-            ).alias("d")
+            F.substring(cents("value").cast("string"), 1, 1)
+            .cast("bigint")
+            .alias("d")
         )
     )
     c = v.groupBy("d").agg(F.count("*").cast("bigint").alias("n"))

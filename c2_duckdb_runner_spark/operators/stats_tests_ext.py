@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from c2_duckdb_runner_spark.operators.inference_ext import CENTS_SQL, cents
 from c2_duckdb_runner_spark.registry import register
 from c2_duckdb_runner_spark.tables import load
 
@@ -56,7 +57,7 @@ def _perm_oracle() -> str:
     return f"""
 WITH e AS (
   SELECT event_id, user_id % 2 AS grp,
-         CAST(round(value * 100) AS BIGINT) AS cents
+         {CENTS_SQL.format('value')} AS cents
   FROM events
 ),
 agg AS (
@@ -98,7 +99,7 @@ def stats_permutation_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "events").select(
         "event_id",
         (F.col("user_id") % 2).alias("grp"),
-        F.expr("CAST(round(value * 100) AS BIGINT)").alias("cents"),
+        cents("value").alias("cents"),
     )
     aggs = [
         F.count("*").cast("bigint").alias("n"),
@@ -162,7 +163,7 @@ _MK_THRESH = 60  # |S| above this on a ~30-point series = clear trend
     oracle=f"""
 WITH daily AS (
   SELECT event_type, date_trunc('day', ts) AS d,
-         (10000 * CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS BIGINT))
+         (10000 * CAST(SUM({CENTS_SQL.format('value')}) AS BIGINT))
            // CAST(COUNT(*) AS BIGINT) AS x
   FROM events GROUP BY event_type, date_trunc('day', ts)
 ),
@@ -195,12 +196,8 @@ def ts_mann_kendall_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = (
         load(spark, sf_dir, "events")
         .groupBy("event_type", F.date_trunc("day", F.col("ts")).alias("d"))
-        .agg(
-            F.expr(
-                "(10000 * CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS BIGINT))"
-                " div CAST(COUNT(*) AS BIGINT)"
-            ).alias("x")
-        )
+        .agg(F.sum(cents("value")).alias("s"), F.count("*").alias("n"))
+        .select("event_type", "d", F.expr("(10000 * s) div n").alias("x"))
     )
     a, b = daily.alias("a"), daily.alias("b")
     pairs = a.join(

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from c2_duckdb_runner_spark.operators.inference_ext import CENTS_SQL, cents
 from c2_duckdb_runner_spark.registry import fdoc, register
 from c2_duckdb_runner_spark.tables import load
 
@@ -109,12 +110,12 @@ def window_streak_longest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "agg_backlog_aging_buckets",
-    oracle="""
+    oracle=f"""
 WITH anchor AS (SELECT MAX(o_orderdate) AS now FROM orders),
 open_orders AS (
   SELECT o_orderstatus,
          date_diff('day', CAST(o_orderdate AS DATE), CAST(now AS DATE)) AS age,
-         CAST(round(o_totalprice * 100) AS BIGINT) AS cents
+         {CENTS_SQL.format('o_totalprice')} AS cents
   FROM orders CROSS JOIN anchor
   WHERE o_orderstatus <> 'F'
 ),
@@ -152,7 +153,7 @@ def agg_backlog_aging_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr(
                 "datediff(CAST(now AS DATE), CAST(o_orderdate AS DATE))"
             ).alias("age"),
-            F.expr("CAST(round(o_totalprice * 100) AS BIGINT)").alias("cents"),
+            cents("o_totalprice").alias("cents"),
         )
     )
     bucketed = open_orders.select(

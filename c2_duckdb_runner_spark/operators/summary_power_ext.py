@@ -27,7 +27,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from c2_duckdb_runner_spark.operators.inference_ext import (
+    CENTS_SQL,
     DAILY_MILLI_SQL,
+    cents,
     daily_milli,
     sdiv,
 )
@@ -47,7 +49,7 @@ _Z_FACTOR_MICRO = 7_840_000
     "ab_power_mde_check",
     oracle=f"""
 WITH e AS (
-  SELECT user_id % 2 AS arm, CAST(round(value * 100) AS BIGINT) AS cents
+  SELECT user_id % 2 AS arm, {CENTS_SQL.format('value')} AS cents
   FROM events
 ),
 s AS (
@@ -96,7 +98,7 @@ def ab_power_mde_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition partials at any corpus size."""
     e = load(spark, sf_dir, "events").select(
         (F.col("user_id") % 2).alias("arm"),
-        F.expr("CAST(round(value * 100) AS BIGINT)").alias("cents"),
+        cents("value").alias("cents"),
     )
     s = e.agg(
         F.count("*").cast("bigint").alias("n"),
@@ -156,7 +158,7 @@ _TOPN = 10
     oracle=f"""
 WITH rev AS (
   SELECT l_partkey,
-         CAST(SUM(CAST(round(l_extendedprice * 100) AS BIGINT)) AS BIGINT) AS r
+         CAST(SUM({CENTS_SQL.format('l_extendedprice')}) AS BIGINT) AS r
   FROM lineitem GROUP BY l_partkey
 ),
 top AS (SELECT * FROM rev ORDER BY r DESC, l_partkey LIMIT {_TOPN}),
@@ -186,7 +188,7 @@ def agg_topn_plus_other(spark: SparkSession, sf_dir: str) -> DataFrame:
         load(spark, sf_dir, "lineitem")
         .groupBy("l_partkey")
         .agg(
-            F.sum(F.expr("CAST(round(l_extendedprice * 100) AS BIGINT)"))
+            F.sum(cents("l_extendedprice"))
             .cast("bigint")
             .alias("r")
         )

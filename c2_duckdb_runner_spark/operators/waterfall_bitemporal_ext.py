@@ -27,7 +27,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from c2_duckdb_runner_spark.operators.textanalysis import _hits_duck, _hits_spark
-from c2_duckdb_runner_spark.operators.inference_ext import DAILY_MILLI_SQL, daily_milli
+from c2_duckdb_runner_spark.operators.inference_ext import (
+    CENTS_SQL,
+    DAILY_MILLI_SQL,
+    cents,
+    daily_milli,
+)
 from c2_duckdb_runner_spark.registry import register
 from c2_duckdb_runner_spark.tables import load
 
@@ -38,10 +43,10 @@ from c2_duckdb_runner_spark.tables import load
 
 @register(
     "alloc_fifo_waterfall",
-    oracle="""
+    oracle=f"""
 WITH inv AS (
   SELECT o_custkey, o_orderkey,
-         CAST(round(o_totalprice * 100) AS BIGINT) AS amt,
+         {CENTS_SQL.format('o_totalprice')} AS amt,
          o_orderdate
   FROM orders
 ),
@@ -89,7 +94,7 @@ def alloc_fifo_waterfall(spark: SparkSession, sf_dir: str) -> DataFrame:
     inv = load(spark, sf_dir, "orders").select(
         "o_custkey",
         "o_orderkey",
-        F.expr("CAST(round(o_totalprice * 100) AS BIGINT)").alias("amt"),
+        cents("o_totalprice").alias("amt"),
         "o_orderdate",
     )
     pool = inv.groupBy("o_custkey").agg(
@@ -279,18 +284,18 @@ def ts_sliding_median_smooth(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "join_bitemporal_asof_aswas",
-    oracle="""
+    oracle=f"""
 WITH versions AS (
   -- synthetic correction feed: every 4th order gets a +5% restatement
   -- recorded 10 days after the order (transaction time), retroactively
   -- effective at the order date (valid time)
   SELECT o_orderkey, o_custkey,
-         CAST(round(o_totalprice * 100) AS BIGINT) AS amt,
+         {CENTS_SQL.format('o_totalprice')} AS amt,
          o_orderdate AS valid_from, o_orderdate AS tx_from, 0 AS version
   FROM orders
   UNION ALL
   SELECT o_orderkey, o_custkey,
-         (CAST(round(o_totalprice * 100) AS BIGINT) * 105) // 100,
+         ({CENTS_SQL.format('o_totalprice')} * 105) // 100,
          o_orderdate, o_orderdate + INTERVAL 10 DAY, 1
   FROM orders WHERE o_orderkey % 4 = 0
 ),
@@ -338,7 +343,7 @@ def join_bitemporal_asof_aswas(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = o.select(
         "o_orderkey",
         "o_custkey",
-        F.expr("CAST(round(o_totalprice * 100) AS BIGINT)").alias("amt"),
+        cents("o_totalprice").alias("amt"),
         F.col("o_orderdate").alias("valid_from"),
         F.col("o_orderdate").alias("tx_from"),
         F.lit(0).alias("version"),
@@ -346,13 +351,11 @@ def join_bitemporal_asof_aswas(spark: SparkSession, sf_dir: str) -> DataFrame:
     corr = o.filter(F.col("o_orderkey") % 4 == 0).select(
         "o_orderkey",
         "o_custkey",
-        F.expr("(CAST(round(o_totalprice * 100) AS BIGINT) * 105) div 100").alias(
-            "amt"
-        ),
+        cents("o_totalprice").alias("amt"),
         F.col("o_orderdate").alias("valid_from"),
         (F.col("o_orderdate") + F.expr("INTERVAL 10 DAYS")).alias("tx_from"),
         F.lit(1).alias("version"),
-    )
+    ).withColumn("amt", F.expr("(amt * 105) div 100"))
     versions = base.unionByName(corr)
     audit = o.agg(
         (F.min("o_orderdate") + F.expr("INTERVAL 20 DAYS")).alias("audit_ts")

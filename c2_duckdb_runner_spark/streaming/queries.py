@@ -36,6 +36,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from c2_duckdb_runner_spark.operators.inference_ext import CENTS_SQL, cents
 from c2_duckdb_runner_spark.registry import register
 from c2_duckdb_runner_spark.session import conf_override
 from c2_duckdb_runner_spark.tables import (
@@ -712,7 +713,7 @@ def stream_chained_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
 WITH v AS (
   SELECT event_id, event_type, {_DUCK_MS} AS ms,
-         CAST(round(value * 100) AS BIGINT) AS cents,
+         {CENTS_SQL.format('value')} AS cents,
          (value >= 0 AND value <= 150 AND event_type IS NOT NULL)
            AS is_valid
   FROM events
@@ -746,7 +747,7 @@ def stream_dlq_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = _events_stream(spark, sf_dir).select(
         "event_id",
         "event_type",
-        F.expr("CAST(round(value * 100) AS BIGINT)").alias("cents"),
+        cents("value").alias("cents"),
         (
             (F.col("value") >= 0)
             & (F.col("value") <= 150)

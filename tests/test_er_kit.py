@@ -64,7 +64,7 @@ def test_kit_matches_oracle_on_hostile_twin(spark, hostile_dir, hostile_duck):
     assert_frames_match(got, want, "er_candidates")
 
 
-@pytest.mark.parametrize("key", ER_KEYS)
+@pytest.mark.parametrize("key", [*ER_KEYS, "privacy_l_diversity", "privacy_t_closeness"])
 def test_er_key_matches_oracle_on_hostile_twin(spark, hostile_dir, hostile_duck, key):
     got = QUERIES[key](spark, hostile_dir).toPandas()
     assert_frames_match(got, hostile_duck.execute(ORACLES[key]).fetchdf(), key)
@@ -83,7 +83,12 @@ def test_er_kit_is_defined_once():
         "F.lower(\"bname\"), 18)": 1,  # Spark score
         "WHEN lower(aname) = lower(bname) THEN 18": 1,  # oracle score
     }
-    stale = ("floor(c_acctbal / 1000.0)", "floor(bbal / 1000.0)", "+ 500000")
+    stale = (
+        "floor(c_acctbal / 1000.0)",
+        "floor(bbal / 1000.0)",
+        "+ 500000",
+        "floor(c_acctbal/1000.0)",
+    )
     hits = []
     for root, _, files in os.walk(PKG):
         for f in files:

@@ -1384,18 +1384,28 @@ def test_detector_sees_through_persisted_aggregate(spark):
         agg.unpersist()
 
 
-def test_no_unbounded_global_windows_repo_wide(q):
+@pytest.fixture(scope="module")
+def repo_wide(q):
+    """Every registered query built once, with both repo-wide inspections
+    taken right after its build (the next build may release its scratch):
+    ``{key: (global-window hits, loop-join hits)}``."""
+    out = {}
+    for key in QUERIES:
+        df = q(key)
+        out[key] = (pi.unbounded_global_windows(df), pi.unbounded_loop_joins(df))
+    return out
+
+
+def test_no_unbounded_global_windows_repo_wide(repo_wide):
     """No registered query may plan an empty-partition Window over an
     unaggregated, uncut relation — the single-reducer global sort that
     kills ranking plans at scale (round-4 verdict item #1). Rankers must
     pre-cut with orderBy().limit(k) (TakeOrdered) or rank an aggregate."""
-    offenders: dict[str, str] = {}
-    for key in QUERIES:
-        if key in _GLOBAL_WINDOW_ALLOWED:
-            continue
-        hits = pi.unbounded_global_windows(q(key))
-        if hits:
-            offenders[key] = hits[0][:200]
+    offenders = {
+        key: hits[0][:200]
+        for key, (hits, _) in repo_wide.items()
+        if key not in _GLOBAL_WINDOW_ALLOWED and hits
+    }
     assert not offenders, offenders
 
 
@@ -1460,20 +1470,18 @@ def test_detector_flags_unbounded_bnl_and_cartesian(spark):
     )
 
 
-def test_no_unbounded_loop_joins_repo_wide(q):
+def test_no_unbounded_loop_joins_repo_wide(repo_wide):
     """No registered query may plan a CartesianProduct, or a
     BroadcastNestedLoopJoin whose broadcast side is not provably bounded
     by an Aggregate/Limit/Sample — the loop-join shapes with no 100 TB
     story (round-6 verdict item 6). Broadcast crossJoins of 1-row totals
     and k-row centroid/LUT frames compile to BNLJ over a bounded build
     side and pass."""
-    offenders: dict[str, str] = {}
-    for key in QUERIES:
-        if key in _LOOP_JOIN_ALLOWED:
-            continue
-        hits = pi.unbounded_loop_joins(q(key))
-        if hits:
-            offenders[key] = hits[0][:200]
+    offenders = {
+        key: hits[0][:200]
+        for key, (_, hits) in repo_wide.items()
+        if key not in _LOOP_JOIN_ALLOWED and hits
+    }
     assert not offenders, offenders
 
 
