@@ -11,8 +11,8 @@ Spark jobs as the files allow. The runner reads every file's Parquet footer
 on the driver, groups the files by schema and counts each group with one
 parallel scan — Spark's scheduler *is* the thread pool (`pthread-helper.h`
 at cluster scale), one task per file split, and every action is its own
-barrier. A group costs three Spark jobs the first time its files are seen
-(schema inference, then the two-stage count) and two after, as long as
+barrier. A group costs two Spark jobs the first time its files are seen
+(schema inference, then a single-stage count) and one after, as long as
 the files are unchanged: the scan goes through ``tables.read_parquet``,
 which keeps each file set's inferred schema. What remains custom is
 exactly what SURVEY.md §4 predicted: grouping, metrics harvesting and the
@@ -125,7 +125,8 @@ def _fs_bytes_ops(spark: SparkSession) -> tuple[int, int, int]:
     through pyarrow — are in neither counter."""
     jvm = spark.sparkContext._jvm
     total_bytes = hadoop_ops = 0
-    for s in jvm.org.apache.hadoop.fs.FileSystem.getAllStatistics():
+    # one array in one call: iterating the py4j List ends in a Java exception
+    for s in jvm.org.apache.hadoop.fs.FileSystem.getAllStatistics().toArray():
         total_bytes += s.getBytesRead()
         hadoop_ops += s.getReadOps() + s.getLargeReadOps()
     return total_bytes, hadoop_ops, _jvm_read_syscalls(spark)
@@ -178,6 +179,16 @@ class RunReport:
             )
 
 
+def _count(df, predicate: str) -> int:
+    """``SELECT count(*) FROM df WHERE predicate`` as one map-side stage:
+    each task counts its split's matching rows and the driver sums the
+    partials (``main.cc:197``, merged as at ``main.cc:273-281``). Unlike
+    ``DataFrame.count`` there is no partial aggregate, exchange or final
+    aggregate; the scan still reads only the predicate's columns."""
+    rows = df.filter(F.expr(predicate)).select(F.lit(1))
+    return rows._jdf.queryExecution().toRdd().count()
+
+
 def _enumerate_files(datadirs: list[str]) -> list[str]:
     """DT_REG enumeration (main.cc:297-324): every regular file, any name."""
     paths: list[str] = []
@@ -219,9 +230,9 @@ def run_scan(
       by one ``read_parquet(spark, *files)`` scan, whose tasks Spark spreads
       over the cores — the harness's inter-query parallelism
       (``main.cc:177,376-385``) without a serial job per file. Groups run
-      side by side on a pool of ``Env_jobs`` threads. A group submits three
-      jobs on first touch (schema inference plus the two-stage count) and
-      two once its unchanged file set's schema is cached. Grouping by the
+      side by side on a pool of ``Env_jobs`` threads. A group submits two
+      jobs on first touch (schema inference plus a single-stage count) and
+      one once its unchanged file set's schema is cached. Grouping by the
       footer schema is what keeps a file without the filter column an
       error: a shared schema would read its column as NULLs.
     - **per-task error isolation** (``main.cc:267-271``): a group whose
@@ -249,15 +260,13 @@ def run_scan(
             # per-file path reports as errors
             if len(df.inputFiles()) != len({os.path.abspath(f) for f in files}):
                 return None
-            return df.filter(F.expr(predicate)).count()
+            return _count(df, predicate)
         except Exception:
             return None
 
     def scan_one(path: str) -> tuple[int, str | None]:
-        # the count happens engine-side as in main.cc:197, partials merged by
-        # Spark instead of the mutex at main.cc:273-281
         try:
-            return read_parquet(spark, path).filter(F.expr(predicate)).count(), None
+            return _count(read_parquet(spark, path), predicate), None
         except Exception as exc:  # per-task isolation, main.cc:267-271
             msg = str(exc).split("\n", 1)[0]
             print(f"runner: error scanning {path}: {msg}", file=sys.stderr)

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import os
 import shutil
+from pathlib import Path
 
 import duckdb
 import pyarrow.parquet as pq
@@ -14,7 +15,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from c2_duckdb_runner_spark.runner import run_scan, read_disk_stats
-from c2_duckdb_runner_spark.runner import stream_rows
+from c2_duckdb_runner_spark.runner import _count, _fs_bytes_ops, stream_rows
+from c2_duckdb_runner_spark.tables import read_parquet
 
 
 @pytest.fixture(scope="module")
@@ -181,6 +183,37 @@ def test_predicate_subquery_shape_pinned(spark, datadir, capsys):
     assert "error scanning" in capsys.readouterr().err
 
 
+@pytest.mark.parametrize("predicate, oracle", [
+    ("value > (SELECT max(t) FROM runner_subq_tau)", "value > 0.5"),
+    ("event_type IN (SELECT k FROM runner_subq_types)",
+     "event_type IN ('click', 'view')"),
+])
+def test_predicate_resolvable_subquery_counts_like_duckdb(
+        spark, datadir, predicate, oracle, capsys):
+    """A scalar subquery and an ``IN (SELECT ...)`` over temp views that
+    resolve: the single-stage count runs its plan outside the wrapper
+    ``DataFrame.count`` uses, and adaptive execution still plans the
+    subquery and the join. The group counts like DuckDB, with no per-file
+    retry."""
+    files = sorted(str(f) for f in Path(datadir).glob("*.parquet"))
+    spark.createDataFrame([(0.5,)], "t double").createOrReplaceTempView(
+        "runner_subq_tau")
+    spark.createDataFrame([("click",), ("view",)], "k string") \
+        .createOrReplaceTempView("runner_subq_types")
+    try:
+        want = duckdb.sql(
+            f"SELECT count(*) FROM '{datadir}/*.parquet' WHERE {oracle}"
+        ).fetchone()[0]
+        assert want > 0
+        assert _count(read_parquet(spark, *files), predicate) == want
+        r = run_scan(spark, [datadir], predicate=predicate)
+        assert r.total_rows == want and r.failed_files == {}
+        assert "error scanning" not in capsys.readouterr().err
+    finally:
+        spark.catalog.dropTempView("runner_subq_tau")
+        spark.catalog.dropTempView("runner_subq_types")
+
+
 # ---------------------------------------------------------------------------
 # Grouped scans and windowed transfer: run_scan counts each footer-schema
 # group with one parallel scan, and stream_rows pulls one window of
@@ -200,6 +233,12 @@ def _new_jobs(spark, fn):
     return out, [j for j in sc.statusTracker().getJobIdsForGroup() if j > before]
 
 
+def _stages(spark, jobs: list[int]) -> list[int]:
+    """The number of stages of each job, in job order."""
+    tracker = spark.sparkContext.statusTracker()
+    return [len(tracker.getJobInfo(j).stageIds) for j in sorted(jobs)]
+
+
 def _corrupt_column_pages(src: str, dst: str, column: str) -> None:
     """Copy ``src`` with one column chunk's pages overwritten by junk; the
     footer (and so the schema pyarrow reads) stays valid."""
@@ -214,8 +253,8 @@ def _corrupt_column_pages(src: str, dst: str, column: str) -> None:
 
 
 def test_run_scan_same_schema_files_share_one_scan(spark, datadir, sf_dir):
-    """Three same-schema files: schema inference plus one two-stage count,
-    not three jobs per file."""
+    """Three same-schema files: schema inference plus one single-stage
+    count, not three jobs per file."""
     report, jobs = _new_jobs(
         spark, lambda: run_scan(spark, [datadir], predicate="value > 0.5"))
     oracle = duckdb.sql(
@@ -224,6 +263,47 @@ def test_run_scan_same_schema_files_share_one_scan(spark, datadir, sf_dir):
     assert report.total_rows == 3 * oracle
     assert report.failed_files == {}
     assert 1 <= len(jobs) <= 3, jobs
+
+
+def test_count_plan_reads_only_the_predicate_columns(spark, datadir,
+                                                     monkeypatch):
+    """The plan ``_count`` runs: one scan whose ``ReadSchema`` is the
+    predicate's column alone, under no exchange or aggregate. The
+    DataFrame is caught where ``_count`` projects its constant; the plan
+    read from it is the one its ``toRdd()`` executed."""
+    files = sorted(str(f) for f in Path(datadir).glob("*.parquet"))
+    df = read_parquet(spark, *files)
+    seen = []
+    select = type(df).select
+
+    def spy(self, *cols):
+        seen.append(select(self, *cols))
+        return seen[-1]
+
+    monkeypatch.setattr(type(df), "select", spy)
+    n = _count(df, "value > 0.5")
+    monkeypatch.undo()
+    [rows] = seen
+    plan = rows._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan and "HashAggregate" not in plan, plan
+    assert "ReadSchema: struct<value:double>" in plan, plan
+    assert n == df.filter("value > 0.5").count() > 0
+
+
+def test_fs_bytes_ops_equals_sum_by_index(spark, datadir):
+    """``_fs_bytes_ops`` reads the statistics as one array; its bytes and
+    Hadoop ops equal a per-element sum over the same snapshot read by
+    index, with no Spark job running in between."""
+    run_scan(spark, [datadir], predicate="value > 0.5")  # nonzero counters
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    stats = spark.sparkContext._jvm.org.apache.hadoop.fs.FileSystem \
+        .getAllStatistics()
+    by_index = [stats.get(i) for i in range(stats.size())]
+    want_bytes = sum(s.getBytesRead() for s in by_index)
+    want_ops = sum(s.getReadOps() + s.getLargeReadOps() for s in by_index)
+    got_bytes, got_ops, _ = _fs_bytes_ops(spark)
+    assert want_bytes > 0
+    assert (got_bytes, got_ops) == (want_bytes, want_ops)
 
 
 def test_run_scan_failed_files_reported(spark, datadir, tmp_path, capsys):
@@ -253,7 +333,8 @@ def test_run_scan_corrupt_pages_isolated_within_group(spark, sf_dir, tmp_path,
                                                       capsys):
     """A file whose footer is valid but whose data pages are junk shares a
     schema group with good files: the group's scan fails, the rerun
-    isolates that one file, and the others still match DuckDB."""
+    isolates that one file, and the others still match DuckDB. Warm, that
+    is the failed group job plus one single-stage job per file."""
     d = tmp_path / "pages"
     d.mkdir()
     for i in range(2):
@@ -269,6 +350,10 @@ def test_run_scan_corrupt_pages_isolated_within_group(spark, sf_dir, tmp_path,
     assert list(r.failed_files) == [str(bad)]
     err = capsys.readouterr().err
     assert err.count("runner: error scanning") == 1 and str(bad) in err
+    warm, jobs = _new_jobs(
+        spark, lambda: run_scan(spark, [str(d)], predicate="value > 0.5"))
+    assert warm.total_rows == want and list(warm.failed_files) == [str(bad)]
+    assert _stages(spark, jobs) == [1, 1, 1, 1], jobs
 
 
 def test_run_scan_two_schema_groups(spark, sf_dir, tmp_path, capsys):

@@ -12,6 +12,7 @@ import shutil
 import sys
 from concurrent.futures import ThreadPoolExecutor
 
+import duckdb
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
@@ -21,7 +22,7 @@ import __spark_entry__ as entrymod
 from c2_duckdb_runner_spark import tables
 from c2_duckdb_runner_spark.runner import run_scan
 from tests.compare import assert_frames_match
-from tests.test_runner import _new_jobs
+from tests.test_runner import _new_jobs, _stages
 from tools.oracle_staged import connect
 
 PKG = os.path.join(os.path.dirname(os.path.dirname(__file__)), "c2_duckdb_runner_spark")
@@ -84,6 +85,8 @@ def test_directory_is_not_cached(spark, tmp_path):
 
 
 def test_warm_run_scan_skips_inference(spark, sf_dir, tmp_path):
+    """First touch: schema inference, then the count (2 jobs). Warm: the
+    count alone, one job of one stage, with DuckDB's count."""
     d = tmp_path / "campaign"
     d.mkdir()
     for i in range(3):
@@ -94,6 +97,9 @@ def test_warm_run_scan_skips_inference(spark, sf_dir, tmp_path):
     assert warm.total_rows == cold.total_rows > 0
     assert cold.failed_files == warm.failed_files == {}
     assert len(warm_jobs) == len(cold_jobs) - 1, (cold_jobs, warm_jobs)
+    assert len(cold_jobs) == 2 and _stages(spark, warm_jobs) == [1], cold_jobs
+    assert warm.total_rows == duckdb.sql(
+        f"SELECT count(*) FROM '{d}/*.parquet' WHERE value > 0.5").fetchone()[0]
 
 
 def test_missing_filter_column_fails_cold_and_warm(spark, sf_dir, tmp_path, capsys):
